@@ -14,7 +14,9 @@ import org.apache.spark.sql.SparkSession
   *  - SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS — same as Bench
   *  - SPARK_GRAFT_PLANS_DIR — if set, writes `<dir>/<query>.txt` with the
   *    `.explain("formatted")` output of each selected query (one file per
-  *    query, overwritten), for the plans/r06 before/after evidence.
+  *    query, overwritten); committed before/after evidence is renamed
+  *    to `plans/r06/<query>_before.txt` / `_after.txt` (`plans/r06/
+  *    baseline/` and `after/` keep only the dumps with no renamed twin).
   *  - SPARK_GRAFT_NOOP=true — time a noop-sink write (guide §1.4) instead
   *    of Bench's count() action, to see compute without count-pruning.
   */

@@ -23,15 +23,21 @@ object SparkEntry {
     * mtime + entry count, so a table REGENERATED at the same path in the
     * same JVM re-infers instead of silently reading a stale shape; the
     * map is bounded by the handful of distinct table versions a session
-    * touches. Results are never cached — every query still computes from
-    * the parquet files. */
+    * touches. A path with no local file or directory behind it (a
+    * `file:`/`hdfs:` URI, or a missing path) has no mtime or entries to
+    * key on, so it bypasses the cache and infers on every read. Results
+    * are never cached — every query still computes from the parquet
+    * files. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  private def readT(s: SparkSession, path: String): DataFrame = {
+  private[graft] def readT(s: SparkSession, path: String): DataFrame = {
     val f = new java.io.File(path)
-    val key = s"$path:${f.lastModified()}:${Option(f.list()).map(_.length).getOrElse(-1)}"
-    val sch = schemaCache.computeIfAbsent(key, _ => s.read.parquet(path).schema)
-    s.read.schema(sch).parquet(path)
+    if (!f.exists) s.read.parquet(path)
+    else {
+      val key = s"$path:${f.lastModified()}:${Option(f.list()).map(_.length).getOrElse(-1)}"
+      val sch = schemaCache.computeIfAbsent(key, _ => s.read.parquet(path).schema)
+      s.read.schema(sch).parquet(path)
+    }
   }
 
   private def docs(s: SparkSession, dir: String): DataFrame = readT(s, t(dir, "documents"))

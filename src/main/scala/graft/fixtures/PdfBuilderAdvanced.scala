@@ -95,6 +95,26 @@ object PdfBuilderAdvanced {
     classicXref(objs, 1, s"/Encrypt 5 0 R /ID [<${enc.hex(enc.docId)}> <${enc.hex(enc.docId)}>]")
   }
 
+  /** one-page encrypted PDF under an xref stream with the page tree packed
+    * in an encrypted ObjStm. ids: 1 catalog, 2 pages, 3 page, 4 content
+    * (direct, encrypted), 5 encrypt dict (direct, plaintext), 6 font;
+    * 1/2/3/6 packed into the ObjStm (id 7, encrypted with objKey(7,0));
+    * xref stream id 8 plain. */
+  def encXrefObjStm(contentPlain: Array[Byte], enc: EncSpec): Array[Byte] = {
+    val encContent = enc.encrypt(4, 0, contentPlain)
+    val objs = Seq(
+      ObjSpec(1, "<< /Type /Catalog /Pages 2 0 R >>"),
+      ObjSpec(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 >>"),
+      ObjSpec(3, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        "/Resources << /Font << /F1 6 0 R >> >> /Contents 4 0 R >>"),
+      ObjSpec(4, s"<< /Length ${encContent.length} >>", Some(encContent)),
+      ObjSpec(5, enc.encryptDictBody),
+      courier(6))
+    xrefStream(objs, 1, packIntoObjStm = Set(1, 2, 3, 6),
+      extraTrailer = s"/Encrypt 5 0 R /ID [<${enc.hex(enc.docId)}> <${enc.hex(enc.docId)}>]",
+      objStmTransform = raw => enc.encrypt(7, 0, raw))
+  }
+
   // ---- fonts ---------------------------------------------------------------
 
   /** simple Type1 font with /Differences remapping */

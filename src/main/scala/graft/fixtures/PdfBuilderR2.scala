@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
   * binary: nested Form XObjects, multi-deep /Prev chains, content-stream
   * predictors (PNG row filters 0-3 + TIFF), mixed filter arrays with
   * /DecodeParms arrays, multi-byte ToUnicode codespaces, bfrange array
-  * form, and TrueType cmap subtable formats 0/6/12 (incl. multi-subtable
+  * form, and TrueType cmap subtable formats 0/2/6/12 (incl. multi-subtable
   * fonts). All deterministic; every byte constructed here.
   */
 object PdfBuilderR2 {
@@ -132,7 +132,7 @@ object PdfBuilderR2 {
     sb.toString
   }
 
-  // ---- TrueType cmap subtables (formats 0/4/6/12, multi-subtable) -------------
+  // ---- TrueType cmap subtables (formats 0/2/4/6/12, multi-subtable) -----------
   private def u16b(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
     out.write((v >> 8) & 0xff); out.write(v & 0xff)
   }
@@ -165,6 +165,37 @@ object PdfBuilderR2 {
     u16b(out, 12); u16b(out, 0)
     u32b(out, 16 + groups.size * 12); u32b(out, 0); u32b(out, groups.size)
     groups.foreach { case (s, e, g) => u32b(out, s); u32b(out, e); u32b(out, g) }
+    out.toByteArray
+  }
+
+  /** format-2 subtable; `subs` = (highByte, firstCode, idDelta, gid) with one
+    * mapped entry per subheader (the reference reads ONE gid per subheader —
+    * its j-loop re-reads the same id_range_offset target, so entryCount > 1
+    * collapses to the first entry; we emit entryCount=1 to keep the
+    * fixture's intent unambiguous). Subheader 0 stays entryCount=0 (unset
+    * high bytes alias onto it via first_bytes). */
+  def cmapFormat2(subs: Seq[(Int, Int, Int, Int)]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val nSub = subs.length
+    val headerLen = 6 + 512 + 8 * (nSub + 1) + 2 * nSub
+    u16b(out, 2); u16b(out, headerLen); u16b(out, 0)
+    // subHeaderKeys: high byte hb -> subheader index s (key = s*8)
+    val keys = new Array[Int](256)
+    subs.zipWithIndex.foreach { case ((hb, _, _, _), idx) => keys(hb) = (idx + 1) * 8 }
+    keys.foreach(k => u16b(out, k))
+    // subheaders: index 0 empty, then one per sub with entryCount=1.
+    // gid array sits right after the subheaders; idRangeOffset is relative
+    // to the position of its own idRangeOffset field (spec semantics,
+    // matched by font_file2.cc's `off - sizeof(uint16_t) + id_range_offset`)
+    val gidArrayStart = 6 + 512 + 8 * (nSub + 1)
+    u16b(out, 0); u16b(out, 0); u16b(out, 0); u16b(out, 0) // subheader 0
+    subs.zipWithIndex.foreach { case ((_, firstCode, idDelta, _), idx) =>
+      val idRangeFieldPos = 6 + 512 + 8 * (idx + 1) + 6
+      val gidPos = gidArrayStart + 2 * idx
+      u16b(out, firstCode); u16b(out, 1); u16b(out, idDelta & 0xffff)
+      u16b(out, gidPos - idRangeFieldPos)
+    }
+    subs.foreach { case (_, _, _, gid) => u16b(out, gid) }
     out.toByteArray
   }
 

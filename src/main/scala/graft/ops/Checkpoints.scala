@@ -100,7 +100,8 @@ private[graft] object Checkpoints {
   /** read an [[org.apache.spark.sql.Observation]] fired by an already-run
     * eager job (a `cut`/`eager` materialization), with a bounded wait and
     * a recompute fallback if metric delivery ever fails — the
-    * connectedComponents pattern (probed by graft.tools.ObsProbe),
+    * connectedComponents pattern (that both cut shapes fire the metric is
+    * asserted by OpsSpec "an Observation below an eager cut fires"),
     * defined ONCE so every fused-scalar loop degrades identically. */
   private[graft] def observed(obs: org.apache.spark.sql.Observation)(
       fallback: => org.apache.spark.sql.Row): org.apache.spark.sql.Row = {

@@ -959,12 +959,12 @@ object CorpusOps {
           .select(col("host"), col("outw"), col("seed_host").isNotNull.as("seed"))
     }
     // bounded scalars FUSED into the cut's materialization job via
-    // Observation (the connectedComponents discipline, probed by
-    // graft.tools.ObsProbe): N, S, the overflow guard, and the count of
-    // dangling seeds — which closes round 1's dangling mass in closed
-    // form (r0 * |{seed ∧ outw=0}|). The rounds themselves are one lazy
-    // plan (see the loop comment below), so this is the loop's ONLY
-    // driver action.
+    // Observation (the connectedComponents discipline; OpsSpec asserts
+    // the metric fires below both cut shapes): N, S, the overflow guard,
+    // and the count of dangling seeds — which closes round 1's dangling
+    // mass in closed form (r0 * |{seed ∧ outw=0}|). The rounds
+    // themselves are one lazy plan (see the loop comment below), so this
+    // is the loop's ONLY driver action.
     val statsObs = org.apache.spark.sql.Observation("rank_stats")
     val base = Checkpoints.cut(flagged.observe(statsObs,
       count(lit(1)).as("n"),

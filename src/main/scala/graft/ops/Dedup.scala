@@ -569,32 +569,6 @@ object Dedup {
     Checkpoints.eager(out) { postings.unpersist() }
   }
 
-  /** shared inverted-index core of the exact n-gram set-similarity
-    * self-joins ([[ngramJaccardAllPairs]] / [[ngramContainment]]):
-    * hashed distinct-gram postings, per-doc set sizes, and the sized
-    * pair table (doc_a < doc_b, common, sz_a, sz_b). Returns
-    * (sizedPairs, postings-to-unpersist-after-materialization).
-    *
-    * Postings are computed ONCE (typed flatMap) and persisted: the
-    * self-join below reads them twice and `sizes` a third time — without
-    * the persist the whole shingling subtree runs 3x (no exchange reuse
-    * across the differently-projected join sides). Grams are carried as
-    * 64-bit poly-31 hashes, not strings: 8-byte shuffle/join keys instead
-    * of ~20-char strings. A within-doc or cross-doc hash collision would
-    * perturb `common` by 1 — probability ~(grams^2)/2^64, negligible at
-    * any realistic vocabulary; the LSH+verify path (ngramJaccardDups)
-    * stays fully string-exact. */
-  /** PERSISTED hashed distinct-gram postings (doc_id, g) — the shared
-    * base of the exact set-similarity self-joins; the caller owns the
-    * unpersist (the Checkpoints.eager release discipline). */
-  /** profiling-only alias (graft.tools.PrefixProf) */
-  private[graft] def gramPostingsForProf(documents: DataFrame): DataFrame =
-    gramPostings(documents)
-
-  private def gramPostings(documents: DataFrame): DataFrame =
-    gramPostingsWithSize(documents).select(col("doc_id"), col("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
   /** UNPERSISTED hashed distinct-gram postings carrying each doc's
     * uncapped distinct-gram-set size on every row: (doc_id, g, sz).
     * Carrying sz in the scan kernel is what lets the capped pair core
@@ -700,6 +674,21 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("common"), col("sz_a"), col("sz_b"))
   }
 
+  /** shared inverted-index core of the exact n-gram set-similarity
+    * self-joins ([[ngramJaccardAllPairs]] / [[ngramContainment]]):
+    * hashed distinct-gram postings carrying per-doc set sizes, and the
+    * sized pair table (doc_a < doc_b, common, sz_a, sz_b). Returns
+    * (sizedPairs, postings-to-unpersist-after-materialization).
+    *
+    * Postings are computed ONCE (typed flatMap); the uncapped self-join
+    * reads them twice, so that mode persists them — without the persist
+    * the whole shingling subtree runs twice (no exchange reuse across the
+    * differently-projected join sides). Grams are carried as 64-bit
+    * poly-31 hashes, not strings: 8-byte shuffle/join keys instead of
+    * ~20-char strings. A within-doc or cross-doc hash collision would
+    * perturb `common` by 1 — probability ~(grams^2)/2^64, negligible at
+    * any realistic vocabulary; the LSH+verify path (ngramJaccardDups)
+    * stays fully string-exact. */
   private def gramPairCore(documents: DataFrame, maxDf: Int): (DataFrame, DataFrame) = {
     if (maxDf > 0) {
       // capped mode: postings have exactly ONE consumer (the pair core),

@@ -52,13 +52,20 @@ object ExtractJob {
     import spark.implicits._
     val typed = pages.select(col("url"), col("warc_ts"), col("html"),
       lit("").as("text"), lit("").as("lang"))
+    sizeBanded(typed, partitions, shuffleSmall).as[PageRow]
+  }
+
+  /** the size-band split both salted repartitions share: rows up to
+    * SKEW_THRESHOLD_BYTES stay in their scan partitions (or, with
+    * `shuffleSmall`, are hash-spread by url — useful when the source layout
+    * is pathologically clustered), larger rows go round-robin over
+    * `partitions` so each whale lands alone-ish; the bands are unioned */
+  private def sizeBanded(typed: DataFrame, partitions: Int, shuffleSmall: Boolean): DataFrame = {
     val smallRows = typed.filter(length(col("html")) <= SKEW_THRESHOLD_BYTES)
-    // shuffleSmall=true restores the full hash spread (useful when the
-    // source layout is pathologically clustered); default is narrow
     val small = if (shuffleSmall) smallRows.repartition(partitions, col("url")) else smallRows
     val big = typed.filter(length(col("html")) > SKEW_THRESHOLD_BYTES)
-      .repartition(math.max(partitions, 1)) // round-robin: each whale lands alone-ish
-    small.union(big).as[PageRow]
+      .repartition(math.max(partitions, 1))
+    small.union(big)
   }
 
   /** run extraction over a prepared Dataset (no IO) */
@@ -77,10 +84,7 @@ object ExtractJob {
     import spark.implicits._
     val typed = pages.select(col("warc_bucket").cast("long").as("bucket"),
       col("url"), col("warc_ts"), col("html"), lit("").as("text"), lit("").as("lang"))
-    val small = typed.filter(length(col("html")) <= SKEW_THRESHOLD_BYTES)
-    val big = typed.filter(length(col("html")) > SKEW_THRESHOLD_BYTES)
-      .repartition(math.max(partitions, 1))
-    small.union(big)
+    sizeBanded(typed, partitions, shuffleSmall = false)
       .select(col("bucket").as("_1"),
         struct(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")).as("_2"))
       .as[(Long, PageRow)]

@@ -39,7 +39,7 @@ class EdgeCaseSpec extends AnyFunSuite {
         docId = Array.tabulate(16)(j => (j * 17 + 3).toByte)),
       EncSpec(revision = 3, keyBits = 128, aes = false,
         docId = Array.tabulate(16)(j => (j * 29 + 1).toByte))).foreach { enc =>
-      val pdf = graft.tools.FuzzR8.encXrefObjStm(
+      val pdf = encXrefObjStm(
         bytes("BT\n/F1 12 Tf\n72 720 Td\n(hello objstm) Tj\nET\n"), enc)
       assert(extract(pdf).contains("hello objstm"))
     }
@@ -49,7 +49,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     // format-2 subtable paired with format 4 (which sets the 2-byte lookup
     // size; format 2 alone never touches cmap.sizes — the no-sizes quirk):
     // high byte 1, firstCode 0x41, gid 0x141 -> code 0x0141 shown as <0141>
-    val f2 = graft.tools.FuzzR8.cmapFormat2(Seq((1, 0x41, 0, 0x141)))
+    val f2 = graft.fixtures.PdfBuilderR2.cmapFormat2(Seq((1, 0x41, 0, 0x141)))
     val f4 = graft.fixtures.PdfBuilderR2.cmapFormat4(Seq(('A', 0x80)))
     val tt = graft.fixtures.PdfBuilderR2.trueTypeWithCmaps(Seq(f2, f4))
     val fontObjs = Seq(

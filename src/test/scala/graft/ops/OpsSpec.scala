@@ -3003,6 +3003,52 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("Checkpoints: an Observation below an eager cut fires within 5 s, local and reliable") {
+    // Checkpoints.observed (connectedComponents, hostRank) reads scalars
+    // fused into the job that materializes the cut; both cut shapes —
+    // localCheckpoint(eager) and persist -> checkpoint(eager) -> unpersist
+    // — must deliver the metric from that job, not only via the fallback
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    def cutAndObserve(name: String, n: Long): Unit = {
+      val obs = org.apache.spark.sql.Observation(name)
+      val cp = Checkpoints.cut(spark.range(n).toDF("id").observe(obs, sum(col("id")).as("s")))
+      assert(Await.result(obs.future, 5.seconds).getAs[Long]("s") == n * (n - 1) / 2, name)
+      assert(cp.count() == n)
+    }
+    cutAndObserve("obs_local_cut", 1000L)
+    val dir = java.nio.file.Files.createTempDirectory("graft-obs-ckpt").toFile
+    spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+    try cutAndObserve("obs_reliable_cut", 2000L)
+    finally {
+      spark.sparkContext.setCheckpointDir(null)
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
+      }
+      rm(dir)
+    }
+  }
+
+  test("SparkEntry.readT: a table rewritten at the same file: URI is read with its new schema") {
+    // a URI gives java.io.File no directory to key the schema cache on
+    // (mtime 0, no entries), so such paths must re-infer on every read
+    val dir = java.nio.file.Files.createTempDirectory("graft-readt").toFile
+    val uri = new java.io.File(dir, "t.parquet").toURI.toString
+    try {
+      Seq((1L, "a")).toDF("id", "s").write.mode("overwrite").parquet(uri)
+      assert(graft.SparkEntry.readT(spark, uri).columns.toSeq == Seq("id", "s"))
+      Seq((2L, 3.5)).toDF("id", "x").write.mode("overwrite").parquet(uri)
+      val again = graft.SparkEntry.readT(spark, uri)
+      assert(again.columns.toSeq == Seq("id", "x"))
+      assert(again.as[(Long, Double)].collect().toSeq == Seq((2L, 3.5)))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
+      }
+      rm(dir)
+    }
+  }
+
   // ---- incremental dedup (shard vs snapshot) -------------------------------
 
   test("incrementalExactDedup: flags vs sequential recompute; bloom on/off identical") {

@@ -44,6 +44,17 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges <= 1, s"unexpected extra shuffles ($exchanges):\n$plan")
   }
 
+  test("keyed extraction (ExtractJob.run's path) shuffles only the whale band, round-robin") {
+    import spark.implicits._
+    val pages = ExtractJob.withBucket(spark.range(50).as[Long].map(Corpus.row(42L)).toDF(), 4)
+    val plan = physicalPlan(
+      ExtractJob.extractKeyed(ExtractJob.saltedRepartitionKeyed(spark, pages, 4)).toDF())
+    val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("RoundRobinPartitioning"),
+      s"expected exactly one round-robin exchange:\n$plan")
+    assert(!plan.contains("hashpartitioning"), s"small band is hash-shuffled:\n$plan")
+  }
+
   test("dimension joins broadcast in q02") {
     assume(haveTestdata)
     val plan = physicalPlan(graft.SparkEntry.queries("q02_revenue_by_nation")(spark, sfDir))
