@@ -58,6 +58,72 @@ object SparkEntry {
     base.union(mirrors)
   }
 
+  /** [[dedupMedia]]'s perceptual hashes through the REAL codecs, pinned
+    * per image from a verified run: the q145 oracle, and the population
+    * the q146 near-dup oracle brute-forces */
+  private val imageHashPinsSql: String =
+    """SELECT * FROM (VALUES
+      |(0::BIGINT, 64, 64, -2202630356992::BIGINT, -8236948698979470963::BIGINT),
+      |(3::BIGINT, 64, 64, -602771816448::BIGINT, -3655277904874628173::BIGINT),
+      |(6::BIGINT, 64, 64, -42563796992::BIGINT, 3266129463844165859::BIGINT),
+      |(9::BIGINT, 64, 64, -4468292714496::BIGINT, 8487448437559801415::BIGINT),
+      |(12::BIGINT, 64, 64, -99824435200::BIGINT, -2818352701864306122::BIGINT),
+      |(15::BIGINT, 64, 64, -162772549632::BIGINT, 8765651176991354329::BIGINT),
+      |(18::BIGINT, 64, 64, -3462716719104::BIGINT, -7304887745828444519::BIGINT),
+      |(21::BIGINT, 64, 64, -9854726963200::BIGINT, -3216887439560136753::BIGINT),
+      |(24::BIGINT, 64, 64, -1726845288448::BIGINT, -8737727481184965202::BIGINT),
+      |(27::BIGINT, 64, 64, -243599933440::BIGINT, -5364819660206396237::BIGINT),
+      |(30::BIGINT, 64, 64, -419698835456::BIGINT, 5868008377227720634::BIGINT),
+      |(33::BIGINT, 64, 64, -2525364748288::BIGINT, -2575198499504965838::BIGINT),
+      |(36::BIGINT, 64, 64, -32648462336::BIGINT, -3062786751808218749::BIGINT),
+      |(39::BIGINT, 64, 64, -655083175936::BIGINT, 2196802736752472347::BIGINT),
+      |(42::BIGINT, 64, 64, -953751175168::BIGINT, 7381887683279302065::BIGINT),
+      |(45::BIGINT, 64, 64, -4781295796224::BIGINT, -6388218959315905626::BIGINT),
+      |(48::BIGINT, 64, 64, -414932008960::BIGINT, -7379624299646837845::BIGINT),
+      |(51::BIGINT, 64, 64, -2013265920::BIGINT, -3771314615889092263::BIGINT),
+      |(54::BIGINT, 64, 64, -149183004672::BIGINT, -7400991135170671281::BIGINT),
+      |(57::BIGINT, 64, 64, -5099720015872::BIGINT, 6568382716682413369::BIGINT),
+      |(60::BIGINT, 64, 64, -2493226418176::BIGINT, -4719113952959773050::BIGINT),
+      |(63::BIGINT, 64, 64, -692395704320::BIGINT, -2712965364694681116::BIGINT),
+      |(66::BIGINT, 64, 64, -833122992128::BIGINT, -5721715372246315549::BIGINT),
+      |(69::BIGINT, 64, 64, -3739222016::BIGINT, 7165585790405796709::BIGINT),
+      |(72::BIGINT, 64, 64, -55532584960::BIGINT, -4491837907391824807::BIGINT),
+      |(75::BIGINT, 64, 64, -78852915200::BIGINT, -3219870621846044563::BIGINT),
+      |(78::BIGINT, 64, 64, -1799574519808::BIGINT, -4742893719112725218::BIGINT),
+      |(81::BIGINT, 64, 64, -294171705344::BIGINT, 7409884397761942380::BIGINT),
+      |(84::BIGINT, 64, 64, -1321675522048::BIGINT, 3036327088320225124::BIGINT),
+      |(87::BIGINT, 64, 64, -62123933696::BIGINT, 7323853122977371459::BIGINT),
+      |(90::BIGINT, 64, 64, -72779563008::BIGINT, 3877004330687609532::BIGINT),
+      |(93::BIGINT, 64, 64, -127875940352::BIGINT, -7446027463044383333::BIGINT),
+      |(96::BIGINT, 64, 64, -29527900160::BIGINT, 1611105850812056233::BIGINT),
+      |(99::BIGINT, 64, 64, -32648462336::BIGINT, 6766418051667400026::BIGINT),
+      |(102::BIGINT, 64, 64, -764453847040::BIGINT, 5714413878132494950::BIGINT),
+      |(105::BIGINT, 64, 64, -8949554216960::BIGINT, 6423920665735180828::BIGINT),
+      |(108::BIGINT, 64, 64, -561487282176::BIGINT, 6604174219797257131::BIGINT),
+      |(111::BIGINT, 64, 64, -382512136192::BIGINT, -3651761019586556522::BIGINT),
+      |(114::BIGINT, 64, 64, -689474371584::BIGINT, -446926954638498518::BIGINT),
+      |(117::BIGINT, 64, 64, -332507643904::BIGINT, -7112864166664915106::BIGINT),
+      |(100003::BIGINT, 64, 64, -5000818327552::BIGINT, -3655277904874628173::BIGINT),
+      |(100009::BIGINT, 64, 64, -5018048528384::BIGINT, 8487448437559801415::BIGINT),
+      |(100015::BIGINT, 64, 64, -162772549632::BIGINT, 8765651176991354329::BIGINT),
+      |(100021::BIGINT, 64, 64, -9854726963200::BIGINT, -3216887439560136817::BIGINT),
+      |(100027::BIGINT, 64, 64, -243566379008::BIGINT, -5364819660206396237::BIGINT),
+      |(100033::BIGINT, 64, 64, -2525364748288::BIGINT, -2575198499504965838::BIGINT),
+      |(100039::BIGINT, 64, 64, -655083175936::BIGINT, 2232831533771436315::BIGINT),
+      |(100045::BIGINT, 64, 64, -4781295796224::BIGINT, -6388218959315905626::BIGINT),
+      |(100051::BIGINT, 64, 64, -2013265920::BIGINT, -3771314615889092263::BIGINT),
+      |(100057::BIGINT, 64, 64, -5099720015872::BIGINT, 6568382716682413369::BIGINT),
+      |(100063::BIGINT, 64, 64, -692395704320::BIGINT, -2712965364694681116::BIGINT),
+      |(100069::BIGINT, 64, 64, -3739222016::BIGINT, 2553899771978408805::BIGINT),
+      |(100075::BIGINT, 64, 64, -78852915200::BIGINT, -3219307671892623251::BIGINT),
+      |(100081::BIGINT, 64, 64, -294171705344::BIGINT, 7409884397761942380::BIGINT),
+      |(100087::BIGINT, 64, 64, -62123933696::BIGINT, 7323853122977371459::BIGINT),
+      |(100093::BIGINT, 64, 64, -127875940352::BIGINT, -7446027463044383333::BIGINT),
+      |(100099::BIGINT, 64, 64, -32648462336::BIGINT, 6766418601423213914::BIGINT),
+      |(100105::BIGINT, 64, 64, -8949554216960::BIGINT, 6423920665735180828::BIGINT),
+      |(100111::BIGINT, 64, 64, -382512136192::BIGINT, -3651761019586556522::BIGINT),
+      |(100117::BIGINT, 64, 64, -332507643904::BIGINT, -7112864166664915106::BIGINT)) t(media_id, decoded_w, decoded_h, ahash, dhash)""".stripMargin
+
   /** shared q141/q156 synthesized fetch history: doc_id%4+1 fetches an
     * hour apart; content version bumps at every step j>0 with
     * (doc_id+j)%3==0 */
@@ -74,6 +140,24 @@ object SparkEntry {
           j => j > 0 && (col("doc_id") + j) % 3 === 0)).cast("string"))
           .as("content_hash"))
   }
+
+  /** [[recrawlFrame]] in SQL, shared by the q141/q156 oracles: the fetch
+    * log `f` (url, fetch_ms, content_hash) and `lagd` (+ ph, the previous
+    * fetch's hash per url) */
+  private val recrawlFetchCtesSql: String =
+    """f AS (
+      |  SELECT 'https://' || coalesce(source, 'unknown') || '.example/u'
+      |           || doc_id AS url,
+      |         doc_id * 1000 + i * 3600000 AS fetch_ms,
+      |         'h' || len(list_filter(range(0, i + 1),
+      |                    j -> j > 0 AND (doc_id + j) % 3 = 0)) AS content_hash
+      |  FROM (SELECT doc_id, source,
+      |               unnest(range(0, doc_id % 4 + 1)) AS i FROM documents)),
+      |lagd AS (
+      |  SELECT url, fetch_ms, content_hash,
+      |         lag(content_hash) OVER (PARTITION BY url
+      |           ORDER BY fetch_ms, content_hash) AS ph
+      |  FROM f)""".stripMargin
 
   /** deterministic per-(surface, sfDir) index-snapshot path — the
     * train-once/serve-many lifecycle the SimSearch builders document:
@@ -123,13 +207,27 @@ object SparkEntry {
     (d, hosts)
   }
 
+  /** [[rankedSources]] in SQL: `d` (doc_id, source), `h` (source, hid)
+    * and `c` (the `nh` host count) — the host universe every link-graph
+    * oracle opens with. */
+  private val rankedSourcesSql: String =
+    """d AS (
+      |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
+      |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
+      |      FROM (SELECT DISTINCT source FROM d)),
+      |c AS (SELECT count(*) AS nh FROM h)""".stripMargin
+
   /** the mix32 target-host expression shared by every link-graph
-    * surface — ONE source of truth, because each query's DuckDB oracle
-    * replicates it literally (reads `doc_id` and the `nh` host count). */
+    * surface — ONE source of truth (reads `doc_id` and the `nh` host
+    * count). Its SQL twin is [[mixTargetSql]], which the host-graph
+    * oracles share through [[hostTargetsSql]]; the q84/q87/q90 page
+    * oracles spell the same arithmetic across two lines of a join. */
   private def mixTarget(mult: Long): Column = pmod(
     shiftright(pmod(pmod(col("doc_id"), lit(2147483648L)) * lit(mult),
       lit(4294967296L)), 16),
     col("nh"))
+  private def mixTargetSql(mult: Long): String =
+    s"((((d.doc_id % 2147483648) * $mult) % 4294967296) // 65536) % nh"
 
   /** shared q84/q87 synthetic page frame: each doc carries one absolute
     * link (entity-encoded query + anchor), one relative rel=nofollow
@@ -163,8 +261,18 @@ object SparkEntry {
         lit("<a name=\"top\">anchorless</a></body></html>")).as("html"))
   }
 
+  /** [[linkPages]]' link targets in SQL, shared by the q84/q87 oracles:
+    * `m` (doc_id, source, h1, h2) over the host universe */
+  private val linkPagesSql: String = "WITH " + rankedSourcesSql + ",\n" +
+    """m AS (SELECT d.doc_id, d.source, h1.source AS h1, h2.source AS h2
+      |      FROM d CROSS JOIN c
+      |      JOIN h h1 ON ((((d.doc_id % 2147483648) * 2654435761) % 4294967296)
+      |                     // 65536) % nh = h1.hid
+      |      JOIN h h2 ON ((((d.doc_id % 2147483648) * 2246822519) % 4294967296)
+      |                     // 65536) % nh = h2.hid)""".stripMargin
+
   /** shared q105/q106 funnel stage list — ordered keep-predicates over
-    * the documents table, each mirrored literally in the oracle SQL. */
+    * the documents table, mirrored by [[funnelFirstFailSql]]. */
   private def funnelStages: Seq[(String, org.apache.spark.sql.Column)] = Seq(
     "nonempty" -> (length(coalesce(col("text"), lit(""))) > 0),
     "min_len" -> (col("n_chars") >= 200),
@@ -173,6 +281,33 @@ object SparkEntry {
     "alpha_ratio" ->
       (length(regexp_replace(col("text"), "[^A-Za-z]", "")) * 10 >=
         length(col("text")) * 4))
+
+  /** [[funnelStages]] in SQL: the q105/q106 `f` CTE's CASE arms — `ff`
+    * is the first failing stage's 1-based index, 0 when a doc is kept */
+  private val funnelFirstFailSql: String =
+    """    WHEN NOT coalesce(length(coalesce(text, '')) > 0, false) THEN 1
+      |    WHEN NOT coalesce(n_chars >= 200, false) THEN 2
+      |    WHEN NOT coalesce(n_chars <= 20000, false) THEN 3
+      |    WHEN NOT coalesce(coalesce(lang, '') <> '', false) THEN 4
+      |    WHEN NOT coalesce(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 10
+      |                      >= length(text) * 4, false) THEN 5
+      |    ELSE 0 END AS ff
+      |  FROM documents),
+      |""".stripMargin
+
+  /** the q105/q106 stage-name table `s` */
+  private val funnelStageNamesSql: String =
+    """s AS (SELECT * FROM (VALUES (1, 'nonempty'), (2, 'min_len'),
+      |        (3, 'max_len'), (4, 'lang_known'), (5, 'alpha_ratio'))
+      |        AS v(stage_idx, stage)),
+      |""".stripMargin
+
+  /** the q105/q106 survivor columns over `acc` */
+  private val funnelCountsSql: String =
+    """  cast(n_in AS bigint) AS n_in, cast(n_dropped AS bigint) AS n_dropped,
+      |  cast(n_in - n_dropped AS bigint) AS n_out,
+      |  CASE WHEN n_in = 0 THEN 0.0 ELSE round(n_dropped / n_in, 6) END AS drop_pct
+      |FROM acc""".stripMargin
 
   /** shared q83/q88 synthetic host graph: two deterministic mix32
     * outlinks per doc over the indexed host universe, intra-host edges
@@ -193,6 +328,33 @@ object SparkEntry {
       .filter(col("src") =!= col("dst"))
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("weight"))
   }
+
+  /** [[hostGraphEdges]] in SQL up to the per-doc targets: the host
+    * universe, `l` (each linking doc's two mix32 target hids) and `e0`
+    * (src, thid), one row per target */
+  private val hostTargetsSql: String = rankedSourcesSql + ",\n" +
+    s"""l AS (SELECT d.source, h.hid,
+       |        ${mixTargetSql(2654435761L)} AS t1,
+       |        ${mixTargetSql(2246822519L)} AS t2
+       |      FROM d JOIN h ON d.source = h.source CROSS JOIN c
+       |      WHERE h.hid <> 0),
+       |e0 AS (SELECT source AS src, t1 AS thid FROM l
+       |       UNION ALL
+       |       SELECT source AS src, t2 AS thid FROM l)""".stripMargin
+
+  /** [[hostGraphEdges]] in SQL: the weighted `e` (src, dst, weight) */
+  private val hostGraphEdgesSql: String = hostTargetsSql + ",\n" +
+    """e AS (SELECT e0.src, h.source AS dst, cast(count(*) AS bigint) AS weight
+      |      FROM e0 JOIN h ON e0.thid = h.hid
+      |      WHERE e0.src <> h.source
+      |      GROUP BY 1, 2)""".stripMargin
+
+  /** the unweighted host edge set `e` (src, dst) of the q95/q101 oracles */
+  private val hostLinksSql: String = hostTargetsSql + ",\n" +
+    """e AS (SELECT e0.src, h.source AS dst
+      |      FROM e0 JOIN h ON e0.thid = h.hid
+      |      WHERE e0.src <> h.source
+      |      GROUP BY 1, 2)""".stripMargin
 
   /** shared q124/q125 synthetic doc-level graph: a chain over all doc ids
     * ((i, i+1) when both exist), a spoke from every non-decade doc to its
@@ -220,6 +382,23 @@ object SparkEntry {
       .select(col("ea").cast("string").as("src"),
         col("eb").cast("string").as("dst"))
   }
+
+  /** [[docGraphEdges]] in SQL, shared by the q124/q125 oracles: `ids`,
+    * the chain/spoke/clique candidates `raw`, and the endpoint-verified
+    * edge list `e` (s, t) */
+  private val docGraphEdgesSql: String =
+    """WITH ids AS (SELECT doc_id FROM documents),
+      |raw AS (
+      |  SELECT doc_id AS ea, doc_id + 1 AS eb FROM ids
+      |  UNION ALL
+      |  SELECT doc_id - doc_id % 10 AS ea, doc_id AS eb FROM ids
+      |  WHERE doc_id % 10 <> 0
+      |  UNION ALL
+      |  SELECT doc_id AS ea, unnest(range(doc_id + 1, 19)) AS eb FROM ids
+      |  WHERE doc_id < 18),
+      |e AS (SELECT cast(r.ea AS varchar) AS s, cast(r.eb AS varchar) AS t
+      |      FROM raw r JOIN ids ia ON r.ea = ia.doc_id
+      |                 JOIN ids ib ON r.eb = ib.doc_id)""".stripMargin
 
   /** Flagship: extraction pipeline over a synthesized 300-row corpus,
     * joined against golden. Driver smoke-checks rows > 0. */
@@ -2148,10 +2327,6 @@ object SparkEntry {
       |SELECT doc_id, n_terms_matched, score_e6, cast(rnk AS bigint) AS rnk
       |FROM rk WHERE rnk <= 20""".stripMargin
 
-  /** duplicate-cluster oracle shared by q26 (label-propagation engine)
-    * and q132 (large-star/small-star engine): both compute cluster_id =
-    * min reachable id over the q21 jaccard-0.5 edge set, restated here as
-    * a recursive reachability walk. */
   /** q154/q157 shared exact micro-unit quality CTE */
   private val qualityE6CteSql: String =
     """WITH ql AS (
@@ -2174,6 +2349,33 @@ object SparkEntry {
         |              1.0)) * 4.0,
         |        1.0) * 0.3, 6) * 1000000) AS BIGINT) AS quality_e6
         |  FROM documents)""".stripMargin
+
+  /** the q13 quality score over a `text` column, as one `round(...) AS
+    * quality` projection with every line prefixed by `pad` — shared by
+    * the q13/q27/q43/q69/q71/q75/q77 oracles ([[qualityE6CteSql]] is its
+    * coalesced micro-unit form) */
+  private def qualityScoreSql(pad: String): String =
+    """round(
+      |  least(length(text) / 500.0, 1.0) * 0.4 +
+      |  (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
+      |             / greatest(cast(length(text) AS double), 1.0) > 0.2 THEN 0.0
+      |        ELSE 1.0 - (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
+      |             / greatest(cast(length(text) AS double), 1.0) * 2 END) * 0.3 +
+      |  least((len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+      |      w -> w IN ('the','a','an','and','or','of','to','in','is','it',
+      |                 'that','on','for','with','as','at','by','this')))
+      |    / greatest(cast(CASE WHEN length(trim(text)) = 0 THEN 0
+      |          ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS double), 1.0)) * 4.0,
+      |    1.0) * 0.3, 6) AS quality""".stripMargin
+      .linesIterator.map(pad + _).mkString("\n")
+
+  /** q43/q69 `scored` (doc_id, source, quality, n_tokens), left open
+    * after its FROM so q69 can restrict the sources */
+  private val scoredSql: String =
+    "WITH scored AS (\n  SELECT doc_id, source,\n" + qualityScoreSql("    ") + ",\n" +
+      """    cast(CASE WHEN length(trim(text)) = 0 THEN 0
+        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS bigint) AS n_tokens
+        |  FROM documents""".stripMargin
 
   /** shared oracle of the six ANN audit surfaces */
   private val annAuditOracleSql: String =
@@ -2231,22 +2433,23 @@ object SparkEntry {
        |bands AS (SELECT side, doc_id, i // 4 AS band, list(v ORDER BY i) AS bv
        |          FROM sigs GROUP BY 1, 2, 3)""".stripMargin
 
+  /** the q06/q155 banded candidate side over every document: band
+    * buckets above 1000 rows skipped (the bucket cap), candidate pairs
+    * `cand` (doc_a, doc_b) */
+  private def minhashCandCtesSql: String =
+    "WITH src AS (SELECT 'd' AS side, doc_id, text FROM documents),\n" +
+      minhashSigCtes("src") + """,
+        |bsz AS (SELECT band, bv, count(*) AS n FROM bands GROUP BY 1, 2),
+        |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |         FROM bands a JOIN bands b
+        |           ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
+        |         JOIN bsz ON a.band = bsz.band AND a.bv = bsz.bv
+        |         WHERE bsz.n <= 1000
+        |         GROUP BY 1, 2)""".stripMargin
+
   /** q91 oracle — shared: q92 wraps it with per-host tolerance verdicts */
-  private val harmonicOracleSql: String =
-    """WITH d AS (
-      |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-      |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-      |      FROM (SELECT DISTINCT source FROM d)),
-      |c AS (SELECT count(*) AS nh FROM h),
-      |l AS (SELECT d.source, h.hid,
-      |        ((((d.doc_id % 2147483648) * 2654435761) % 4294967296) // 65536) % nh AS t1,
-      |        ((((d.doc_id % 2147483648) * 2246822519) % 4294967296) // 65536) % nh AS t2
-      |      FROM d JOIN h ON d.source = h.source CROSS JOIN c
-      |      WHERE h.hid <> 0),
-      |e0 AS (SELECT source AS src, t1 AS thid FROM l
-      |       UNION ALL
-      |       SELECT source AS src, t2 AS thid FROM l),
-      |e AS (SELECT DISTINCT e0.src, h.source AS dst
+  private val harmonicOracleSql: String = "WITH " + hostTargetsSql + ",\n" +
+    """e AS (SELECT DISTINCT e0.src, h.source AS dst
       |      FROM e0 JOIN h ON e0.thid = h.hid
       |      WHERE e0.src <> h.source),
       |p2 AS (SELECT DISTINCT a.src, b.dst FROM e a JOIN e b ON a.dst = b.src
@@ -2285,23 +2488,50 @@ object SparkEntry {
       |       CAST(count(DISTINCT url) AS BIGINT) AS n_distinct
       |FROM h GROUP BY host""".stripMargin
 
-  private val dupClustersSql: String =
-    """WITH RECURSIVE toks AS (
+  /** the distinct word-3-gram set of every `<p>toks` row: `<p>gsets`
+    * (doc_id, gs), `<p>grams` (doc_id, g) and `sizes` (doc_id, sz) */
+  private def gramSetCtesSql(p: String): String =
+    s"""${p}gsets AS (
+       |  SELECT doc_id, list_distinct([array_to_string(t[i+1:i+3], ' ')
+       |          for i in range(0, greatest(len(t)-3, 0) + 1)]) AS gs
+       |  FROM ${p}toks),
+       |${p}grams AS (SELECT doc_id, unnest(gs) AS g FROM ${p}gsets),
+       |sizes AS (SELECT doc_id, len(gs) AS sz FROM ${p}gsets)""".stripMargin
+
+  /** the inverted-index self-join `<name>` (doc_a, doc_b, common) over a
+    * (doc_id, g) CTE */
+  private def gramPairsSql(name: String, grams: String): String =
+    s"""$name AS (
+       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
+       |  FROM $grams a JOIN $grams b ON a.g = b.g AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** the q21 candidate side: `toks` (a plain whitespace split that KEEPS
+    * empty edge tokens — the SQL-split semantics of ngramJaccardAllPairs'
+    * gramSet), [[gramSetCtesSql]], grams of df > 100 dropped (`kept`, the
+    * maxDf guard), then the [[gramPairsSql]] self-join named `pairs` */
+  private def gramPairCtesSql(pairs: String): String =
+    """toks AS (
       |  SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS t FROM documents),
-      |gsets AS (
-      |  SELECT doc_id, list_distinct([array_to_string(t[i+1:i+3], ' ')
-      |          for i in range(0, greatest(len(t)-3, 0) + 1)]) AS gs
-      |  FROM toks),
-      |grams AS (SELECT doc_id, unnest(gs) AS g FROM gsets),
-      |sizes AS (SELECT doc_id, len(gs) AS sz FROM gsets),
-      |dfc AS (SELECT g, count(*) AS df FROM grams GROUP BY g),
-      |kept AS (SELECT gr.doc_id, gr.g FROM grams gr JOIN dfc USING (g)
-      |         WHERE df <= 100),
-      |cand AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-      |  FROM kept a JOIN kept b ON a.g = b.g AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |edges AS (
+      |""".stripMargin + gramSetCtesSql("") + ",\n" +
+      """dfc AS (SELECT g, count(*) AS df FROM grams GROUP BY g),
+        |kept AS (SELECT gr.doc_id, gr.g FROM grams gr JOIN dfc USING (g)
+        |         WHERE df <= 100),
+        |""".stripMargin + gramPairsSql(pairs, "kept")
+
+  /** the jaccard projection of `pairs` + `sizes` at a threshold */
+  private def jaccardSelectSql(threshold: String): String =
+    s"""SELECT doc_a, doc_b,
+       |  round(common / (sa.sz + sb.sz - common), 6) AS jaccard
+       |FROM pairs
+       |JOIN sizes sa ON doc_a = sa.doc_id
+       |JOIN sizes sb ON doc_b = sb.doc_id
+       |WHERE common / (sa.sz + sb.sz - common) >= $threshold""".stripMargin
+
+  /** the q21 jaccard-0.5 edge set as a recursive reachability `walk`
+    * (node, reach); callers open with WITH RECURSIVE */
+  private val dupWalkCtesSql: String = gramPairCtesSql("cand") + ",\n" +
+    """edges AS (
       |  SELECT doc_a, doc_b FROM cand
       |  JOIN sizes sa ON doc_a = sa.doc_id
       |  JOIN sizes sb ON doc_b = sb.doc_id
@@ -2311,8 +2541,34 @@ object SparkEntry {
       |walk AS (
       |  SELECT a AS node, a AS reach FROM bidir
       |  UNION
-      |  SELECT w.node, e.b AS reach FROM walk w JOIN bidir e ON w.reach = e.a)
-      |SELECT node AS doc_id, min(reach) AS cluster_id
+      |  SELECT w.node, e.b AS reach FROM walk w JOIN bidir e ON w.reach = e.a)""".stripMargin
+
+  /** `toks` (<cols>t): trimmed lower-cased whitespace tokens, [] for a
+    * blank text; `cols` is "" or "doc_id, " */
+  private def lowerToksSql(cols: String): String =
+    "toks AS (\n  SELECT " + cols +
+      """CASE WHEN length(trim(text)) = 0 THEN []
+        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
+        |  FROM documents)""".stripMargin
+
+  /** q20/q27 adjacent-bigram repetition: per-doc bigram counts `cnt` and
+    * the top count + total `top` (doc_id, top_c, n_g) */
+  private val bigramTopCtesSql: String = lowerToksSql("doc_id, ") + ",\n" +
+    """g2 AS (
+      |  SELECT doc_id, unnest(CASE WHEN len(t) >= 2
+      |           THEN [t[i] || ' ' || t[i+1] for i in range(1, len(t))]
+      |           ELSE [] END) AS g
+      |  FROM toks),
+      |cnt AS (SELECT doc_id, g, count(*) AS c FROM g2 GROUP BY 1, 2),
+      |top AS (SELECT doc_id, max(c) AS top_c, cast(sum(c) AS bigint) AS n_g
+      |        FROM cnt GROUP BY doc_id)""".stripMargin
+
+  /** duplicate-cluster oracle shared by q26 (label-propagation engine)
+    * and q132 (large-star/small-star engine): both compute cluster_id =
+    * min reachable id over the q21 jaccard-0.5 edge set, restated here as
+    * a recursive reachability walk. */
+  private val dupClustersSql: String = "WITH RECURSIVE " + dupWalkCtesSql + "\n" +
+    """SELECT node AS doc_id, min(reach) AS cluster_id
       |FROM walk GROUP BY node""".stripMargin
 
   /** q133 oracle, BUILT from the same data as the surface — the sample
@@ -2389,72 +2645,208 @@ FROM c"""
       |  FROM toks)
       |""".stripMargin + tail
 
-  /** the q102 rank+tier CTE chain (synthetic host graph, 3 unrolled
-    * exact-integer PageRank iterations, percentile tiers) — shared
-    * verbatim by the q102 surface oracle and the q149 mixture crosstab
-    * so the tier derivation cannot drift between the per-doc stamp and
-    * the aggregate report */
-  private val hostTierCtesSql: String =
+  /** inflow `i<k>` and dangling mass `g<k>` of exact-integer rank round
+    * k over the weighted `e`, reading round k-1's `r<k-1>` (host, outw,
+    * r) — shared by the PageRank and TrustRank unrollings */
+  private def rankInflowSql(k: Int): String =
+    s"""i$k AS (SELECT e.dst AS host,
+       |         cast(sum(e.weight * (r.r // r.outw)
+       |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
+       |       FROM e JOIN r${k - 1} r ON e.src = r.host GROUP BY 1),
+       |g$k AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r${k - 1} WHERE outw = 0)""".stripMargin
+
+  /** one unrolled PageRank round k (damping 0.85, uniform teleport) */
+  private def pageRankRoundSql(k: Int): String = rankInflowSql(k) + ",\n" +
+    s"""r$k AS (SELECT p.host, p.outw,
+       |         (15 * (1000000000000 // n.n)) // 100
+       |         + (85 * (coalesce(i$k.infl, 0) + g$k.dang // n.n)) // 100 AS r
+       |       FROM r${k - 1} p LEFT JOIN i$k ON p.host = i$k.host CROSS JOIN g$k CROSS JOIN n)""".stripMargin
+
+  /** one unrolled TrustRank round k (q88): teleport and dangling mass go
+    * to the `seed` hosts only, `ns.s` of them */
+  private def trustRankRoundSql(k: Int): String = rankInflowSql(k) + ",\n" +
+    s"""r$k AS (SELECT p.host, p.outw, p.seed,
+       |         cast(CASE WHEN p.seed
+       |                THEN (15 * (1000000000000 // ns.s)) // 100 ELSE 0 END
+       |           + (85 * (coalesce(i$k.infl, 0)
+       |              + CASE WHEN p.seed THEN g$k.dang // ns.s ELSE 0 END)) // 100
+       |           AS bigint) AS r
+       |       FROM r${k - 1} p LEFT JOIN i$k ON p.host = i$k.host CROSS JOIN g$k CROSS JOIN ns)""".stripMargin
+
+  /** the q83 rank chain: synthetic host graph, uniform `r0`, 3 unrolled
+    * exact-integer PageRank rounds ending in `r3` */
+  private val hostRankCtesSql: String = hostGraphEdgesSql + ",\n" +
+    """u AS (SELECT src AS host FROM e UNION SELECT dst FROM e),
+      |ow AS (SELECT u.host, coalesce(s.w, 0) AS outw
+      |       FROM u LEFT JOIN
+      |         (SELECT src, cast(sum(weight) AS bigint) AS w FROM e GROUP BY 1) s
+      |         ON u.host = s.src),
+      |n AS (SELECT count(*) AS n FROM u),
+      |r0 AS (SELECT host, outw, 1000000000000 // n AS r FROM ow CROSS JOIN n),
+      |""".stripMargin + (1 to 3).map(pageRankRoundSql).mkString(",\n")
+
+  /** the q102 rank+tier CTE chain (the q83 rank chain + percentile
+    * tiers) — shared verbatim by the q102 surface oracle, the q149
+    * mixture crosstab and the q135/q153/q156/q158 composites, so the tier
+    * derivation cannot drift between the per-doc stamp and the aggregate
+    * reports */
+  private val hostTierCtesSql: String = "WITH " + hostRankCtesSql + ",\n" +
+    """rk AS (SELECT host, r AS rank_e12,
+      |         row_number() OVER (ORDER BY r DESC, host ASC) AS rnk,
+      |         count(*) OVER () AS nu
+      |       FROM r3),
+      |tiers AS (SELECT host, rank_e12, cast(rnk AS bigint) AS rnk,
+      |            CASE WHEN rnk * 100 <= 10 * nu THEN 1
+      |                 WHEN rnk * 100 <= 50 * nu THEN 2
+      |                 ELSE 3 END AS tier
+      |          FROM rk)""".stripMargin
+
+  /** q89's per-host structural stats over the weighted `e` (shared with
+    * the q135 dossier): out/in degree and weight, reciprocated links */
+  private val hostDegreeCtesSql: String =
+    """o AS (SELECT src, cast(count(*) AS bigint) AS out_deg,
+      |        cast(sum(weight) AS bigint) AS out_weight FROM e GROUP BY 1),
+      |i AS (SELECT dst, cast(count(*) AS bigint) AS in_deg,
+      |        cast(sum(weight) AS bigint) AS in_weight FROM e GROUP BY 1),
+      |rc AS (SELECT a.src, cast(count(*) AS bigint) AS n_recip
+      |       FROM e a JOIN e b ON a.src = b.dst AND a.dst = b.src GROUP BY 1)""".stripMargin
+
+  /** the projected columns of [[hostDegreeCtesSql]] */
+  private val hostDegreeColsSql: String =
+    """  coalesce(o.out_deg, 0) AS out_deg,
+      |  coalesce(i.in_deg, 0) AS in_deg,
+      |  coalesce(o.out_weight, 0) AS out_weight,
+      |  coalesce(i.in_weight, 0) AS in_weight,
+      |  coalesce(rc.n_recip, 0) AS n_recip,
+      |  CASE WHEN coalesce(o.out_deg, 0) = 0 THEN 0.0
+      |       ELSE round(coalesce(rc.n_recip, 0) / cast(o.out_deg AS double), 6)
+      |  END AS reciprocity""".stripMargin
+
+  /** every whitespace token of the corpus: `terms` (term) over the
+    * doc-less [[lowerToksSql]] — the q113/q114/q129/q130 input */
+  private val termsSql: String = "WITH " + lowerToksSql("") + ",\n" +
+    "terms AS (SELECT unnest(t) AS term FROM toks)"
+
+  /** the q129/q130 exact term counts `c` (term, n) */
+  private val termCountsSql: String = termsSql + ",\n" +
+    "c AS (SELECT term, count(*) AS n FROM terms GROUP BY term)"
+
+  /** q113 (exact) and q114 (Misra-Gries sketch + exact recount) share
+    * the exact top-40 as their oracle */
+  private val topTermsSql: String = termsSql + ",\n" +
+    """c AS (SELECT term, cast(count(*) AS bigint) AS n FROM terms GROUP BY term),
+      |top AS (SELECT term, n,
+      |          row_number() OVER (ORDER BY n DESC, term ASC) AS rnk FROM c)
+      |SELECT term, n, cast(rnk AS bigint) AS rnk FROM top WHERE rnk <= 40""".stripMargin
+
+  /** q109 (position scan) and q110 (phrase index) answer the same
+    * two-token phrase query — one oracle, two plans */
+  private val phraseDocsSql: String = "WITH " + lowerToksSql("doc_id, ") + ",\n" +
+    """occ AS (
+      |  SELECT doc_id, unnest(range(1, len(t))) AS i, t
+      |  FROM toks WHERE len(t) >= 2)
+      |SELECT doc_id, cast(count(*) AS bigint) AS n_matches,
+      |  cast(min(i) - 1 AS int) AS first_pos
+      |FROM occ WHERE t[i] = 'batch' AND t[i+1] = 'batch'
+      |GROUP BY doc_id""".stripMargin
+
+  /** the q122/q123 winnowing recompute: poly-31 (64-bit wrap) over the
+    * normalized text, rightmost-min windows `wins` (doc_id, w) */
+  private val winnowCtesSql: String =
+    """WITH norm AS (
+      |  SELECT doc_id, trim(regexp_replace(lower(coalesce(text, '')), '\s+', ' ', 'g')) AS s
+      |  FROM documents),
+      |d AS (SELECT doc_id, s, length(s) AS n FROM norm WHERE length(s) >= 24),
+      |codes AS (SELECT doc_id, n,
+      |  [CAST(unicode(s[i+1:i+1]) AS HUGEINT) for i in range(0, n)] AS c FROM d),
+      |hl AS (SELECT doc_id, n - 23 AS m,
+      |  [CASE WHEN h >= 9223372036854775808::HUGEINT
+      |        THEN CAST(h - 18446744073709551616::HUGEINT AS BIGINT)
+      |        ELSE CAST(h AS BIGINT) END
+      |   FOR h IN [list_reduce(c[i+1:i+24],
+      |     (a, b) -> (a * 31 + b) % 18446744073709551616::HUGEINT)
+      |     for i in range(0, n - 23)]] AS h
+      |  FROM codes),
+      |wins AS (SELECT doc_id,
+      |  CASE WHEN m <= 4 THEN [list_min(h)]
+      |       ELSE [list_min(h[s+1:s+4]) for s in range(0, m - 3)] END AS w
+      |  FROM hl)""".stripMargin
+
+  /** the q52/q62 add-one-smoothed bigram LM: tokens `s`, bigrams `bi`,
+    * per-bigram negative log-probability `sc` (doc_id, nlp) */
+  private val bigramLmCtesSql: String =
+    """WITH s AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
+      |           FROM documents),
+      |bi AS (SELECT doc_id, t[i] AS w1, t[i+1] AS w2
+      |       FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
+      |             FROM s WHERE len(t) >= 2)),
+      |c12 AS (SELECT w1, w2, count(*) AS c12 FROM bi GROUP BY 1, 2),
+      |c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
+      |v AS (SELECT count(DISTINCT w) AS v FROM (SELECT unnest(t) AS w FROM s)),
+      |sc AS (SELECT bi.doc_id, -ln((c12.c12 + 1.0) / (c1.c1 + 1.0 * v.v)) AS nlp
+      |       FROM bi JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v)""".stripMargin
+
+  /** the q142/q152 serpentine input `r` (doc_id, weight, rnk): docs
+    * ranked by n_chars descending */
+  private val shardRanksSql: String =
+    """WITH r AS (
+      |  SELECT CAST(doc_id AS BIGINT) AS doc_id,
+      |         CAST(coalesce(n_chars, 0) AS BIGINT) AS weight,
+      |         row_number() OVER (ORDER BY coalesce(n_chars, 0) DESC,
+      |                            doc_id) AS rnk
+      |  FROM documents)""".stripMargin
+
+  /** the q73/q76 temperature-0.3 language distribution: per-language
+    * `p` (lang, n_docs, n_total, p) and its normaliser `z` */
+  private val temperatureCtesSql: String =
+    """WITH c AS (
+      |  SELECT coalesce(lang, 'und') AS lang, count(*) AS n_docs
+      |  FROM documents GROUP BY 1),
+      |t AS (SELECT sum(n_docs) AS n_total FROM c),
+      |p AS (SELECT lang, n_docs, n_total,
+      |        n_docs / cast(n_total AS double) AS p FROM c, t),
+      |z AS (SELECT sum(pow(p, 0.3)) AS z FROM p)""".stripMargin
+
+  /** the q40/q46 frame `d`: every 11th doc carries the planted
+    * benchmark answer */
+  private val plantedBenchSql: String =
     """WITH d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |l AS (SELECT d.source, h.hid,
-        |        ((((d.doc_id % 2147483648) * 2654435761) % 4294967296) // 65536) % nh AS t1,
-        |        ((((d.doc_id % 2147483648) * 2246822519) % 4294967296) // 65536) % nh AS t2
-        |      FROM d JOIN h ON d.source = h.source CROSS JOIN c
-        |      WHERE h.hid <> 0),
-        |e0 AS (SELECT source AS src, t1 AS thid FROM l
-        |       UNION ALL
-        |       SELECT source AS src, t2 AS thid FROM l),
-        |e AS (SELECT e0.src, h.source AS dst, cast(count(*) AS bigint) AS weight
-        |      FROM e0 JOIN h ON e0.thid = h.hid
-        |      WHERE e0.src <> h.source
-        |      GROUP BY 1, 2),
-        |u AS (SELECT src AS host FROM e UNION SELECT dst FROM e),
-        |ow AS (SELECT u.host, coalesce(s.w, 0) AS outw
-        |       FROM u LEFT JOIN
-        |         (SELECT src, cast(sum(weight) AS bigint) AS w FROM e GROUP BY 1) s
-        |         ON u.host = s.src),
-        |n AS (SELECT count(*) AS n FROM u),
-        |r0 AS (SELECT host, outw, 1000000000000 // n AS r FROM ow CROSS JOIN n),
-        |i1 AS (SELECT e.dst AS host,
-        |         cast(sum(e.weight * (r.r // r.outw)
-        |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
-        |       FROM e JOIN r0 r ON e.src = r.host GROUP BY 1),
-        |g1 AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r0 WHERE outw = 0),
-        |r1 AS (SELECT p.host, p.outw,
-        |         (15 * (1000000000000 // n.n)) // 100
-        |         + (85 * (coalesce(i1.infl, 0) + g1.dang // n.n)) // 100 AS r
-        |       FROM r0 p LEFT JOIN i1 ON p.host = i1.host CROSS JOIN g1 CROSS JOIN n),
-        |i2 AS (SELECT e.dst AS host,
-        |         cast(sum(e.weight * (r.r // r.outw)
-        |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
-        |       FROM e JOIN r1 r ON e.src = r.host GROUP BY 1),
-        |g2 AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r1 WHERE outw = 0),
-        |r2 AS (SELECT p.host, p.outw,
-        |         (15 * (1000000000000 // n.n)) // 100
-        |         + (85 * (coalesce(i2.infl, 0) + g2.dang // n.n)) // 100 AS r
-        |       FROM r1 p LEFT JOIN i2 ON p.host = i2.host CROSS JOIN g2 CROSS JOIN n),
-        |i3 AS (SELECT e.dst AS host,
-        |         cast(sum(e.weight * (r.r // r.outw)
-        |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
-        |       FROM e JOIN r2 r ON e.src = r.host GROUP BY 1),
-        |g3 AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r2 WHERE outw = 0),
-        |r3 AS (SELECT p.host, p.outw,
-        |         (15 * (1000000000000 // n.n)) // 100
-        |         + (85 * (coalesce(i3.infl, 0) + g3.dang // n.n)) // 100 AS r
-        |       FROM r2 p LEFT JOIN i3 ON p.host = i3.host CROSS JOIN g3 CROSS JOIN n),
-        |rk AS (SELECT host, r AS rank_e12,
-        |         row_number() OVER (ORDER BY r DESC, host ASC) AS rnk,
-        |         count(*) OVER () AS nu
-        |       FROM r3),
-        |tiers AS (SELECT host, rank_e12, cast(rnk AS bigint) AS rnk,
-        |            CASE WHEN rnk * 100 <= 10 * nu THEN 1
-        |                 WHEN rnk * 100 <= 50 * nu THEN 2
-        |                 ELSE 3 END AS tier
-        |          FROM rk)""".stripMargin
+      |  SELECT doc_id,
+      |    CASE WHEN doc_id % 11 = 0
+      |         THEN text || ' what is the capital of france answer paris'
+      |         ELSE text END AS text
+      |  FROM documents)""".stripMargin
+
+  /** the q50/q51/q59 line split of a frame `m`: `s` (doc_id, ls) and
+    * `l` (doc_id, pos, line) */
+  private val splitLinesSql: String =
+    """s AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM m),
+      |l AS (SELECT doc_id, i AS pos, ls[i] AS line
+      |      FROM (SELECT doc_id, ls, unnest(generate_series(1, len(ls))) AS i FROM s))""".stripMargin
+
+  /** the q59/q61 span dedup rule over spans `sp` (doc_id, pos, span) and
+    * units `l` (doc_id, pos): every later copy of a span loses the
+    * `width`+1 units it covers, `rm` (doc_id, pos) */
+  private def spanLossSql(width: Int): String =
+    s"""r AS (SELECT doc_id, pos,
+       |        row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn FROM sp),
+       |lose AS (SELECT doc_id, pos AS strt FROM r WHERE rn > 1),
+       |rm AS (SELECT DISTINCT l.doc_id, l.pos
+       |       FROM l JOIN lose ON l.doc_id = lose.doc_id
+       |         AND l.pos BETWEEN lose.strt AND lose.strt + $width)""".stripMargin
+
+  /** the q42/q96 tail: kept lines `k` (doc_id, pos, line) reassembled
+    * per doc against the split lines `s` */
+  private val keptLinesSql: String =
+    """agg AS (
+      |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text,
+      |    count(*) AS n_kept
+      |  FROM k GROUP BY 1)
+      |SELECT s.doc_id,
+      |  coalesce(agg.clean_text, '') AS clean_text,
+      |  cast(coalesce(agg.n_kept, 0) AS bigint) AS n_kept,
+      |  cast(len(s.ls) - coalesce(agg.n_kept, 0) AS bigint) AS n_removed
+      |FROM s LEFT JOIN agg USING (doc_id)""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
     "q133_script_profile" -> scriptProfileSql,
@@ -2517,21 +2909,8 @@ FROM c"""
     // q139: the oracle rebuilds the same synthetic fetch log and restates
     // urlHostCol's regex literally (the shared-extraction contract)
     "q139_host_cardinality" -> hostCardinalityOracleSql,
-    "q141_recrawl_schedule" ->
-      """WITH f AS (
-        |  SELECT 'https://' || coalesce(source, 'unknown') || '.example/u'
-        |           || doc_id AS url,
-        |         doc_id * 1000 + i * 3600000 AS fetch_ms,
-        |         'h' || len(list_filter(range(0, i + 1),
-        |                    j -> j > 0 AND (doc_id + j) % 3 = 0)) AS content_hash
-        |  FROM (SELECT doc_id, source,
-        |               unnest(range(0, doc_id % 4 + 1)) AS i FROM documents)),
-        |lagd AS (
-        |  SELECT url, fetch_ms, content_hash,
-        |         lag(content_hash) OVER (PARTITION BY url
-        |           ORDER BY fetch_ms, content_hash) AS ph
-        |  FROM f),
-        |a AS (
+    "q141_recrawl_schedule" -> ("WITH " + recrawlFetchCtesSql + ",\n" +
+      """a AS (
         |  SELECT url, CAST(count(*) AS BIGINT) AS n_fetches,
         |         CAST(sum(CASE WHEN ph IS NOT NULL AND ph <> content_hash
         |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_changes,
@@ -2544,7 +2923,7 @@ FROM c"""
         |  CAST(CASE WHEN n_changes > 0
         |            THEN last_ms + greatest(span_ms // n_changes, 1)
         |            ELSE last_ms + 86400000 END AS BIGINT) AS next_fetch_ms
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin),
     "q143_hashed_doc_vectors" -> hashedVecSql(
       """SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
         |  array_to_string(vec, ',') AS vec_csv
@@ -2611,31 +2990,13 @@ FROM c"""
         |    WHEN 6 THEN 'html'   WHEN 7 THEN 'json'
         |    ELSE 'unknown' END AS kind
         |FROM documents""".stripMargin,
-    "q142_balanced_shards" ->
-      """WITH r AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |         CAST(coalesce(n_chars, 0) AS BIGINT) AS weight,
-        |         row_number() OVER (ORDER BY coalesce(n_chars, 0) DESC,
-        |                            doc_id) AS rnk
-        |  FROM documents)
-        |SELECT doc_id, weight, CAST(rnk AS BIGINT) AS rnk,
+    "q142_balanced_shards" -> (shardRanksSql + "\n" +
+      """SELECT doc_id, weight, CAST(rnk AS BIGINT) AS rnk,
         |  CAST(CASE WHEN ((rnk - 1) // 7) % 2 = 0 THEN (rnk - 1) % 7
         |            ELSE 6 - (rnk - 1) % 7 END AS BIGINT) AS shard
-        |FROM r""".stripMargin,
-    "q124_triangles" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-        |raw AS (
-        |  SELECT doc_id AS ea, doc_id + 1 AS eb FROM ids
-        |  UNION ALL
-        |  SELECT doc_id - doc_id % 10 AS ea, doc_id AS eb FROM ids
-        |  WHERE doc_id % 10 <> 0
-        |  UNION ALL
-        |  SELECT doc_id AS ea, unnest(range(doc_id + 1, 19)) AS eb FROM ids
-        |  WHERE doc_id < 18),
-        |e AS (SELECT cast(r.ea AS varchar) AS s, cast(r.eb AS varchar) AS t
-        |      FROM raw r JOIN ids ia ON r.ea = ia.doc_id
-        |                 JOIN ids ib ON r.eb = ib.doc_id),
-        |und AS (SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b
+        |FROM r""".stripMargin),
+    "q124_triangles" -> (docGraphEdgesSql + ",\n" +
+      """und AS (SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b
         |        FROM e WHERE s <> t),
         |deg AS (SELECT v, cast(count(*) AS bigint) AS degree FROM (
         |    SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und)
@@ -2653,21 +3014,9 @@ FROM c"""
         |    THEN (2 * coalesce(pern.triangles, 0) * 1000000)
         |         // (deg.degree * (deg.degree - 1))
         |    ELSE 0 END AS bigint) AS clustering_e6
-        |FROM deg LEFT JOIN pern ON deg.v = pern.v""".stripMargin,
-    "q125_kcore" ->
-      """WITH ids AS (SELECT doc_id FROM documents),
-        |raw AS (
-        |  SELECT doc_id AS ea, doc_id + 1 AS eb FROM ids
-        |  UNION ALL
-        |  SELECT doc_id - doc_id % 10 AS ea, doc_id AS eb FROM ids
-        |  WHERE doc_id % 10 <> 0
-        |  UNION ALL
-        |  SELECT doc_id AS ea, unnest(range(doc_id + 1, 19)) AS eb FROM ids
-        |  WHERE doc_id < 18),
-        |e AS (SELECT cast(r.ea AS varchar) AS s, cast(r.eb AS varchar) AS t
-        |      FROM raw r JOIN ids ia ON r.ea = ia.doc_id
-        |                 JOIN ids ib ON r.eb = ib.doc_id),
-        |e1 AS (SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b
+        |FROM deg LEFT JOIN pern ON deg.v = pern.v""".stripMargin),
+    "q125_kcore" -> (docGraphEdgesSql + ",\n" +
+      """e1 AS (SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b
         |       FROM e WHERE s <> t),
         |d1 AS (SELECT v, count(*) AS dg FROM (
         |    SELECT a AS v FROM e1 UNION ALL SELECT b AS v FROM e1) GROUP BY v),
@@ -2687,7 +3036,7 @@ FROM c"""
         |df AS (SELECT v, cast(count(*) AS bigint) AS core_deg FROM (
         |    SELECT a AS v FROM ef UNION ALL SELECT b AS v FROM ef) GROUP BY v)
         |SELECT a3.v AS node, cast(coalesce(df.core_deg, 0) AS bigint) AS core_deg
-        |FROM a3 LEFT JOIN df ON a3.v = df.v""".stripMargin,
+        |FROM a3 LEFT JOIN df ON a3.v = df.v""".stripMargin),
     "q01_lineitem_agg" ->
       """SELECT l_returnflag, l_linestatus,
         |  cast(sum(cast(l_quantity AS bigint)) AS bigint) AS sum_qty,
@@ -2780,17 +3129,8 @@ FROM c"""
     // q06: FULL md5-minhash recompute — signatures, band tuples,
     // candidate pairs, matching-row estimates — from the shared param
     // table; a kernel, banding or estimate change reds the row
-    "q06_minhash_lsh" ->
-      ("WITH src AS (SELECT 'd' AS side, doc_id, text FROM documents),\n" +
-        minhashSigCtes("src") + """,
-        |bsz AS (SELECT band, bv, count(*) AS n FROM bands GROUP BY 1, 2),
-        |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-        |         JOIN bsz ON a.band = bsz.band AND a.bv = bsz.bv
-        |         WHERE bsz.n <= 1000
-        |         GROUP BY 1, 2),
-        |m AS (SELECT c.doc_a, c.doc_b,
+    "q06_minhash_lsh" -> (minhashCandCtesSql + ",\n" +
+      """m AS (SELECT c.doc_a, c.doc_b,
         |        sum(CASE WHEN sa.v = sb.v THEN 1 ELSE 0 END) AS k
         |      FROM cand c
         |      JOIN sigs sa ON sa.doc_id = c.doc_a
@@ -2910,26 +3250,12 @@ FROM c"""
     // ngramJaccardAllPairs' gramSet keeps empty edge tokens (SQL-split
     // semantics) while the minhash kernel filters them, so the exact
     // side must NOT reuse the minhash grams
-    "q155_lsh_exact_audit" ->
-      ("WITH src AS (SELECT 'd' AS side, doc_id, text FROM documents),\n" +
-        minhashSigCtes("src") + """,
-        |bsz AS (SELECT band, bv, count(*) AS n FROM bands GROUP BY 1, 2),
-        |cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |         FROM bands a JOIN bands b
-        |           ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
-        |         JOIN bsz ON a.band = bsz.band AND a.bv = bsz.bv
-        |         WHERE bsz.n <= 1000
-        |         GROUP BY 1, 2),
-        |xtoks AS (
+    "q155_lsh_exact_audit" -> (minhashCandCtesSql + ",\n" +
+      """xtoks AS (
         |  SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS t
         |  FROM documents),
-        |xgsets AS (
-        |  SELECT doc_id, list_distinct([array_to_string(t[i+1:i+3], ' ')
-        |          for i in range(0, greatest(len(t)-3, 0) + 1)]) AS gs
-        |  FROM xtoks),
-        |xgrams AS (SELECT doc_id, unnest(gs) AS g FROM xgsets),
-        |sizes AS (SELECT doc_id, len(gs) AS sz FROM xgsets),
-        |prs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
+        |""".stripMargin + gramSetCtesSql("x") + ",\n" +
+      """prs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
         |        FROM xgrams a JOIN xgrams b ON a.g = b.g AND a.doc_id < b.doc_id
         |        GROUP BY 1, 2),
         |exact AS (SELECT doc_a, doc_b FROM prs
@@ -2948,21 +3274,8 @@ FROM c"""
         |FROM c, e, hh""".stripMargin),
     // q156: tier CTEs + the q141 schedule CTEs + host fold + politeness
     // window — the whole composite restated
-    "q156_fetch_plan" -> (hostTierCtesSql + ",\n" +
-      """f AS (
-        |  SELECT 'https://' || coalesce(source, 'unknown') || '.example/u'
-        |           || doc_id AS url,
-        |         doc_id * 1000 + i * 3600000 AS fetch_ms,
-        |         'h' || len(list_filter(range(0, i + 1),
-        |                    j -> j > 0 AND (doc_id + j) % 3 = 0)) AS content_hash
-        |  FROM (SELECT doc_id, source,
-        |               unnest(range(0, doc_id % 4 + 1)) AS i FROM documents)),
-        |lagd AS (
-        |  SELECT url, fetch_ms, content_hash,
-        |         lag(content_hash) OVER (PARTITION BY url
-        |           ORDER BY fetch_ms, content_hash) AS ph
-        |  FROM f),
-        |sa AS (SELECT url,
+    "q156_fetch_plan" -> (hostTierCtesSql + ",\n" + recrawlFetchCtesSql + ",\n" +
+      """sa AS (SELECT url,
         |         sum(CASE WHEN ph IS NOT NULL AND ph <> content_hash
         |             THEN 1 ELSE 0 END) AS n_changes,
         |         max(fetch_ms) - min(fetch_ms) AS span_ms,
@@ -3007,38 +3320,9 @@ FROM c"""
         |    AS domain,
         |  tier AS best_tier, 3::BIGINT AS n_fronts
         |FROM th""".stripMargin),
-    "q13_quality" ->
-      """SELECT doc_id,
-        |  round(
-        |    least(length(text) / 500.0, 1.0) * 0.4 +
-        |    (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |               / greatest(cast(length(text) AS double), 1.0) > 0.2 THEN 0.0
-        |          ELSE 1.0 - (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |               / greatest(cast(length(text) AS double), 1.0) * 2 END) * 0.3 +
-        |    least((len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |        w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                   'that','on','for','with','as','at','by','this')))
-        |      / greatest(cast(CASE WHEN length(trim(text)) = 0 THEN 0
-        |            ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS double), 1.0)) * 4.0,
-        |      1.0) * 0.3, 6) AS quality
-        |FROM documents""".stripMargin,
-    "q131_bbit_minhash" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS t FROM documents),
-        |gsets AS (
-        |  SELECT doc_id, list_distinct([array_to_string(t[i+1:i+3], ' ')
-        |          for i in range(0, greatest(len(t)-3, 0) + 1)]) AS gs
-        |  FROM toks),
-        |grams AS (SELECT doc_id, unnest(gs) AS g FROM gsets),
-        |sizes AS (SELECT doc_id, len(gs) AS sz FROM gsets),
-        |dfc AS (SELECT g, count(*) AS df FROM grams GROUP BY g),
-        |kept AS (SELECT gr.doc_id, gr.g FROM grams gr JOIN dfc USING (g)
-        |         WHERE df <= 100),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-        |  FROM kept a JOIN kept b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |jac AS (
+    "q13_quality" -> ("SELECT doc_id,\n" + qualityScoreSql("  ") + "\nFROM documents"),
+    "q131_bbit_minhash" -> ("WITH " + gramPairCtesSql("pairs") + ",\n" +
+      """jac AS (
         |  SELECT doc_a, doc_b,
         |    round(common / (sa.sz + sb2.sz - common), 6) AS jaccard
         |  FROM pairs
@@ -3064,30 +3348,18 @@ FROM c"""
         |  cast(CASE WHEN n_matches * 4 <= 16 THEN 0
         |       ELSE ((n_matches * 4 - 16) * 1000000) // (16 * 3) END AS bigint)
         |    AS j_est_e6
-        |FROM m""".stripMargin,
-    "q129_countmin" ->
-      """WITH toks AS (
-        |  SELECT CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
-        |  FROM documents),
-        |terms AS (SELECT unnest(t) AS term FROM toks),
-        |c AS (SELECT term, count(*) AS n FROM terms GROUP BY term),
-        |e AS (SELECT rr.r,
+        |FROM m""".stripMargin),
+    "q129_countmin" -> (termCountsSql + ",\n" +
+      """e AS (SELECT rr.r,
         |        (('0x' || substr(md5(c.term || '#' || rr.r), 1, 15))::BIGINT)
         |          % 1024 AS bucket,
         |        c.n
         |      FROM c CROSS JOIN (SELECT unnest(range(0, 4)) AS r) rr)
         |SELECT cast(r AS bigint) AS r, cast(bucket AS bigint) AS bucket,
         |  cast(sum(n) AS bigint) AS n
-        |FROM e GROUP BY 1, 2""".stripMargin,
-    "q130_countmin_query" ->
-      """WITH toks AS (
-        |  SELECT CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
-        |  FROM documents),
-        |terms AS (SELECT unnest(t) AS term FROM toks),
-        |c AS (SELECT term, count(*) AS n FROM terms GROUP BY term),
-        |sk AS (SELECT rr.r,
+        |FROM e GROUP BY 1, 2""".stripMargin),
+    "q130_countmin_query" -> (termCountsSql + ",\n" +
+      """sk AS (SELECT rr.r,
         |        (('0x' || substr(md5(c.term || '#' || rr.r), 1, 15))::BIGINT)
         |          % 1024 AS bucket,
         |        cast(sum(c.n) AS bigint) AS n
@@ -3106,7 +3378,7 @@ FROM c"""
         |SELECT est.term, est.est,
         |  cast(coalesce(c.n, 0) AS bigint) AS n_exact,
         |  cast(est.est - coalesce(c.n, 0) AS bigint) AS over_count
-        |FROM est LEFT JOIN c ON est.term = c.term""".stripMargin,
+        |FROM est LEFT JOIN c ON est.term = c.term""".stripMargin),
     "q127_robots_wildcard" ->
       """WITH d AS (
         |  SELECT doc_id, lower(coalesce(source, 'unknown')) AS src
@@ -3157,93 +3429,22 @@ FROM c"""
         |FROM u""".stripMargin,
     // q126 is value-identical to q21 by the lossless prefix-filter
     // theorem — the SAME oracle text gates both (the q113/q114 pattern)
-    "q126_jaccard_prefix" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS t FROM documents),
-        |gsets AS (
-        |  SELECT doc_id, list_distinct([array_to_string(t[i+1:i+3], ' ')
-        |          for i in range(0, greatest(len(t)-3, 0) + 1)]) AS gs
-        |  FROM toks),
-        |grams AS (SELECT doc_id, unnest(gs) AS g FROM gsets),
-        |sizes AS (SELECT doc_id, len(gs) AS sz FROM gsets),
-        |dfc AS (SELECT g, count(*) AS df FROM grams GROUP BY g),
-        |kept AS (SELECT gr.doc_id, gr.g FROM grams gr JOIN dfc USING (g)
-        |         WHERE df <= 100),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-        |  FROM kept a JOIN kept b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b,
-        |  round(common / (sa.sz + sb.sz - common), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes sa ON doc_a = sa.doc_id
-        |JOIN sizes sb ON doc_b = sb.doc_id
-        |WHERE common / (sa.sz + sb.sz - common) >= 0.8""".stripMargin,
+    "q126_jaccard_prefix" -> ("WITH " + gramPairCtesSql("pairs") + "\n" + jaccardSelectSql("0.8")),
     // q08 = LSH candidates + exact verification; the oracle is the FULL
     // all-pairs exact jaccard at the same threshold (no df cap — the
     // verify pass scores candidate pairs string-exactly), so the row is
     // green only while the banded candidate generation recalls every
     // true pair at this scale
     "q08_ngram_jaccard" ->
-      """WITH toks AS (
+      ("""WITH toks AS (
         |  SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS t FROM documents
         |  WHERE len(list_filter(regexp_split_to_array(lower(text), '\s+'),
         |        x -> x <> '')) > 0),
-        |gsets AS (
-        |  SELECT doc_id, list_distinct([array_to_string(t[i+1:i+3], ' ')
-        |          for i in range(0, greatest(len(t)-3, 0) + 1)]) AS gs
-        |  FROM toks),
-        |grams AS (SELECT doc_id, unnest(gs) AS g FROM gsets),
-        |sizes AS (SELECT doc_id, len(gs) AS sz FROM gsets),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-        |  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b,
-        |  round(common / (sa.sz + sb.sz - common), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes sa ON doc_a = sa.doc_id
-        |JOIN sizes sb ON doc_b = sb.doc_id
-        |WHERE common / (sa.sz + sb.sz - common) >= 0.8""".stripMargin,
-    "q21_jaccard_all_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS t FROM documents),
-        |gsets AS (
-        |  SELECT doc_id, list_distinct([array_to_string(t[i+1:i+3], ' ')
-        |          for i in range(0, greatest(len(t)-3, 0) + 1)]) AS gs
-        |  FROM toks),
-        |grams AS (SELECT doc_id, unnest(gs) AS g FROM gsets),
-        |sizes AS (SELECT doc_id, len(gs) AS sz FROM gsets),
-        |dfc AS (SELECT g, count(*) AS df FROM grams GROUP BY g),
-        |kept AS (SELECT gr.doc_id, gr.g FROM grams gr JOIN dfc USING (g)
-        |         WHERE df <= 100),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-        |  FROM kept a JOIN kept b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b,
-        |  round(common / (sa.sz + sb.sz - common), 6) AS jaccard
-        |FROM pairs
-        |JOIN sizes sa ON doc_a = sa.doc_id
-        |JOIN sizes sb ON doc_b = sb.doc_id
-        |WHERE common / (sa.sz + sb.sz - common) >= 0.5""".stripMargin,
-    "q104_ngram_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS t FROM documents),
-        |gsets AS (
-        |  SELECT doc_id, list_distinct([array_to_string(t[i+1:i+3], ' ')
-        |          for i in range(0, greatest(len(t)-3, 0) + 1)]) AS gs
-        |  FROM toks),
-        |grams AS (SELECT doc_id, unnest(gs) AS g FROM gsets),
-        |sizes AS (SELECT doc_id, len(gs) AS sz FROM gsets),
-        |dfc AS (SELECT g, count(*) AS df FROM grams GROUP BY g),
-        |kept AS (SELECT gr.doc_id, gr.g FROM grams gr JOIN dfc USING (g)
-        |         WHERE df <= 100),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-        |  FROM kept a JOIN kept b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |sized AS (
+        |""".stripMargin + gramSetCtesSql("") + ",\n" + gramPairsSql("pairs", "grams") + "\n" +
+        jaccardSelectSql("0.8")),
+    "q21_jaccard_all_pairs" -> ("WITH " + gramPairCtesSql("pairs") + "\n" + jaccardSelectSql("0.5")),
+    "q104_ngram_containment" -> ("WITH " + gramPairCtesSql("pairs") + ",\n" +
+      """sized AS (
         |  SELECT doc_a, doc_b, common, sa.sz AS sz_a, sb.sz AS sz_b
         |  FROM pairs
         |  JOIN sizes sa ON doc_a = sa.doc_id
@@ -3255,51 +3456,26 @@ FROM c"""
         |UNION ALL
         |SELECT doc_b, doc_a, cast(common AS bigint), cast(sz_b AS bigint),
         |  round(common / sz_b, 6)
-        |FROM sized WHERE common / sz_b >= 0.5""".stripMargin,
+        |FROM sized WHERE common / sz_b >= 0.5""".stripMargin),
     "q105_curation_funnel" ->
-      """WITH f AS (
-        |  SELECT CASE
-        |    WHEN NOT coalesce(length(coalesce(text, '')) > 0, false) THEN 1
-        |    WHEN NOT coalesce(n_chars >= 200, false) THEN 2
-        |    WHEN NOT coalesce(n_chars <= 20000, false) THEN 3
-        |    WHEN NOT coalesce(coalesce(lang, '') <> '', false) THEN 4
-        |    WHEN NOT coalesce(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 10
-        |                      >= length(text) * 4, false) THEN 5
-        |    ELSE 0 END AS ff
-        |  FROM documents),
-        |c AS (SELECT ff, cast(count(*) AS bigint) AS n FROM f GROUP BY 1),
+      ("WITH f AS (\n  SELECT CASE\n" + funnelFirstFailSql +
+      """c AS (SELECT ff, cast(count(*) AS bigint) AS n FROM f GROUP BY 1),
         |t AS (SELECT cast(count(*) AS bigint) AS n_total FROM f),
-        |s AS (SELECT * FROM (VALUES (1, 'nonempty'), (2, 'min_len'),
-        |        (3, 'max_len'), (4, 'lang_known'), (5, 'alpha_ratio'))
-        |        AS v(stage_idx, stage)),
-        |j AS (SELECT s.stage_idx, s.stage, coalesce(c.n, 0) AS n_dropped
+        |""".stripMargin + funnelStageNamesSql +
+      """j AS (SELECT s.stage_idx, s.stage, coalesce(c.n, 0) AS n_dropped
         |      FROM s LEFT JOIN c ON s.stage_idx = c.ff),
         |acc AS (SELECT stage_idx, stage, n_dropped,
         |    t.n_total - coalesce(sum(n_dropped) OVER (ORDER BY stage_idx
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_in
         |  FROM j CROSS JOIN t)
         |SELECT cast(stage_idx AS int) AS stage_idx, stage,
-        |  cast(n_in AS bigint) AS n_in, cast(n_dropped AS bigint) AS n_dropped,
-        |  cast(n_in - n_dropped AS bigint) AS n_out,
-        |  CASE WHEN n_in = 0 THEN 0.0 ELSE round(n_dropped / n_in, 6) END AS drop_pct
-        |FROM acc""".stripMargin,
+        |""".stripMargin + funnelCountsSql),
     "q106_funnel_by_source" ->
-      """WITH f AS (
-        |  SELECT coalesce(source, 'unknown') AS grp, CASE
-        |    WHEN NOT coalesce(length(coalesce(text, '')) > 0, false) THEN 1
-        |    WHEN NOT coalesce(n_chars >= 200, false) THEN 2
-        |    WHEN NOT coalesce(n_chars <= 20000, false) THEN 3
-        |    WHEN NOT coalesce(coalesce(lang, '') <> '', false) THEN 4
-        |    WHEN NOT coalesce(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 10
-        |                      >= length(text) * 4, false) THEN 5
-        |    ELSE 0 END AS ff
-        |  FROM documents),
-        |c AS (SELECT grp, ff, cast(count(*) AS bigint) AS n FROM f GROUP BY 1, 2),
+      ("WITH f AS (\n  SELECT coalesce(source, 'unknown') AS grp, CASE\n" + funnelFirstFailSql +
+      """c AS (SELECT grp, ff, cast(count(*) AS bigint) AS n FROM f GROUP BY 1, 2),
         |t AS (SELECT grp, cast(sum(n) AS bigint) AS n_total FROM c GROUP BY 1),
-        |s AS (SELECT * FROM (VALUES (1, 'nonempty'), (2, 'min_len'),
-        |        (3, 'max_len'), (4, 'lang_known'), (5, 'alpha_ratio'))
-        |        AS v(stage_idx, stage)),
-        |g AS (SELECT t.grp, t.n_total, s.stage_idx, s.stage FROM t CROSS JOIN s),
+        |""".stripMargin + funnelStageNamesSql +
+      """g AS (SELECT t.grp, t.n_total, s.stage_idx, s.stage FROM t CROSS JOIN s),
         |j AS (SELECT g.grp, g.stage_idx, g.stage, g.n_total,
         |        coalesce(c.n, 0) AS n_dropped
         |      FROM g LEFT JOIN c ON g.grp = c.grp AND g.stage_idx = c.ff),
@@ -3309,10 +3485,7 @@ FROM c"""
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_in
         |  FROM j)
         |SELECT grp, cast(stage_idx AS int) AS stage_idx, stage,
-        |  cast(n_in AS bigint) AS n_in, cast(n_dropped AS bigint) AS n_dropped,
-        |  cast(n_in - n_dropped AS bigint) AS n_out,
-        |  CASE WHEN n_in = 0 THEN 0.0 ELSE round(n_dropped / n_in, 6) END AS drop_pct
-        |FROM acc""".stripMargin,
+        |""".stripMargin + funnelCountsSql),
     "q107_robots_filter" ->
       """WITH d AS (
         |  SELECT doc_id, lower(coalesce(source, 'unknown')) AS src FROM documents),
@@ -3356,18 +3529,7 @@ FROM c"""
         |FROM pos JOIN documents d ON pos.doc_id = d.doc_id
         |WHERE substr(d.text, cast(pos.i AS int), length(pos.ph)) = pos.ph
         |GROUP BY 1, 2""".stripMargin,
-    "q109_phrase_docs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
-        |  FROM documents),
-        |occ AS (
-        |  SELECT doc_id, unnest(range(1, len(t))) AS i, t
-        |  FROM toks WHERE len(t) >= 2)
-        |SELECT doc_id, cast(count(*) AS bigint) AS n_matches,
-        |  cast(min(i) - 1 AS int) AS first_pos
-        |FROM occ WHERE t[i] = 'batch' AND t[i+1] = 'batch'
-        |GROUP BY doc_id""".stripMargin,
+    "q109_phrase_docs" -> phraseDocsSql,
     "q120_url_features" ->
       """WITH u AS (
         |  SELECT doc_id,
@@ -3468,25 +3630,8 @@ FROM c"""
         |    ELSE '' END AS text,
         |  CAST(doc_id % 5 AS int) IN (0, 1) AS had_bom
         |FROM documents""".stripMargin,
-    "q115_host_communities" ->
-      """WITH d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |l AS (SELECT d.source, h.hid,
-        |        ((((d.doc_id % 2147483648) * 2654435761) % 4294967296) // 65536) % nh AS t1,
-        |        ((((d.doc_id % 2147483648) * 2246822519) % 4294967296) // 65536) % nh AS t2
-        |      FROM d JOIN h ON d.source = h.source CROSS JOIN c
-        |      WHERE h.hid <> 0),
-        |e0 AS (SELECT source AS src, t1 AS thid FROM l
-        |       UNION ALL
-        |       SELECT source AS src, t2 AS thid FROM l),
-        |e AS (SELECT e0.src, h.source AS dst, cast(count(*) AS bigint) AS weight
-        |      FROM e0 JOIN h ON e0.thid = h.hid
-        |      WHERE e0.src <> h.source
-        |      GROUP BY 1, 2),
-        |und AS (SELECT a, b, cast(sum(w) AS bigint) AS w FROM (
+    "q115_host_communities" -> ("WITH " + hostGraphEdgesSql + ",\n" +
+      """und AS (SELECT a, b, cast(sum(w) AS bigint) AS w FROM (
         |    SELECT src AS a, dst AS b, weight AS w FROM e
         |    UNION ALL SELECT dst AS a, src AS b, weight AS w FROM e)
         |  GROUP BY a, b),
@@ -3506,27 +3651,9 @@ FROM c"""
         |l2 AS (SELECT n.host, coalesce(w.label, n.host) AS label
         |       FROM n0 n LEFT JOIN (SELECT * FROM w2 WHERE rk = 1) w
         |         ON n.host = w.a)
-        |SELECT host, label FROM l2""".stripMargin,
-    "q113_top_terms" ->
-      """WITH toks AS (
-        |  SELECT CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
-        |  FROM documents),
-        |terms AS (SELECT unnest(t) AS term FROM toks),
-        |c AS (SELECT term, cast(count(*) AS bigint) AS n FROM terms GROUP BY term),
-        |top AS (SELECT term, n,
-        |          row_number() OVER (ORDER BY n DESC, term ASC) AS rnk FROM c)
-        |SELECT term, n, cast(rnk AS bigint) AS rnk FROM top WHERE rnk <= 40""".stripMargin,
-    "q114_top_terms_sketch" ->
-      """WITH toks AS (
-        |  SELECT CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
-        |  FROM documents),
-        |terms AS (SELECT unnest(t) AS term FROM toks),
-        |c AS (SELECT term, cast(count(*) AS bigint) AS n FROM terms GROUP BY term),
-        |top AS (SELECT term, n,
-        |          row_number() OVER (ORDER BY n DESC, term ASC) AS rnk FROM c)
-        |SELECT term, n, cast(rnk AS bigint) AS rnk FROM top WHERE rnk <= 40""".stripMargin,
+        |SELECT host, label FROM l2""".stripMargin),
+    "q113_top_terms" -> topTermsSql,
+    "q114_top_terms_sketch" -> topTermsSql,
     "q112_sitemap_coverage" ->
       """WITH d AS (SELECT doc_id, source FROM documents WHERE source IS NOT NULL),
         |dec AS (
@@ -3586,36 +3713,14 @@ FROM c"""
         |    AS is_template
         |FROM e WHERE host <> ''
         |GROUP BY host, text_hash""".stripMargin,
-    "q110_phrase_index" ->
-      """WITH toks AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
-        |  FROM documents),
-        |occ AS (
-        |  SELECT doc_id, unnest(range(1, len(t))) AS i, t
-        |  FROM toks WHERE len(t) >= 2)
-        |SELECT doc_id, cast(count(*) AS bigint) AS n_matches,
-        |  cast(min(i) - 1 AS int) AS first_pos
-        |FROM occ WHERE t[i] = 'batch' AND t[i+1] = 'batch'
-        |GROUP BY doc_id""".stripMargin,
+    "q110_phrase_index" -> phraseDocsSql,
     "q20_repetition" ->
-      """WITH lines AS (
+      ("""WITH lines AS (
         |  SELECT doc_id, list_filter(list_transform(string_split(text, chr(10)),
         |           l -> trim(l)), l -> length(l) > 0) AS ls
         |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
-        |  FROM documents),
-        |g2 AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 2
-        |           THEN [t[i] || ' ' || t[i+1] for i in range(1, len(t))]
-        |           ELSE [] END) AS g
-        |  FROM toks),
-        |cnt AS (SELECT doc_id, g, count(*) AS c FROM g2 GROUP BY 1, 2),
-        |top AS (SELECT doc_id, max(c) AS top_c, cast(sum(c) AS bigint) AS n_g
-        |        FROM cnt GROUP BY doc_id)
-        |SELECT d.doc_id,
+        |""".stripMargin + bigramTopCtesSql + "\n" +
+      """SELECT d.doc_id,
         |  cast(len(l.ls) AS bigint) AS n_lines,
         |  cast(len(list_distinct(l.ls)) AS bigint) AS n_distinct_lines,
         |  CASE WHEN len(l.ls) = 0 THEN 0.0
@@ -3627,7 +3732,7 @@ FROM c"""
         |       ELSE round(t.top_c / cast(t.n_g AS double), 6) END AS top_2gram_frac
         |FROM documents d
         |JOIN lines l USING (doc_id)
-        |LEFT JOIN top t USING (doc_id)""".stripMargin,
+        |LEFT JOIN top t USING (doc_id)""".stripMargin),
     "q22_hash_split" ->
       """SELECT doc_id, lang,
         |  CASE WHEN substr(md5(cast(doc_id AS varchar) || ':graft'), 1, 2) < '1a'
@@ -3736,140 +3841,16 @@ FROM c"""
         |(8888257758677685211::BIGINT, 'en', '', 3219418356460175151::BIGINT),
         |(9197353030467319119::BIGINT, 'en', '', 8473679975865183649::BIGINT),
         |(9214545217734903082::BIGINT, 'en', '', 8171440667640282593::BIGINT)) t(doc_id, pred_lang, lang, fingerprint)""".stripMargin,
-    // perceptual hashes through the REAL codecs, golden-pinned per image
-    // (OpsSpec holds invariance + brute parity gates)
-    "q145_image_hashes" ->
-      """SELECT * FROM (VALUES
-        |(0::BIGINT, 64, 64, -2202630356992::BIGINT, -8236948698979470963::BIGINT),
-        |(3::BIGINT, 64, 64, -602771816448::BIGINT, -3655277904874628173::BIGINT),
-        |(6::BIGINT, 64, 64, -42563796992::BIGINT, 3266129463844165859::BIGINT),
-        |(9::BIGINT, 64, 64, -4468292714496::BIGINT, 8487448437559801415::BIGINT),
-        |(12::BIGINT, 64, 64, -99824435200::BIGINT, -2818352701864306122::BIGINT),
-        |(15::BIGINT, 64, 64, -162772549632::BIGINT, 8765651176991354329::BIGINT),
-        |(18::BIGINT, 64, 64, -3462716719104::BIGINT, -7304887745828444519::BIGINT),
-        |(21::BIGINT, 64, 64, -9854726963200::BIGINT, -3216887439560136753::BIGINT),
-        |(24::BIGINT, 64, 64, -1726845288448::BIGINT, -8737727481184965202::BIGINT),
-        |(27::BIGINT, 64, 64, -243599933440::BIGINT, -5364819660206396237::BIGINT),
-        |(30::BIGINT, 64, 64, -419698835456::BIGINT, 5868008377227720634::BIGINT),
-        |(33::BIGINT, 64, 64, -2525364748288::BIGINT, -2575198499504965838::BIGINT),
-        |(36::BIGINT, 64, 64, -32648462336::BIGINT, -3062786751808218749::BIGINT),
-        |(39::BIGINT, 64, 64, -655083175936::BIGINT, 2196802736752472347::BIGINT),
-        |(42::BIGINT, 64, 64, -953751175168::BIGINT, 7381887683279302065::BIGINT),
-        |(45::BIGINT, 64, 64, -4781295796224::BIGINT, -6388218959315905626::BIGINT),
-        |(48::BIGINT, 64, 64, -414932008960::BIGINT, -7379624299646837845::BIGINT),
-        |(51::BIGINT, 64, 64, -2013265920::BIGINT, -3771314615889092263::BIGINT),
-        |(54::BIGINT, 64, 64, -149183004672::BIGINT, -7400991135170671281::BIGINT),
-        |(57::BIGINT, 64, 64, -5099720015872::BIGINT, 6568382716682413369::BIGINT),
-        |(60::BIGINT, 64, 64, -2493226418176::BIGINT, -4719113952959773050::BIGINT),
-        |(63::BIGINT, 64, 64, -692395704320::BIGINT, -2712965364694681116::BIGINT),
-        |(66::BIGINT, 64, 64, -833122992128::BIGINT, -5721715372246315549::BIGINT),
-        |(69::BIGINT, 64, 64, -3739222016::BIGINT, 7165585790405796709::BIGINT),
-        |(72::BIGINT, 64, 64, -55532584960::BIGINT, -4491837907391824807::BIGINT),
-        |(75::BIGINT, 64, 64, -78852915200::BIGINT, -3219870621846044563::BIGINT),
-        |(78::BIGINT, 64, 64, -1799574519808::BIGINT, -4742893719112725218::BIGINT),
-        |(81::BIGINT, 64, 64, -294171705344::BIGINT, 7409884397761942380::BIGINT),
-        |(84::BIGINT, 64, 64, -1321675522048::BIGINT, 3036327088320225124::BIGINT),
-        |(87::BIGINT, 64, 64, -62123933696::BIGINT, 7323853122977371459::BIGINT),
-        |(90::BIGINT, 64, 64, -72779563008::BIGINT, 3877004330687609532::BIGINT),
-        |(93::BIGINT, 64, 64, -127875940352::BIGINT, -7446027463044383333::BIGINT),
-        |(96::BIGINT, 64, 64, -29527900160::BIGINT, 1611105850812056233::BIGINT),
-        |(99::BIGINT, 64, 64, -32648462336::BIGINT, 6766418051667400026::BIGINT),
-        |(102::BIGINT, 64, 64, -764453847040::BIGINT, 5714413878132494950::BIGINT),
-        |(105::BIGINT, 64, 64, -8949554216960::BIGINT, 6423920665735180828::BIGINT),
-        |(108::BIGINT, 64, 64, -561487282176::BIGINT, 6604174219797257131::BIGINT),
-        |(111::BIGINT, 64, 64, -382512136192::BIGINT, -3651761019586556522::BIGINT),
-        |(114::BIGINT, 64, 64, -689474371584::BIGINT, -446926954638498518::BIGINT),
-        |(117::BIGINT, 64, 64, -332507643904::BIGINT, -7112864166664915106::BIGINT),
-        |(100003::BIGINT, 64, 64, -5000818327552::BIGINT, -3655277904874628173::BIGINT),
-        |(100009::BIGINT, 64, 64, -5018048528384::BIGINT, 8487448437559801415::BIGINT),
-        |(100015::BIGINT, 64, 64, -162772549632::BIGINT, 8765651176991354329::BIGINT),
-        |(100021::BIGINT, 64, 64, -9854726963200::BIGINT, -3216887439560136817::BIGINT),
-        |(100027::BIGINT, 64, 64, -243566379008::BIGINT, -5364819660206396237::BIGINT),
-        |(100033::BIGINT, 64, 64, -2525364748288::BIGINT, -2575198499504965838::BIGINT),
-        |(100039::BIGINT, 64, 64, -655083175936::BIGINT, 2232831533771436315::BIGINT),
-        |(100045::BIGINT, 64, 64, -4781295796224::BIGINT, -6388218959315905626::BIGINT),
-        |(100051::BIGINT, 64, 64, -2013265920::BIGINT, -3771314615889092263::BIGINT),
-        |(100057::BIGINT, 64, 64, -5099720015872::BIGINT, 6568382716682413369::BIGINT),
-        |(100063::BIGINT, 64, 64, -692395704320::BIGINT, -2712965364694681116::BIGINT),
-        |(100069::BIGINT, 64, 64, -3739222016::BIGINT, 2553899771978408805::BIGINT),
-        |(100075::BIGINT, 64, 64, -78852915200::BIGINT, -3219307671892623251::BIGINT),
-        |(100081::BIGINT, 64, 64, -294171705344::BIGINT, 7409884397761942380::BIGINT),
-        |(100087::BIGINT, 64, 64, -62123933696::BIGINT, 7323853122977371459::BIGINT),
-        |(100093::BIGINT, 64, 64, -127875940352::BIGINT, -7446027463044383333::BIGINT),
-        |(100099::BIGINT, 64, 64, -32648462336::BIGINT, 6766418601423213914::BIGINT),
-        |(100105::BIGINT, 64, 64, -8949554216960::BIGINT, 6423920665735180828::BIGINT),
-        |(100111::BIGINT, 64, 64, -382512136192::BIGINT, -3651761019586556522::BIGINT),
-        |(100117::BIGINT, 64, 64, -332507643904::BIGINT, -7112864166664915106::BIGINT)) t(media_id, decoded_w, decoded_h, ahash, dhash)""".stripMargin,
+    // golden pins (OpsSpec holds invariance + brute parity gates)
+    "q145_image_hashes" -> imageHashPinsSql,
     // derived from the q145 pins: the banded join is EXACT for hamming<=k
     // (pigeonhole), so brute-force over the pinned dhash values is the
     // full ground truth
-    "q146_image_neardups" ->
-      """WITH h AS (
-        |SELECT * FROM (VALUES
-        |(0::BIGINT, 64, 64, -2202630356992::BIGINT, -8236948698979470963::BIGINT),
-        |(3::BIGINT, 64, 64, -602771816448::BIGINT, -3655277904874628173::BIGINT),
-        |(6::BIGINT, 64, 64, -42563796992::BIGINT, 3266129463844165859::BIGINT),
-        |(9::BIGINT, 64, 64, -4468292714496::BIGINT, 8487448437559801415::BIGINT),
-        |(12::BIGINT, 64, 64, -99824435200::BIGINT, -2818352701864306122::BIGINT),
-        |(15::BIGINT, 64, 64, -162772549632::BIGINT, 8765651176991354329::BIGINT),
-        |(18::BIGINT, 64, 64, -3462716719104::BIGINT, -7304887745828444519::BIGINT),
-        |(21::BIGINT, 64, 64, -9854726963200::BIGINT, -3216887439560136753::BIGINT),
-        |(24::BIGINT, 64, 64, -1726845288448::BIGINT, -8737727481184965202::BIGINT),
-        |(27::BIGINT, 64, 64, -243599933440::BIGINT, -5364819660206396237::BIGINT),
-        |(30::BIGINT, 64, 64, -419698835456::BIGINT, 5868008377227720634::BIGINT),
-        |(33::BIGINT, 64, 64, -2525364748288::BIGINT, -2575198499504965838::BIGINT),
-        |(36::BIGINT, 64, 64, -32648462336::BIGINT, -3062786751808218749::BIGINT),
-        |(39::BIGINT, 64, 64, -655083175936::BIGINT, 2196802736752472347::BIGINT),
-        |(42::BIGINT, 64, 64, -953751175168::BIGINT, 7381887683279302065::BIGINT),
-        |(45::BIGINT, 64, 64, -4781295796224::BIGINT, -6388218959315905626::BIGINT),
-        |(48::BIGINT, 64, 64, -414932008960::BIGINT, -7379624299646837845::BIGINT),
-        |(51::BIGINT, 64, 64, -2013265920::BIGINT, -3771314615889092263::BIGINT),
-        |(54::BIGINT, 64, 64, -149183004672::BIGINT, -7400991135170671281::BIGINT),
-        |(57::BIGINT, 64, 64, -5099720015872::BIGINT, 6568382716682413369::BIGINT),
-        |(60::BIGINT, 64, 64, -2493226418176::BIGINT, -4719113952959773050::BIGINT),
-        |(63::BIGINT, 64, 64, -692395704320::BIGINT, -2712965364694681116::BIGINT),
-        |(66::BIGINT, 64, 64, -833122992128::BIGINT, -5721715372246315549::BIGINT),
-        |(69::BIGINT, 64, 64, -3739222016::BIGINT, 7165585790405796709::BIGINT),
-        |(72::BIGINT, 64, 64, -55532584960::BIGINT, -4491837907391824807::BIGINT),
-        |(75::BIGINT, 64, 64, -78852915200::BIGINT, -3219870621846044563::BIGINT),
-        |(78::BIGINT, 64, 64, -1799574519808::BIGINT, -4742893719112725218::BIGINT),
-        |(81::BIGINT, 64, 64, -294171705344::BIGINT, 7409884397761942380::BIGINT),
-        |(84::BIGINT, 64, 64, -1321675522048::BIGINT, 3036327088320225124::BIGINT),
-        |(87::BIGINT, 64, 64, -62123933696::BIGINT, 7323853122977371459::BIGINT),
-        |(90::BIGINT, 64, 64, -72779563008::BIGINT, 3877004330687609532::BIGINT),
-        |(93::BIGINT, 64, 64, -127875940352::BIGINT, -7446027463044383333::BIGINT),
-        |(96::BIGINT, 64, 64, -29527900160::BIGINT, 1611105850812056233::BIGINT),
-        |(99::BIGINT, 64, 64, -32648462336::BIGINT, 6766418051667400026::BIGINT),
-        |(102::BIGINT, 64, 64, -764453847040::BIGINT, 5714413878132494950::BIGINT),
-        |(105::BIGINT, 64, 64, -8949554216960::BIGINT, 6423920665735180828::BIGINT),
-        |(108::BIGINT, 64, 64, -561487282176::BIGINT, 6604174219797257131::BIGINT),
-        |(111::BIGINT, 64, 64, -382512136192::BIGINT, -3651761019586556522::BIGINT),
-        |(114::BIGINT, 64, 64, -689474371584::BIGINT, -446926954638498518::BIGINT),
-        |(117::BIGINT, 64, 64, -332507643904::BIGINT, -7112864166664915106::BIGINT),
-        |(100003::BIGINT, 64, 64, -5000818327552::BIGINT, -3655277904874628173::BIGINT),
-        |(100009::BIGINT, 64, 64, -5018048528384::BIGINT, 8487448437559801415::BIGINT),
-        |(100015::BIGINT, 64, 64, -162772549632::BIGINT, 8765651176991354329::BIGINT),
-        |(100021::BIGINT, 64, 64, -9854726963200::BIGINT, -3216887439560136817::BIGINT),
-        |(100027::BIGINT, 64, 64, -243566379008::BIGINT, -5364819660206396237::BIGINT),
-        |(100033::BIGINT, 64, 64, -2525364748288::BIGINT, -2575198499504965838::BIGINT),
-        |(100039::BIGINT, 64, 64, -655083175936::BIGINT, 2232831533771436315::BIGINT),
-        |(100045::BIGINT, 64, 64, -4781295796224::BIGINT, -6388218959315905626::BIGINT),
-        |(100051::BIGINT, 64, 64, -2013265920::BIGINT, -3771314615889092263::BIGINT),
-        |(100057::BIGINT, 64, 64, -5099720015872::BIGINT, 6568382716682413369::BIGINT),
-        |(100063::BIGINT, 64, 64, -692395704320::BIGINT, -2712965364694681116::BIGINT),
-        |(100069::BIGINT, 64, 64, -3739222016::BIGINT, 2553899771978408805::BIGINT),
-        |(100075::BIGINT, 64, 64, -78852915200::BIGINT, -3219307671892623251::BIGINT),
-        |(100081::BIGINT, 64, 64, -294171705344::BIGINT, 7409884397761942380::BIGINT),
-        |(100087::BIGINT, 64, 64, -62123933696::BIGINT, 7323853122977371459::BIGINT),
-        |(100093::BIGINT, 64, 64, -127875940352::BIGINT, -7446027463044383333::BIGINT),
-        |(100099::BIGINT, 64, 64, -32648462336::BIGINT, 6766418601423213914::BIGINT),
-        |(100105::BIGINT, 64, 64, -8949554216960::BIGINT, 6423920665735180828::BIGINT),
-        |(100111::BIGINT, 64, 64, -382512136192::BIGINT, -3651761019586556522::BIGINT),
-        |(100117::BIGINT, 64, 64, -332507643904::BIGINT, -7112864166664915106::BIGINT)) t(media_id, decoded_w, decoded_h, ahash, dhash))
-        |SELECT a.media_id AS media_a, b.media_id AS media_b,
+    "q146_image_neardups" -> ("WITH h AS (\n" + imageHashPinsSql + ")\n" +
+      """SELECT a.media_id AS media_a, b.media_id AS media_b,
         |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
         |FROM h a JOIN h b ON a.media_id < b.media_id
-        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 6""".stripMargin,
+        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 6""".stripMargin),
     // codec rollup golden pin (exact integer micro-units + phash XOR)
     "q18_multimodal" ->
       """SELECT * FROM (VALUES
@@ -3955,46 +3936,10 @@ FROM c"""
         |  true AS typicality_ok FROM embeddings""".stripMargin,
     // full winnowing recompute: poly-31 (64-bit wrap) over the normalized
     // text, rightmost-min windows, DISTINCT per-doc value set
-    "q122_winnow_fingerprints" ->
-      """WITH norm AS (
-        |  SELECT doc_id, trim(regexp_replace(lower(coalesce(text, '')), '\s+', ' ', 'g')) AS s
-        |  FROM documents),
-        |d AS (SELECT doc_id, s, length(s) AS n FROM norm WHERE length(s) >= 24),
-        |codes AS (SELECT doc_id, n,
-        |  [CAST(unicode(s[i+1:i+1]) AS HUGEINT) for i in range(0, n)] AS c FROM d),
-        |hl AS (SELECT doc_id, n - 23 AS m,
-        |  [CASE WHEN h >= 9223372036854775808::HUGEINT
-        |        THEN CAST(h - 18446744073709551616::HUGEINT AS BIGINT)
-        |        ELSE CAST(h AS BIGINT) END
-        |   FOR h IN [list_reduce(c[i+1:i+24],
-        |     (a, b) -> (a * 31 + b) % 18446744073709551616::HUGEINT)
-        |     for i in range(0, n - 23)]] AS h
-        |  FROM codes),
-        |wins AS (SELECT doc_id,
-        |  CASE WHEN m <= 4 THEN [list_min(h)]
-        |       ELSE [list_min(h[s+1:s+4]) for s in range(0, m - 3)] END AS w
-        |  FROM hl)
-        |SELECT DISTINCT doc_id, unnest(w) AS fp FROM wins""".stripMargin,
-    "q123_fingerprint_matches" ->
-      """WITH norm AS (
-        |  SELECT doc_id, trim(regexp_replace(lower(coalesce(text, '')), '\s+', ' ', 'g')) AS s
-        |  FROM documents),
-        |d AS (SELECT doc_id, s, length(s) AS n FROM norm WHERE length(s) >= 24),
-        |codes AS (SELECT doc_id, n,
-        |  [CAST(unicode(s[i+1:i+1]) AS HUGEINT) for i in range(0, n)] AS c FROM d),
-        |hl AS (SELECT doc_id, n - 23 AS m,
-        |  [CASE WHEN h >= 9223372036854775808::HUGEINT
-        |        THEN CAST(h - 18446744073709551616::HUGEINT AS BIGINT)
-        |        ELSE CAST(h AS BIGINT) END
-        |   FOR h IN [list_reduce(c[i+1:i+24],
-        |     (a, b) -> (a * 31 + b) % 18446744073709551616::HUGEINT)
-        |     for i in range(0, n - 23)]] AS h
-        |  FROM codes),
-        |wins AS (SELECT doc_id,
-        |  CASE WHEN m <= 4 THEN [list_min(h)]
-        |       ELSE [list_min(h[s+1:s+4]) for s in range(0, m - 3)] END AS w
-        |  FROM hl),
-        |fps AS (SELECT DISTINCT doc_id, unnest(w) AS fp FROM wins),
+    "q122_winnow_fingerprints" -> (winnowCtesSql + "\n" +
+      """SELECT DISTINCT doc_id, unnest(w) AS fp FROM wins""".stripMargin),
+    "q123_fingerprint_matches" -> (winnowCtesSql + ",\n" +
+      """fps AS (SELECT DISTINCT doc_id, unnest(w) AS fp FROM wins),
         |dfc AS (SELECT fp, count(*) AS df FROM fps GROUP BY fp),
         |kept AS (SELECT f.doc_id, f.fp FROM fps f JOIN dfc USING (fp)
         |         WHERE df <= 1000),
@@ -4002,55 +3947,18 @@ FROM c"""
         |            CAST(count(*) AS BIGINT) AS n_shared
         |          FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
         |          GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, n_shared FROM pairs WHERE n_shared >= 3""".stripMargin,
+        |SELECT doc_a, doc_b, n_shared FROM pairs WHERE n_shared >= 3""".stripMargin),
     "q26_dup_clusters" -> dupClustersSql,
     // q132 runs the large-star/small-star engine over the SAME edge set
     // with the SAME min-reachable-id contract, so it shares q26's oracle
     "q132_dup_clusters_star" -> dupClustersSql,
-    "q75_fuzzy_dedup_keep_best" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS t FROM documents),
-        |gsets AS (
-        |  SELECT doc_id, list_distinct([array_to_string(t[i+1:i+3], ' ')
-        |          for i in range(0, greatest(len(t)-3, 0) + 1)]) AS gs
-        |  FROM toks),
-        |grams AS (SELECT doc_id, unnest(gs) AS g FROM gsets),
-        |sizes AS (SELECT doc_id, len(gs) AS sz FROM gsets),
-        |dfc AS (SELECT g, count(*) AS df FROM grams GROUP BY g),
-        |kept AS (SELECT gr.doc_id, gr.g FROM grams gr JOIN dfc USING (g)
-        |         WHERE df <= 100),
-        |cand AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-        |  FROM kept a JOIN kept b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |edges AS (
-        |  SELECT doc_a, doc_b FROM cand
-        |  JOIN sizes sa ON doc_a = sa.doc_id
-        |  JOIN sizes sb ON doc_b = sb.doc_id
-        |  WHERE common / (sa.sz + sb.sz - common) >= 0.5),
-        |bidir AS (SELECT doc_a AS a, doc_b AS b FROM edges
-        |          UNION SELECT doc_b, doc_a FROM edges),
-        |walk AS (
-        |  SELECT a AS node, a AS reach FROM bidir
-        |  UNION
-        |  SELECT w.node, e.b AS reach FROM walk w JOIN bidir e ON w.reach = e.a),
-        |cl AS (SELECT node AS doc_id, min(reach) AS cluster_id
+    "q75_fuzzy_dedup_keep_best" -> ("WITH RECURSIVE " + dupWalkCtesSql + ",\n" +
+      """cl AS (SELECT node AS doc_id, min(reach) AS cluster_id
         |       FROM walk GROUP BY node),
         |q AS (
         |  SELECT doc_id,
-        |    round(
-        |      least(length(text) / 500.0, 1.0) * 0.4 +
-        |      (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) > 0.2 THEN 0.0
-        |            ELSE 1.0 - (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) * 2 END) * 0.3 +
-        |      least((len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |          w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                     'that','on','for','with','as','at','by','this')))
-        |        / greatest(cast(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS double), 1.0)) * 4.0,
-        |        1.0) * 0.3, 6) AS quality
-        |  FROM documents),
+        |""".stripMargin + qualityScoreSql("    ") + "\n" +
+      """  FROM documents),
         |withc AS (
         |  SELECT q.doc_id, q.quality,
         |    coalesce(cl.cluster_id, q.doc_id) AS cluster_id
@@ -4062,35 +3970,10 @@ FROM c"""
         |                       ORDER BY quality DESC, doc_id ASC) AS rn
         |  FROM withc)
         |SELECT doc_id, cluster_id, quality, cluster_size, (rn = 1) AS kept
-        |FROM w""".stripMargin,
-    "q27_quality_filter" ->
-      """WITH toks AS (
-        |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
-        |         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
-        |  FROM documents),
-        |g2 AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 2
-        |           THEN [t[i] || ' ' || t[i+1] for i in range(1, len(t))]
-        |           ELSE [] END) AS g
-        |  FROM toks),
-        |cnt AS (SELECT doc_id, g, count(*) AS c FROM g2 GROUP BY 1, 2),
-        |top AS (SELECT doc_id, max(c) AS top_c, cast(sum(c) AS bigint) AS n_g
-        |        FROM cnt GROUP BY doc_id),
-        |sig AS (
-        |  SELECT d.doc_id,
-        |    round(
-        |      least(length(text) / 500.0, 1.0) * 0.4 +
-        |      (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) > 0.2 THEN 0.0
-        |            ELSE 1.0 - (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) * 2 END) * 0.3 +
-        |      least((len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |          w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                     'that','on','for','with','as','at','by','this')))
-        |        / greatest(cast(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS double), 1.0)) * 4.0,
-        |        1.0) * 0.3, 6) AS quality,
-        |    CASE WHEN coalesce(t.n_g, 0) = 0 THEN 0.0
+        |FROM w""".stripMargin),
+    "q27_quality_filter" -> ("WITH " + bigramTopCtesSql + ",\n" +
+      "sig AS (\n  SELECT d.doc_id,\n" + qualityScoreSql("    ") + ",\n" +
+      """    CASE WHEN coalesce(t.n_g, 0) = 0 THEN 0.0
         |         ELSE round(t.top_c / cast(t.n_g AS double), 6) END AS top_2gram_frac,
         |    cast(CASE WHEN length(trim(text)) = 0 THEN 0
         |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS bigint) AS n_tokens
@@ -4098,7 +3981,7 @@ FROM c"""
         |SELECT doc_id, quality, top_2gram_frac, n_tokens
         |FROM sig
         |WHERE quality >= 0.3 AND top_2gram_frac <= 0.3
-        |  AND n_tokens BETWEEN 10 AND 10000""".stripMargin,
+        |  AND n_tokens BETWEEN 10 AND 10000""".stripMargin),
     "q28_chunking" ->
       """WITH toks AS (
         |  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []
@@ -4174,50 +4057,16 @@ FROM c"""
         |SELECT c.source, c.len_bucket, c.n_docs,
         |  round(c.n_docs / cast(t.n_total AS double), 6) AS share
         |FROM c JOIN t USING (source)""".stripMargin,
-    "q43_token_budget" ->
-      """WITH scored AS (
-        |  SELECT doc_id, source,
-        |    round(
-        |      least(length(text) / 500.0, 1.0) * 0.4 +
-        |      (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) > 0.2 THEN 0.0
-        |            ELSE 1.0 - (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) * 2 END) * 0.3 +
-        |      least((len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |          w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                     'that','on','for','with','as','at','by','this')))
-        |        / greatest(cast(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS double), 1.0)) * 4.0,
-        |        1.0) * 0.3, 6) AS quality,
-        |    cast(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS bigint) AS n_tokens
-        |  FROM documents)
-        |SELECT doc_id, source, quality, n_tokens, cast(cum_tokens AS bigint) AS cum_tokens
+    "q43_token_budget" -> (scoredSql + ")\n" +
+      """SELECT doc_id, source, quality, n_tokens, cast(cum_tokens AS bigint) AS cum_tokens
         |FROM (
         |  SELECT doc_id, source, quality, n_tokens,
         |    sum(n_tokens) OVER (PARTITION BY source ORDER BY quality DESC, doc_id ASC
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
         |  FROM scored)
-        |WHERE cum_tokens <= 1000""".stripMargin,
-    "q69_mixture_balance" ->
-      """WITH scored AS (
-        |  SELECT doc_id, source,
-        |    round(
-        |      least(length(text) / 500.0, 1.0) * 0.4 +
-        |      (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) > 0.2 THEN 0.0
-        |            ELSE 1.0 - (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) * 2 END) * 0.3 +
-        |      least((len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |          w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                     'that','on','for','with','as','at','by','this')))
-        |        / greatest(cast(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS double), 1.0)) * 4.0,
-        |        1.0) * 0.3, 6) AS quality,
-        |    cast(CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS bigint) AS n_tokens
-        |  FROM documents
-        |  WHERE source IN ('src0', 'src1', 'src2', 'src3')),
+        |WHERE cum_tokens <= 1000""".stripMargin),
+    "q69_mixture_balance" -> (scoredSql + "\n" +
+      """  WHERE source IN ('src0', 'src1', 'src2', 'src3')),
         |wt AS (SELECT * FROM (VALUES ('src0', 4), ('src1', 2), ('src2', 1), ('src3', 1))
         |         AS t(source, weight)),
         |tot AS (SELECT source, cast(sum(n_tokens) AS bigint) AS total_tokens
@@ -4233,7 +4082,7 @@ FROM c"""
         |  cast(cum_tokens AS bigint) AS cum_tokens,
         |  cast(weight * units AS bigint) AS budget_tokens,
         |  (cum_tokens <= weight * units) AS kept
-        |FROM c, u""".stripMargin,
+        |FROM c, u""".stripMargin),
     "q70_shuffle_shards" ->
       """WITH m AS (
         |  SELECT doc_id,
@@ -4247,26 +4096,15 @@ FROM c"""
         |  n_tokens
         |FROM m""".stripMargin,
     "q71_dedup_keep_best" ->
-      """WITH base AS (
+      ("""WITH base AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + 10000000 AS doc_id, replace(text, ' ', '  ') AS text
         |  FROM documents WHERE doc_id % 10 = 0),
         |q AS (
         |  SELECT doc_id,
-        |    round(
-        |      least(length(text) / 500.0, 1.0) * 0.4 +
-        |      (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) > 0.2 THEN 0.0
-        |            ELSE 1.0 - (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) * 2 END) * 0.3 +
-        |      least((len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |          w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                     'that','on','for','with','as','at','by','this')))
-        |        / greatest(cast(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS double), 1.0)) * 4.0,
-        |        1.0) * 0.3, 6) AS quality,
-        |    trim(regexp_replace(regexp_replace(regexp_replace(coalesce(text, ''),
+        |""".stripMargin + qualityScoreSql("    ") + ",\n" +
+      """    trim(regexp_replace(regexp_replace(regexp_replace(coalesce(text, ''),
         |      '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
         |      '[ \t]+', ' ', 'g'),
         |      '\n{3,}', chr(10) || chr(10), 'g')) AS norm
@@ -4276,23 +4114,16 @@ FROM c"""
         |    count(*) OVER (PARTITION BY norm) AS n_copies,
         |    row_number() OVER (PARTITION BY norm ORDER BY quality DESC, doc_id ASC) AS rn
         |  FROM q)
-        |SELECT doc_id, quality, n_copies, (rn = 1) AS kept FROM w""".stripMargin,
-    "q73_temperature_sample" ->
-      """WITH c AS (
-        |  SELECT coalesce(lang, 'und') AS lang, count(*) AS n_docs
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT sum(n_docs) AS n_total FROM c),
-        |p AS (SELECT lang, n_docs, n_total,
-        |        n_docs / cast(n_total AS double) AS p FROM c, t),
-        |z AS (SELECT sum(pow(p, 0.3)) AS z FROM p),
-        |r AS (SELECT lang,
+        |SELECT doc_id, quality, n_copies, (rn = 1) AS kept FROM w""".stripMargin),
+    "q73_temperature_sample" -> (temperatureCtesSql + ",\n" +
+      """r AS (SELECT lang,
         |        round(least(round(pow(p, 0.3) / z * n_total / n_docs, 6), 1.0), 6) AS rate,
         |        round(pow(p, 0.3) / z * n_total / n_docs, 6) AS up_factor
         |      FROM p, z)
         |SELECT d.doc_id, coalesce(d.lang, 'und') AS lang, r.rate, r.up_factor,
         |  ((((d.doc_id % 2147483648) * 1597334677) % 4294967296) / 4294967296.0 < r.rate)
         |    AS kept
-        |FROM documents d JOIN r ON coalesce(d.lang, 'und') = r.lang""".stripMargin,
+        |FROM documents d JOIN r ON coalesce(d.lang, 'und') = r.lang""".stripMargin),
     "q85_page_meta" ->
       """WITH d AS (
         |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents)
@@ -4322,19 +4153,8 @@ FROM c"""
         |  (doc_id = min(doc_id) OVER (PARTITION BY canon_key)) AS kept,
         |  cast(count(*) OVER (PARTITION BY canon_key) AS bigint) AS n_dups
         |FROM k""".stripMargin,
-    "q84_outlinks" ->
-      """WITH d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |m AS (SELECT d.doc_id, d.source, h1.source AS h1, h2.source AS h2
-        |      FROM d CROSS JOIN c
-        |      JOIN h h1 ON ((((d.doc_id % 2147483648) * 2654435761) % 4294967296)
-        |                     // 65536) % nh = h1.hid
-        |      JOIN h h2 ON ((((d.doc_id % 2147483648) * 2246822519) % 4294967296)
-        |                     // 65536) % nh = h2.hid)
-        |SELECT doc_id, 0 AS link_pos, lower(source) || '.example' AS src_host,
+    "q84_outlinks" -> (linkPagesSql + "\n" +
+      """SELECT doc_id, 0 AS link_pos, lower(source) || '.example' AS src_host,
         |       lower(h1) || '.example' AS dst_host,
         |       'https://' || h1 || '.example/x?a=1&b=2' AS href,
         |       'Visit ' || h1 || ' & friends' AS anchor, false AS nofollow
@@ -4346,20 +4166,9 @@ FROM c"""
         |UNION ALL
         |SELECT doc_id, 2, lower(source) || '.example', lower(h2) || '.example',
         |       '//' || h2 || '.example/q', 'proto-relative', false
-        |FROM m WHERE doc_id % 5 <> 0""".stripMargin,
-    "q87_anchor_terms" ->
-      """WITH d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |m AS (SELECT d.doc_id, d.source, h1.source AS h1, h2.source AS h2
-        |      FROM d CROSS JOIN c
-        |      JOIN h h1 ON ((((d.doc_id % 2147483648) * 2654435761) % 4294967296)
-        |                     // 65536) % nh = h1.hid
-        |      JOIN h h2 ON ((((d.doc_id % 2147483648) * 2246822519) % 4294967296)
-        |                     // 65536) % nh = h2.hid),
-        |lk AS (
+        |FROM m WHERE doc_id % 5 <> 0""".stripMargin),
+    "q87_anchor_terms" -> (linkPagesSql + ",\n" +
+      """lk AS (
         |  SELECT lower(source) || '.example' AS src_host,
         |         lower(h1) || '.example' AS dst_host,
         |         'Visit ' || h1 || ' & friends' AS anchor
@@ -4381,77 +4190,13 @@ FROM c"""
         |             ORDER BY n_hosts DESC, n_links DESC, term ASC) AS rnk
         |           FROM agg)
         |SELECT dst_host, term, n_links, n_hosts, cast(rnk AS int) AS rnk
-        |FROM ranked WHERE rnk <= 3""".stripMargin,
-    "q83_host_pagerank" ->
-      """WITH d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |l AS (SELECT d.source, h.hid,
-        |        ((((d.doc_id % 2147483648) * 2654435761) % 4294967296) // 65536) % nh AS t1,
-        |        ((((d.doc_id % 2147483648) * 2246822519) % 4294967296) // 65536) % nh AS t2
-        |      FROM d JOIN h ON d.source = h.source CROSS JOIN c
-        |      WHERE h.hid <> 0),
-        |e0 AS (SELECT source AS src, t1 AS thid FROM l
-        |       UNION ALL
-        |       SELECT source AS src, t2 AS thid FROM l),
-        |e AS (SELECT e0.src, h.source AS dst, cast(count(*) AS bigint) AS weight
-        |      FROM e0 JOIN h ON e0.thid = h.hid
-        |      WHERE e0.src <> h.source
-        |      GROUP BY 1, 2),
-        |u AS (SELECT src AS host FROM e UNION SELECT dst FROM e),
-        |ow AS (SELECT u.host, coalesce(s.w, 0) AS outw
-        |       FROM u LEFT JOIN
-        |         (SELECT src, cast(sum(weight) AS bigint) AS w FROM e GROUP BY 1) s
-        |         ON u.host = s.src),
-        |n AS (SELECT count(*) AS n FROM u),
-        |r0 AS (SELECT host, outw, 1000000000000 // n AS r FROM ow CROSS JOIN n),
-        |i1 AS (SELECT e.dst AS host,
-        |         cast(sum(e.weight * (r.r // r.outw)
-        |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
-        |       FROM e JOIN r0 r ON e.src = r.host GROUP BY 1),
-        |g1 AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r0 WHERE outw = 0),
-        |r1 AS (SELECT p.host, p.outw,
-        |         (15 * (1000000000000 // n.n)) // 100
-        |         + (85 * (coalesce(i1.infl, 0) + g1.dang // n.n)) // 100 AS r
-        |       FROM r0 p LEFT JOIN i1 ON p.host = i1.host CROSS JOIN g1 CROSS JOIN n),
-        |i2 AS (SELECT e.dst AS host,
-        |         cast(sum(e.weight * (r.r // r.outw)
-        |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
-        |       FROM e JOIN r1 r ON e.src = r.host GROUP BY 1),
-        |g2 AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r1 WHERE outw = 0),
-        |r2 AS (SELECT p.host, p.outw,
-        |         (15 * (1000000000000 // n.n)) // 100
-        |         + (85 * (coalesce(i2.infl, 0) + g2.dang // n.n)) // 100 AS r
-        |       FROM r1 p LEFT JOIN i2 ON p.host = i2.host CROSS JOIN g2 CROSS JOIN n),
-        |i3 AS (SELECT e.dst AS host,
-        |         cast(sum(e.weight * (r.r // r.outw)
-        |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
-        |       FROM e JOIN r2 r ON e.src = r.host GROUP BY 1),
-        |g3 AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r2 WHERE outw = 0),
-        |r3 AS (SELECT p.host, p.outw,
-        |         (15 * (1000000000000 // n.n)) // 100
-        |         + (85 * (coalesce(i3.infl, 0) + g3.dang // n.n)) // 100 AS r
-        |       FROM r2 p LEFT JOIN i3 ON p.host = i3.host CROSS JOIN g3 CROSS JOIN n)
-        |SELECT host, outw AS out_weight, r AS rank_e12,
+        |FROM ranked WHERE rnk <= 3""".stripMargin),
+    "q83_host_pagerank" -> ("WITH " + hostRankCtesSql + "\n" +
+      """SELECT host, outw AS out_weight, r AS rank_e12,
         |  r / 1000000000000.0 AS rank
-        |FROM r3""".stripMargin,
-    "q103_hits" ->
-      """WITH d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |l AS (SELECT d.source, h.hid,
-        |        ((((d.doc_id % 2147483648) * 2654435761) % 4294967296) // 65536) % nh AS t1,
-        |        ((((d.doc_id % 2147483648) * 2246822519) % 4294967296) // 65536) % nh AS t2
-        |      FROM d JOIN h ON d.source = h.source CROSS JOIN c
-        |      WHERE h.hid <> 0),
-        |e0 AS (SELECT source AS src, t1 AS thid FROM l
-        |       UNION ALL
-        |       SELECT source AS src, t2 AS thid FROM l),
-        |ed AS (SELECT DISTINCT e0.src, h.source AS dst
+        |FROM r3""".stripMargin),
+    "q103_hits" -> ("WITH " + hostTargetsSql + ",\n" +
+      """ed AS (SELECT DISTINCT e0.src, h.source AS dst
         |       FROM e0 JOIN h ON e0.thid = h.hid
         |       WHERE e0.src <> h.source),
         |u AS (SELECT src AS host FROM ed UNION SELECT dst FROM ed),
@@ -4485,17 +4230,11 @@ FROM c"""
         |       JOIN a2 ON u.host = a2.host CROSS JOIN th2)
         |SELECT host, hub AS hub_e12, auth AS auth_e12,
         |  hub / 1000000000000.0 AS hub, auth / 1000000000000.0 AS auth
-        |FROM s2""".stripMargin,
+        |FROM s2""".stripMargin),
     // q152: the q142 serpentine restated + the manifest aggregate (the
     // checksum restates the op's md5-mod math term for term)
-    "q152_shard_manifest" ->
-      """WITH r AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-        |         CAST(coalesce(n_chars, 0) AS BIGINT) AS weight,
-        |         row_number() OVER (ORDER BY coalesce(n_chars, 0) DESC,
-        |                            doc_id) AS rnk
-        |  FROM documents),
-        |a AS (SELECT doc_id, weight,
+    "q152_shard_manifest" -> (shardRanksSql + ",\n" +
+      """a AS (SELECT doc_id, weight,
         |        CAST(CASE WHEN ((rnk - 1) // 7) % 2 = 0 THEN (rnk - 1) % 7
         |             ELSE 6 - (rnk - 1) % 7 END AS BIGINT) AS shard
         |      FROM r),
@@ -4506,7 +4245,7 @@ FROM c"""
         |SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(weight) AS BIGINT) AS sum_weight,
         |  CAST(sum(idh) % 1000000000000 AS BIGINT) AS ids_checksum
-        |FROM h GROUP BY shard""".stripMargin,
+        |FROM h GROUP BY shard""".stripMargin),
     // q150: closed-form verdict per (robots-class, meta-class) cell —
     // value-exactness proves the three exclusion channels compose right
     "q150_crawl_eligibility" ->
@@ -4594,102 +4333,24 @@ FROM c"""
         |FROM d LEFT JOIN tiers t ON d.source = t.host""".stripMargin),
     // q135: q102's unrolled rank+tier CTEs + q89's structural stats +
     // per-host doc counts, assembled over the union host universe
-    "q135_host_dossier" ->
-      """WITH d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |l AS (SELECT d.source, h.hid,
-        |        ((((d.doc_id % 2147483648) * 2654435761) % 4294967296) // 65536) % nh AS t1,
-        |        ((((d.doc_id % 2147483648) * 2246822519) % 4294967296) // 65536) % nh AS t2
-        |      FROM d JOIN h ON d.source = h.source CROSS JOIN c
-        |      WHERE h.hid <> 0),
-        |e0 AS (SELECT source AS src, t1 AS thid FROM l
-        |       UNION ALL
-        |       SELECT source AS src, t2 AS thid FROM l),
-        |e AS (SELECT e0.src, h.source AS dst, cast(count(*) AS bigint) AS weight
-        |      FROM e0 JOIN h ON e0.thid = h.hid
-        |      WHERE e0.src <> h.source
-        |      GROUP BY 1, 2),
-        |u AS (SELECT src AS host FROM e UNION SELECT dst FROM e),
-        |ow AS (SELECT u.host, coalesce(s.w, 0) AS outw
-        |       FROM u LEFT JOIN
-        |         (SELECT src, cast(sum(weight) AS bigint) AS w FROM e GROUP BY 1) s
-        |         ON u.host = s.src),
-        |n AS (SELECT count(*) AS n FROM u),
-        |r0 AS (SELECT host, outw, 1000000000000 // n AS r FROM ow CROSS JOIN n),
-        |i1 AS (SELECT e.dst AS host,
-        |         cast(sum(e.weight * (r.r // r.outw)
-        |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
-        |       FROM e JOIN r0 r ON e.src = r.host GROUP BY 1),
-        |g1 AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r0 WHERE outw = 0),
-        |r1 AS (SELECT p.host, p.outw,
-        |         (15 * (1000000000000 // n.n)) // 100
-        |         + (85 * (coalesce(i1.infl, 0) + g1.dang // n.n)) // 100 AS r
-        |       FROM r0 p LEFT JOIN i1 ON p.host = i1.host CROSS JOIN g1 CROSS JOIN n),
-        |i2 AS (SELECT e.dst AS host,
-        |         cast(sum(e.weight * (r.r // r.outw)
-        |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
-        |       FROM e JOIN r1 r ON e.src = r.host GROUP BY 1),
-        |g2 AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r1 WHERE outw = 0),
-        |r2 AS (SELECT p.host, p.outw,
-        |         (15 * (1000000000000 // n.n)) // 100
-        |         + (85 * (coalesce(i2.infl, 0) + g2.dang // n.n)) // 100 AS r
-        |       FROM r1 p LEFT JOIN i2 ON p.host = i2.host CROSS JOIN g2 CROSS JOIN n),
-        |i3 AS (SELECT e.dst AS host,
-        |         cast(sum(e.weight * (r.r // r.outw)
-        |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
-        |       FROM e JOIN r2 r ON e.src = r.host GROUP BY 1),
-        |g3 AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r2 WHERE outw = 0),
-        |r3 AS (SELECT p.host, p.outw,
-        |         (15 * (1000000000000 // n.n)) // 100
-        |         + (85 * (coalesce(i3.infl, 0) + g3.dang // n.n)) // 100 AS r
-        |       FROM r2 p LEFT JOIN i3 ON p.host = i3.host CROSS JOIN g3 CROSS JOIN n),
-        |rk AS (SELECT host, r AS rank_e12,
-        |         row_number() OVER (ORDER BY r DESC, host ASC) AS rnk,
-        |         count(*) OVER () AS nu
-        |       FROM r3),
-        |tiers AS (SELECT host, rank_e12, cast(rnk AS bigint) AS rnk,
-        |            CASE WHEN rnk * 100 <= 10 * nu THEN 1
-        |                 WHEN rnk * 100 <= 50 * nu THEN 2
-        |                 ELSE 3 END AS tier
-        |          FROM rk),
-        |o AS (SELECT src, cast(count(*) AS bigint) AS out_deg,
-        |        cast(sum(weight) AS bigint) AS out_weight FROM e GROUP BY 1),
-        |i AS (SELECT dst, cast(count(*) AS bigint) AS in_deg,
-        |        cast(sum(weight) AS bigint) AS in_weight FROM e GROUP BY 1),
-        |rc AS (SELECT a.src, cast(count(*) AS bigint) AS n_recip
-        |       FROM e a JOIN e b ON a.src = b.dst AND a.dst = b.src GROUP BY 1),
-        |dc AS (SELECT source AS host, cast(count(*) AS bigint) AS n_docs
+    "q135_host_dossier" -> (hostTierCtesSql + ",\n" + hostDegreeCtesSql + ",\n" +
+      """dc AS (SELECT source AS host, cast(count(*) AS bigint) AS n_docs
         |       FROM d GROUP BY 1),
         |allh AS (SELECT host FROM u UNION SELECT host FROM dc)
         |SELECT allh.host,
         |  cast(coalesce(t.rank_e12, 0) AS bigint) AS rank_e12,
         |  cast(coalesce(t.rnk, 0) AS bigint) AS rnk,
         |  cast(coalesce(t.tier, 0) AS int) AS tier,
-        |  coalesce(o.out_deg, 0) AS out_deg,
-        |  coalesce(i.in_deg, 0) AS in_deg,
-        |  coalesce(o.out_weight, 0) AS out_weight,
-        |  coalesce(i.in_weight, 0) AS in_weight,
-        |  coalesce(rc.n_recip, 0) AS n_recip,
-        |  CASE WHEN coalesce(o.out_deg, 0) = 0 THEN 0.0
-        |       ELSE round(coalesce(rc.n_recip, 0) / cast(o.out_deg AS double), 6)
-        |  END AS reciprocity,
-        |  coalesce(dc.n_docs, 0) AS n_docs
+        |""".stripMargin + hostDegreeColsSql + ",\n" +
+      """  coalesce(dc.n_docs, 0) AS n_docs
         |FROM allh LEFT JOIN tiers t ON allh.host = t.host
         |LEFT JOIN o ON allh.host = o.src
         |LEFT JOIN i ON allh.host = i.dst
         |LEFT JOIN rc ON allh.host = rc.src
-        |LEFT JOIN dc ON allh.host = dc.host""".stripMargin,
+        |LEFT JOIN dc ON allh.host = dc.host""".stripMargin),
     "q91_harmonic_centrality" -> harmonicOracleSql,
-    "q90_domain_edges" ->
-      """WITH d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |m AS (SELECT d.doc_id, d.source, h1.source AS h1
+    "q90_domain_edges" -> ("WITH " + rankedSourcesSql + ",\n" +
+      """m AS (SELECT d.doc_id, d.source, h1.source AS h1
         |      FROM d CROSS JOIN c
         |      JOIN h h1 ON ((((d.doc_id % 2147483648) * 2654435761) % 4294967296)
         |                     // 65536) % nh = h1.hid),
@@ -4698,7 +4359,7 @@ FROM c"""
         |         lower(replace(h1, '.', '-')) || '.example' AS dst
         |       FROM m)
         |SELECT src, dst, cast(count(*) AS bigint) AS weight
-        |FROM lk WHERE src <> dst GROUP BY 1, 2""".stripMargin,
+        |FROM lk WHERE src <> dst GROUP BY 1, 2""".stripMargin),
     "q93_bm25_search" -> bm25OracleSql,
     // the indexed path answers the SAME query from postings — one oracle,
     // two plans (scan vs index probe); value-identity is the contract
@@ -4760,30 +4421,13 @@ FROM c"""
         |JOIN uni a ON pc.term_a = a.term
         |JOIN uni b ON pc.term_b = b.term
         |CROSS JOIN tot""".stripMargin,
-    "q101_cocitation" ->
-      """WITH d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |l AS (SELECT d.source, h.hid,
-        |        ((((d.doc_id % 2147483648) * 2654435761) % 4294967296) // 65536) % nh AS t1,
-        |        ((((d.doc_id % 2147483648) * 2246822519) % 4294967296) // 65536) % nh AS t2
-        |      FROM d JOIN h ON d.source = h.source CROSS JOIN c
-        |      WHERE h.hid <> 0),
-        |e0 AS (SELECT source AS src, t1 AS thid FROM l
-        |       UNION ALL
-        |       SELECT source AS src, t2 AS thid FROM l),
-        |e AS (SELECT e0.src, h.source AS dst
-        |      FROM e0 JOIN h ON e0.thid = h.hid
-        |      WHERE e0.src <> h.source
-        |      GROUP BY 1, 2),
-        |kept AS (SELECT src FROM e GROUP BY src HAVING count(*) <= 25),
+    "q101_cocitation" -> ("WITH " + hostLinksSql + ",\n" +
+      """kept AS (SELECT src FROM e GROUP BY src HAVING count(*) <= 25),
         |ek AS (SELECT e.src, e.dst FROM e JOIN kept USING (src))
         |SELECT a.dst AS host_a, b.dst AS host_b,
         |  cast(count(*) AS bigint) AS n_common_sources
         |FROM ek a JOIN ek b ON a.src = b.src AND a.dst < b.dst
-        |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
+        |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin),
     "q94_url_patterns" ->
       """WITH u AS (
         |  SELECT doc_id,
@@ -4810,25 +4454,8 @@ FROM c"""
         |  min(url) AS sample_url,
         |  count(DISTINCT path) >= 5 AS is_trap
         |FROM pp GROUP BY 1, 2""".stripMargin,
-    "q95_host_components" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |l AS (SELECT d.source, h.hid,
-        |        ((((d.doc_id % 2147483648) * 2654435761) % 4294967296) // 65536) % nh AS t1,
-        |        ((((d.doc_id % 2147483648) * 2246822519) % 4294967296) // 65536) % nh AS t2
-        |      FROM d JOIN h ON d.source = h.source CROSS JOIN c
-        |      WHERE h.hid <> 0),
-        |e0 AS (SELECT source AS src, t1 AS thid FROM l
-        |       UNION ALL
-        |       SELECT source AS src, t2 AS thid FROM l),
-        |e AS (SELECT e0.src, h.source AS dst
-        |      FROM e0 JOIN h ON e0.thid = h.hid
-        |      WHERE e0.src <> h.source
-        |      GROUP BY 1, 2),
-        |f AS (SELECT e.src, e.dst FROM e
+    "q95_host_components" -> ("WITH RECURSIVE " + hostLinksSql + ",\n" +
+      """f AS (SELECT e.src, e.dst FROM e
         |      JOIN h hs ON e.src = hs.source
         |      JOIN h hd ON e.dst = hd.source
         |      WHERE hs.hid % 3 = hd.hid % 3),
@@ -4839,9 +4466,9 @@ FROM c"""
         |  UNION
         |  SELECT w.node, e2.b AS reach FROM walk w JOIN bidir e2 ON w.reach = e2.a)
         |SELECT node AS host, min(reach) AS component_host
-        |FROM walk GROUP BY node""".stripMargin,
+        |FROM walk GROUP BY node""".stripMargin),
     "q96_host_boilerplate" ->
-      """WITH m AS (
+      ("""WITH m AS (
         |  SELECT doc_id, coalesce(source, '') AS source,
         |    coalesce(text, '') || chr(10) || 'footer of ' || coalesce(source, '')
         |      || chr(10) ||
@@ -4855,71 +4482,15 @@ FROM c"""
         |f AS (SELECT source, line FROM l WHERE trim(line) <> ''
         |      GROUP BY 1, 2 HAVING count(*) > 10),
         |k AS (SELECT l.doc_id, l.pos, l.line FROM l ANTI JOIN f USING (source, line)),
-        |agg AS (
-        |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text,
-        |    count(*) AS n_kept
-        |  FROM k GROUP BY 1)
-        |SELECT s.doc_id,
-        |  coalesce(agg.clean_text, '') AS clean_text,
-        |  cast(coalesce(agg.n_kept, 0) AS bigint) AS n_kept,
-        |  cast(len(s.ls) - coalesce(agg.n_kept, 0) AS bigint) AS n_removed
-        |FROM s LEFT JOIN agg USING (doc_id)""".stripMargin,
-    "q89_host_graph_stats" ->
-      """WITH d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |l AS (SELECT d.source, h.hid,
-        |        ((((d.doc_id % 2147483648) * 2654435761) % 4294967296) // 65536) % nh AS t1,
-        |        ((((d.doc_id % 2147483648) * 2246822519) % 4294967296) // 65536) % nh AS t2
-        |      FROM d JOIN h ON d.source = h.source CROSS JOIN c
-        |      WHERE h.hid <> 0),
-        |e0 AS (SELECT source AS src, t1 AS thid FROM l
-        |       UNION ALL
-        |       SELECT source AS src, t2 AS thid FROM l),
-        |e AS (SELECT e0.src, h.source AS dst, cast(count(*) AS bigint) AS weight
-        |      FROM e0 JOIN h ON e0.thid = h.hid
-        |      WHERE e0.src <> h.source
-        |      GROUP BY 1, 2),
-        |u AS (SELECT src AS host FROM e UNION SELECT dst FROM e),
-        |o AS (SELECT src, cast(count(*) AS bigint) AS out_deg,
-        |        cast(sum(weight) AS bigint) AS out_weight FROM e GROUP BY 1),
-        |i AS (SELECT dst, cast(count(*) AS bigint) AS in_deg,
-        |        cast(sum(weight) AS bigint) AS in_weight FROM e GROUP BY 1),
-        |rc AS (SELECT a.src, cast(count(*) AS bigint) AS n_recip
-        |       FROM e a JOIN e b ON a.src = b.dst AND a.dst = b.src GROUP BY 1)
-        |SELECT u.host,
-        |  coalesce(o.out_deg, 0) AS out_deg,
-        |  coalesce(i.in_deg, 0) AS in_deg,
-        |  coalesce(o.out_weight, 0) AS out_weight,
-        |  coalesce(i.in_weight, 0) AS in_weight,
-        |  coalesce(rc.n_recip, 0) AS n_recip,
-        |  CASE WHEN coalesce(o.out_deg, 0) = 0 THEN 0.0
-        |       ELSE round(coalesce(rc.n_recip, 0) / cast(o.out_deg AS double), 6)
-        |  END AS reciprocity
-        |FROM u LEFT JOIN o ON u.host = o.src
+        |""".stripMargin + keptLinesSql),
+    "q89_host_graph_stats" -> ("WITH " + hostGraphEdgesSql + ",\n" +
+      "u AS (SELECT src AS host FROM e UNION SELECT dst FROM e),\n" +
+      hostDegreeCtesSql + "\nSELECT u.host,\n" + hostDegreeColsSql + "\n" +
+      """FROM u LEFT JOIN o ON u.host = o.src
         |LEFT JOIN i ON u.host = i.dst
-        |LEFT JOIN rc ON u.host = rc.src""".stripMargin,
-    "q88_trustrank" ->
-      """WITH d AS (
-        |  SELECT doc_id, coalesce(source, 'unknown') AS source FROM documents),
-        |h AS (SELECT source, row_number() OVER (ORDER BY source) - 1 AS hid
-        |      FROM (SELECT DISTINCT source FROM d)),
-        |c AS (SELECT count(*) AS nh FROM h),
-        |l AS (SELECT d.source, h.hid,
-        |        ((((d.doc_id % 2147483648) * 2654435761) % 4294967296) // 65536) % nh AS t1,
-        |        ((((d.doc_id % 2147483648) * 2246822519) % 4294967296) // 65536) % nh AS t2
-        |      FROM d JOIN h ON d.source = h.source CROSS JOIN c
-        |      WHERE h.hid <> 0),
-        |e0 AS (SELECT source AS src, t1 AS thid FROM l
-        |       UNION ALL
-        |       SELECT source AS src, t2 AS thid FROM l),
-        |e AS (SELECT e0.src, h.source AS dst, cast(count(*) AS bigint) AS weight
-        |      FROM e0 JOIN h ON e0.thid = h.hid
-        |      WHERE e0.src <> h.source
-        |      GROUP BY 1, 2),
-        |u AS (SELECT src AS host FROM e UNION SELECT dst FROM e),
+        |LEFT JOIN rc ON u.host = rc.src""".stripMargin),
+    "q88_trustrank" -> ("WITH " + hostGraphEdgesSql + ",\n" +
+      """u AS (SELECT src AS host FROM e UNION SELECT dst FROM e),
         |sd AS (SELECT source AS host FROM h WHERE hid % 3 = 0),
         |ow AS (SELECT u.host, coalesce(s.w, 0) AS outw,
         |         (u.host IN (SELECT host FROM sd)) AS seed
@@ -4930,33 +4501,10 @@ FROM c"""
         |r0 AS (SELECT host, outw, seed,
         |         cast(CASE WHEN seed THEN 1000000000000 // s ELSE 0 END AS bigint) AS r
         |       FROM ow CROSS JOIN ns),
-        |i1 AS (SELECT e.dst AS host,
-        |         cast(sum(e.weight * (r.r // r.outw)
-        |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
-        |       FROM e JOIN r0 r ON e.src = r.host GROUP BY 1),
-        |g1 AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r0 WHERE outw = 0),
-        |r1 AS (SELECT p.host, p.outw, p.seed,
-        |         cast(CASE WHEN p.seed
-        |                THEN (15 * (1000000000000 // ns.s)) // 100 ELSE 0 END
-        |           + (85 * (coalesce(i1.infl, 0)
-        |              + CASE WHEN p.seed THEN g1.dang // ns.s ELSE 0 END)) // 100
-        |           AS bigint) AS r
-        |       FROM r0 p LEFT JOIN i1 ON p.host = i1.host CROSS JOIN g1 CROSS JOIN ns),
-        |i2 AS (SELECT e.dst AS host,
-        |         cast(sum(e.weight * (r.r // r.outw)
-        |           + ((r.r % r.outw) * e.weight) // r.outw) AS bigint) AS infl
-        |       FROM e JOIN r1 r ON e.src = r.host GROUP BY 1),
-        |g2 AS (SELECT cast(coalesce(sum(r), 0) AS bigint) AS dang FROM r1 WHERE outw = 0),
-        |r2 AS (SELECT p.host, p.outw, p.seed,
-        |         cast(CASE WHEN p.seed
-        |                THEN (15 * (1000000000000 // ns.s)) // 100 ELSE 0 END
-        |           + (85 * (coalesce(i2.infl, 0)
-        |              + CASE WHEN p.seed THEN g2.dang // ns.s ELSE 0 END)) // 100
-        |           AS bigint) AS r
-        |       FROM r1 p LEFT JOIN i2 ON p.host = i2.host CROSS JOIN g2 CROSS JOIN ns)
-        |SELECT host, outw AS out_weight, seed AS is_seed, r AS rank_e12,
+        |""".stripMargin + trustRankRoundSql(1) + ",\n" + trustRankRoundSql(2) + "\n" +
+      """SELECT host, outw AS out_weight, seed AS is_seed, r AS rank_e12,
         |  r / 1000000000000.0 AS rank
-        |FROM r2""".stripMargin,
+        |FROM r2""".stripMargin),
     "q82_decontaminate_semantic" ->
       """WITH e AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v,
@@ -5036,7 +4584,7 @@ FROM c"""
         |             / n_chars END <= 0.001) AS kept
         |FROM c""".stripMargin,
     "q77_source_prior" ->
-      """WITH m AS (
+      ("""WITH m AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 100 = 0 THEN 'rare' || CAST(doc_id AS VARCHAR)
         |         ELSE coalesce(source, 'unknown') END AS source,
@@ -5044,19 +4592,8 @@ FROM c"""
         |  FROM documents),
         |q AS (
         |  SELECT doc_id, source,
-        |    round(
-        |      least(length(text) / 500.0, 1.0) * 0.4 +
-        |      (CASE WHEN (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) > 0.2 THEN 0.0
-        |            ELSE 1.0 - (length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-        |                 / greatest(cast(length(text) AS double), 1.0) * 2 END) * 0.3 +
-        |      least((len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |          w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                     'that','on','for','with','as','at','by','this')))
-        |        / greatest(cast(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS double), 1.0)) * 4.0,
-        |        1.0) * 0.3, 6) AS quality
-        |  FROM m),
+        |""".stripMargin + qualityScoreSql("    ") + "\n" +
+      """  FROM m),
         |s AS (SELECT doc_id, source, quality,
         |        cast(round(quality * 1000000, 0) AS bigint) AS qm FROM q),
         |b AS (SELECT source, cast(sum(qm) AS bigint) AS sm,
@@ -5072,16 +4609,9 @@ FROM c"""
         |       p.prior_micros / 1000000.0 AS source_prior,
         |       p.n_source_docs,
         |       (p.prior_micros >= 300000) AS kept
-        |FROM s JOIN p USING (source)""".stripMargin,
-    "q76_epoch_upsample" ->
-      """WITH c AS (
-        |  SELECT coalesce(lang, 'und') AS lang, count(*) AS n_docs
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT sum(n_docs) AS n_total FROM c),
-        |p AS (SELECT lang, n_docs, n_total,
-        |        n_docs / cast(n_total AS double) AS p FROM c, t),
-        |z AS (SELECT sum(pow(p, 0.3)) AS z FROM p),
-        |r AS (SELECT lang,
+        |FROM s JOIN p USING (source)""".stripMargin),
+    "q76_epoch_upsample" -> (temperatureCtesSql + ",\n" +
+      """r AS (SELECT lang,
         |        round(pow(p, 0.3) / z * n_total / n_docs, 6) AS up_factor
         |      FROM p, z),
         |n AS (SELECT d.doc_id, coalesce(d.lang, 'und') AS lang, r.up_factor,
@@ -5093,7 +4623,7 @@ FROM c"""
         |      FROM documents d JOIN r ON coalesce(d.lang, 'und') = r.lang)
         |SELECT doc_id, lang, up_factor, n_copies,
         |       unnest(range(n_copies)) AS copy
-        |FROM n WHERE n_copies > 0""".stripMargin,
+        |FROM n WHERE n_copies > 0""".stripMargin),
     // q74: the full 3-iteration batch-GD logistic regression unrolled —
     // w0=0 so iteration 1's p is exactly 0.5; lr/threshold are the op
     // defaults (3000.0 / 0.5); features are unigrams + adjacent bigrams
@@ -5182,7 +4712,7 @@ FROM c"""
         |  cast(count(*) AS bigint) AS n_dups
         |FROM c GROUP BY 1""".stripMargin,
     "q42_line_boilerplate" ->
-      """WITH m AS (
+      ("""WITH m AS (
         |  SELECT doc_id,
         |    'header site nav' || chr(10) || text || chr(10) ||
         |    'copyright footer ' || source || chr(10) ||
@@ -5194,15 +4724,7 @@ FROM c"""
         |  FROM (SELECT doc_id, ls, unnest(generate_series(1, len(ls))) AS i FROM s)),
         |f AS (SELECT line FROM l WHERE trim(line) <> '' GROUP BY 1 HAVING count(*) > 10),
         |k AS (SELECT l.doc_id, l.pos, l.line FROM l ANTI JOIN f USING (line)),
-        |agg AS (
-        |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text,
-        |    count(*) AS n_kept
-        |  FROM k GROUP BY 1)
-        |SELECT s.doc_id,
-        |  coalesce(agg.clean_text, '') AS clean_text,
-        |  cast(coalesce(agg.n_kept, 0) AS bigint) AS n_kept,
-        |  cast(len(s.ls) - coalesce(agg.n_kept, 0) AS bigint) AS n_removed
-        |FROM s LEFT JOIN agg USING (doc_id)""".stripMargin,
+        |""".stripMargin + keptLinesSql),
     "q55_gopher_repetition" ->
       """WITH m AS (SELECT doc_id,
         |    CASE WHEN doc_id % 5 = 0 THEN text || chr(10) || 'repeat me' || chr(10) ||
@@ -5286,39 +4808,35 @@ FROM c"""
         |   AND coalesce(wa.stop_hits, 0) >= 2) AS passes
         |FROM m LEFT JOIN wa USING (doc_id) LEFT JOIN la USING (doc_id) JOIN t USING (doc_id)""".stripMargin,
     "q50_intradoc_line_dedup" ->
-      """WITH m AS (
+      ("""WITH m AS (
         |  SELECT doc_id,
         |    text || chr(10) || chr(10) || 'repeated promo line' || chr(10) ||
         |    text || chr(10) || chr(10) || 'repeated promo line' || chr(10) ||
         |    'unique tail ' || doc_id AS text
         |  FROM documents),
-        |s AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM m),
-        |l AS (SELECT doc_id, i AS pos, ls[i] AS line
-        |      FROM (SELECT doc_id, ls, unnest(generate_series(1, len(ls))) AS i FROM s)),
-        |r AS (SELECT doc_id, pos, line,
+        |""".stripMargin + splitLinesSql + ",\n" +
+      """r AS (SELECT doc_id, pos, line,
         |        min(pos) OVER (PARTITION BY doc_id, line) AS fp FROM l)
         |SELECT doc_id,
         |  string_agg(CASE WHEN trim(line) = '' OR pos = fp THEN line END,
         |             chr(10) ORDER BY pos) AS clean_text,
         |  cast(count(CASE WHEN trim(line) <> '' AND pos <> fp THEN 1 END) AS int) AS n_removed
-        |FROM r GROUP BY doc_id""".stripMargin,
+        |FROM r GROUP BY doc_id""".stripMargin),
     "q51_corpus_line_dedup" ->
-      """WITH m AS (
+      ("""WITH m AS (
         |  SELECT doc_id,
         |    'shared banner ' || (doc_id % 25) || chr(10) || chr(10) || text ||
         |    chr(10) || 'unique tail ' || doc_id AS text
         |  FROM documents),
-        |s AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM m),
-        |l AS (SELECT doc_id, i AS pos, ls[i] AS line
-        |      FROM (SELECT doc_id, ls, unnest(generate_series(1, len(ls))) AS i FROM s)),
-        |r0 AS (SELECT doc_id, pos, line,
+        |""".stripMargin + splitLinesSql + ",\n" +
+      """r0 AS (SELECT doc_id, pos, line,
         |        row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rnw FROM l),
         |r AS (SELECT doc_id, pos, line,
         |        CASE WHEN trim(line) = '' THEN 1 ELSE rnw END AS rn FROM r0)
         |SELECT doc_id,
         |  coalesce(string_agg(CASE WHEN rn = 1 THEN line END, chr(10) ORDER BY pos), '') AS clean_text,
         |  cast(count(CASE WHEN rn > 1 THEN 1 END) AS int) AS n_removed
-        |FROM r GROUP BY doc_id""".stripMargin,
+        |FROM r GROUP BY doc_id""".stripMargin),
     "q56_corpus_para_dedup" ->
       """WITH m AS (
         |  SELECT doc_id,
@@ -5448,31 +4966,24 @@ FROM c"""
         |  (pr > 0.12 AND sf < 0.67 AND nl < 0.3) AS passes
         |FROM r""".stripMargin,
     "q59_c4_span_dedup" ->
-      """WITH m AS (SELECT doc_id,
+      ("""WITH m AS (SELECT doc_id,
         |    'span head ' || (doc_id % 20) || chr(10) ||
         |    'span mid ' || (doc_id % 20) || chr(10) ||
         |    'span tail ' || (doc_id % 20) || chr(10) ||
         |    text || chr(10) || 'unique closer ' || doc_id AS text
         |  FROM documents),
-        |s AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM m),
-        |l AS (SELECT doc_id, i AS pos, ls[i] AS line
-        |      FROM (SELECT doc_id, ls, unnest(generate_series(1, len(ls))) AS i FROM s)),
-        |sp AS (SELECT doc_id, i AS pos,
+        |""".stripMargin + splitLinesSql + ",\n" +
+      """sp AS (SELECT doc_id, i AS pos,
         |         ls[i] || chr(10) || ls[i+1] || chr(10) || ls[i+2] AS span
         |       FROM (SELECT doc_id, ls, unnest(generate_series(1, len(ls) - 2)) AS i FROM s)),
-        |r AS (SELECT doc_id, pos,
-        |        row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn FROM sp),
-        |lose AS (SELECT doc_id, pos AS strt FROM r WHERE rn > 1),
-        |rm AS (SELECT DISTINCT l.doc_id, l.pos
-        |       FROM l JOIN lose ON l.doc_id = lose.doc_id
-        |         AND l.pos BETWEEN lose.strt AND lose.strt + 2),
-        |k AS (SELECT l.doc_id, l.pos, l.line FROM l ANTI JOIN rm USING (doc_id, pos)),
+        |""".stripMargin + spanLossSql(2) + ",\n" +
+      """k AS (SELECT l.doc_id, l.pos, l.line FROM l ANTI JOIN rm USING (doc_id, pos)),
         |agg AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text,
         |          count(*) AS n_kept FROM k GROUP BY doc_id)
         |SELECT s.doc_id,
         |  coalesce(agg.clean_text, '') AS clean_text,
         |  cast(len(s.ls) - coalesce(agg.n_kept, 0) AS int) AS n_removed
-        |FROM s LEFT JOIN agg USING (doc_id)""".stripMargin,
+        |FROM s LEFT JOIN agg USING (doc_id)""".stripMargin),
     "q60_dsir_score" ->
       """WITH d AS (SELECT doc_id, doc_id % 7 = 0 AS is_target,
         |    list_filter(string_split_regex(lower(trim(text)), '\s+'), w -> w <> '') AS t
@@ -5493,7 +5004,7 @@ FROM c"""
         |  cast(coalesce(agg.n, 0) AS bigint) AS n_tokens
         |FROM d LEFT JOIN agg USING (doc_id)""".stripMargin,
     "q61_exact_substring_dedup" ->
-      """WITH m AS (SELECT doc_id,
+      ("""WITH m AS (SELECT doc_id,
         |    CASE WHEN doc_id % 3 = 0
         |      THEN 'shared run alpha beta gamma delta epsilon zeta ' || text
         |      ELSE text END AS text
@@ -5503,38 +5014,23 @@ FROM c"""
         |      FROM (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS i FROM s)),
         |sp AS (SELECT doc_id, i AS pos, array_to_string(t[i:i+7], ' ') AS span
         |       FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 7)) AS i FROM s)),
-        |r AS (SELECT doc_id, pos,
-        |        row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn FROM sp),
-        |lose AS (SELECT doc_id, pos AS strt FROM r WHERE rn > 1),
-        |rm AS (SELECT DISTINCT l.doc_id, l.pos
-        |       FROM l JOIN lose ON l.doc_id = lose.doc_id
-        |         AND l.pos BETWEEN lose.strt AND lose.strt + 7),
-        |k AS (SELECT l.doc_id, l.pos, l.tok FROM l ANTI JOIN rm USING (doc_id, pos)),
+        |""".stripMargin + spanLossSql(7) + ",\n" +
+      """k AS (SELECT l.doc_id, l.pos, l.tok FROM l ANTI JOIN rm USING (doc_id, pos)),
         |agg AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text,
         |          count(*) AS n_kept FROM k GROUP BY doc_id)
         |SELECT s.doc_id,
         |  coalesce(agg.clean_text, '') AS clean_text,
         |  cast(len(s.t) - coalesce(agg.n_kept, 0) AS bigint) AS n_tokens_removed
-        |FROM s LEFT JOIN agg USING (doc_id)""".stripMargin,
-    "q62_ccnet_buckets" ->
-      """WITH s AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        |           FROM documents),
-        |bi AS (SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |       FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
-        |             FROM s WHERE len(t) >= 2)),
-        |c12 AS (SELECT w1, w2, count(*) AS c12 FROM bi GROUP BY 1, 2),
-        |c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
-        |v AS (SELECT count(DISTINCT w) AS v FROM (SELECT unnest(t) AS w FROM s)),
-        |sc AS (SELECT bi.doc_id, -ln((c12.c12 + 1.0) / (c1.c1 + 1.0 * v.v)) AS nlp
-        |       FROM bi JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v),
-        |agg AS (SELECT doc_id, round(avg(nlp), 6) AS lm FROM sc GROUP BY 1),
+        |FROM s LEFT JOIN agg USING (doc_id)""".stripMargin),
+    "q62_ccnet_buckets" -> (bigramLmCtesSql + ",\n" +
+      """agg AS (SELECT doc_id, round(avg(nlp), 6) AS lm FROM sc GROUP BY 1),
         |d AS (SELECT d0.doc_id, d0.lang, coalesce(agg.lm, 0.0) AS avg_neg_logp,
         |        (agg.lm IS NULL) AS unscored
         |      FROM documents d0 LEFT JOIN agg USING (doc_id))
         |SELECT doc_id, lang, avg_neg_logp,
         |  CASE ntile(3) OVER (PARTITION BY lang ORDER BY unscored, avg_neg_logp, doc_id)
         |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-        |FROM d""".stripMargin,
+        |FROM d""".stripMargin),
     "q63_gopher_dup_ngrams" ->
       """WITH m AS (SELECT doc_id,
         |    CASE WHEN doc_id % 4 = 0
@@ -5573,31 +5069,15 @@ FROM c"""
         |  round(coalesce(max(CASE WHEN cf.n = 10 THEN cf.cchars END), 0) / greatest(tot.tot, 1), 6) AS dup_10gram_char_frac
         |FROM s JOIN tot USING (doc_id) LEFT JOIN cf USING (doc_id) LEFT JOIN t4 USING (doc_id)
         |GROUP BY s.doc_id, s.text, tot.tot, t4.chars""".stripMargin,
-    "q52_lm_perplexity" ->
-      """WITH s AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        |           FROM documents),
-        |bi AS (SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |       FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
-        |             FROM s WHERE len(t) >= 2)),
-        |c12 AS (SELECT w1, w2, count(*) AS c12 FROM bi GROUP BY 1, 2),
-        |c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
-        |v AS (SELECT count(DISTINCT w) AS v FROM (SELECT unnest(t) AS w FROM s)),
-        |sc AS (SELECT bi.doc_id, -ln((c12.c12 + 1.0) / (c1.c1 + 1.0 * v.v)) AS nlp
-        |       FROM bi JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v),
-        |agg AS (SELECT doc_id, round(avg(nlp), 6) AS lm, count(*) AS nb
+    "q52_lm_perplexity" -> (bigramLmCtesSql + ",\n" +
+      """agg AS (SELECT doc_id, round(avg(nlp), 6) AS lm, count(*) AS nb
         |        FROM sc GROUP BY 1)
         |SELECT d.doc_id,
         |  coalesce(agg.lm, 0.0) AS avg_neg_logp,
         |  cast(coalesce(agg.nb, 0) AS bigint) AS n_bigrams
-        |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin,
-    "q46_decontaminate_spans" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 11 = 0
-        |         THEN text || ' what is the capital of france answer paris'
-        |         ELSE text END AS text
-        |  FROM documents),
-        |s AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM d),
+        |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin),
+    "q46_decontaminate_spans" -> (plantedBenchSql + ",\n" +
+      """s AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM d),
         |tok AS (
         |  SELECT doc_id, i - 1 AS pos, t[i] AS tok
         |  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS i FROM s)
@@ -5621,7 +5101,7 @@ FROM c"""
         |  coalesce(string_agg(CASE WHEN bad = 0 THEN tok END, ' ' ORDER BY pos), '')
         |    AS clean_text,
         |  cast(sum(bad) AS bigint) AS n_tokens_removed
-        |FROM marked GROUP BY 1""".stripMargin,
+        |FROM marked GROUP BY 1""".stripMargin),
     // golden oracle: enumerate the EXPECTED label per doc_id % n class —
     // generated from the same TextOps.langSamples table the Spark query
     // injects from (one source of truth; value-exact = every sample
@@ -5648,14 +5128,8 @@ FROM c"""
         s"greatest(CASE $cls ${chain(_._2)} END, 1), 6) AS bpe_ratio " +
         "FROM documents"
     },
-    "q40_decontaminate" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 11 = 0
-        |         THEN text || ' what is the capital of france answer paris'
-        |         ELSE text END AS text
-        |  FROM documents),
-        |tok AS (
+    "q40_decontaminate" -> (plantedBenchSql + ",\n" +
+      """tok AS (
         |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
         |  FROM d),
         |g AS (
@@ -5666,7 +5140,7 @@ FROM c"""
         |SELECT g.doc_id, cast(count(*) AS bigint) AS n_bad_grams
         |FROM g JOIN bench USING (gram)
         |WHERE g.doc_id >= 50
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     "q41_quantize_int8" ->
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
         |m AS (SELECT vec_id, emb,

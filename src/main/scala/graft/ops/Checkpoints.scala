@@ -65,19 +65,17 @@ private[graft] object Checkpoints {
     cp
   }
 
-  /** Eagerly materialize `out` (reliable checkpoint if a checkpoint dir is
-    * configured, local otherwise — see object doc), then run `release`
+  /** Eagerly materialize `out` with [[cut]], then run `release`
     * (unpersist of the corpus-sized caches the plan consumed). */
   def eager(out: DataFrame)(release: => Unit): DataFrame = {
-    val cp =
-      if (out.sparkSession.sparkContext.getCheckpointDir.isDefined) reliable(out)
-      else out.localCheckpoint(eager = true)
+    val cp = cut(out)
     release
     cp
   }
 
   /** Lineage cut for iterative loops (connectedComponents label rounds):
-    * same dir-aware mechanism choice as `eager`, no release hook. */
+    * reliable checkpoint if a checkpoint dir is configured, local
+    * otherwise (see object doc); no release hook. */
   def cut(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) reliable(df)
     else df.localCheckpoint(eager = true)

@@ -1741,8 +1741,11 @@ object Dedup {
 
   /** q46 tokenization twin of `split(lower(trim(coalesce(text,''))),
     * '\\s+')`: SQL trim strips 0x20 only; split keeps edge empties
-    * (limit -1). */
-  private def spanToks(text0: String): Array[String] = {
+    * (limit -1). Lower-casing uses `Locale.ROOT` deliberately: it pins
+    * the tokens (and so every span hash) independent of the JVM's
+    * default locale. Parity with the Catalyst expression is pinned in
+    * OpsSpec. */
+  private[ops] def spanToks(text0: String): Array[String] = {
     val t0 = if (text0 == null) "" else text0
     var b = 0
     var e = t0.length

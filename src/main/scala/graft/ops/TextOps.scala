@@ -1627,6 +1627,12 @@ object TextOps {
     * length (empty/NULL-text docs kept at dl=0 — they are part of N and
     * avgdl, exactly as the scan path counts them).
     *
+    * Input contract: `doc_id` must be unique per row. The in-doc tf count
+    * trusts it — two rows sharing a doc_id emit duplicate (term, doc_id)
+    * postings and two docLens rows, which the [[bm25TopDocsIndexed]]
+    * scoring join (q99) then double-counts. It is not checked, because
+    * checking costs a distinct-count job on every build.
+    *
     * Scale shape: ONE shuffle-free typed pass — tf is counted in-doc
     * (each (term, doc_id) pair originates in exactly one document row,
     * so the per-doc counts ARE the postings; no explode, no aggregate);

@@ -2761,6 +2761,26 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("spanToks: identical tokens to Catalyst split(lower(trim(coalesce(text,''))), '\\s+')") {
+    // the typed span kernels tokenize with spanToks instead of the
+    // Catalyst expression they replaced; the Xx64 pin above covers the
+    // hash, this pins the tokenization: nulls, edge whitespace that SQL
+    // trim keeps (tabs, newlines), and case mappings that differ between
+    // locales or code-point-wise lowering
+    val texts = Seq[String](null, "", " ", "   ", "a", "  lead and trail  ",
+      "\ttab lead", "tab trail\t", "\nnew line\n", " \t mixed \n ws \r\n",
+      "inner\t\ttabs  and\n\nnewlines", "ÉCOLE Élan", "Straße STRASSE ß",
+      "İstanbul DİYARBAKIR", "ΣΑΣ ΟΔΟΣ σας", "Mixed É ß İ ΣΑΣ\tend ")
+    val viaSpark = texts.zipWithIndex.toDF("text", "i")
+      .select(col("i"),
+        split(lower(trim(coalesce(col("text"), lit("")))), "\\s+").as("t"))
+      .collect().map(r => r.getInt(0) -> r.getSeq[String](1)).toMap
+    texts.zipWithIndex.foreach { case (t, i) =>
+      assert(Dedup.spanToks(t).toSeq == viaSpark(i),
+        s"spanToks diverges from Catalyst on ${Option(t).map(_.map(c => "U+%04X".format(c.toInt)).mkString(" "))}")
+    }
+  }
+
   test("decontaminateSpans: covered windows cut, clean docs pass through, overlaps merge") {
     // 9 bench tokens => TWO 8-gram windows; embedding them in a doc makes
     // two OVERLAPPING bad windows whose covered union is 9 tokens

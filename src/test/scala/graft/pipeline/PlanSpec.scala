@@ -103,4 +103,65 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("partial_sum") || plan.contains("partial_count"),
       s"no partial aggregation:\n$plan")
   }
+
+  /** jobs Spark ran under `group`, read once the status tracker settles:
+    * listener events arrive asynchronously, so poll until two reads 200 ms
+    * apart agree and every job has finished, for at most 30 s */
+  private def settledJobCount(group: String): Int = {
+    import org.apache.spark.JobExecutionStatus.{FAILED, SUCCEEDED}
+    val tracker = spark.sparkContext.statusTracker
+    def read = {
+      val ids = tracker.getJobIdsForGroup(group)
+      (ids.length, ids.forall(id => tracker.getJobInfo(id)
+        .exists(j => j.status == SUCCEEDED || j.status == FAILED)))
+    }
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    var prev = read
+    Thread.sleep(200)
+    var cur = read
+    while ((cur != prev || !cur._2) && System.nanoTime() < deadline) {
+      prev = cur
+      Thread.sleep(200)
+      cur = read
+    }
+    assert(cur == prev && cur._2, s"jobs of $group did not settle within 30 s")
+    cur._1
+  }
+
+  test("tier family job budget: q102/q135/q149/q153/q156/q158 run no more Spark jobs than measured") {
+    assume(haveTestdata)
+    // a noise-free gate for job-count work on the tier composites: each
+    // query runs under its own job group and its jobs are counted from the
+    // status tracker. AQE is OFF while counting — with AQE on, every
+    // exchange adds a map-stage job and whether a stage is submitted
+    // before a re-optimization makes it unnecessary is a race (counts
+    // moved by up to 2 between identical runs); without it the count is
+    // the driver's own jobs (eager cuts, counts, broadcasts, the final
+    // collect), identical run to run. Budgets are measured counts on
+    // sf0.001 with this fixture's local[4] session; lower one only with a
+    // new measurement
+    val budget = Map(
+      "q102_host_tiers" -> 14,
+      "q135_host_dossier" -> 15,
+      "q149_tier_mixture" -> 16,
+      "q153_tier_sample" -> 13,
+      "q156_fetch_plan" -> 13,
+      "q158_domain_tier_rollup" -> 13)
+    val sc = spark.sparkContext
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val counts = try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      budget.keys.toSeq.sorted.map { q =>
+        val group = s"job-budget-$q"
+        sc.setJobGroup(group, q)
+        try graft.SparkEntry.queries(q)(spark, sfDir).collect()
+        finally sc.clearJobGroup()
+        q -> settledJobCount(group)
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    info(counts.map { case (q, n) => s"$q=$n" }.mkString(" "))
+    val over = counts.filter { case (q, n) => n > budget(q) }
+    assert(over.isEmpty, s"over the job budget: ${over.map { case (q, n) =>
+      s"$q ran $n jobs (budget ${budget(q)})" }.mkString(", ")}")
+  }
 }
