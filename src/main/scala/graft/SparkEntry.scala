@@ -309,15 +309,33 @@ object SparkEntry {
       |  CASE WHEN n_in = 0 THEN 0.0 ELSE round(n_dropped / n_in, 6) END AS drop_pct
       |FROM acc""".stripMargin
 
+  /** [[rankedSources]] with the (source, hid) table built ONCE through
+    * the driver-local gate: its row count `nh` rides the window's cut, and
+    * at or under [[graft.ops.Checkpoints.localEdgeCap]] hosts the table
+    * is collected into a driver-local frame; above it the cut is the
+    * table. Either way its joins never re-run the window. `hid` still comes from Spark's
+    * window, so its order is unchanged. Returns (d, hosts, nh). */
+  private def hostIds(s: SparkSession, dir: String): (DataFrame, DataFrame, Long) = {
+    val (d, ranked) = rankedSources(s, dir)
+    val (cut, nh, local) = graft.ops.Checkpoints.gate(ranked, graft.ops.Checkpoints.localEdgeCap)
+    val hosts = local.fold(cut)(rows =>
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), cut.schema))
+    (d, hosts, nh)
+  }
+
   /** shared q83/q88 synthetic host graph: two deterministic mix32
     * outlinks per doc over the indexed host universe, intra-host edges
     * dropped, docs of the alphabetically-first host emit nothing (it can
     * only RECEIVE — a dangling-host candidate). */
   private def hostGraphEdges(s: SparkSession, dir: String): DataFrame = {
-    val (d, hosts) = rankedSources(s, dir)
-    val nh = hosts.agg(count(lit(1)).as("nh"))
+    val (d, hosts, nh) = hostIds(s, dir)
+    hostGraphEdges(d, hosts, nh)
+  }
+
+  /** [[hostGraphEdges]] over an already-built [[hostIds]] table */
+  private def hostGraphEdges(d: DataFrame, hosts: DataFrame, nh: Long): DataFrame = {
     val linked = d.join(hosts, Seq("source"))
-      .crossJoin(broadcast(nh)).filter(col("hid") =!= 0)
+      .withColumn("nh", lit(nh)).filter(col("hid") =!= 0)
     // both per-doc targets in ONE pass (explode of the two mix values ==
     // the former union of two projections, which duplicated the whole
     // docs⋈hosts subtree and scanned the corpus twice)
@@ -1305,8 +1323,8 @@ object SparkEntry {
       // same-residue (hid % 3) edges — three disconnected slices of the
       // q83 graph; component_host = lexicographic min via rank-ordered
       // dense ids + the q26 engine
-      val (_, hosts) = rankedSources(s, dir)
-      val e = hostGraphEdges(s, dir)
+      val (d, hosts, nh) = hostIds(s, dir)
+      val e = hostGraphEdges(d, hosts, nh)
         .join(hosts.select(col("source").as("src"), col("hid").as("sh")), Seq("src"))
         .join(hosts.select(col("source").as("dst"), col("hid").as("dh")), Seq("dst"))
         .filter(col("sh") % 3 === col("dh") % 3)
@@ -1340,9 +1358,9 @@ object SparkEntry {
       // host of the indexed universe (hid % 3 == 0 — includes the
       // dangling-candidate host 0); 2 exact-integer rounds, teleport +
       // dangling mass confined to the seeds
-      val seeds = rankedSources(s, dir)._2
-        .filter(col("hid") % 3 === 0).select(col("source").as("host"))
-      CorpusOps.trustRank(hostGraphEdges(s, dir), seeds,
+      val (d, hosts, nh) = hostIds(s, dir)
+      val seeds = hosts.filter(col("hid") % 3 === 0).select(col("source").as("host"))
+      CorpusOps.trustRank(hostGraphEdges(d, hosts, nh), seeds,
         iterations = 2, dampingPct = 85)
     }),
     "q82_decontaminate_semantic" -> ((s, dir) => {

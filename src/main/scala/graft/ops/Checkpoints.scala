@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Materialize-and-release discipline for operators whose plan reads a
   * corpus-sized cached intermediate more than once (minhashLsh signatures,
@@ -80,20 +82,35 @@ private[graft] object Checkpoints {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) reliable(df)
     else df.localCheckpoint(eager = true)
 
-  /** Lazy stage for FIXED-small-round loops (hostRank/hits/labelProp-
-    * style: a handful of rounds, each round's table read by 2-3
-    * consumers): persist WITHOUT an eager job, so every round's
-    * materialization folds into the first downstream job that needs it
-    * (a round-total broadcast, a convergence count, or the final
-    * action) instead of costing one eager job per round — at bench
-    * scale those sequential job round-trips dominate these operators,
-    * and at production scale one fewer barrier per round is the same
-    * win smaller. Lineage is KEPT, so an executor loss recomputes
-    * (persist is safer than localCheckpoint's severed lineage); the
-    * trade is plan depth growing with rounds, so convergence-checked or
-    * many-round loops (CC's O(log n) rounds) stay on the eager `cut`. */
-  def stage(df: DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** The one row-count cap below which the host-graph family answers on
+    * the driver: the rank and HITS rounds, the tier ranking, the host
+    * components, the SparkEntry host-id table and
+    * [[Dedup.connectedComponents]]' union-find. 2M rows of a host edge
+    * table (two strings and a long each) is at most a few hundred MB of
+    * driver heap; above it the distributed rounds run, so the plans for
+    * 10^8-host graphs are unchanged. The value is connectedComponents'
+    * earlier cap; the local/distributed crossover has been measured only
+    * at bench scale (tens of hosts), where the driver path wins. */
+  val localEdgeCap: Long = 2000000L
+
+  /** The driver-local gate: [[cut]] `df` with its row count fused into the
+    * cut's job as an Observation; at or under `cap` rows (`cap > 0`) the
+    * cut is also collected (one more job). A frame that is already a
+    * driver-local table (`LocalRelation`) is neither cut nor counted by a
+    * job: its rows are on the driver. Returns (the cut, or `df` when
+    * local; the row count; `Some(rows)` when under the cap). `cap <= 0`
+    * forces the over-cap answer, which the parity tests use. */
+  def gate(df: DataFrame, cap: Long): (DataFrame, Long, Option[Array[Row]]) =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if cap > 0 && l.data.length <= cap =>
+        val rows = df.collect()
+        (df, rows.length.toLong, Some(rows))
+      case _ =>
+        val obs = Observation()
+        val cp = cut(df.observe(obs, count(lit(1)).as("n")))
+        val n = observed(obs)(cp.agg(count(lit(1))).head()).getLong(0)
+        (cp, n, if (cap > 0 && n <= cap) Some(cp.collect()) else None)
+    }
 
   /** read an [[org.apache.spark.sql.Observation]] fired by an already-run
     * eager job (a `cut`/`eager` materialization), with a bounded wait and
@@ -101,8 +118,7 @@ private[graft] object Checkpoints {
     * connectedComponents pattern (that both cut shapes fire the metric is
     * asserted by OpsSpec "an Observation below an eager cut fires"),
     * defined ONCE so every fused-scalar loop degrades identically. */
-  private[graft] def observed(obs: org.apache.spark.sql.Observation)(
-      fallback: => org.apache.spark.sql.Row): org.apache.spark.sql.Row = {
+  private[graft] def observed(obs: Observation)(fallback: => Row): Row = {
     import scala.concurrent.Await
     import scala.concurrent.duration._
     try Await.result(obs.future, 30.seconds)

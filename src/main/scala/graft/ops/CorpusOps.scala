@@ -754,7 +754,16 @@ object CorpusOps {
     * are lineage-cut and reused across rounds; each round is one
     * equi-join on src + one partial-combined groupBy on dst + a
     * broadcast of the 1-row dangling aggregate — the connectedComponents
-    * round shape. The per-host out-weight must stay below ~3e9
+    * round shape, lineage-cut every round.
+    *
+    * Cap rule: the edge table's row count rides its cut; at or under
+    * [[Checkpoints.localEdgeCap]] aggregated edges one collect brings it
+    * to the driver, the rounds run there in the same exact longs and the
+    * result is a driver-local frame (on small graphs the distributed
+    * rounds are one-task jobs whose scheduling outweighs their
+    * arithmetic); above it the distributed rounds run.
+    *
+    * The per-host out-weight must stay below ~3e9
     * (sqrt(Long.MaxValue), enforced) so the share decomposition cannot
     * overflow; aggregated host->host weights sit orders of magnitude
     * under that, and a caller with a pathological megahub caps weights
@@ -788,8 +797,9 @@ object CorpusOps {
     *
     * Scale shape: ranking is a distributed sort + zipWithIndex over the
     * HOST table (host-cardinality, ~10^8 — never a single-partition
-    * window); the doc stamp is one join of the corpus's (doc_id, host)
-    * pairs against the host-tier table — broadcastable whenever the host
+    * window), a driver-side sort under the cap (see [[hostTierTable]]);
+    * the doc stamp is one join of the corpus's (doc_id, host) pairs
+    * against the host-tier table — broadcastable whenever the host
     * table fits, and AQE decides (no forced hint). Document text never
     * moves. */
   def hostTiers(hostRanks: DataFrame, documents: DataFrame,
@@ -806,9 +816,16 @@ object CorpusOps {
 
   /** the host-level (host, rank_e12, rnk, tier) table behind [[hostTiers]]
     * and [[hostDossier]] — ONE ranking + tier-boundary implementation, so
-    * the per-document stamp and the per-host export cannot diverge */
-  private[graft] def hostTierTable(hostRanks: DataFrame,
-      tierPctCuts: Seq[Int]): DataFrame = {
+    * the per-document stamp and the per-host export cannot diverge.
+    *
+    * Cap rule: at or under `localCap` hosts (default
+    * [[Checkpoints.localEdgeCap]]; the count rides the input's cut, and a
+    * driver-local input such as [[hostRank]]'s under-cap result is read
+    * with no job) the hosts are sorted and numbered on the driver and the
+    * table is driver-local; above it the distributed sort runs.
+    * `localCap <= 0` forces the distributed sort (the parity tests). */
+  private[graft] def hostTierTable(hostRanks: DataFrame, tierPctCuts: Seq[Int],
+      localCap: Long = Checkpoints.localEdgeCap): DataFrame = {
     require(tierPctCuts.nonEmpty && tierPctCuts == tierPctCuts.sorted &&
       tierPctCuts.forall(p => p > 0 && p < 100),
       s"tierPctCuts must be ascending percents in (0,100), got $tierPctCuts")
@@ -824,29 +841,35 @@ object CorpusOps {
         if (c != 0) c else compareCodePoints(a._2, b._2)
       }
     }
-    // distributed sort once, persisted; the per-partition counts job (the
-    // pass zipWithIndex would run anyway) also yields the host total, so
-    // the former eager checkpoint + separate count() jobs fold away.
-    // The input is lineage-cut FIRST: RDD.sortBy executes its parent
-    // twice (the range-partitioner sample pass, then the sort), and
-    // hostRank's now-lazy fixed-round plan would otherwise run whole
-    // both times.
-    val hr = Checkpoints.cut(
+    // the input is cut (or read) FIRST: RDD.sortBy executes its parent
+    // twice (the range-partitioner sample pass, then the sort)
+    val (hr, n, local) = Checkpoints.gate(
       hostRanks.select(col("host").cast("string").as("host"),
-        col("rank_e12").cast("long").as("rank_e12")))
-    val sorted = hr
-      .as[(String, Long)].rdd
-      .sortBy({ case (h, r) => (-r, h) })(tieOrd, implicitly)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = sorted.mapPartitions(
-      it => Iterator.single(it.size.toLong), preservesPartitioning = true).collect()
-    val n = counts.sum
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val ranked = sorted.mapPartitionsWithIndex({ case (pi, it) =>
-        var i = offsets(pi)
-        it.map { case (h, r) => i += 1L; (h, r, i) }
-      }, preservesPartitioning = true)
-      .toDF("host", "rank_e12", "rnk")
+        col("rank_e12").cast("long").as("rank_e12")),
+      localCap)
+    val ranked = local match {
+      case Some(rows) =>
+        val sorted = rows.map(r => (r.getString(0), r.getLong(1)))
+          .sortBy { case (h, r) => (-r, h) }(tieOrd)
+        spark.createDataset(sorted.toSeq.zipWithIndex.map {
+          case ((h, r), i) => (h, r, i + 1L)
+        }).toDF("host", "rank_e12", "rnk")
+      case None =>
+        // distributed sort once, persisted; the per-partition counts job
+        // (the pass zipWithIndex would run anyway) gives the offsets
+        val sorted = hr
+          .as[(String, Long)].rdd
+          .sortBy({ case (h, r) => (-r, h) })(tieOrd, implicitly)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val counts = sorted.mapPartitions(
+          it => Iterator.single(it.size.toLong), preservesPartitioning = true).collect()
+        val offsets = counts.scanLeft(0L)(_ + _)
+        sorted.mapPartitionsWithIndex({ case (pi, it) =>
+            var i = offsets(pi)
+            it.map { case (h, r) => i += 1L; (h, r, i) }
+          }, preservesPartitioning = true)
+          .toDF("host", "rank_e12", "rnk")
+    }
     val tier = tierPctCuts.zipWithIndex.foldRight(lit(tierPctCuts.size + 1): Column) {
       case ((pct, i), acc) =>
         when(col("rnk") * 100 <= lit(pct.toLong) * n, lit(i + 1)).otherwise(acc)
@@ -920,31 +943,108 @@ object CorpusOps {
       dampingPct: Int = 85): DataFrame =
     rankFixpoint(edges, Some(seeds), iterations, dampingPct)
 
-  /** host-count threshold between the two (value-identical) fixed-round
-    * loop shapes in [[rankFixpoint]] / [[hits]]: lazy round chaining
-    * below it (barrier jobs dominate small graphs — bench-scale A/B:
-    * q83 1.44s -> 0.81s at ~520 hosts), a lineage cut per round above it
-    * (re-referenced host-sized subtrees dominate big graphs — 2M-edge /
-    * 133k-host A/B at 8 cores: lazy measured ~5-15% slower). The
-    * measured win/regress points bracket the threshold by >6x each
-    * side. */
-  private val lazyHostCap = 20000L
-
   /** shared exact-integer power-iteration core of [[hostRank]] /
     * [[trustRank]]; `seeds` = None means teleport-everywhere (S = N).
-    * Semantics + scale shape documented on hostRank above. */
-  private def rankFixpoint(edges: DataFrame, seeds: Option[DataFrame],
-      iterations: Int, dampingPct: Int): DataFrame = {
+    * Semantics + scale shape documented on hostRank above.
+    *
+    * Cap rule: the aggregated edge table's row count rides its cut as an
+    * Observation; at or under `localCap` edges (default
+    * [[Checkpoints.localEdgeCap]]) the edges (and seed hosts) are
+    * collected and the rounds run on the driver in exact longs
+    * ([[rankLocal]]), returning a driver-local frame; above it every round
+    * is one distributed join + aggregate, lineage-cut per round.
+    * `localCap <= 0` forces the distributed rounds (the parity tests). */
+  private[graft] def rankFixpoint(edges: DataFrame, seeds: Option[DataFrame],
+      iterations: Int, dampingPct: Int,
+      localCap: Long = Checkpoints.localEdgeCap): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
-    val m = 1000000000000L
-    val e = Checkpoints.cut(
+    val (e, _, local) = Checkpoints.gate(
       edges.select(col("src").cast("string").as("src"),
           col("dst").cast("string").as("dst"),
           col("weight").cast("long").as("weight"))
         .filter(col("src").isNotNull && col("dst").isNotNull && col("weight") > 0)
-        .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight")))
+        .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight")),
+      localCap)
+    local match {
+      case Some(rows) => rankLocal(e.sparkSession, rows, seeds, iterations, dampingPct)
+      case None => rankDistributed(e, seeds, iterations, dampingPct)
+    }
+  }
+
+  private val rankMass = 1000000000000L
+
+  private def noSeedMsg =
+    "no seed host appears in the edge universe; trust cannot enter the graph"
+
+  private def outwBoundMsg(maxOutw: Long) =
+    s"per-host out-weight $maxOutw exceeds the exact-arithmetic bound 3e9; " +
+      "cap edge weights before ranking"
+
+  /** dense driver-side ids for the string (src, dst) columns 0 and 1 of
+    * collected edge rows: (hosts by id, src ids, dst ids) */
+  private def hostIndex(rows: Array[org.apache.spark.sql.Row])
+      : (scala.collection.IndexedSeq[String], Array[Int], Array[Int]) = {
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    val hosts = scala.collection.mutable.ArrayBuffer.empty[String]
+    def id(h: String): Int = ids.getOrElseUpdate(h, { hosts += h; hosts.size - 1 })
+    val src = rows.map(r => id(r.getString(0)))
+    val dst = rows.map(r => id(r.getString(1)))
+    (hosts, src, dst)
+  }
+
+  /** [[rankFixpoint]]'s rounds on the driver over the collected
+    * (src, dst, weight) rows: the same long arithmetic, guards and
+    * empty-graph result as [[rankDistributed]], row for row. */
+  private def rankLocal(spark: org.apache.spark.sql.SparkSession,
+      rows: Array[org.apache.spark.sql.Row], seeds: Option[DataFrame],
+      iterations: Int, dampingPct: Int): DataFrame = {
+    import spark.implicits._
+    val (hosts, src, dst) = hostIndex(rows)
+    val w = rows.map(_.getLong(2))
+    val n = hosts.size
+    val outw = new Array[Long](n)
+    for (k <- src.indices) outw(src(k)) += w(k)
+    val seed = seeds match {
+      case Some(sd) if n > 0 =>
+        // a projection + filter of a driver-local seed table folds into
+        // it, so such a seed list collects without a job
+        val keys = sd.select(col("host").cast("string").as("host"))
+          .filter(col("host").isNotNull).collect().map(_.getString(0)).toSet
+        hosts.map(keys).toArray
+      case _ => Array.fill(n)(true) // no seed list, or no universe to seed
+    }
+    var r = new Array[Long](n)
+    if (n > 0) {
+      val nSeeds = seed.count(identity).toLong
+      require(nSeeds > 0L, noSeedMsg)
+      val maxOutw = outw.max
+      require(maxOutw <= 3000000000L, outwBoundMsg(maxOutw))
+      val r0 = rankMass / nSeeds
+      val basePart = ((100L - dampingPct) * r0) / 100L
+      r = seed.map(sd => if (sd) r0 else 0L)
+      for (_ <- 1 to iterations) {
+        var dang = 0L
+        for (i <- 0 until n) if (outw(i) == 0L) dang += r(i)
+        val infl = new Array[Long](n)
+        for (k <- src.indices) {
+          val rs = r(src(k)); val o = outw(src(k))
+          infl(dst(k)) += w(k) * (rs / o) + ((rs % o) * w(k)) / o
+        }
+        r = Array.tabulate(n) { i =>
+          (if (seed(i)) basePart else 0L) +
+            (dampingPct * (infl(i) + (if (seed(i)) dang / nSeeds else 0L))) / 100L
+        }
+      }
+    }
+    val out = (0 until n).map(i => (hosts(i), outw(i), seed(i), r(i), r(i) / 1e12))
+    spark.createDataset(out).toDF("host", "out_weight", "is_seed", "rank_e12", "rank")
+  }
+
+  /** [[rankFixpoint]]'s distributed rounds over the cut edge table `e`. */
+  private def rankDistributed(e: DataFrame, seeds: Option[DataFrame],
+      iterations: Int, dampingPct: Int): DataFrame = {
     val outBySrc = e.groupBy(col("src")).agg(sum(col("weight")).as("outw"))
     val universe = e.select(col("src").as("host"))
       .union(e.select(col("dst").as("host"))).distinct()
@@ -962,9 +1062,7 @@ object CorpusOps {
     // Observation (the connectedComponents discipline; OpsSpec asserts
     // the metric fires below both cut shapes): N, S, the overflow guard,
     // and the count of dangling seeds — which closes round 1's dangling
-    // mass in closed form (r0 * |{seed ∧ outw=0}|). The rounds
-    // themselves are one lazy plan (see the loop comment below), so this
-    // is the loop's ONLY driver action.
+    // mass in closed form (r0 * |{seed ∧ outw=0}|).
     val statsObs = org.apache.spark.sql.Observation("rank_stats")
     val base = Checkpoints.cut(flagged.observe(statsObs,
       count(lit(1)).as("n"),
@@ -984,25 +1082,17 @@ object CorpusOps {
       return base.select(col("host"), col("outw").as("out_weight"),
         col("seed").as("is_seed"), lit(0L).as("rank_e12"), lit(0.0).as("rank"))
     val nSeeds = stats.getLong(1)
-    require(nSeeds > 0L,
-      "no seed host appears in the edge universe; trust cannot enter the graph")
+    require(nSeeds > 0L, noSeedMsg)
     val maxOutw = if (stats.isNullAt(2)) 0L else stats.getLong(2)
-    require(maxOutw <= 3000000000L,
-      s"per-host out-weight $maxOutw exceeds the exact-arithmetic bound 3e9; " +
-        "cap edge weights before ranking")
-    val r0 = m / nSeeds
+    require(maxOutw <= 3000000000L, outwBoundMsg(maxOutw))
+    val r0 = rankMass / nSeeds
     val basePart = ((100L - dampingPct) * r0) / 100L
     var ranks = base.withColumn("r",
       when(col("seed"), lit(r0)).otherwise(lit(0L)))
     // dangling mass entering round 1: every dangling host holds r0 if
     // seed else 0 — exact closed form off the fused stats. Later rounds
-    // read the PREVIOUS round's dangling sum as an in-plan 1-row
-    // broadcast (the same exact long sum the former per-round
-    // Observation carried), so the whole fixed-round loop is ONE lazy
-    // plan — no per-round action or lineage cut; AQE materializes each
-    // round's exchanges once (the q91 lazy-loop discipline; iterations
-    // are fixed and small, so plan depth is bounded, and every
-    // re-referenced subtree above a reused exchange is host-sized).
+    // read the PREVIOUS round's dangling sum as a 1-row broadcast over
+    // that round's cut table.
     val dang1 = r0 * stats.getLong(3)
     for (it <- 1 to iterations) {
       val inflow = e.join(ranks, e("src") === ranks("host"))
@@ -1023,20 +1113,10 @@ object CorpusOps {
             expr(s"($dampingPct * (coalesce(infl, CAST(0 AS BIGINT)) " +
               s"+ (CASE WHEN seed THEN $dangSql div CAST($nSeeds AS BIGINT) " +
               s"ELSE CAST(0 AS BIGINT) END))) div 100")).as("r"))
-      // cut cadence is DATA-ADAPTIVE (value-neutral either way):
-      //  - small graphs (n <= lazyHostCap) keep the round chain lazy —
-      //    per-round barrier jobs dominate there (interleaved A/B at
-      //    bench scale, ~520 hosts: 1.44s -> 0.81s for q83), with a cut
-      //    every 3rd round ONLY as the plan-growth bound (each lazy
-      //    round references the previous table ~3x, so the logical plan
-      //    grows ~3^rounds and an uncapped `iterations` would blow up
-      //    analysis; no cut fires for iterations <= 3);
-      //  - big graphs cut every round — the re-referenced host-sized
-      //    subtrees above reused exchanges stop being noise there
-      //    (interleaved A/B at 2M edges / 133k hosts, 8 cores: the lazy
-      //    chain measured ~5-15% SLOWER than per-round cuts).
-      if ((n > lazyHostCap || it % 3 == 0) && it < iterations)
-        ranks = Checkpoints.cut(ranks)
+      // a cut per round: each round's table is read ~3x by the next, so
+      // a lazy chain would grow the plan ~3^rounds (and the re-referenced
+      // host-sized subtrees cost more than the cut at this scale)
+      if (it < iterations) ranks = Checkpoints.cut(ranks)
     }
     ranks.select(col("host"), col("outw").as("out_weight"),
       col("seed").as("is_seed"), col("r").as("rank_e12"),
@@ -1081,9 +1161,14 @@ object CorpusOps {
     *
     * Scale shape: the graph is host-pair-sized, never document-sized.
     * Per round: two equi-joins edge⋈scores + two partial-combined
-    * groupBys — the rankFixpoint round shape doubled; each half-round's
-    * raw-score table is lineage-cut and its total rides that cut job as
-    * an Observation (no broadcast-total jobs).
+    * groupBys — the rankFixpoint round shape doubled, each half-round's
+    * total a 1-row broadcast aggregate, the scores lineage-cut per round.
+    *
+    * Cap rule (the [[rankFixpoint]] one): the deduped edge count rides
+    * the edge cut; at or under [[Checkpoints.localEdgeCap]] edges the
+    * rounds run on the driver in the same exact longs over one collect
+    * and the result is a driver-local frame; above it the distributed
+    * rounds run.
     *
     * Input: (src, dst) string edges (extra columns ignored; NULL
     * endpoints and self-loops drop — "" is an ordinary host, the
@@ -1091,15 +1176,67 @@ object CorpusOps {
     * same universe on the same input). Output one row per host in the
     * edge universe: (host, hub_e12 long, auth_e12 long, hub double =
     * hub_e12/1e12, auth double). */
-  def hits(edges: DataFrame, iterations: Int = 2): DataFrame = {
+  def hits(edges: DataFrame, iterations: Int = 2): DataFrame =
+    hits(edges, iterations, Checkpoints.localEdgeCap)
+
+  /** [[hits]] with an explicit driver-local cap: `localCap <= 0` forces
+    * the distributed rounds (the parity tests). */
+  private[graft] def hits(edges: DataFrame, iterations: Int, localCap: Long): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
-    val m = 1000000000000L
-    val e = Checkpoints.cut(
+    val (e, _, local) = Checkpoints.gate(
       edges.select(col("src").cast("string").as("src"),
           col("dst").cast("string").as("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull &&
           col("src") =!= col("dst"))
-        .distinct())
+        .distinct(),
+      localCap)
+    local match {
+      case Some(rows) => hitsLocal(e.sparkSession, rows, iterations)
+      case None => hitsDistributed(e, iterations)
+    }
+  }
+
+  private def maxDegMsg(maxDeg: Long) =
+    s"max in/out degree $maxDeg exceeds the exact-arithmetic bound 1e6; " +
+      "cap edges before scoring"
+
+  /** [[hits]]' rounds on the driver over the collected deduped (src, dst)
+    * rows: the same divisor normalization, guard and empty-graph result
+    * as [[hitsDistributed]], row for row. */
+  private def hitsLocal(spark: org.apache.spark.sql.SparkSession,
+      rows: Array[org.apache.spark.sql.Row], iterations: Int): DataFrame = {
+    import spark.implicits._
+    val m = rankMass
+    val (hosts, src, dst) = hostIndex(rows)
+    val n = hosts.size
+    var hub = Array.fill(n)(m / n)
+    var auth = new Array[Long](n)
+    if (n > 0) {
+      val deg = new Array[Long](2 * n) // out-degrees, then in-degrees
+      for (k <- src.indices) { deg(src(k)) += 1; deg(n + dst(k)) += 1 }
+      val maxDeg = deg.max
+      require(maxDeg <= 1000000L, maxDegMsg(maxDeg))
+    }
+    // one half-round: raw sums along the edges (from -> to), then the
+    // `div (1 + (T div M))` normalization on their total T
+    def half(from: Array[Int], to: Array[Int], score: Array[Long]): Array[Long] = {
+      val raw = new Array[Long](n)
+      for (k <- from.indices) raw(to(k)) += score(from(k))
+      val d = 1L + raw.sum / m
+      raw.map(_ / d)
+    }
+    for (_ <- 1 to iterations) {
+      auth = half(src, dst, hub)
+      hub = half(dst, src, auth)
+    }
+    val out = (0 until n).map(i =>
+      (hosts(i), hub(i), auth(i), hub(i) / 1e12, auth(i) / 1e12))
+    spark.createDataset(out).toDF("host", "hub_e12", "auth_e12", "hub", "auth")
+  }
+
+  /** [[hits]]' distributed rounds over the cut deduped edge table `e`. */
+  private def hitsDistributed(e: DataFrame, iterations: Int): DataFrame = {
+    val m = rankMass
     // universe + both degree bounds in ONE aggregate (no degree joins):
     // each endpoint occurrence contributes 1 to its host's out/in degree,
     // so the grouped sums ARE the degrees and the group count IS
@@ -1122,18 +1259,13 @@ object CorpusOps {
       return universe.select(col("host"), lit(0L).as("hub_e12"),
         lit(0L).as("auth_e12"), lit(0.0).as("hub"), lit(0.0).as("auth"))
     val maxDeg = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-    require(maxDeg <= 1000000L,
-      s"max in/out degree $maxDeg exceeds the exact-arithmetic bound 1e6; " +
-        "cap edges before scoring")
+    require(maxDeg <= 1000000L, maxDegMsg(maxDeg))
     // `div (1 + (T div M))`: the divisor normalization — exact floor
     // division, keeps the score table's sum <= M for the next round.
-    // Each round-total T is an in-plan 1-row broadcast aggregate and the
-    // whole fixed-round loop is ONE lazy plan (the q91 / rankFixpoint
-    // lazy-loop discipline): no per-round action or lineage cut; AQE
+    // Each round-total T is an in-plan 1-row broadcast aggregate; AQE
     // exchange reuse materializes each half-round's raw-score exchange
     // once (the total aggregate and the score join read the same
-    // exchange), and every re-referenced subtree above a reused exchange
-    // is host-sized.
+    // exchange).
     val norm = s"div (1 + (t div CAST($m AS BIGINT)))"
     var scores = universe.select(col("host"))
       .withColumn("hub", lit(m / n)).withColumn("auth", lit(0L))
@@ -1155,15 +1287,9 @@ object CorpusOps {
         .select(col("host"),
           expr(s"coalesce(h_raw, CAST(0 AS BIGINT)) $norm").as("hub"),
           col("auth"))
-      // cut cadence is DATA-ADAPTIVE like rankFixpoint's (value-neutral
-      // either way): lazy chaining below lazyHostCap (barrier jobs
-      // dominate small graphs), a cut per round above it (re-referenced
-      // host-sized subtrees dominate big ones); the every-2nd-round cut
-      // in the lazy regime is the plan-growth bound (a full hub+auth
-      // round multiplies the plan harder than rank's; no cut fires for
-      // iterations <= 2).
-      if ((n > lazyHostCap || it % 2 == 0) && it < iterations)
-        scores = Checkpoints.cut(scores)
+      // a cut per round, as in rankFixpoint: a lazy hub+auth chain
+      // multiplies the plan every round
+      if (it < iterations) scores = Checkpoints.cut(scores)
     }
     scores.select(col("host"), col("hub").as("hub_e12"), col("auth").as("auth_e12"),
       (col("hub") / lit(1e12)).as("hub"), (col("auth") / lit(1e12)).as("auth"))

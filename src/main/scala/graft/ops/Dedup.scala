@@ -1013,21 +1013,22 @@ object Dedup {
     * Small-graph fast path: edge tables here are near-dup PAIRS — after
     * LSH+verify they are a small fraction of the corpus, and at bench /
     * moderate scale the whole graph fits on the driver. Under
-    * `localEdgeCap` edges (16 bytes each; the default caps the pull at
-    * ~32 MB) the components are solved with one collect + union-find
+    * `localEdgeCap` edges (16 bytes each; the default,
+    * [[Checkpoints.localEdgeCap]], caps the pull at ~32 MB) the
+    * components are solved with one collect + union-find
     * (union-by-min-root, so the root of every tree IS the component's min
     * id — identical semantics to the distributed rounds); above the cap,
     * or with `localEdgeCap <= 0`, the distributed rounds run. */
   def connectedComponents(
       pairs: DataFrame,
       maxIter: Int = 20,
-      localEdgeCap: Long = 2000000L): DataFrame = {
+      localEdgeCap: Long = Checkpoints.localEdgeCap): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val edges = pairs.select(col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst"))
     if (localEdgeCap <= 0) connectedComponentsDistributed(edges, maxIter)
     else {
-      // cap gate = a count over a transient materialization, NOT a
+      // cap gate = a count fused into a transient materialization, NOT a
       // limit(cap+1) collect: an over-cap edge table costs one
       // materialization (the distributed path re-reads it to build its
       // bidirectional copy) instead of a cap-sized driver pull discarded
@@ -1037,11 +1038,10 @@ object Dedup {
       // static shuffle partitioning (32 near-empty partitions for a
       // hundreds-of-rows pair table — three full-width task waves of
       // pure overhead measured at sf0.1), while the cut's AQE-coalesced
-      // blocks size the downstream count/collect/round reads to the data.
-      val cached = Checkpoints.cut(edges)
-      try {
-        if (cached.count() <= localEdgeCap) {
-          val probe = cached.as[(Long, Long)].collect()
+      // blocks size the downstream collect/round reads to the data.
+      val (cached, _, local) = Checkpoints.gate(edges, localEdgeCap)
+      try local match {
+        case Some(rows) =>
           val parent = scala.collection.mutable.LongMap.empty[Long]
           def find(x0: Long): Long = {
             var x = x0
@@ -1049,7 +1049,9 @@ object Dedup {
             while (p != x) { val gp = parent(p); parent(x) = gp; x = gp; p = parent(x) }
             x
           }
-          probe.foreach { case (a, b) =>
+          rows.foreach { r =>
+            val a = r.getLong(0)
+            val b = r.getLong(1)
             if (!parent.contains(a)) parent(a) = a
             if (!parent.contains(b)) parent(b) = b
             val ra = find(a)
@@ -1059,12 +1061,15 @@ object Dedup {
           val out = parent.keys.toArray.map(id => (id, find(id)))
           spark.createDataset(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
             .toDF("doc_id", "cluster_id")
-        } else connectedComponentsDistributed(cached, maxIter)
+        case None => connectedComponentsDistributed(cached, maxIter)
       } finally cached.unpersist()
     }
   }
 
-  private def connectedComponentsDistributed(
+  /** [[connectedComponents]]' distributed rounds over (src, dst) long
+    * edges, with no cap gate ([[LinkOps.hostComponents]] calls them
+    * directly above its own gate). */
+  private[ops] def connectedComponentsDistributed(
       edgesIn: DataFrame, maxIter: Int): DataFrame = {
     val edges = edgesIn
     val bidir = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))

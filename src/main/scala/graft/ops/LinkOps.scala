@@ -279,17 +279,21 @@ object LinkOps {
     * UTF-16 code unit, byte-collating engines by UTF-8; they agree on
     * ASCII).
     *
-    * Scale shape: dense host ids via total-sort + zipWithIndex (one
-    * host-cardinality sort shuffle + one count pass — the standard
-    * dense-id assignment; NO single-partition window, NO hash-as-id
-    * collision risk), then the q26 engine does the real work
-    * ([[Dedup.connectedComponents]]: min-label propagation + pointer
-    * jumping in O(log diameter) rounds, union-find fast path under the
-    * edge cap). Because ids are rank-ordered, min-id semantics IS
-    * min-host semantics. The id table feeds four joins, so it is
-    * lineage-cut once. */
+    * Cap rule: the cleaned edge count rides the edge table's cut; at or
+    * under `localEdgeCap` edges (default [[Checkpoints.localEdgeCap]])
+    * one collect brings the host strings to the driver and a union-find
+    * whose root is the `String.compareTo`-smallest host labels them — the
+    * order the distributed path's `sortBy(identity)` ids give — into a
+    * driver-local frame. Above it (or with `localEdgeCap <= 0`) dense host
+    * ids come from a total sort + zipWithIndex (one host-cardinality sort
+    * shuffle + one count pass — NO single-partition window, NO
+    * hash-as-id collision risk), and [[Dedup.connectedComponents]]'
+    * distributed rounds (min-label propagation + pointer jumping in
+    * O(log diameter) rounds) do the real work; because ids are
+    * rank-ordered, min-id semantics IS min-host semantics. The id table
+    * feeds four joins, so it is lineage-cut once. */
   def hostComponents(edges: DataFrame, maxIter: Int = 20,
-      localEdgeCap: Long = 2000000L): DataFrame = {
+      localEdgeCap: Long = Checkpoints.localEdgeCap): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // the cleaned edge table is lineage-cut ONCE: it feeds the host
@@ -297,23 +301,50 @@ object LinkOps {
     // second time) and both sides of the id-attach join — without the
     // cut the caller's whole edge-derivation subtree (for q95, the
     // corpus-scanning hostGraphEdges) executed three times
-    val e0 = Checkpoints.cut(
+    val (e0, _, local) = Checkpoints.gate(
       edges.select(col("src").cast("string").as("s"),
           col("dst").cast("string").as("d"))
         .filter(col("s").isNotNull && col("d").isNotNull &&
-          col("s") =!= "" && col("d") =!= ""))
-    val hosts = e0.select(col("s").as("host")).union(e0.select(col("d"))).distinct()
-    val ids = Checkpoints.cut(
-      hosts.as[String].rdd.sortBy(identity).zipWithIndex().toDF("host", "hid"))
-    val pairs = e0
-      .join(ids.select(col("host").as("s"), col("hid").as("doc_a")), Seq("s"))
-      .join(ids.select(col("host").as("d"), col("hid").as("doc_b")), Seq("d"))
-      .select(col("doc_a"), col("doc_b"))
-    Dedup.connectedComponents(pairs, maxIter, localEdgeCap)
-      .join(ids.select(col("hid").as("doc_id"), col("host")), Seq("doc_id"))
-      .join(ids.select(col("hid").as("cluster_id"),
-        col("host").as("component_host")), Seq("cluster_id"))
-      .select(col("host"), col("component_host"))
+          col("s") =!= "" && col("d") =!= ""),
+      localEdgeCap)
+    local match {
+      case Some(rows) =>
+        val parent = scala.collection.mutable.HashMap.empty[String, String]
+        def find(x0: String): String = {
+          var x = x0
+          var p = parent(x)
+          while (p != x) { val gp = parent(p); parent(x) = gp; x = gp; p = parent(x) }
+          x
+        }
+        rows.foreach { r =>
+          val a = r.getString(0)
+          val b = r.getString(1)
+          parent.getOrElseUpdate(a, a)
+          parent.getOrElseUpdate(b, b)
+          val ra = find(a)
+          val rb = find(b)
+          val c = ra.compareTo(rb)
+          if (c < 0) parent(rb) = ra else if (c > 0) parent(ra) = rb
+        }
+        spark.createDataset(parent.keys.toSeq.map(h => (h, find(h))))
+          .toDF("host", "component_host")
+      case None =>
+        val hosts = e0.select(col("s").as("host")).union(e0.select(col("d"))).distinct()
+        val ids = Checkpoints.cut(
+          hosts.as[String].rdd.sortBy(identity).zipWithIndex().toDF("host", "hid"))
+        // the pair count is the edge count, over the cap here, so the
+        // rounds are called directly (connectedComponents' own gate
+        // could not pass)
+        val pairs = e0
+          .join(ids.select(col("host").as("s"), col("hid").as("src")), Seq("s"))
+          .join(ids.select(col("host").as("d"), col("hid").as("dst")), Seq("d"))
+          .select(col("src"), col("dst"))
+        Dedup.connectedComponentsDistributed(pairs, maxIter)
+          .join(ids.select(col("hid").as("doc_id"), col("host")), Seq("doc_id"))
+          .join(ids.select(col("hid").as("cluster_id"),
+            col("host").as("component_host")), Seq("cluster_id"))
+          .select(col("host"), col("component_host"))
+    }
   }
 
   /** host co-citation — "related hosts" discovery (Small 1973, the

@@ -190,9 +190,16 @@ object ExtractJob {
       org.apache.spark.sql.types.StructField("html", org.apache.spark.sql.types.BinaryType),
       org.apache.spark.sql.types.StructField("warc_bucket", org.apache.spark.sql.types.LongType)))
     val bucketed = spark.read.schema(stagedSchema).parquet(stagedPath)
-    // resume: anti-join against committed lineage buckets (north_rule)
+    // resume: anti-join against committed lineage buckets (north_rule).
+    // Read with the schema the commit below writes: inferring it costs a
+    // Spark job on every run and resume. A missing directory (first run)
+    // still throws, so it still means no bucket is done.
+    val lineageSchema = org.apache.spark.sql.types.StructType(
+      Seq("n_ok", "n_err", "bytes_in", "chars_out", "warc_bucket", "wall_ms").map(
+        org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.LongType)))
     val doneBuckets: Set[Long] =
-      try spark.read.parquet(lineagePath).select("warc_bucket").as[Long].collect().toSet
+      try spark.read.schema(lineageSchema).parquet(lineagePath)
+        .select("warc_bucket").as[Long].collect().toSet
       catch { case _: Exception => Set.empty }
     val todo = bucketed.filter(!col("warc_bucket").isin(doneBuckets.toSeq: _*))
 

@@ -32,12 +32,6 @@ object PlanAudit {
         "q84_outlinks", // q84: the host-count scalar behind the mix32 targets
         "q87_anchor_terms", // q87: feeds on q84's frame — same host-count scalar
         "q90_domain_edges", // q90: same host-count scalar in its subdomain frame
-        // r06 lazy fixed-round loops: the per-round dangling-mass /
-        // divisor-total 1-row broadcast aggregates are now visible in the
-        // top-level plan (the former per-round cuts hid them behind an
-        // ExistingRDD scan; the joins themselves are unchanged scalar
-        // broadcasts)
-        "q83_host_pagerank", "q88_trustrank", "q103_hits",
         // ANN serving audits: the BNLJ is bruteForceTopK's corpus x
         // broadcast(<= nQueries rows) exact side — q14's oracle role
         // computed in-surface (flagged at round-6 start too, predating

@@ -3587,6 +3587,75 @@ class OpsSpec extends AnyFunSuite {
     assert(r0 == Map("A" -> 0L, "B" -> 1000000000000L, "C" -> 0L))
   }
 
+  /** the frame's optimized plan is a driver-local table (the under-cap
+    * answer of the host-graph family) */
+  private def isLocalFrame(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** every column of every row, keyed by the first (host) column */
+  private def byHost(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Any]] =
+    df.collect().map(r => r.getString(0) -> r.toSeq).toMap
+
+  private def columnTypes(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => (f.name, f.dataType))
+
+  private def iaeMessage(f: => Any): String =
+    intercept[IllegalArgumentException](f).getMessage
+
+  test("rankFixpoint: driver-local rounds equal the forced distributed rounds and the sequential recompute") {
+    val hand = Seq(("A", "B", 1L), ("A", "C", 3L), ("B", "A", 1L))
+    val trustHand = Seq(("A", "B", 1L), ("B", "A", 1L), ("B", "D", 1L),
+      ("X", "Y", 5L), ("Y", "X", 5L))
+    val wide = (0 until 400).map { i =>
+      (s"h${(i * 7) % 12}", s"h${(i * i + 3) % 12}", (i % 3 + 1).toLong)
+    }
+    // rank_e12 per host of the local path, after asserting it took the
+    // local path and equals the distributed path in every column
+    def ranks(edges: Seq[(String, String, Long)], seeds: Option[Seq[Option[String]]],
+        iters: Int): Map[String, Long] = {
+      val df = edges.toDF("src", "dst", "weight")
+      val sd = seeds.map(_.toDF("host"))
+      val local = CorpusOps.rankFixpoint(df, sd, iters, 85)
+      val dist = CorpusOps.rankFixpoint(df, sd, iters, 85, localCap = 0L)
+      assert(isLocalFrame(local) && !isLocalFrame(dist))
+      assert(columnTypes(local) == columnTypes(dist))
+      val rows = byHost(local)
+      assert(rows == byHost(dist), s"iterations $iters seeds $seeds")
+      rows.map { case (h, r) => h -> r(3).asInstanceOf[Long] }
+    }
+    val wideSeeds = Set("h0", "h5", "h7")
+    for (it <- Seq(0, 1, 3)) {
+      assert(ranks(hand, None, it) == seqHostRank(hand, it, 85))
+      assert(ranks(wide, None, it) == seqHostRank(wide, it, 85))
+      // seeds outside the universe and NULL seeds are ignored on both paths
+      assert(ranks(trustHand, Some(Seq(Some("A"), Some("NOT_IN_GRAPH"), None)), it) ==
+        seqTrustRank(trustHand, Set("A"), it, 85))
+      assert(ranks(wide, Some(wideSeeds.toSeq.map(Some(_))), it) ==
+        seqTrustRank(wide, wideSeeds, it, 85))
+    }
+    // empty graph: an empty frame with the same columns on both paths,
+    // and no seed check (there is no universe to intersect)
+    val empty = Seq.empty[(String, String, Long)].toDF("src", "dst", "weight")
+    for (sd <- Seq(None, Some(Seq("A").toDF("host")))) {
+      val local = CorpusOps.rankFixpoint(empty, sd, 3, 85)
+      val dist = CorpusOps.rankFixpoint(empty, sd, 3, 85, localCap = 0L)
+      assert(columnTypes(local) == columnTypes(dist))
+      assert(local.count() == 0L && dist.count() == 0L)
+    }
+    // the guards throw the same message on both paths
+    val e = hand.toDF("src", "dst", "weight")
+    val caps = Seq(Checkpoints.localEdgeCap, 0L)
+    val noSeed = caps.map(c =>
+      iaeMessage(CorpusOps.rankFixpoint(e, Some(Seq("Z").toDF("host")), 1, 85, c)))
+    assert(noSeed.distinct.size == 1 && noSeed.head.contains("no seed host"), noSeed)
+    val heavy = Seq(("A", "B", 4000000000L)).toDF("src", "dst", "weight")
+    val bound = caps.map(c => iaeMessage(CorpusOps.rankFixpoint(heavy, None, 1, 85, c)))
+    assert(bound.distinct.size == 1 && bound.head.contains("4000000000"), bound)
+    val iters = caps.map(c => iaeMessage(CorpusOps.rankFixpoint(e, None, -1, 85, c)))
+    assert(iters.distinct.size == 1, iters)
+  }
+
   /** sequential BFS recompute of bounded harmonic centrality: for every
     * node, hop-count shortest incoming distances up to maxDist */
   private def seqHarmonic(edges: Seq[(String, String)], maxDist: Int)
@@ -3852,6 +3921,27 @@ class OpsSpec extends AnyFunSuite {
       "x.example" -> "x.example", "y.example" -> "x.example"), s"got $got")
   }
 
+  test("hostComponents: driver union-find equals the distributed rounds, String.compareTo roots") {
+    // {pua+"x", sup+"y", pua+"a"} is one component; its root is the
+    // String.compareTo minimum (sup+"y": U+D83D < U+E000 by UTF-16 unit),
+    // not the code-point minimum (pua+"a")
+    val sup = "\uD83D\uDE00"
+    val pua = "\uE000"
+    val edges = Seq((pua + "x", sup + "y"), (sup + "y", pua + "a"),
+      ("m", "n"), ("o", "n"), ("q", "p"), ("", "z"), ("w", null)).toDF("src", "dst")
+    val local = LinkOps.hostComponents(edges)
+    val dist = LinkOps.hostComponents(edges, localEdgeCap = 0L)
+    assert(isLocalFrame(local) && !isLocalFrame(dist))
+    assert(columnTypes(local) == columnTypes(dist))
+    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val want = Map(pua + "x" -> (sup + "y"), sup + "y" -> (sup + "y"),
+      pua + "a" -> (sup + "y"), "m" -> "m", "n" -> "m", "o" -> "m",
+      "p" -> "p", "q" -> "p")
+    assert(asMap(local) == want, asMap(local))
+    assert(asMap(dist) == want, asMap(dist))
+  }
+
   test("removeBoilerplateLinesPerGroup: per-group df, cross-group survivors, NULL group") {
     // "site nav" and "shared promo" both repeat 3x inside source s1
     // (> maxDf=2) -> removed from s1; the SAME lines appear once each in
@@ -4064,6 +4154,28 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("hostTierTable: driver-side ranking equals the distributed sort, code-point tie order") {
+    // U+1F600 sorts BEFORE U+E000 by UTF-16 unit (String.compareTo) and
+    // AFTER it by code point — the oracle's order, which ties must follow
+    val sup = "\uD83D\uDE00"
+    val pua = "\uE000"
+    val ranks = Seq((sup, 500L), ("a", 900L), (pua, 500L), ("b", 500L),
+      (pua + "z", 700L), ("d", 100L), ("c", 100L), ("f", 50L), ("e", 50L),
+      ("g", 10L)).toDF("host", "rank_e12")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))).sortBy(_._3).toSeq
+    val local = CorpusOps.hostTierTable(ranks, Seq(10, 50)) // local input: no cut
+    val viaCut = CorpusOps.hostTierTable(ranks.repartition(2), Seq(10, 50))
+    val dist = CorpusOps.hostTierTable(ranks, Seq(10, 50), localCap = 0L)
+    assert(isLocalFrame(local) && isLocalFrame(viaCut) && !isLocalFrame(dist))
+    assert(columnTypes(local) == columnTypes(dist))
+    assert(rows(local) == rows(dist) && rows(viaCut) == rows(dist))
+    assert(rows(local).map(_._1) ==
+      Seq("a", pua + "z", "b", pua, sup, "c", "d", "e", "f", "g"))
+    // n = 10, cuts 10/50: tier 1 iff rnk <= 1, tier 2 iff rnk <= 5
+    assert(rows(local).map(_._4) == Seq(1, 2, 2, 2, 2, 3, 3, 3, 3, 3))
+  }
+
   /** sequential exact recompute of the hits() integer fixpoint — same
     * divisor-normalization formula, driver-side. */
   private def seqHits(edges: Seq[(String, String)], iters: Int): Map[String, (Long, Long)] = {
@@ -4142,6 +4254,32 @@ class OpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       CorpusOps.hits(Seq(("A", "B")).toDF("src", "dst"), -1)
     }
+  }
+
+  test("hits: driver-local rounds equal the forced distributed rounds and the sequential recompute") {
+    val hand = Seq(
+      ("dir1", "a"), ("dir1", "b"), ("dir1", "c"), ("dir1", "a"),
+      ("dir2", "a"), ("dir2", "b"), ("a", "a"), ("c", "dir1"))
+    val wide = (0 until 300).map(i => (s"h${(i * 5) % 11}", s"h${(i * i + 1) % 11}"))
+    val junk = Seq(("A", "B"), ("", "B"), ("A", ""), ("C", "C"))
+    for (g <- Seq(hand, wide, junk); it <- Seq(0, 2, 3)) {
+      val df = g.toDF("src", "dst")
+      val local = CorpusOps.hits(df, it)
+      val dist = CorpusOps.hits(df, it, 0L)
+      assert(isLocalFrame(local) && !isLocalFrame(dist))
+      assert(columnTypes(local) == columnTypes(dist))
+      val rows = byHost(local)
+      assert(rows == byHost(dist), s"iterations $it graph $g")
+      assert(rows.map { case (h, r) => h -> ((r(1).asInstanceOf[Long], r(2).asInstanceOf[Long])) } ==
+        seqHits(g, it))
+    }
+    val empty = Seq.empty[(String, String)].toDF("src", "dst")
+    val (le, de) = (CorpusOps.hits(empty, 2), CorpusOps.hits(empty, 2, 0L))
+    assert(columnTypes(le) == columnTypes(de))
+    assert(le.count() == 0L && de.count() == 0L)
+    val guard = Seq(Checkpoints.localEdgeCap, 0L).map(c =>
+      iaeMessage(CorpusOps.hits(hand.toDF("src", "dst"), -1, c)))
+    assert(guard.distinct.size == 1, guard)
   }
 
   test("ngramContainment: directional asymmetry, both-direction near-identity, maxDf") {

@@ -128,26 +128,21 @@ class PlanSpec extends AnyFunSuite {
     cur._1
   }
 
-  test("tier family job budget: q102/q135/q149/q153/q156/q158 run no more Spark jobs than measured") {
-    assume(haveTestdata)
-    // a noise-free gate for job-count work on the tier composites: each
-    // query runs under its own job group and its jobs are counted from the
-    // status tracker. AQE is OFF while counting — with AQE on, every
-    // exchange adds a map-stage job and whether a stage is submitted
-    // before a re-optimization makes it unnecessary is a race (counts
-    // moved by up to 2 between identical runs); without it the count is
-    // the driver's own jobs (eager cuts, counts, broadcasts, the final
-    // collect), identical run to run. Budgets are measured counts on
-    // sf0.001 with this fixture's local[4] session; lower one only with a
-    // new measurement
-    val budget = Map(
-      "q102_host_tiers" -> 14,
-      "q135_host_dossier" -> 15,
-      "q149_tier_mixture" -> 16,
-      "q153_tier_sample" -> 13,
-      "q156_fetch_plan" -> 13,
-      "q158_domain_tier_rollup" -> 13)
+  /** Runs each query of `budget` under its own job group and asserts it
+    * ran no more Spark jobs than its budget. A noise-free gate for
+    * job-count work: AQE is OFF while counting — with AQE on, every
+    * exchange adds a map-stage job and whether a stage is submitted
+    * before a re-optimization makes it unnecessary is a race (counts
+    * moved by up to 2 between identical runs); without it the count is
+    * the driver's own jobs (eager cuts, collects, broadcasts, the final
+    * collect), identical run to run. Budgets are measured counts on
+    * sf0.001 with this fixture's local[4] session; lower one only with a
+    * new measurement. */
+  private def assertJobBudget(budget: Map[String, Int]): Unit = {
     val sc = spark.sparkContext
+    // infer (and cache) the documents schema first, so the first query's
+    // count does not depend on whether an earlier test read the table
+    graft.SparkEntry.readT(spark, s"$sfDir/documents.parquet")
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val counts = try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -163,5 +158,25 @@ class PlanSpec extends AnyFunSuite {
     val over = counts.filter { case (q, n) => n > budget(q) }
     assert(over.isEmpty, s"over the job budget: ${over.map { case (q, n) =>
       s"$q ran $n jobs (budget ${budget(q)})" }.mkString(", ")}")
+  }
+
+  test("tier family job budget: q102/q135/q149/q153/q156/q158 run no more Spark jobs than measured") {
+    assume(haveTestdata)
+    assertJobBudget(Map(
+      "q102_host_tiers" -> 8,
+      "q135_host_dossier" -> 9,
+      "q149_tier_mixture" -> 11,
+      "q153_tier_sample" -> 8,
+      "q156_fetch_plan" -> 9,
+      "q158_domain_tier_rollup" -> 8))
+  }
+
+  test("host-graph family job budget: q83/q88/q103/q95 run no more Spark jobs than measured") {
+    assume(haveTestdata)
+    assertJobBudget(Map(
+      "q83_host_pagerank" -> 6,
+      "q88_trustrank" -> 6,
+      "q103_hits" -> 6,
+      "q95_host_components" -> 8))
   }
 }
