@@ -311,13 +311,13 @@ object SparkEntry {
 
   /** [[rankedSources]] with the (source, hid) table built ONCE through
     * the driver-local gate: its row count `nh` rides the window's cut, and
-    * at or under [[graft.ops.Checkpoints.localEdgeCap]] hosts the table
+    * at or under [[graft.ops.Checkpoints.localHostCap]] hosts the table
     * is collected into a driver-local frame; above it the cut is the
     * table. Either way its joins never re-run the window. `hid` still comes from Spark's
     * window, so its order is unchanged. Returns (d, hosts, nh). */
   private def hostIds(s: SparkSession, dir: String): (DataFrame, DataFrame, Long) = {
     val (d, ranked) = rankedSources(s, dir)
-    val (cut, nh, local) = graft.ops.Checkpoints.gate(ranked, graft.ops.Checkpoints.localEdgeCap)
+    val (cut, nh, local) = graft.ops.Checkpoints.gate(ranked, graft.ops.Checkpoints.localHostCap)
     val hosts = local.fold(cut)(rows =>
       s.createDataFrame(java.util.Arrays.asList(rows: _*), cut.schema))
     (d, hosts, nh)

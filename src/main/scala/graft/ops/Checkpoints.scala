@@ -82,16 +82,29 @@ private[graft] object Checkpoints {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) reliable(df)
     else df.localCheckpoint(eager = true)
 
-  /** The one row-count cap below which the host-graph family answers on
-    * the driver: the rank and HITS rounds, the tier ranking, the host
-    * components, the SparkEntry host-id table and
-    * [[Dedup.connectedComponents]]' union-find. 2M rows of a host edge
-    * table (two strings and a long each) is at most a few hundred MB of
-    * driver heap; above it the distributed rounds run, so the plans for
-    * 10^8-host graphs are unchanged. The value is connectedComponents'
-    * earlier cap; the local/distributed crossover has been measured only
-    * at bench scale (tens of hosts), where the driver path wins. */
+  /** The row-count cap at or under which the EDGE-sized tables of the
+    * host-graph family are answered on the driver: the rank and HITS
+    * rounds, [[LinkOps.hostComponents]] and [[Dedup.connectedComponents]]'
+    * union-find. Above it the distributed rounds run, so the plans for
+    * 10^8-host graphs are unchanged. Measured on 4 cores (local[4]) with
+    * the DedupScaling host_rank (distributed) and host_rank_local
+    * (driver) jobs: the driver path is the faster one for hostRank at
+    * 2M edges (1.4x) and still at 8M (1.3x); at 2M it is also faster for
+    * hits (1.7x) and hostComponents (3.2x). The collected rows hold ~150
+    * bytes each, ~300 MB of driver heap at the cap and ~1.2 GB at 8M, so
+    * the cap sits at 2M, below the crossover, where the heap stays
+    * small; more executor cores speed up the distributed rounds and move
+    * the crossover down. */
   val localEdgeCap: Long = 2000000L
+
+  /** The row-count cap for the HOST-sized tables, whose rows are hosts,
+    * not edges: the tier ranking ([[CorpusOps.hostTierTable]]) and
+    * SparkEntry's host-id table. Its driver path ends in a driver-local
+    * frame that every downstream operator reads, and on 4 cores it is
+    * the faster one at 13k, 33k and 67k hosts but the slower one at 133k
+    * (1.03 s vs 0.59 s for the tier table), so the cap sits below that
+    * crossover. */
+  val localHostCap: Long = 50000L
 
   /** The driver-local gate: [[cut]] `df` with its row count fused into the
     * cut's job as an Observation; at or under `cap` rows (`cap > 0`) the

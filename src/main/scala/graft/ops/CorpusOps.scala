@@ -819,13 +819,13 @@ object CorpusOps {
     * the per-document stamp and the per-host export cannot diverge.
     *
     * Cap rule: at or under `localCap` hosts (default
-    * [[Checkpoints.localEdgeCap]]; the count rides the input's cut, and a
+    * [[Checkpoints.localHostCap]]; the count rides the input's cut, and a
     * driver-local input such as [[hostRank]]'s under-cap result is read
     * with no job) the hosts are sorted and numbered on the driver and the
     * table is driver-local; above it the distributed sort runs.
     * `localCap <= 0` forces the distributed sort (the parity tests). */
   private[graft] def hostTierTable(hostRanks: DataFrame, tierPctCuts: Seq[Int],
-      localCap: Long = Checkpoints.localEdgeCap): DataFrame = {
+      localCap: Long = Checkpoints.localHostCap): DataFrame = {
     require(tierPctCuts.nonEmpty && tierPctCuts == tierPctCuts.sorted &&
       tierPctCuts.forall(p => p > 0 && p < 100),
       s"tierPctCuts must be ascending percents in (0,100), got $tierPctCuts")

@@ -1013,12 +1013,13 @@ object Dedup {
     * Small-graph fast path: edge tables here are near-dup PAIRS — after
     * LSH+verify they are a small fraction of the corpus, and at bench /
     * moderate scale the whole graph fits on the driver. Under
-    * `localEdgeCap` edges (16 bytes each; the default,
-    * [[Checkpoints.localEdgeCap]], caps the pull at ~32 MB) the
-    * components are solved with one collect + union-find
-    * (union-by-min-root, so the root of every tree IS the component's min
-    * id — identical semantics to the distributed rounds); above the cap,
-    * or with `localEdgeCap <= 0`, the distributed rounds run. */
+    * `localEdgeCap` edges (default [[Checkpoints.localEdgeCap]]; a pair
+    * row is two longs, lighter than the host edge rows that cap was
+    * measured on) the components are solved with one collect +
+    * union-find ([[minRootComponents]]: the root of every tree IS the
+    * component's min id — identical semantics to the distributed
+    * rounds); above the cap, or with `localEdgeCap <= 0`, the
+    * distributed rounds run. */
   def connectedComponents(
       pairs: DataFrame,
       maxIter: Int = 20,
@@ -1042,28 +1043,36 @@ object Dedup {
       val (cached, _, local) = Checkpoints.gate(edges, localEdgeCap)
       try local match {
         case Some(rows) =>
-          val parent = scala.collection.mutable.LongMap.empty[Long]
-          def find(x0: Long): Long = {
-            var x = x0
-            var p = parent(x)
-            while (p != x) { val gp = parent(p); parent(x) = gp; x = gp; p = parent(x) }
-            x
-          }
-          rows.foreach { r =>
-            val a = r.getLong(0)
-            val b = r.getLong(1)
-            if (!parent.contains(a)) parent(a) = a
-            if (!parent.contains(b)) parent(b) = b
-            val ra = find(a)
-            val rb = find(b)
-            if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-          }
-          val out = parent.keys.toArray.map(id => (id, find(id)))
-          spark.createDataset(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
+          spark.createDataset(minRootComponents(rows.iterator.map(r => (r.getLong(0), r.getLong(1)))))
             .toDF("doc_id", "cluster_id")
         case None => connectedComponentsDistributed(cached, maxIter)
       } finally cached.unpersist()
     }
+  }
+
+  /** driver-side union-find over (a, b) edges with the `ord`-smallest
+    * key as each tree's root (path halving on find): returns (key, its
+    * component's minimum) for every key. The local path of
+    * [[connectedComponents]] (long ids) and of
+    * [[LinkOps.hostComponents]] (host strings). */
+  private[ops] def minRootComponents[K](edges: Iterator[(K, K)])(
+      implicit ord: Ordering[K]): Seq[(K, K)] = {
+    val parent = scala.collection.mutable.HashMap.empty[K, K]
+    def find(x0: K): K = {
+      var x = x0
+      var p = parent(x)
+      while (p != x) { val gp = parent(p); parent(x) = gp; x = gp; p = parent(x) }
+      x
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val ra = find(a)
+      val rb = find(b)
+      val c = ord.compare(ra, rb)
+      if (c < 0) parent(rb) = ra else if (c > 0) parent(ra) = rb
+    }
+    parent.keys.toVector.map(k => (k, find(k)))
   }
 
   /** [[connectedComponents]]' distributed rounds over (src, dst) long

@@ -309,24 +309,9 @@ object LinkOps {
       localEdgeCap)
     local match {
       case Some(rows) =>
-        val parent = scala.collection.mutable.HashMap.empty[String, String]
-        def find(x0: String): String = {
-          var x = x0
-          var p = parent(x)
-          while (p != x) { val gp = parent(p); parent(x) = gp; x = gp; p = parent(x) }
-          x
-        }
-        rows.foreach { r =>
-          val a = r.getString(0)
-          val b = r.getString(1)
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val ra = find(a)
-          val rb = find(b)
-          val c = ra.compareTo(rb)
-          if (c < 0) parent(rb) = ra else if (c > 0) parent(ra) = rb
-        }
-        spark.createDataset(parent.keys.toSeq.map(h => (h, find(h))))
+        // Ordering.String is String.compareTo
+        spark.createDataset(Dedup.minRootComponents(
+            rows.iterator.map(r => (r.getString(0), r.getString(1)))))
           .toDF("host", "component_host")
       case None =>
         val hosts = e0.select(col("s").as("host")).union(e0.select(col("d"))).distinct()

@@ -191,14 +191,14 @@ object ExtractJob {
       org.apache.spark.sql.types.StructField("warc_bucket", org.apache.spark.sql.types.LongType)))
     val bucketed = spark.read.schema(stagedSchema).parquet(stagedPath)
     // resume: anti-join against committed lineage buckets (north_rule).
-    // Read with the schema the commit below writes: inferring it costs a
-    // Spark job on every run and resume. A missing directory (first run)
-    // still throws, so it still means no bucket is done.
-    val lineageSchema = org.apache.spark.sql.types.StructType(
-      Seq("n_ok", "n_err", "bytes_in", "chars_out", "warc_bucket", "wall_ms").map(
-        org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.LongType)))
+    // Read with an explicit schema of the one column used (the commit
+    // below writes it as a long): inferring the schema costs a Spark job
+    // on every run and resume. A missing directory (first run) still
+    // throws, so it still means no bucket is done.
+    val doneSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("warc_bucket", org.apache.spark.sql.types.LongType)))
     val doneBuckets: Set[Long] =
-      try spark.read.schema(lineageSchema).parquet(lineagePath)
+      try spark.read.schema(doneSchema).parquet(lineagePath)
         .select("warc_bucket").as[Long].collect().toSet
       catch { case _: Exception => Set.empty }
     val todo = bucketed.filter(!col("warc_bucket").isin(doneBuckets.toSeq: _*))

@@ -83,15 +83,19 @@ object DedupScaling {
     // job shapes: minhash_lsh (banded shuffle + candidate joins),
     // line_dedup (hash-only keeper shuffle + one doc_id reassembly pass),
     // host_rank (ITERATIVE join+agg rounds over a lineage-cut graph —
-    // the q83/q88 fixpoint shape; nDocs counts EDGES here)
+    // the q83/q88 fixpoint shape; nDocs counts EDGES here; the distributed
+    // rounds at every size), host_rank_local (the same edges through
+    // hostRank's driver-local rounds at every size, for the crossover)
     val job = sys.env.getOrElse("SPARK_GRAFT_DEDUP_JOB", "minhash_lsh")
-    val corpusDir = s"/dev/shm/graft-dedup-$job-corpus-$nDocs-f128"
+    val hostRankJob = job.startsWith("host_rank")
+    val corpusDir =
+      s"/dev/shm/graft-dedup-${if (hostRankJob) "host_rank" else job}-corpus-$nDocs-f128"
     // identical harness config to graft.Scaling BY CONSTRUCTION — the
     // 0.74-vs-0.86 job-shape comparison depends on it
     val spark = graft.ScalingHarness.session(cores)
     import spark.implicits._
     if (!new java.io.File(s"$corpusDir/_SUCCESS").exists()) {
-      if (job == "host_rank") {
+      if (hostRankJob) {
         val nHosts = nDocs / 15 max 1000L // ~15 raw edges per host
         spark.range(nDocs).repartition(128).as[Long]
           .map(i => edgeRow(i, nHosts))
@@ -114,10 +118,11 @@ object DedupScaling {
         // scan, not the job
         graft.ops.Dedup.corpusLineDedup(docs)
           .agg(sum(length(col("clean_text"))), sum(col("n_removed"))).collect()
-      else if (job == "host_rank")
+      else if (hostRankJob)
         // sum over rank_e12 forces every round's join+agg (nothing for
         // Catalyst to eliminate — the rank column IS the fixpoint)
-        graft.ops.CorpusOps.hostRank(docs, iterations = 3, dampingPct = 85)
+        graft.ops.CorpusOps.rankFixpoint(docs, None, iterations = 3, dampingPct = 85,
+            localCap = if (job == "host_rank_local") Long.MaxValue else 0L)
           .agg(sum(col("rank_e12"))).collect()
       else graft.ops.Dedup.minhashLsh(docs).count()
       nDocs / ((System.nanoTime() - t0) / 1e9)

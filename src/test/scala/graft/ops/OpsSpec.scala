@@ -3942,6 +3942,15 @@ class OpsSpec extends AnyFunSuite {
     assert(asMap(dist) == want, asMap(dist))
   }
 
+  test("minRootComponents: every key maps to its component's minimum under the ordering") {
+    val edges = Seq((5L, 9L), (9L, 7L), (3L, 5L), (10L, 10L), (12L, 11L))
+    assert(Dedup.minRootComponents(edges.iterator).toMap ==
+      Map(3L -> 3L, 5L -> 3L, 7L -> 3L, 9L -> 3L, 10L -> 10L, 11L -> 11L, 12L -> 11L))
+    assert(Dedup.minRootComponents(edges.iterator)(Ordering.Long.reverse).toMap ==
+      Map(3L -> 9L, 5L -> 9L, 7L -> 9L, 9L -> 9L, 10L -> 10L, 11L -> 12L, 12L -> 12L))
+    assert(Dedup.minRootComponents(Iterator.empty[(String, String)]).isEmpty)
+  }
+
   test("removeBoilerplateLinesPerGroup: per-group df, cross-group survivors, NULL group") {
     // "site nav" and "shared promo" both repeat 3x inside source s1
     // (> maxDf=2) -> removed from s1; the SAME lines appear once each in
