@@ -1321,8 +1321,9 @@ object SparkEntry {
     "q95_host_components" -> ((s, dir) => {
       // weakly-connected components over the host graph restricted to
       // same-residue (hid % 3) edges — three disconnected slices of the
-      // q83 graph; component_host = lexicographic min via rank-ordered
-      // dense ids + the q26 engine
+      // q83 graph; component_host = lexicographic min — the driver
+      // union-find under the edge cap, rank-ordered dense ids + the star
+      // rounds above it
       val (d, hosts, nh) = hostIds(s, dir)
       val e = hostGraphEdges(d, hosts, nh)
         .join(hosts.select(col("source").as("src"), col("hid").as("sh")), Seq("src"))

@@ -75,7 +75,7 @@ private[graft] object Checkpoints {
     cp
   }
 
-  /** Lineage cut for iterative loops (connectedComponents label rounds):
+  /** Lineage cut for iterative loops (the connectedComponentsStar rounds):
     * reliable checkpoint if a checkpoint dir is configured, local
     * otherwise (see object doc); no release hook. */
   def cut(df: DataFrame): DataFrame =
@@ -90,7 +90,8 @@ private[graft] object Checkpoints {
     * the DedupScaling host_rank (distributed) and host_rank_local
     * (driver) jobs: the driver path is the faster one for hostRank at
     * 2M edges (1.4x) and still at 8M (1.3x); at 2M it is also faster for
-    * hits (1.7x) and hostComponents (3.2x). The collected rows hold ~150
+    * hits (1.7x) and hostComponents (3.2x, against the label-table
+    * rounds the star engine has since replaced). The collected rows hold ~150
     * bytes each, ~300 MB of driver heap at the cap and ~1.2 GB at 8M, so
     * the cap sits at 2M, below the crossover, where the heap stays
     * small; more executor cores speed up the distributed rounds and move

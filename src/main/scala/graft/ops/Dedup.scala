@@ -1000,16 +1000,6 @@ object Dedup {
     * — the canonical "keep one representative per duplicate cluster" step
     * after any near-dup pass.
     *
-    * Algorithm: distributed min-label propagation. Each round every node
-    * takes the min of its own label and its neighbors' labels (one equi-join
-    * + one partial-aggregated groupBy per round); converges in O(cluster
-    * diameter) rounds, with a POINTER-JUMPING step folded into each round
-    * (label(id) <- label(label(id)), one self-join on the label table):
-    * paths halve every round, so even adversarial long chains converge in
-    * O(log diameter) rounds — the Hash-to-Min / large-star bound. Lineage
-    * is cut per round (Checkpoints.cut: reliable checkpoint when a dir is
-    * configured, local otherwise) so the plan does not grow unboundedly.
-    *
     * Small-graph fast path: edge tables here are near-dup PAIRS — after
     * LSH+verify they are a small fraction of the corpus, and at bench /
     * moderate scale the whole graph fits on the driver. Under
@@ -1017,35 +1007,36 @@ object Dedup {
     * row is two longs, lighter than the host edge rows that cap was
     * measured on) the components are solved with one collect +
     * union-find ([[minRootComponents]]: the root of every tree IS the
-    * component's min id — identical semantics to the distributed
-    * rounds); above the cap, or with `localEdgeCap <= 0`, the
-    * distributed rounds run. */
+    * component's min id). Above the cap, or with `localEdgeCap <= 0`,
+    * [[connectedComponentsStar]] runs: large-star/small-star rounds whose
+    * O(log² n) round bound holds on any graph, shuffled-id chains
+    * included, and which throw rather than return when they miss their
+    * fixpoint. */
   def connectedComponents(
       pairs: DataFrame,
-      maxIter: Int = 20,
       localEdgeCap: Long = Checkpoints.localEdgeCap): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val edges = pairs.select(col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst"))
-    if (localEdgeCap <= 0) connectedComponentsDistributed(edges, maxIter)
+    if (localEdgeCap <= 0) connectedComponentsStar(pairs)
     else {
       // cap gate = a count fused into a transient materialization, NOT a
       // limit(cap+1) collect: an over-cap edge table costs one
-      // materialization (the distributed path re-reads it to build its
-      // bidirectional copy) instead of a cap-sized driver pull discarded
-      // on the spot, and a count cannot silently truncate when the cap
-      // exceeds the Int.MaxValue collect limit. Materialized via the
-      // ADAPTIVE cut rather than persist: a persisted plan pins the
-      // static shuffle partitioning (32 near-empty partitions for a
-      // hundreds-of-rows pair table — three full-width task waves of
-      // pure overhead measured at sf0.1), while the cut's AQE-coalesced
-      // blocks size the downstream collect/round reads to the data.
+      // materialization (the star rounds re-read it for their canonical
+      // edge table) instead of a cap-sized driver pull discarded on the
+      // spot, and a count cannot silently truncate when the cap exceeds
+      // the Int.MaxValue collect limit. Materialized via the ADAPTIVE cut
+      // rather than persist: a persisted plan pins the static shuffle
+      // partitioning (32 near-empty partitions for a hundreds-of-rows
+      // pair table — three full-width task waves of pure overhead
+      // measured at sf0.1), while the cut's AQE-coalesced blocks size the
+      // downstream collect/round reads to the data.
+      val edges = pairs.select(col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst"))
       val (cached, _, local) = Checkpoints.gate(edges, localEdgeCap)
       try local match {
         case Some(rows) =>
           spark.createDataset(minRootComponents(rows.iterator.map(r => (r.getLong(0), r.getLong(1)))))
             .toDF("doc_id", "cluster_id")
-        case None => connectedComponentsDistributed(cached, maxIter)
+        case None => connectedComponentsStar(cached.toDF("doc_a", "doc_b"))
       } finally cached.unpersist()
     }
   }
@@ -1075,90 +1066,24 @@ object Dedup {
     parent.keys.toVector.map(k => (k, find(k)))
   }
 
-  /** [[connectedComponents]]' distributed rounds over (src, dst) long
-    * edges, with no cap gate ([[LinkOps.hostComponents]] calls them
-    * directly above its own gate). */
-  private[ops] def connectedComponentsDistributed(
-      edgesIn: DataFrame, maxIter: Int): DataFrame = {
-    val edges = edgesIn
-    val bidir = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = Checkpoints.cut(
-      bidir.select(col("src").as("id")).distinct()
-        .withColumn("cluster_id", col("id")))
-    var converged = false
-    var iter = 0
-    // labels only ever decrease, so sum(cluster_id) is a strictly-monotone
-    // convergence witness: one cheap aggregate per round instead of a
-    // labels-vs-next equi-join
-    var prevSum = BigDecimal(-1)
-    while (!converged && iter < maxIter) {
-      // neighbor labels flow along edges; keep the min of (own, neighbors)
-      val msgs = bidir.join(labels, bidir("src") === labels("id"))
-        .select(col("dst").as("id"), col("cluster_id"))
-      // transient cache, NOT a checkpoint: the propagated table feeds both
-      // sides of the pointer-jump self-join below, and a lazy persist lets
-      // the whole round materialize in ONE eager job (the cut on `next`)
-      // instead of two — the cache is computed once inside that job and
-      // dropped as soon as the round's result is pinned
-      val propagated =
-        labels.select(col("id"), col("cluster_id")).union(msgs)
-          .groupBy("id").agg(min("cluster_id").as("cluster_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // pointer jumping: follow one more hop through the label table
-      // (labels only decrease and every label IS a node id, so the lookup
-      // side always resolves; left join guards the fixpoint rows; toDF
-      // re-aliases the lookup side so the self-join resolves cleanly)
-      val lookup = propagated.toDF("t_id", "t_cl")
-      // convergence witness fused into the SAME eager job that pins the
-      // round's result: an Observation below the checkpoint materialization
-      // fires when that action completes (probed on both localCheckpoint
-      // and Dataset.checkpoint paths), so each round is ONE job instead of
-      // two. Bounded wait + a fallback aggregate keep it correct if metric
-      // delivery ever fails on some Spark version.
-      val obs = org.apache.spark.sql.Observation(s"cc_round_$iter")
-      val next =
-        try Checkpoints.cut(
-          propagated
-            .join(lookup, propagated("cluster_id") === lookup("t_id"), "left")
-            .select(propagated("id"),
-              coalesce(lookup("t_cl"), propagated("cluster_id")).as("cluster_id"))
-            .observe(obs,
-              org.apache.spark.sql.functions.sum(col("cluster_id"))
-                .cast("decimal(38,0)").as("label_sum")))
-        finally propagated.unpersist() // also on failure: no leaked cache
-      val sumDec = Checkpoints.observed(obs) {
-        next.agg(org.apache.spark.sql.functions.sum(col("cluster_id"))
-          .cast("decimal(38,0)").as("label_sum")).collect()(0)
-      }.getAs[java.math.BigDecimal]("label_sum")
-      labels = next
-      // sum over an EMPTY labels frame is null (zero near-dup pairs is a
-      // legitimate corpus outcome): converge immediately on the empty result
-      // instead of NPE-ing in BigDecimal
-      val sum = if (sumDec == null) prevSum else BigDecimal(sumDec)
-      converged = sumDec == null || sum == prevSum
-      prevSum = sum
-      iter += 1
-    }
-    bidir.unpersist()
-    labels.select(col("id").as("doc_id"), col("cluster_id"))
-  }
-
   /** connected components via alternating LARGE-STAR / SMALL-STAR rounds
     * (Kiveris/Lattanzi/Mirrokni/Rastogi/Vassilvitskii, "Connected
     * Components in MapReduce and Beyond", SoCC'14) — the published
-    * web-scale CC algorithm and this library's scale alternative to
-    * [[connectedComponents]]'s label-table rounds: the state is the EDGE
-    * table itself, rewired toward smaller ids until the graph is a forest
-    * of min-rooted stars, so (a) no per-NODE label table is self-joined
-    * every round (the q26 watch item: that join binds when components are
-    * node-heavy), and (b) a high-degree hub is broken up by one
+    * web-scale CC algorithm and this library's one distributed CC
+    * engine: q132 calls it directly, and [[connectedComponents]] and
+    * [[LinkOps.hostComponents]] run it above their edge cap. The state is
+    * the EDGE table itself, rewired toward smaller ids until the graph is
+    * a forest of min-rooted stars, so (a) no per-NODE label table is
+    * self-joined every round, (b) a high-degree hub is broken up by one
     * large-star round instead of funneling its neighborhood through one
     * reduce key — the properties that matter when the near-dup graph has
-    * viral components (boilerplate storms). Semantics are IDENTICAL to
-    * [[connectedComponents]]: one row per node of the pair graph,
-    * cluster_id = min reachable id (OpsSpec pins frame-equality on
-    * adversarial shapes).
+    * viral components (boilerplate storms) — and (c) the O(log² n)
+    * round bound holds whatever the id layout, where min-label
+    * propagation needs O(n) rounds on a path whose ids are shuffled.
+    * Output: one row per node of the pair graph,
+    * cluster_id = min reachable id — the same frame as
+    * [[connectedComponents]]' union-find (OpsSpec pins frame-equality on
+    * adversarial shapes and on shuffled-id paths).
     *
     * Round shape (every key a node id, every table edge-sized, shrinking):
     * large-star = one partial-combined min per node over the

@@ -287,12 +287,12 @@ object LinkOps {
     * driver-local frame. Above it (or with `localEdgeCap <= 0`) dense host
     * ids come from a total sort + zipWithIndex (one host-cardinality sort
     * shuffle + one count pass — NO single-partition window, NO
-    * hash-as-id collision risk), and [[Dedup.connectedComponents]]'
-    * distributed rounds (min-label propagation + pointer jumping in
-    * O(log diameter) rounds) do the real work; because ids are
-    * rank-ordered, min-id semantics IS min-host semantics. The id table
-    * feeds four joins, so it is lineage-cut once. */
-  def hostComponents(edges: DataFrame, maxIter: Int = 20,
+    * hash-as-id collision risk), and [[Dedup.connectedComponentsStar]]'s
+    * large-star/small-star rounds do the real work over the (src, dst)
+    * id pairs; because ids are rank-ordered, min-id semantics IS min-host
+    * semantics. The id table feeds four joins, so it is lineage-cut
+    * once. */
+  def hostComponents(edges: DataFrame,
       localEdgeCap: Long = Checkpoints.localEdgeCap): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -318,13 +318,13 @@ object LinkOps {
         val ids = Checkpoints.cut(
           hosts.as[String].rdd.sortBy(identity).zipWithIndex().toDF("host", "hid"))
         // the pair count is the edge count, over the cap here, so the
-        // rounds are called directly (connectedComponents' own gate
+        // star rounds are called directly (connectedComponents' own gate
         // could not pass)
         val pairs = e0
-          .join(ids.select(col("host").as("s"), col("hid").as("src")), Seq("s"))
-          .join(ids.select(col("host").as("d"), col("hid").as("dst")), Seq("d"))
-          .select(col("src"), col("dst"))
-        Dedup.connectedComponentsDistributed(pairs, maxIter)
+          .join(ids.select(col("host").as("s"), col("hid").as("doc_a")), Seq("s"))
+          .join(ids.select(col("host").as("d"), col("hid").as("doc_b")), Seq("d"))
+          .select(col("doc_a"), col("doc_b"))
+        Dedup.connectedComponentsStar(pairs)
           .join(ids.select(col("hid").as("doc_id"), col("host")), Seq("doc_id"))
           .join(ids.select(col("hid").as("cluster_id"),
             col("host").as("component_host")), Seq("cluster_id"))

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, length, sum}
+import org.apache.spark.sql.functions.{col, count, length, lit, sum}
 
 /** Two-parallelism scaling evidence for the SECOND heavy job shape:
   * MinHash-LSH near-dup detection end-to-end (shingle -> 64 minhashes ->
@@ -77,6 +77,23 @@ object DedupScaling {
     (s"h$src", s"h$dst", next() % 3 + 1)
   }
 
+  /** deterministic long chain for the cc_chain job shape: edge i links
+    * the path's nodes i and i + 1, and node j carries the id
+    * (j·stride + n/2) mod n over n = nEdges + 1 nodes, `stride` coprime
+    * to n ([[chainStride]]), so neighbouring ids are unrelated and the
+    * minimum id 0 sits mid-path — the layout on which min-label
+    * propagation needs O(n) rounds. j·stride stays below 2^63 for any
+    * n under 9·10^12. */
+  def chainEdge(i: Long, nEdges: Long, stride: Long): (Long, Long) = {
+    val n = nEdges + 1
+    def id(j: Long) = (j * stride + n / 2) % n
+    (id(i), id(i + 1))
+  }
+
+  /** the smallest stride >= 1000003 that is coprime to n */
+  def chainStride(n: Long): Long =
+    Iterator.iterate(1000003L)(_ + 1).find(a => BigInt(a).gcd(BigInt(n)) == 1).get
+
   def main(args: Array[String]): Unit = {
     val cores = args.headOption.map(_.toInt).getOrElse(8)
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_DEDUP_DOCS", "150000").toLong
@@ -85,7 +102,9 @@ object DedupScaling {
     // host_rank (ITERATIVE join+agg rounds over a lineage-cut graph —
     // the q83/q88 fixpoint shape; nDocs counts EDGES here; the distributed
     // rounds at every size), host_rank_local (the same edges through
-    // hostRank's driver-local rounds at every size, for the crossover)
+    // hostRank's driver-local rounds at every size, for the crossover),
+    // cc_chain (connectedComponents' distributed rounds over a path of
+    // nDocs EDGES with shuffled ids, above the edge cap by construction)
     val job = sys.env.getOrElse("SPARK_GRAFT_DEDUP_JOB", "minhash_lsh")
     val hostRankJob = job.startsWith("host_rank")
     val corpusDir =
@@ -94,8 +113,24 @@ object DedupScaling {
     // 0.74-vs-0.86 job-shape comparison depends on it
     val spark = graft.ScalingHarness.session(cores)
     import spark.implicits._
+    // cc_chain rounds = the distinct per-round Observations
+    // ("ccstar_<round>") the star engine fires during one run
+    val starRounds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    if (job == "cc_chain")
+      spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          qe.observedMetrics.keys.filter(_.startsWith("ccstar_")).foreach(starRounds.add)
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      })
     if (!new java.io.File(s"$corpusDir/_SUCCESS").exists()) {
-      if (hostRankJob) {
+      if (job == "cc_chain") {
+        val stride = chainStride(nDocs + 1)
+        spark.range(nDocs).repartition(128).as[Long]
+          .map(i => chainEdge(i, nDocs, stride))
+          .toDF("doc_a", "doc_b")
+          .write.mode("overwrite").parquet(corpusDir)
+      } else if (hostRankJob) {
         val nHosts = nDocs / 15 max 1000L // ~15 raw edges per host
         spark.range(nDocs).repartition(128).as[Long]
           .map(i => edgeRow(i, nHosts))
@@ -124,14 +159,38 @@ object DedupScaling {
         graft.ops.CorpusOps.rankFixpoint(docs, None, iterations = 3, dampingPct = 85,
             localCap = if (job == "host_rank_local") Long.MaxValue else 0L)
           .agg(sum(col("rank_e12"))).collect()
+      else if (job == "cc_chain") {
+        // sum over cluster_id forces every round; the chain is one
+        // component with minimum id 0, so any other answer is wrong
+        val r = graft.ops.Dedup.connectedComponents(docs, localEdgeCap = 0L)
+          .agg(sum(col("cluster_id")), count(lit(1))).collect()(0)
+        require(r.getLong(0) == 0L && r.getLong(1) == nDocs + 1,
+          s"cc_chain: label sum ${r.get(0)} over ${r.get(1)} nodes, want 0 over ${nDocs + 1}")
+      }
       else graft.ops.Dedup.minhashLsh(docs).count()
       nDocs / ((System.nanoTime() - t0) / 1e9)
     }
     once() // warmup (JIT + codegen settle)
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALING_REPS", "3").toInt
-    val rates = (1 to reps).map(_ => once()).sorted
+    val rates = (1 to reps).map { k =>
+      spark.sparkContext.setJobGroup(s"rep-$k", job)
+      try once() finally spark.sparkContext.clearJobGroup()
+    }.sorted
     val rate = rates(rates.size / 2)
-    println(f"""{"job":"$job","cores":$cores,"docs_per_sec":$rate%.1f,"reps":[${rates.map(r => f"$r%.1f").mkString(",")}],"n_docs":$nDocs}""")
+    // the listener bus is asynchronous: read the round count once two
+    // reads 200 ms apart agree
+    def settledRounds(): Int = {
+      var prev = -1
+      var cur = starRounds.size
+      while (cur != prev) { prev = cur; Thread.sleep(200); cur = starRounds.size }
+      cur
+    }
+    val extra = if (job == "cc_chain") {
+      val rounds = settledRounds()
+      val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(s"rep-$reps").length
+      s""","rounds":$rounds,"jobs":$jobs"""
+    } else ""
+    println(f"""{"job":"$job","cores":$cores,"docs_per_sec":$rate%.1f,"wall_s":${nDocs / rate}%.2f,"reps":[${rates.map(r => f"$r%.1f").mkString(",")}],"n_docs":$nDocs$extra}""")
     spark.stop()
   }
 }

@@ -1156,12 +1156,11 @@ class OpsSpec extends AnyFunSuite {
     val cc = Dedup.connectedComponents(edges).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
-    // a 64-node chain (diameter 63) must converge within maxIter=20: the
-    // pointer-jumping step gives O(log diameter) rounds, not O(diameter).
-    // localEdgeCap = 0 FORCES the distributed rounds — with the default
-    // cap this fixture would take the union-find fast path and the
-    // convergence property (the thing this test exists for) would go
-    // untested
+    // a 64-node chain (diameter 63) must converge in the star engine's
+    // O(log^2 n) rounds. localEdgeCap = 0 FORCES the distributed rounds —
+    // with the default cap this fixture would take the union-find fast
+    // path and the convergence property (the thing this test exists for)
+    // would go untested
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val cc2 = Dedup.connectedComponents(chain, localEdgeCap = 0L).collect()
     assert(cc2.length == 64 && cc2.forall(_.getAs[Long]("cluster_id") == 0L))
@@ -1169,8 +1168,8 @@ class OpsSpec extends AnyFunSuite {
 
   test("connected components: local union-find agrees with distributed rounds") {
     // mixed fixture: chain + triangle + isolated pair + shared hub;
-    // localEdgeCap <= 0 forces the distributed min-label rounds, the
-    // default takes the union-find fast path — same labels, exactly
+    // localEdgeCap <= 0 forces the distributed star rounds, the default
+    // takes the union-find fast path — same labels, exactly
     val edges = (Seq((10L, 11L), (11L, 12L), (12L, 13L)) ++
       Seq((20L, 21L), (21L, 22L), (22L, 20L)) ++
       Seq((30L, 31L)) ++
@@ -1185,6 +1184,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("connectedComponentsStar: frame-equal to the label engine on adversarial shapes") {
+    // the reference is connectedComponents at its default cap, which
+    // answers these test-sized tables with the driver union-find
     // collect rows AND build the map: toMap alone would silently fold a
     // duplicate doc_id row, so the "one row per node" contract is pinned
     // by asserting the row count equals the map size
@@ -1198,7 +1199,7 @@ class OpsSpec extends AnyFunSuite {
     def check(edges: org.apache.spark.sql.DataFrame, label: String): Unit = {
       val want = asMap(Dedup.connectedComponents(edges))
       val got = asMap(Dedup.connectedComponentsStar(edges))
-      assert(got == want, s"$label: star $got vs label-engine $want")
+      assert(got == want, s"$label: star $got vs union-find $want")
     }
     // mixed fixture: chain + triangle + pair + hub (the union-find test's)
     check((Seq((10L, 11L), (11L, 12L), (12L, 13L)) ++
@@ -1218,13 +1219,55 @@ class OpsSpec extends AnyFunSuite {
       if (rnd.nextBoolean()) (a, b) else (b, a)
     }.toDF("doc_a", "doc_b").filter(col("doc_a") =!= col("doc_b")), "random")
     // self-loop-only nodes stay in the output with their own label (the
-    // label engine keeps them; dropping them would change corpus
+    // union-find keeps them; dropping them would change corpus
     // accounting), empty input stays empty
     val loops = Seq((5L, 5L), (1L, 2L)).toDF("doc_a", "doc_b")
     assert(asMap(Dedup.connectedComponentsStar(loops)) ==
       Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
     assert(Dedup.connectedComponentsStar(
       Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).collect().isEmpty)
+  }
+
+  /** a path over the ids 0..n-1 visited in the affine order i·a + b mod n
+    * (gcd(a, n) = 1): neighbouring nodes carry unrelated ids and the
+    * minimum 0 sits mid-path — the shape on which min-label propagation
+    * needs O(n) rounds even with a pointer jump per round */
+  private def shuffledPath(n: Int, a: Int, b: Int): Seq[(Long, Long)] = {
+    require(BigInt(a).gcd(BigInt(n)) == 1, s"a=$a must be coprime to n=$n")
+    def id(i: Int) = (i.toLong * a + b) % n
+    (0 until n - 1).map(i => (id(i), id(i + 1)))
+  }
+
+  /** None when `rows` holds one row per node of `nodes`, each labelled
+    * `min`; else a message counting the wrong labels and the components
+    * they form */
+  private def oneComponentError[K](label: String, rows: Seq[(K, K)],
+      nodes: Set[K], min: K): Option[String] = {
+    val wrong = rows.count(_._2 != min)
+    if (rows.size == nodes.size && rows.map(_._1).toSet == nodes && wrong == 0) None
+    else Some(s"$label: ${rows.size} rows for ${nodes.size} nodes, $wrong wrong " +
+      s"labels, ${rows.map(_._2).distinct.size} components instead of 1")
+  }
+
+  test("connected components: shuffled-id paths get one label above the edge cap") {
+    // localEdgeCap = 0 forces the distributed engine, the path the
+    // design scale runs; below the cap the union-find answers exactly
+    val errors = Seq((200, 77, 113), (10000, 7919, 4321)).flatMap { case (n, a, b) =>
+      val path = shuffledPath(n, a, b).toDF("doc_a", "doc_b")
+      val got = Dedup.connectedComponents(path, localEdgeCap = 0L).collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toSeq
+      oneComponentError(s"n=$n", got, (0L until n.toLong).toSet, 0L)
+    }
+    if (errors.nonEmpty) fail(errors.mkString("; "))
+  }
+
+  test("connectedComponentsStar: throws when maxIter ends before the star fixpoint") {
+    // a fixed-round loop that stops short of its fixpoint must fail, not
+    // return the labels it has: two rounds cannot collapse a 200-node
+    // shuffled path into stars
+    val path = shuffledPath(200, 77, 113).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException](Dedup.connectedComponentsStar(path, maxIter = 2))
+    assert(e.getMessage.contains("did not reach the star fixpoint"), e.getMessage)
   }
 
   test("triangleStats: fixture counts, clustering micro-units, noise dropped") {
@@ -3940,6 +3983,20 @@ class OpsSpec extends AnyFunSuite {
       "p" -> "p", "q" -> "p")
     assert(asMap(local) == want, asMap(local))
     assert(asMap(dist) == want, asMap(dist))
+  }
+
+  test("hostComponents: a shuffled-name host path gets one label above the edge cap") {
+    // zero-padded names rank like their numbers, so "h00000" is the
+    // String.compareTo minimum, sitting mid-path; localEdgeCap = 0 forces
+    // the rank-ordered ids through the distributed engine
+    val n = 200
+    def host(id: Long) = f"h$id%05d"
+    val path = shuffledPath(n, 77, 113).map { case (a, b) => (host(a), host(b)) }
+      .toDF("src", "dst")
+    val got = LinkOps.hostComponents(path, localEdgeCap = 0L).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toSeq
+    oneComponentError(s"n=$n", got, (0L until n.toLong).map(host).toSet, host(0L))
+      .foreach(fail(_))
   }
 
   test("minRootComponents: every key maps to its component's minimum under the ordering") {

@@ -179,4 +179,12 @@ class PlanSpec extends AnyFunSuite {
       "q103_hits" -> 6,
       "q95_host_components" -> 8))
   }
+
+  test("connected-components family job budget: q26/q75/q132 run no more Spark jobs than measured") {
+    assume(haveTestdata)
+    assertJobBudget(Map(
+      "q26_dup_clusters" -> 3,
+      "q75_fuzzy_dedup_keep_best" -> 5,
+      "q132_dup_clusters_star" -> 16))
+  }
 }
