@@ -55,41 +55,15 @@ object BenchExtra {
     val nStages = new java.util.concurrent.atomic.AtomicInteger(0)
     val nTasks = new java.util.concurrent.atomic.AtomicInteger(0)
     val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stageDetail = sys.env.get("SPARK_GRAFT_STAGES").contains("true")
-    val stageTaskMs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         nJobs.incrementAndGet()
       override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         nStages.incrementAndGet()
         nTasks.addAndGet(s.stageInfo.numTasks)
-        if (stageDetail) {
-          val id = s.stageInfo.stageId
-          def g(k: Int): Long = Option(stageTaskMs.get(k)).map(_.get()).getOrElse(0L)
-          val ms = g(id)
-          if (ms > 200L)
-            System.err.println(f"[stage] id=$id tasks=${s.stageInfo.numTasks} task_ms=$ms cpu_ms=${g(-4000000 - id)} in_rows=${g(-3000000 - id)} sh_read=${g(-1000000 - id)} sh_write=${g(-2000000 - id)} name=${s.stageInfo.name} details=${s.stageInfo.details.linesIterator.drop(1).take(2).mkString(" | ")}")
-        }
       }
       override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskInfo != null) {
-          taskMs.addAndGet(t.taskInfo.duration)
-          if (stageDetail) {
-            stageTaskMs.computeIfAbsent(t.stageId,
-              _ => new java.util.concurrent.atomic.AtomicLong(0L)).addAndGet(t.taskInfo.duration)
-            if (t.taskMetrics != null) {
-              val m = t.taskMetrics
-              def acc(key: Int, v: Long): Unit =
-                stageTaskMs.computeIfAbsent(key,
-                  _ => new java.util.concurrent.atomic.AtomicLong(0L)).addAndGet(v)
-              // side-channel rows/bytes per stage under negative keys
-              acc(-1000000 - t.stageId, m.shuffleReadMetrics.recordsRead)
-              acc(-2000000 - t.stageId, m.shuffleWriteMetrics.recordsWritten)
-              acc(-3000000 - t.stageId, m.inputMetrics.recordsRead)
-              acc(-4000000 - t.stageId, m.executorCpuTime / 1000000L)
-            }
-          }
-        }
+        if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
     })
     def counters(): (Int, Int, Int, Long) =
       (nJobs.get(), nStages.get(), nTasks.get(), taskMs.get())

@@ -989,10 +989,9 @@ object SparkEntry {
       // (sorted intervals fold to [0, n_bytes), and n_bytes itself is
       // oracle-recomputed as octet_length, so a dropped or shifted chunk
       // reds the row) and respect the [minSize, maxSize] bounds (final
-      // chunk exempt from the floor). Sharing accounting stays in
-      // Dedup.cdcShareStats (OpsSpec holds the planted-sharing and
-      // shift-resistance gates). Small chunk params: synthetic docs are
-      // short; defaults target real web payloads
+      // chunk exempt from the floor). OpsSpec holds the chunker's
+      // reconstruction and shift-resistance gates. Small chunk params:
+      // synthetic docs are short; defaults target real web payloads
       val d = docs(s, dir).select(col("doc_id").cast("long").as("doc_id"))
       val (minSz, maxSz) = (32, 1024) // ONE binding feeds chunker + bounds
       val ch = Dedup.cdcChunks(docs(s, dir), minSize = minSz, avgBits = 6,
@@ -2137,9 +2136,10 @@ object SparkEntry {
       // exact-rerank serving as q44. No SQL oracle (k-means + SVD) —
       // gated by the OpsSpec mse-beats-random-baseline + recall checks.
       // Training economy (2 alternations, 2 Lloyd iters per retrain, 20k
-      // sample): the OpqEval trajectory shows iterations 1-2 capture most
-      // of the gain, and like every index builder here the real lifecycle
-      // is train-once + saveOpq snapshot, not train-per-query
+      // sample): the trained-OPQ MSE trajectory recorded in BASELINE.md
+      // shows iterations 1-2 capture most of the gain, and like every
+      // index builder here the real lifecycle is train-once + saveOpq
+      // snapshot, not train-per-query
       val e = graft.ops.Checkpoints.cut(emb(s, dir)) // the q54 scan-reuse cut
       val opq = cachedIndex("q49-opq2-km2-ts20k", dir)(
         SimSearch.loadOpq(s, _))(

@@ -32,9 +32,12 @@ import org.apache.spark.sql.functions.{count, lit}
   *    only when executor loss fails the whole job anyway (local mode) or
   *    the caller re-runs the operator on failure.
   *
-  * Callers that want full laziness instead (no eager job at call time, no
-  * severed lineage) use the `*Lazy` plan builders next to each public
-  * operator and manage persistence themselves.
+  * Five operators split their plan out as a `private[graft]` `*Lazy`
+  * builder that returns the lazy result plus the caches it reads:
+  * `ngramJaccardAllPairs`, `ngramJaccardPrefix`, `ngramContainment`,
+  * `ngramJaccardDups` and `incrementalExactDedup`. The public operator
+  * wraps its builder in [[eager]]; OpsSpec calls the builders directly to
+  * gate the join shape, which the eager cut hides from the plan.
   */
 private[graft] object Checkpoints {
 

@@ -1458,9 +1458,8 @@ object CorpusOps {
       .withColumn("is_trap", col("n_paths") >= trapMinPaths)
   }
 
-  /** batch gap-based sessionization over an event log — the batch twin of
-    * StreamOps.sessionize (same gap rule, run over a bounded table instead
-    * of an unbounded stream): consecutive events of one user belong to the
+  /** batch gap-based sessionization over an event log (a bounded table,
+    * not an unbounded stream): consecutive events of one user belong to the
     * same session while the inter-event gap stays <= `gapSeconds`; a larger
     * gap starts a new session. This is how crawl-log / clickstream tables
     * are folded into per-visit rows before any engagement or curation

@@ -1915,7 +1915,8 @@ object Dedup {
   // keys) and each incoming shard dedups against the SNAPSHOT, then
   // appends only its genuinely-new keys. The corpus documents themselves
   // are never re-read — at 10^12 docs the snapshot is the only artifact
-  // that ever moves, and it only ever APPENDS (`snapshotDelta`).
+  // that ever moves, and it only ever APPENDS (the admitted shard's keys
+  // that the snapshot does not hold yet).
   //
   // Scale shape: the shard is the small side (one crawl increment vs the
   // accumulated corpus), so the snapshot-side scan dominates. A Bloom
@@ -1944,16 +1945,10 @@ object Dedup {
   /** distinct 8-byte key table of a processed corpus — the snapshot the
     * incremental ops join against (NULL keys normalize to [[NULL_KEY]],
     * matching `incrementalExactDedup`). Persist with a plain parquet
-    * write; grow it by appending `snapshotDelta` output, never by
-    * rewriting. */
+    * write; grow it by appending the admitted shard's keys that it does
+    * not hold yet (a left-anti join on `h`), never by rewriting. */
   def exactKeySnapshot(corpus: DataFrame, key: Column): DataFrame =
     corpus.select(normKey(key).as("h")).distinct()
-
-  /** keys present in `newKeys` but not in `snapshot` — the rows to APPEND
-    * to the snapshot table after a shard is admitted. `newKeys` is
-    * `exactKeySnapshot(shard, key)` or `minhashBandSnapshot(shard)`. */
-  def snapshotDelta(newKeys: DataFrame, snapshot: DataFrame): DataFrame =
-    newKeys.join(snapshot, Seq("h"), "left_anti")
 
   /** Bloom-prune `table` (keyed by long column `h`) against the keys of
     * `probe`: rows whose `h` cannot be in probe are dropped scan-side,
@@ -2868,8 +2863,8 @@ object Dedup {
     * so chunks average ~2^avgBits bytes past the minimum), force-split
     * at `maxSize`. Output one row per chunk: (doc_id, chunk_idx int,
     * start int — byte offset, len int, chunk_hash long — FNV-1a of the
-    * chunk bytes). Empty/NULL texts emit no rows ([[cdcShareStats]]
-    * restores them for corpus accounting).
+    * chunk bytes). Empty/NULL texts emit no rows (q128 joins them back
+    * as zero-byte rows for corpus accounting).
     *
     * Scale shape: scan-fused typed flatMap — per-row kernel work, zero
     * shuffle, output ~bytes/2^avgBits rows per doc; chunk identity
@@ -2898,49 +2893,6 @@ object Dedup {
         }
       }
       .toDF("doc_id", "chunk_idx", "start", "len", "chunk_hash")
-  }
-
-  /** per-document storage-dedup accounting over [[cdcChunks]]: how many
-    * of each document's bytes live in chunks whose hash occurs MORE THAN
-    * ONCE in the corpus (within- or cross-document — a store refcounts
-    * both the same way). Output one row per INPUT document (empty/NULL
-    * texts keep a zero row — corpus accounting must not lose rows):
-    * (doc_id, n_chunks long, n_bytes long, shared_chunks long,
-    * shared_bytes long, shared_frac_e6 long = floor(shared_bytes·10^6 /
-    * n_bytes), 0 when empty).
-    *
-    * Scale shape: the chunk table is persisted (two consumers — the
-    * refcount aggregate and the join — would otherwise each re-run the
-    * gear+FNV kernel over every corpus byte) and released after
-    * materialization; one partial-combined refcount groupBy on the
-    * 8-byte chunk hash, one equi-join of the chunk table against it,
-    * one per-doc aggregate, one LEFT join back to the id column —
-    * documents never move, chunk bytes never move, all keys are 8-byte
-    * hashes (the q05 discipline). */
-  def cdcShareStats(documents: DataFrame, minSize: Int = 64,
-      avgBits: Int = 8, maxSize: Int = 4096): DataFrame = {
-    val chunks = cdcChunks(documents, minSize, avgBits, maxSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val refs = chunks.groupBy(col("chunk_hash"))
-      .agg(count(lit(1)).as("refcount"))
-    val perDoc = chunks.join(refs, Seq("chunk_hash"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(col("len").cast("long")).as("n_bytes"),
-        sum(when(col("refcount") > 1, 1L).otherwise(0L)).as("shared_chunks"),
-        sum(when(col("refcount") > 1, col("len").cast("long")).otherwise(0L))
-          .as("shared_bytes"))
-    val out = documents.select(col("doc_id").cast("long"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
-        coalesce(col("n_bytes"), lit(0L)).as("n_bytes"),
-        coalesce(col("shared_chunks"), lit(0L)).as("shared_chunks"),
-        coalesce(col("shared_bytes"), lit(0L)).as("shared_bytes"))
-      .withColumn("shared_frac_e6",
-        when(col("n_bytes") > 0,
-          expr("(shared_bytes * 1000000) div n_bytes")).otherwise(lit(0L)))
-    Checkpoints.eager(out) { chunks.unpersist() }
   }
 }
 

@@ -797,31 +797,6 @@ object SimSearch {
       .toDF("vec_id", "codes")
   }
 
-  /** pack k<=16 PQ codes into a binary column, one nibble per code (m=8,
-    * k=16 -> 4 bytes/vector, the storage the 64x-compression claim is
-    * about). Pure codegen'd column math: code -> hex digit -> unhex.
-    * Requires even m (whole bytes). Codes outside 0..15 or null elements
-    * would silently shift every later nibble (conv emits 2+ hex digits,
-    * concat_ws drops nulls) — such rows pack to NULL instead, so contract
-    * violations are loud, never silently-wrong ANN results. A NULL codes
-    * ARRAY also packs to NULL: exists(NULL, …) is NULL, which would fall
-    * through the `when` and emit a 0-byte binary that unpacks to an empty
-    * code list — the silent corruption this contract exists to prevent. */
-  def packCodes4bit(codes: Column): Column =
-    when(codes.isNull.or(exists(codes, c => c.isNull || c < 0 || c > 15)), lit(null))
-      .otherwise(unhex(concat_ws("", transform(codes, c => lower(conv(c.cast("long"), 10, 16))))))
-
-  /** inverse of packCodes4bit: binary -> array<int> of nibbles */
-  def unpackCodes4bit(packed: Column): Column =
-    transform(split(regexp_replace(hex(packed), "(.)", "$1,"), ",").dropRight,
-      c => conv(c, 16, 10).cast("int"))
-
-  private implicit class ColOps(c: Column) {
-    /** split(...) on a trailing-delimiter string leaves one empty tail
-      * element; drop it */
-    def dropRight: Column = slice(c, lit(1), size(c) - 1)
-  }
-
   /** PQ ANN: asymmetric-distance (ADC) scan over the CODES (m table
     * lookups per vector instead of dim multiplies over float32 — the scan
     * reads ~m bytes/vector, the 100 TB win), shortlist the top
@@ -1320,20 +1295,6 @@ object SimSearch {
     Array.tabulate(dim, dim)((i, j) => r(i, j).toFloat)
   }
 
-  /** persist an IVF-PQ index snapshot as a parquet table — the index
-    * LIFECYCLE is data, not process state: a build job trains once, saves,
-    * and every serving job loads the snapshot (alongside a persisted
-    * `ivfPqEncode` codes table) instead of re-training. Layout: one row
-    * per centroid, (component, a, b, vec) where component is "ivf"
-    * (a = list id) or "pq" (a = subvector, b = code). */
-  def saveIvfPqIndex(index: IvfPqIndex, path: String, spark: org.apache.spark.sql.SparkSession): Unit =
-    saveComponentSnapshot(Seq("ivf" -> index.ivf.centroids), index.pq, path, spark)
-
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfPqIndex = {
-    val (mats, pq) = loadComponentSnapshot(spark, path, Seq("ivf"))
-    IvfPqIndex(IvfIndex(mats("ivf")), pq)
-  }
-
   /** shared snapshot codec for the (matrix components + PQ codebook)
     * index families — one encode/decode so a fix to any family cannot
     * silently miss the others. Rows: (component, a, b, vec) with
@@ -1371,8 +1332,8 @@ object SimSearch {
     require(labels.forall(l => mats(l).nonEmpty) && pqRows.nonEmpty,
       s"corrupt index snapshot at $path: missing ${labels.mkString("/")} or 'pq' component rows")
     // WRONG-FAMILY loads must fail fast, not silently drop components: a
-    // three-component OPQ-IVF-PQ snapshot read through loadIvfPqIndex
-    // would discard the rotation and serve silently-wrong neighbors
+    // three-component OPQ-IVF-PQ snapshot read through loadOpq would
+    // discard the coarse centroids and serve silently-wrong neighbors
     val extra = rows.iterator.map(_._1).toSet -- labels.toSet - "pq"
     require(extra.isEmpty,
       s"index snapshot at $path carries component(s) ${extra.mkString(",")} this loader " +
@@ -1384,8 +1345,8 @@ object SimSearch {
     (mats, PqCodebook(pqRows.head._4.length, pq))
   }
 
-  /** persist a trained-OPQ snapshot (rotation + codebook) — same
-    * parquet component layout as the IVF-PQ snapshot: component "rot"
+  /** persist a trained-OPQ snapshot (rotation + codebook) in the shared
+    * component layout: component "rot"
     * (a = row index) or "pq" (a = subvector, b = code). A build job
     * trains once; serving jobs load and rotate-at-ingest. */
   def saveOpq(opq: OpqResult, path: String, spark: org.apache.spark.sql.SparkSession): Unit =

@@ -1636,10 +1636,10 @@ object TextOps {
     * Scale shape: ONE shuffle-free typed pass — tf is counted in-doc
     * (each (term, doc_id) pair originates in exactly one document row,
     * so the per-doc counts ARE the postings; no explode, no aggregate);
-    * docLens is a shuffle-free projection. Persist both with
-    * [[saveTextIndex]] partitioned however the store likes; at serving
-    * scale, sort/bucket postings by term so a query's probe is a pruned
-    * range read, not a full postings scan. */
+    * docLens is a shuffle-free projection. Persist both as plain parquet
+    * tables partitioned however the store likes; at serving scale,
+    * sort/bucket postings by term so a query's probe is a pruned range
+    * read, not a full postings scan. */
   def buildTextIndex(documents: DataFrame): (DataFrame, DataFrame) = {
     val spark = documents.sparkSession
     import spark.implicits._
@@ -1651,7 +1651,7 @@ object TextOps {
     // explode (one row per token occurrence) + (term, doc_id) aggregate
     // shuffled the whole token stream to produce the same table. The
     // build becomes shuffle-free; persist/sort order is the store's
-    // concern (saveTextIndex).
+    // concern.
     val postings = base
       .as[(java.lang.Long, scala.collection.Seq[String])]
       .flatMap { case (id, toks) =>
@@ -1666,16 +1666,6 @@ object TextOps {
     val docLens = base.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
     (postings, docLens)
   }
-
-  /** parquet snapshot of a text index (postings + docLens subdirs). */
-  def saveTextIndex(postings: DataFrame, docLens: DataFrame, dir: String): Unit = {
-    postings.write.mode("overwrite").parquet(s"$dir/postings")
-    docLens.write.mode("overwrite").parquet(s"$dir/doclens")
-  }
-
-  def loadTextIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/postings"), spark.read.parquet(s"$dir/doclens"))
 
   /** BM25 top-K over a prebuilt inverted index — value-identical to
     * [[bm25TopDocs]] on the same corpus (same tokenization, same integer

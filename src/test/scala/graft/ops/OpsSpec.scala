@@ -1072,40 +1072,6 @@ class OpsSpec extends AnyFunSuite {
     assert(sharedFrac >= 0.6, s"shared only $sharedFrac of chunks")
   }
 
-  test("cdcShareStats: cross-doc and within-doc sharing, zero rows kept") {
-    def salad(seed: Long, words: Int): String = {
-      var s = seed
-      (0 until words).map { _ =>
-        s = s * 6364136223846793005L + 1442695040888963407L
-        s"w${(s >>> 33) % 5000}"
-      }.mkString(" ")
-    }
-    val shared = salad(3L, 2000)
-    val df = Seq(
-      (1L, salad(5L, 300) + " " + shared + " " + salad(6L, 300)),
-      (2L, salad(7L, 300) + " " + shared + " " + salad(8L, 300)),
-      (3L, salad(11L, 800)),         // unique — nothing shared
-      (4L, shared + " " + shared),   // within-doc repetition counts
-      (5L, ""), (6L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    val r = Dedup.cdcShareStats(df, minSize = 32, avgBits = 6, maxSize = 1024)
-      .collect().map(x => x.getAs[Long]("doc_id") -> x).toMap
-    assert(r.keySet == Set(1L, 2L, 3L, 4L, 5L, 6L)) // accounting keeps all rows
-    for (id <- Seq(5L, 6L)) {
-      assert(r(id).getAs[Long]("n_chunks") == 0L &&
-        r(id).getAs[Long]("shared_frac_e6") == 0L)
-    }
-    // the two documents sharing a 2000-word middle reclaim most of it
-    for (id <- Seq(1L, 2L)) {
-      val frac = r(id).getAs[Long]("shared_frac_e6")
-      assert(frac > 500000L, s"doc $id shared_frac_e6 $frac")
-      assert(r(id).getAs[Long]("shared_bytes") > 0L)
-      assert(r(id).getAs[Long]("shared_bytes") <= r(id).getAs[Long]("n_bytes"))
-    }
-    assert(r(3L).getAs[Long]("shared_chunks") == 0L)
-    assert(r(4L).getAs[Long]("shared_frac_e6") > 800000L) // self-dup
-  }
-
   test("repetition signals: dup lines and top-2-gram fraction, no shuffle") {
     val df = docsDf(
       (1L, "menu\nmenu\nmenu\nreal content line"),
@@ -1799,24 +1765,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("packCodes4bit: nibble roundtrip, 4 bytes for m=8, codegen'd (no UDF)") {
-    val df = Seq((1L, Seq(0, 15, 7, 8, 1, 2, 3, 4)), (2L, Seq(9, 9, 0, 0, 15, 15, 5, 10)))
-      .toDF("vec_id", "codes")
-    val packed = df.select(col("vec_id"), SimSearch.packCodes4bit(col("codes")).as("p"))
-    val sizes = packed.select(length(col("p"))).collect().map(_.getInt(0)).toSet
-    assert(sizes == Set(4), s"m=8 must pack to 4 bytes, got $sizes")
-    val back = packed.select(col("vec_id"), SimSearch.unpackCodes4bit(col("p")).as("codes"))
-      .collect().map(r => r.getAs[Long]("vec_id") ->
-        r.getAs[scala.collection.Seq[Int]]("codes").toSeq).toMap
-    assert(back(1L) == Seq(0, 15, 7, 8, 1, 2, 3, 4))
-    assert(back(2L) == Seq(9, 9, 0, 0, 15, 15, 5, 10))
-    // contract violations pack to NULL, never to silently-shifted bytes
-    val bad = Seq((1L, Seq(0, 16, 1, 2, 3, 4, 5, 6)), (2L, Seq(-1, 0, 1, 2, 3, 4, 5, 6)))
-      .toDF("vec_id", "codes")
-      .select(SimSearch.packCodes4bit(col("codes")).as("p")).collect()
-    assert(bad.forall(_.isNullAt(0)), "out-of-range codes must yield null")
-  }
-
   test("randomRotation: orthogonal, cosine-invariant (exact search identical), PQ stays above floor") {
     val dim = 32
     val rot = SimSearch.randomRotation(dim, 7L)
@@ -1932,17 +1880,6 @@ class OpsSpec extends AnyFunSuite {
       SimSearch.ivfPqEncode(cdf, idx), cdf, idx, 5, 10, nProbe = 4).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine")))
     assert(fromCodes.toSet == gotRows.toSet, "FromCodes must equal the wrapper path")
-    // index persists as parquet and loads back bit-identical: same search
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-idx").toString
-    SimSearch.saveIvfPqIndex(idx, dir, spark)
-    val loaded = SimSearch.loadIvfPqIndex(spark, dir)
-    assert(loaded.pq.subDim == idx.pq.subDim)
-    assert(loaded.ivf.centroids.map(_.toSeq).toSeq == idx.ivf.centroids.map(_.toSeq).toSeq)
-    assert(loaded.pq.centroids.map(_.map(_.toSeq).toSeq).toSeq ==
-      idx.pq.centroids.map(_.map(_.toSeq).toSeq).toSeq)
-    val viaLoaded = SimSearch.ivfPqTopK(cdf, loaded, 5, 10, nProbe = 4).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine")))
-    assert(viaLoaded.toSet == gotRows.toSet, "loaded index must search identically")
     // probe-limiting is real: a 1-probe search scans fewer candidates and
     // still returns k rows per query
     val narrow = SimSearch.ivfPqTopK(cdf, idx, 5, 10, nProbe = 1).collect()
@@ -1980,9 +1917,8 @@ class OpsSpec extends AnyFunSuite {
     val viaLoaded = SimSearch.opqIvfPqTopK(cdf, loaded, 5, 10, nProbe = 4).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine")))
     assert(viaLoaded.toSet == gotRows.toSet, "loaded composed index must search identically")
-    // wrong-family loads fail fast instead of silently dropping the
-    // rotation (serving a rotated-basis index against unrotated vectors)
-    intercept[IllegalArgumentException] { SimSearch.loadIvfPqIndex(spark, dir) }
+    // wrong-family loads fail fast instead of silently dropping a
+    // component (here the coarse centroids the residual codes are against)
     intercept[IllegalArgumentException] { SimSearch.loadOpq(spark, dir) }
   }
 
@@ -2964,21 +2900,6 @@ class OpsSpec extends AnyFunSuite {
     assert(got(1L)._1 == "unique line one\nunique line two")
   }
 
-  test("packCodes4bit: NULL codes array packs to NULL, not empty binary") {
-    val rows = Seq(org.apache.spark.sql.Row(1L, Seq(1, 2, 3, 4, 5, 6, 7, 8)),
-      org.apache.spark.sql.Row(2L, null))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows),
-      new org.apache.spark.sql.types.StructType()
-        .add("vec_id", "long")
-        .add("codes", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.IntegerType)))
-    val got = df.select(col("vec_id"), SimSearch.packCodes4bit(col("codes")).as("p"))
-      .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Array[Byte]]("p")).toMap
-    assert(got(1L) != null && got(1L).length == 4)
-    assert(got(2L) == null, "NULL array must pack to NULL (empty binary unpacks to an empty code list)")
-  }
-
   test("bpe: frozen golden counts reproduce with the committed merges table") {
     Bpe.golden.foreach { case (text, ws, bpe) =>
       val gotWs = if (text.trim.isEmpty) 0L else text.trim.split("\\s+").length.toLong
@@ -3160,18 +3081,6 @@ class OpsSpec extends AnyFunSuite {
     assert(b.count() == 3L)
     assert(b.collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap ==
       Map(1L -> true, 2L -> true, 3L -> false))
-  }
-
-  test("snapshotDelta appends exactly the new keys (merge ≡ from-scratch)") {
-    val c1 = docsDf((1L, "a"), (2L, "b"))
-    val c2 = docsDf((3L, "b"), (4L, "c"))
-    val s1 = Dedup.exactKeySnapshot(c1, Dedup.textHashKey)
-    val delta = Dedup.snapshotDelta(Dedup.exactKeySnapshot(c2, Dedup.textHashKey), s1)
-    val merged = s1.unionByName(delta).collect().map(_.getLong(0)).sorted
-    val scratch = Dedup.exactKeySnapshot(c1.unionByName(c2), Dedup.textHashKey)
-      .collect().map(_.getLong(0)).sorted
-    assert(merged.sameElements(scratch))
-    assert(delta.count() == 1L) // only "c" is new
   }
 
   test("minhashIncrementalFlags: any shared band vs snapshot, recomputed sequentially") {
@@ -4099,7 +4008,7 @@ class OpsSpec extends AnyFunSuite {
       .getAs[String]("status") == "unchanged")
   }
 
-  test("bm25TopDocsIndexed: value-identical to the scan path, snapshot roundtrip") {
+  test("bm25TopDocsIndexed: value-identical to the scan path") {
     val df = Seq(
       (1L, "apple banana apple cherry"), (2L, "apple"), (3L, "cherry cherry"),
       (4L, "banana date elephant fig grape"), (5L, ""),
@@ -4113,16 +4022,6 @@ class OpsSpec extends AnyFunSuite {
     // docLens must count the empty doc (N and avgdl parity with the scan)
     assert(docLens.count() == 6)
     assert(docLens.filter(col("doc_id") === 5L).collect()(0).getAs[Long]("dl") == 0L)
-    // parquet snapshot roundtrip: identical results from the reloaded index
-    val dir = java.nio.file.Files.createTempDirectory("textidx").toString
-    try {
-      TextOps.saveTextIndex(postings, docLens, dir)
-      val (p2, l2) = TextOps.loadTextIndex(spark, dir)
-      val re = TextOps.bm25TopDocsIndexed(p2, l2, q, topK = 10).collect().toSeq
-      assert(re == scan, "snapshot roundtrip changed results")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
     // all-unmatched query -> empty with the contract schema
     val none = TextOps.bm25TopDocsIndexed(postings, docLens, "zzz qqq")
     assert(none.count() == 0 &&

@@ -187,4 +187,12 @@ class PlanSpec extends AnyFunSuite {
       "q75_fuzzy_dedup_keep_best" -> 5,
       "q132_dup_clusters_star" -> 16))
   }
+
+  test("q125/q115/q92 family job budget: k-core, host communities and hyperball run no more Spark jobs than measured") {
+    assume(haveTestdata)
+    assertJobBudget(Map(
+      "q125_kcore" -> 11,
+      "q115_host_communities" -> 9,
+      "q92_harmonic_hyperball" -> 6))
+  }
 }
