@@ -1054,15 +1054,12 @@ object SparkEntry {
     }),
     "q126_jaccard_prefix" -> ((s, dir) =>
       // prefix-filtered all-pairs similarity self-join (SSJoin/PPJoin)
-      // via the measured-crossover dispatcher, IN ITS WINNING REGIME:
-      // round 5 moved the surface from t=0.5 (where the prefix machinery
-      // costs more than it saves at every measured scale and the
-      // dispatcher would just duplicate q21) to t=0.8, where the filter
-      // beats the plain join (BASELINE.md crossover table) and the
-      // driver gate genuinely exercises the PPJoin plan. Oracle: capped
-      // exact jaccard at 0.8 — value-identical by the lossless
-      // prefix-filter theorem
-      Dedup.ngramJaccardAuto(docs(s, dir), 0.8, maxDf = 100)),
+      // IN ITS WINNING REGIME: at t=0.8 the filter beats the plain join,
+      // while at t=0.5 the prefix machinery costs more than it saves at
+      // every measured scale (BASELINE.md crossover table) and the plain
+      // join is q21's. Oracle: capped exact jaccard at 0.8 —
+      // value-identical by the lossless prefix-filter theorem
+      Dedup.ngramJaccardPrefix(docs(s, dir), 0.8, maxDf = 100)),
     "q124_triangles" -> ((s, dir) =>
       // per-node triangle count + clustering coefficient (degree-ordered
       // node-iterator) over the synthesized chain+spokes+clique doc

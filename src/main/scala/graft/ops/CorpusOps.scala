@@ -1070,7 +1070,7 @@ object CorpusOps {
       max(col("outw")).as("mx"),
       coalesce(sum(when(col("seed") && col("outw") === 0, 1L).otherwise(0L)),
         lit(0L)).as("dseeds")))
-    val stats = observed(statsObs) {
+    val stats = Checkpoints.observed(statsObs) {
       base.agg(count(lit(1)).as("n"),
         coalesce(sum(when(col("seed"), 1L).otherwise(0L)), lit(0L)).as("s"),
         max(col("outw")).as("mx"),
@@ -1122,12 +1122,6 @@ object CorpusOps {
       col("seed").as("is_seed"), col("r").as("rank_e12"),
       (col("r") / lit(1e12)).as("rank"))
   }
-
-  /** fused-scalar observation read — ONE definition for every loop, in
-    * [[Checkpoints.observed]]. */
-  private def observed(obs: org.apache.spark.sql.Observation)(
-      fallback: => org.apache.spark.sql.Row): org.apache.spark.sql.Row =
-    Checkpoints.observed(obs)(fallback)
 
   /** HITS hubs & authorities (Kleinberg, JACM 1999) over the host link
     * graph — the classic complement to [[hostRank]]: PageRank says
@@ -1250,7 +1244,7 @@ object CorpusOps {
         .agg(sum(col("od")).as("od"), sum(col("id")).as("id"))
         .observe(statsObs, count(lit(1)).as("n"),
           max(greatest(col("od"), col("id"))).as("maxDeg")))
-    val stats = observed(statsObs) {
+    val stats = Checkpoints.observed(statsObs) {
       universe.agg(count(lit(1)).as("n"),
         max(greatest(col("od"), col("id"))).as("maxDeg")).head()
     }

@@ -784,25 +784,6 @@ object Dedup {
     Checkpoints.eager(out) { caches.foreach(_.unpersist()) }
   }
 
-  /** threshold-gated dispatch between the two exact all-pairs jaccard
-    * plans — value-identical either way (the lossless prefix-filter
-    * theorem; one oracle gates both). The round-5 crossover campaign
-    * (BASELINE.md: sf0.1 corpus replicated x1/x4/x8, interleaved A/B
-    * medians) showed the PPJoin prefix filter pays for its df-join and
-    * two ranking windows ONLY in the high-threshold regime: at t=0.8 a
-    * document indexes ~20% of its grams and the filter won (13.3s vs
-    * 17.6s at 20k docs), while at t=0.5 it indexes ~50% and LOST at
-    * every measured scale (1.7-2.1x) — the saved candidate work never
-    * covers the two extra corpus-postings passes. Dispatch at
-    * `prefixMinThreshold` (default 0.7, between the measured regimes). */
-  def ngramJaccardAuto(
-      documents: DataFrame,
-      threshold: Double = 0.8,
-      maxDf: Int = 0,
-      prefixMinThreshold: Double = 0.7): DataFrame =
-    if (threshold >= prefixMinThreshold) ngramJaccardPrefix(documents, threshold, maxDf)
-    else ngramJaccardAllPairs(documents, threshold, maxDf)
-
   /** lazy plan behind [[ngramJaccardPrefix]]; returns (result,
     * caches-to-unpersist). */
   private[graft] def ngramJaccardPrefixLazy(

@@ -164,96 +164,17 @@ object SimSearch {
 
   // ---- IVF (inverted-file) index ---------------------------------------------
 
-  /** deterministic Lloyd k-means over the embedding column. Init = the k
-    * lowest-vec_id vectors (no RNG, partition-invariant); empty clusters
-    * keep their previous centroid. Training frames here are bounded
-    * hash-samples, so the normal path collects the sample ONCE and runs
-    * Lloyd driver-locally (one job instead of iters+1 cluster round-trips
-    * — see `collectTraining`); frames above the local cap keep the
-    * distributed loop: one executor-local assignment pass against
-    * BROADCAST centroids per iteration + k*dim tiny partial rows to the
-    * driver, never the vectors themselves. */
+  /** deterministic Lloyd k-means over the embedding column, trained
+    * driver-locally after one collect (see `collectTraining`). Init = the
+    * k lowest-vec_id vectors (no RNG); empty clusters keep their previous
+    * centroid. The canonical vec_id order of the collected frame makes
+    * the centroids partition-invariant bit for bit. */
   private[graft] def kmeansCentroids(
       embeddings: DataFrame,
       k: Int,
       iters: Int,
       dim: Int): Array[Array[Float]] =
-    collectTraining(embeddings) match {
-      case Some(xs) => localLloydMulti(xs, k, iters, 1, dim).head
-      case None => kmeansCentroidsDistributed(embeddings, k, iters, dim)
-    }
-
-  // private[graft] so the OpsSpec parity gate can compare the two
-  // trainers directly on one frame
-  private[graft] def kmeansCentroidsDistributed(
-      embeddings: DataFrame,
-      k: Int,
-      iters: Int,
-      dim: Int): Array[Array[Float]] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    // the training loop scans the corpus once per iteration, and each
-    // assignment pass ends in a collect (an action) — persist the projected
-    // (id, embedding) frame so iterations 2..n read cached blocks instead
-    // of re-scanning the source `iters` times; released before returning
-    val e = embeddings.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // init = the k lowest-vec_id vectors truncated/zero-padded to exactly
-    // `dim` — the SAME init as the local path (localLloydMulti), so the two
-    // trainers agree when the embedding length differs from `dim`:
-    // full-length init vectors would let tail dims beyond `dim` steer
-    // iteration-1 assignments, and embeddings shorter than `dim` would
-    // overflow the update loop below
-    var centroids: Array[Array[Float]] =
-      e.orderBy("vec_id").limit(k).collect().map { case (_, emb) =>
-        Array.tabulate(dim)(i => if (i < emb.length) emb(i) else 0f)
-      }
-    var it = 0
-    while (it < iters) {
-      val bc = spark.sparkContext.broadcast(centroids)
-      // per-partition accumulators: each task reduces its rows into k
-      // (sum[dim], count) cells, so the data movement per iteration is
-      // k*partitions tiny rows — NOT n*dim exploded rows (a posexplode +
-      // groupBy here would shuffle the whole corpus every iteration)
-      val partials = e.mapPartitions { rows =>
-        val cents = bc.value
-        val sums = Array.ofDim[Double](cents.length, dim)
-        val counts = new Array[Long](cents.length)
-        rows.foreach { case (_, emb) =>
-          val c = nearestCentroid(emb, cents)
-          counts(c) += 1
-          var i = 0
-          val n = math.min(dim, emb.length)
-          while (i < n) { sums(c)(i) += emb(i); i += 1 }
-        }
-        (0 until cents.length).iterator
-          .filter(c => counts(c) > 0)
-          .map(c => (c, counts(c), sums(c).toSeq))
-      }.collect()
-      val next = centroids.map(_.clone())
-      val totSums = Array.ofDim[Double](centroids.length, dim)
-      val totCounts = new Array[Long](centroids.length)
-      partials.foreach { case (c, n, s) =>
-        totCounts(c) += n
-        var i = 0
-        while (i < dim) { totSums(c)(i) += s(i); i += 1 }
-      }
-      var c = 0
-      while (c < centroids.length) {
-        if (totCounts(c) > 0) {
-          var i = 0
-          while (i < dim) { next(c)(i) = (totSums(c)(i) / totCounts(c)).toFloat; i += 1 }
-        }
-        c += 1
-      }
-      centroids = next
-      bc.destroy()
-      it += 1
-    }
-    e.unpersist()
-    centroids
-  }
+    localLloydMulti(collectTraining(embeddings), k, iters, 1, dim).head
 
   private[graft] def nearestCentroid(emb: Seq[Float], cents: Array[Array[Float]]): Int = {
     var best = 0
@@ -301,9 +222,8 @@ object SimSearch {
       iters: Int = 3,
       dim: Int = 64,
       trainSample: Long = 200000L): IvfIndex = {
-    val n = embeddings.count()
-    IvfIndex(kmeansCentroids(hashSample(embeddings, n, trainSample),
-      autoNlist(n, nCentroids), iters, dim))
+    val (sample, n) = hashSample(embeddings, trainSample)
+    IvfIndex(kmeansCentroids(sample, autoNlist(n, nCentroids), iters, dim))
   }
 
   /** nlist sizing shared by `buildIvfIndex` and `buildIvfPqIndex` (ONE
@@ -323,51 +243,58 @@ object SimSearch {
     else math.max(4, math.min(nlist, (nlist + 3) / 4))
 
   /** deterministic modulus sample of at most ~trainSample rows (no RNG:
-    * stable across retries); ceil division so the expected sample is
-    * <= trainSample (floor would keep 100% of the corpus for n in
-    * (trainSample, 2*trainSample)). Falls back to the full frame if a
-    * pathological hash draw leaves the sample empty (k-means cannot init
-    * from zero vectors). */
-  private def hashSample(embeddings: DataFrame, n: Long, trainSample: Long): DataFrame =
-    if (n <= trainSample) embeddings
+    * stable across retries), returned with the corpus size n; ceil
+    * division so the expected sample is <= trainSample (floor would keep
+    * 100% of the corpus for n in (trainSample, 2*trainSample)). Falls
+    * back to the full frame if a pathological hash draw leaves the sample
+    * empty (k-means cannot init from zero vectors). Every index builder
+    * samples here, so a `trainSample` above the driver training cap
+    * fails before any job runs. */
+  private def hashSample(embeddings: DataFrame, trainSample: Long): (DataFrame, Long) = {
+    require(trainSample <= MaxLocalTrainRows,
+      s"trainSample $trainSample exceeds the $MaxLocalTrainRows-row driver training cap")
+    val n = embeddings.count()
+    if (n <= trainSample) (embeddings, n)
     else {
       val keepOneIn = (n + trainSample - 1L) / trainSample
       val sampled = embeddings.filter(pmod(xxhash64(col("vec_id")), lit(keepOneIn)) === 0)
-      if (sampled.isEmpty) embeddings else sampled
+      (if (sampled.isEmpty) embeddings else sampled, n)
     }
+  }
 
   // ---- driver-local training over the bounded sample ----------------------------
 
   /** hard cap on rows `collectTraining` will pull to the driver (~300 MB
-    * of 64-dim vectors): every index builder trains on a hashSample
-    * bounded by `trainSample` (default 200k), so the cap only trips when
-    * a caller explicitly asks for a multi-million-row training set — the
-    * builders then keep the distributed Lloyd loop. */
+    * of 64-dim vectors). `hashSample` refuses a `trainSample` above it,
+    * so only malformed input reaches it: duplicated or null vec_ids make
+    * the modulus sample keep all rows of an id or none, and an empty draw
+    * falls back to the full frame. */
   private val MaxLocalTrainRows = 1000000
 
   /** collect a bounded training frame to the driver in canonical vec_id
-    * order, or None above the cap. Index training is sample-bounded BY
-    * DESIGN, so ONE collect replaces the (iters+1) cluster round-trips
-    * per Lloyd loop — the faiss lifecycle (train on one node, serve
-    * distributed); at 1000 executors the training latency is driver
-    * arithmetic instead of iters sequential job launches. Canonical
-    * ordering also makes the trained centroids partition-invariant by
-    * construction rather than by benign float reassociation. */
-  private def collectTraining(embeddings: DataFrame): Option[Array[Array[Float]]] = {
+    * order; throws above `MaxLocalTrainRows`. Index training is
+    * sample-bounded BY DESIGN, so ONE collect replaces the (iters+1)
+    * cluster round-trips per Lloyd loop — the faiss lifecycle (train on
+    * one node, serve distributed); at 1000 executors the training latency
+    * is driver arithmetic instead of iters sequential job launches.
+    * Canonical ordering also makes the trained centroids
+    * partition-invariant by construction. */
+  private def collectTraining(embeddings: DataFrame): Array[Array[Float]] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    // cap gate = a count over a transient cache, NOT a limit(cap+1)
-    // collect: an over-cap frame costs one extra executor-side
-    // materialization (the distributed trainer re-persists its own
-    // projection) instead of a cap-sized driver pull discarded on the
-    // spot, and a count cannot silently truncate when a caller passes a
-    // cap beyond the Int.MaxValue collect limit
+    // cap check = a count over a transient cache, NOT a limit(cap+1)
+    // collect: an over-cap frame costs no cap-sized driver pull discarded
+    // on the spot, and a count cannot silently truncate past the
+    // Int.MaxValue collect limit
     val e = embeddings.select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Seq[Float])]
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      if (e.count() <= MaxLocalTrainRows) Some(e.collect().sortBy(_._1).map(_._2.toArray))
-      else None
+      val rows = e.count()
+      require(rows <= MaxLocalTrainRows,
+        s"training frame has $rows rows, above the $MaxLocalTrainRows-row driver cap; " +
+          "a trainSample-bounded sample only grows past it on duplicated or null vec_ids")
+      e.collect().sortBy(_._1).map(_._2.toArray)
     } finally e.unpersist()
   }
 
@@ -389,9 +316,9 @@ object SimSearch {
     futs.map(Await.result(_, Duration.Inf))
   }
 
-  /** driver-local Lloyd over the collected sample — the same math as the
-    * distributed loop (lowest-vec_id init, per-cell mean update, empty
-    * clusters keep their previous centroid), chunk partials merged in
+  /** driver-local Lloyd over the collected sample: lowest-vec_id init
+    * (truncated or zero-padded to subDim), per-cell mean update, empty
+    * clusters keep their previous centroid; chunk partials merged in
     * chunk order. m subquantizers over subDim-wide slices; m=1 with
     * subDim=dim is plain k-means. */
   private[graft] def localLloydMulti(
@@ -651,10 +578,13 @@ object SimSearch {
 
   /** train a PQ codebook: the embedding is split into `m` contiguous
     * subvectors and each gets an independent deterministic k-means
-    * quantizer (trained on the same bounded hash-sample as IVF). Memory
-    * per encoded vector is m*ceil(log2 k)/8 bytes — m=8,k=16 compresses a
-    * 64-dim float32 vector 64x (256 -> 4 bytes packed; codes are emitted
-    * unpacked as array<int> here, the sink packs). */
+    * quantizer (trained on the same bounded hash-sample as IVF). All m
+    * quantizers train in one driver-local Lloyd pass over the collected
+    * sample — identical math to m `kmeansCentroids` runs over the slices
+    * (same lowest-k init, same mean updates). Memory per encoded vector
+    * is m*ceil(log2 k)/8 bytes — m=8,k=16 compresses a 64-dim float32
+    * vector 64x (256 -> 4 bytes packed; codes are emitted unpacked as
+    * array<int> here, the sink packs). */
   def buildPqCodebook(
       embeddings: DataFrame,
       m: Int = 8,
@@ -664,96 +594,8 @@ object SimSearch {
       trainSample: Long = 200000L): PqCodebook = {
     require(dim % m == 0, s"dim $dim must divide into m=$m subvectors")
     val subDim = dim / m
-    val training = hashSample(embeddings, embeddings.count(), trainSample)
-    PqCodebook(subDim, kmeansCentroidsMulti(training, k, iters, m, subDim))
-  }
-
-  /** train ALL m subvector quantizers simultaneously: identical math to m
-    * independent `kmeansCentroids` runs over the slices (same lowest-k
-    * init, same mean updates — verified by the PQ OpsSpec gates). Bounded
-    * samples (the normal case) train driver-locally after one collect;
-    * above the cap the distributed loop scans the sample once per
-    * iteration for all m quantizers at once. */
-  private def kmeansCentroidsMulti(
-      embeddings: DataFrame,
-      k: Int,
-      iters: Int,
-      m: Int,
-      subDim: Int): Array[Array[Array[Float]]] =
-    collectTraining(embeddings) match {
-      case Some(xs) => localLloydMulti(xs, k, iters, m, subDim)
-      case None => kmeansCentroidsMultiDistributed(embeddings, k, iters, m, subDim)
-    }
-
-  private[graft] def kmeansCentroidsMultiDistributed(
-      embeddings: DataFrame,
-      k: Int,
-      iters: Int,
-      m: Int,
-      subDim: Int): Array[Array[Array[Float]]] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val e = embeddings.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // init: the k lowest-vec_id vectors, sliced per subvector (identical
-    // to each slice-run's own lowest-k init)
-    val initRows = e.orderBy("vec_id").limit(k).collect().map(_._2)
-    var cents: Array[Array[Array[Float]]] = Array.tabulate(m) { j =>
-      initRows.map { emb =>
-        Array.tabulate(subDim)(i =>
-          if (j * subDim + i < emb.length) emb(j * subDim + i) else 0f)
-      }
-    }
-    var it = 0
-    while (it < iters) {
-      val bc = spark.sparkContext.broadcast(cents)
-      val partials = e.mapPartitions { rows =>
-        val cs = bc.value
-        val sums = Array.ofDim[Double](m, k, subDim)
-        val counts = Array.ofDim[Long](m, k)
-        rows.foreach { case (_, emb) =>
-          var j = 0
-          while (j < m) {
-            val c = nearestSub(emb, j * subDim, cs(j))
-            counts(j)(c) += 1
-            var i = 0
-            val off = j * subDim
-            while (i < subDim && off + i < emb.length) { sums(j)(c)(i) += emb(off + i); i += 1 }
-            j += 1
-          }
-        }
-        (for { j <- 0 until m; c <- 0 until k if counts(j)(c) > 0 }
-          yield (j, c, counts(j)(c), sums(j)(c).toSeq)).iterator
-      }.collect()
-      bc.destroy() // same per-iteration cleanup as kmeansCentroids
-      val next = cents.map(_.map(_.clone()))
-      val totSums = Array.ofDim[Double](m, k, subDim)
-      val totCounts = Array.ofDim[Long](m, k)
-      partials.foreach { case (j, c, n, s) =>
-        totCounts(j)(c) += n
-        var i = 0
-        while (i < subDim) { totSums(j)(c)(i) += s(i); i += 1 }
-      }
-      var j = 0
-      while (j < m) {
-        var c = 0
-        while (c < k) {
-          if (totCounts(j)(c) > 0) {
-            var i = 0
-            while (i < subDim) {
-              next(j)(c)(i) = (totSums(j)(c)(i) / totCounts(j)(c)).toFloat; i += 1
-            }
-          }
-          c += 1
-        }
-        j += 1
-      }
-      cents = next
-      it += 1
-    }
-    e.unpersist()
-    cents
+    val (training, _) = hashSample(embeddings, trainSample)
+    PqCodebook(subDim, localLloydMulti(collectTraining(training), k, iters, m, subDim))
   }
 
   /** squared L2 of one subvector slice against a centroid */
@@ -910,9 +752,10 @@ object SimSearch {
     * structure). Both snapshots are tiny and broadcastable. */
   final case class IvfPqIndex(ivf: IvfIndex, pq: PqCodebook)
 
-  /** vector minus its coarse centroid (zero-padded) — ONE definition used
-    * by both codebook training and serving-time encode: the PQ codebook
-    * only matches what ivfPqEncode produces if these are byte-identical */
+  /** vector minus its coarse centroid (zero-padded), as serving-time
+    * encode computes it; `buildIvfPqIndex` repeats the same subtraction
+    * over primitive arrays — the PQ codebook only matches what
+    * ivfPqEncode produces if the two are byte-identical */
   private def residual(emb: Seq[Float], cent: Array[Float]): Seq[Float] =
     emb.toArray.zipWithIndex.map { case (x, i) =>
       x - (if (i < cent.length) cent(i) else 0f) }.toSeq
@@ -926,59 +769,32 @@ object SimSearch {
       dim: Int = 64,
       trainSample: Long = 200000L): IvfPqIndex = {
     require(dim % m == 0, s"dim $dim must divide into m=$m subvectors")
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     // count ONCE, sample ONCE: the coarse training, the residual pass and
     // the PQ training all read the same sample (re-sampling the sample
     // would also be wrong — modulus samples of the same hash do not
     // compose: a second keepOneIn either keeps ~100% or a correlated
     // biased half). nlist auto-sizing sees the TRUE corpus size.
-    val n = embeddings.count()
-    val nlist = autoNlist(n, nCentroids)
-    val sampleDf = hashSample(embeddings, n, trainSample)
-    collectTraining(sampleDf) match {
-      case Some(xs) =>
-        // bounded sample: coarse train, residual pass and PQ train are all
-        // driver arithmetic after the one collect (the faiss build shape)
-        val ivfCents = localLloydMulti(xs, nlist, iters, 1, dim).head
-        val residuals = new Array[Array[Float]](xs.length)
-        parChunks(xs.length) { (lo, hi) =>
-          var idx = lo
-          while (idx < hi) {
-            val x = xs(idx)
-            val emb = scala.collection.immutable.ArraySeq.unsafeWrapArray(x)
-            val cent = ivfCents(nearestCentroid(emb, ivfCents))
-            // same zero-padded subtraction as `residual` — the codebook
-            // only matches what ivfPqEncode produces if these agree
-            residuals(idx) = Array.tabulate(x.length)(i =>
-              x(i) - (if (i < cent.length) cent(i) else 0f))
-            idx += 1
-          }
-          ()
-        }
-        IvfPqIndex(IvfIndex(ivfCents),
-          PqCodebook(dim / m, localLloydMulti(residuals, k, iters, m, dim / m)))
-      case None =>
-        val sample = sampleDf
-          .select(col("vec_id").cast("long"), col("embedding"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // straight to the distributed trainers: the sample is known to be
-        // over the local cap, re-probing collectTraining would waste a pass
-        val ivf = IvfIndex(kmeansCentroidsDistributed(sample, nlist, iters, dim))
-        val bc = spark.sparkContext.broadcast(ivf.centroids)
-        val residuals = sample
-          .as[(Long, Seq[Float])]
-          .mapPartitions { it =>
-            val cents = bc.value
-            it.map { case (id, emb) => (id, residual(emb, cents(nearestCentroid(emb, cents)))) }
-          }
-          .toDF("vec_id", "embedding")
-        // residuals are already sample-sized: train directly, no re-sampling
-        val pq = PqCodebook(dim / m, kmeansCentroidsMultiDistributed(residuals, k, iters, m, dim / m))
-        sample.unpersist()
-        bc.destroy()
-        IvfPqIndex(ivf, pq)
+    val (sample, n) = hashSample(embeddings, trainSample)
+    val xs = collectTraining(sample)
+    // coarse train, residual pass and PQ train are all driver arithmetic
+    // after the one collect (the faiss build shape)
+    val ivfCents = localLloydMulti(xs, autoNlist(n, nCentroids), iters, 1, dim).head
+    val residuals = new Array[Array[Float]](xs.length)
+    parChunks(xs.length) { (lo, hi) =>
+      var idx = lo
+      while (idx < hi) {
+        val x = xs(idx)
+        val emb = scala.collection.immutable.ArraySeq.unsafeWrapArray(x)
+        val cent = ivfCents(nearestCentroid(emb, ivfCents))
+        // same zero-padded subtraction as `residual`
+        residuals(idx) = Array.tabulate(x.length)(i =>
+          x(i) - (if (i < cent.length) cent(i) else 0f))
+        idx += 1
+      }
+      ()
     }
+    IvfPqIndex(IvfIndex(ivfCents),
+      PqCodebook(dim / m, localLloydMulti(residuals, k, iters, m, dim / m)))
   }
 
   /** deterministic random ROTATION for PQ (the random-rotation baseline of
@@ -1058,12 +874,12 @@ object SimSearch {
     * (solved with the LAPACK SVD that ships in Spark's breeze jars —
     * a dim x dim matrix, driver-side, microseconds at embedding dims).
     *
-    * Scale shape: every heavy pass is executor-local over the SAME
-    * bounded persisted hash-sample the other index builders train on;
-    * the only driver state is the dim^2 correlation matrix (32 KB at
-    * dim=64) and the codebook — both broadcastable. Deployment trains
-    * ONCE per corpus and stores (rotation, codebook) as a snapshot;
-    * rotate at ingest like the random-rotation baseline.
+    * Scale shape: the whole alternation is driver arithmetic over the
+    * SAME bounded hash-sample the other index builders train on,
+    * collected once; each pass keeps only the dim^2 correlation matrix
+    * (32 KB at dim=64) and the codebook beside the sample. Deployment
+    * trains ONCE per corpus and stores (rotation, codebook) as a
+    * snapshot; rotate at ingest like the random-rotation baseline.
     *
     * `mseHistory` records per-iteration reconstruction MSE; its head is
     * the RANDOM-ROTATION baseline (iteration 0 = seeded random R with a
@@ -1085,51 +901,25 @@ object SimSearch {
       seed: Long = 42L): OpqResult = {
     require(dim % m == 0, s"dim $dim must divide into m=$m subvectors")
     val subDim = dim / m
-    val sampleDf = hashSample(embeddings, embeddings.count(), trainSample)
-    collectTraining(sampleDf) match {
-      case Some(xs) =>
-        // the whole alternation is driver arithmetic over the collected
-        // sample: zero cluster round-trips after the one collect (vs
-        // ~opqIters*(kmeansIters+2) jobs through the distributed loop)
-        var rot = randomRotation(dim, seed)
-        def retrain(r: Array[Array[Float]]): PqCodebook =
-          PqCodebook(subDim, localLloydMulti(rotateLocal(xs, r), k, kmeansIters, m, subDim))
-        var cb = retrain(rot)
-        val mses = scala.collection.mutable.ArrayBuffer.empty[Double]
-        var it = 0
-        while (it < opqIters) {
-          val (mMat, se, n) = opqPassLocal(xs, rot, cb, dim, needM = true)
-          mses += se / math.max(n, 1L)
-          rot = procrustesRotation(mMat, dim)
-          cb = retrain(rot)
-          it += 1
-        }
-        val (_, seF, nF) = opqPassLocal(xs, rot, cb, dim, needM = false)
-        mses += seF / math.max(nF, 1L)
-        OpqResult(rot, cb, mses.toSeq)
-      case None =>
-        val sample = sampleDf
-          .select(col("vec_id").cast("long"), col("embedding"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          var rot = randomRotation(dim, seed)
-          var cb = PqCodebook(subDim, kmeansCentroidsMultiDistributed(
-            rotateEmbeddings(sample, rot), k, kmeansIters, m, subDim))
-          val mses = scala.collection.mutable.ArrayBuffer.empty[Double]
-          var it = 0
-          while (it < opqIters) {
-            val (mMat, se, n) = opqPass(sample, rot, cb, dim, needM = true)
-            mses += se / math.max(n, 1L)
-            rot = procrustesRotation(mMat, dim)
-            cb = PqCodebook(subDim, kmeansCentroidsMultiDistributed(
-              rotateEmbeddings(sample, rot), k, kmeansIters, m, subDim))
-            it += 1
-          }
-          val (_, seF, nF) = opqPass(sample, rot, cb, dim, needM = false)
-          mses += seF / math.max(nF, 1L)
-          OpqResult(rot, cb, mses.toSeq)
-        } finally sample.unpersist()
+    val (sample, _) = hashSample(embeddings, trainSample)
+    // zero cluster round-trips after the one collect
+    val xs = collectTraining(sample)
+    var rot = randomRotation(dim, seed)
+    def retrain(r: Array[Array[Float]]): PqCodebook =
+      PqCodebook(subDim, localLloydMulti(rotateLocal(xs, r), k, kmeansIters, m, subDim))
+    var cb = retrain(rot)
+    val mses = scala.collection.mutable.ArrayBuffer.empty[Double]
+    var it = 0
+    while (it < opqIters) {
+      val (mMat, se, n) = opqPassLocal(xs, rot, cb, dim, needM = true)
+      mses += se / math.max(n, 1L)
+      rot = procrustesRotation(mMat, dim)
+      cb = retrain(rot)
+      it += 1
     }
+    val (_, seF, nF) = opqPassLocal(xs, rot, cb, dim, needM = false)
+    mses += seF / math.max(nF, 1L)
+    OpqResult(rot, cb, mses.toSeq)
   }
 
   /** driver-local counterpart of `opqPass` over the collected sample —
@@ -1206,13 +996,15 @@ object SimSearch {
     se / math.max(n, 1L)
   }
 
-  /** one distributed pass: per vector x, rotate (rx = R x), PQ-encode rx,
-    * reconstruct y^; accumulate squared error ||rx - y^||^2 and (when
-    * `needM` — the Procrustes update needs it, the MSE metric does not:
-    * the M accumulation is O(dim^2) per vector, as costly as the rotation
-    * itself) the correlation M += x y^T. Partials are one dim^2 array per
+  /** one distributed pass over an arbitrary (unsampled) frame, the
+    * instrument behind `pqReconstructionMse`: per vector x, rotate
+    * (rx = R x), PQ-encode rx, reconstruct y^; accumulate squared error
+    * ||rx - y^||^2 and (when `needM` — the Procrustes update needs it,
+    * the MSE metric does not: the M accumulation is O(dim^2) per vector,
+    * as costly as the rotation itself) the correlation M += x y^T, with
+    * the same math as `opqPassLocal`. Partials are one dim^2 array per
     * partition, summed on the driver in partition order (deterministic
-    * for a fixed layout, same contract as the k-means partial sums). */
+    * for a fixed layout). */
   private[graft] def opqPass(
       sample: DataFrame,
       rot: Array[Array[Float]],
@@ -1383,9 +1175,8 @@ object SimSearch {
     // O(n*dim^2) matmul inside buildIvfPqIndex's own count() and
     // hashSample passes for rows that never train anything. nlist
     // auto-sizing still sees the TRUE corpus size, not the sample's.
-    val n = embeddings.count()
+    val (sample, n) = hashSample(embeddings, trainSample)
     val nlist = autoNlist(n, nCentroids)
-    val sample = hashSample(embeddings, n, trainSample)
     val opq = trainOpq(sample, m, k, dim, opqIters, iters, trainSample)
     // hashSample(sample) inside the builder is the identity (sample size
     // <= trainSample), so modulus samples never compose

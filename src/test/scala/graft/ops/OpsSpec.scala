@@ -883,21 +883,6 @@ class OpsSpec extends AnyFunSuite {
     assert(flags(4L) == true && flags(5L) == true, s"real dups must flag: $flags")
   }
 
-  test("ngramJaccardAuto: dispatches by threshold, value-identical on both routes") {
-    val df = Seq(
-      (1L, "a b c d e f g h"), (2L, "a b c d e f g x"),
-      (3L, "p q r s t u v w"), (4L, "p q r s t u v w"),
-      (5L, "z z z y y y x x")).toDF("doc_id", "text")
-    def pairs(x: org.apache.spark.sql.DataFrame) = x.collect()
-      .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
-        r.getAs[Double]("jaccard"))).toSet
-    for (t <- Seq(0.5, 0.8)) {
-      val auto = pairs(Dedup.ngramJaccardAuto(df, t))
-      assert(auto == pairs(Dedup.ngramJaccardAllPairs(df, t)), s"t=$t vs allpairs")
-      assert(auto == pairs(Dedup.ngramJaccardPrefix(df, t)), s"t=$t vs prefix")
-    }
-  }
-
   test("prefix-filtered jaccard: value-identical to the full inverted index") {
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
       (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
@@ -1396,83 +1381,40 @@ class OpsSpec extends AnyFunSuite {
     val ivf2 = SimSearch.ivfTopK(emb.repartition(7), nQueries = 3, k = 5,
       nCentroids = 8, nProbe = 4, iters = 3, dim = 8).collect()
     assert(ivf.map(_.toString).sorted.toSeq == ivf2.map(_.toString).sorted.toSeq)
-    // centroids are partition-invariant — asserted on the DISTRIBUTED
-    // trainer directly (the public entry takes the trivially-invariant
-    // driver-local path on a 300-row frame; the partial-sum merge this
-    // guards lives in the over-cap loop)
-    // (tight float tolerance, not bit-equality: the per-partition partial
-    // sums merge in partition order, so reassociation can move the last
-    // ULP — the canonical-order local path is where bit-identity holds)
-    val c1 = SimSearch.kmeansCentroidsDistributed(emb, 8, 3, 8)
-    val c2 = SimSearch.kmeansCentroidsDistributed(emb.repartition(5), 8, 3, 8)
-    for (c <- c1.indices; i <- 0 until 8)
-      assert(math.abs(c1(c)(i) - c2(c)(i)) <=
-        1e-6f * math.max(1f, math.abs(c2(c)(i))),
-        s"centroid $c dim $i: ${c1(c)(i)} vs ${c2(c)(i)}")
-  }
-
-  test("kmeans trainers: driver-local path agrees with the distributed loop") {
-    // bounded samples train driver-locally (one collect, zero Lloyd
-    // round-trips); the distributed loop remains the over-cap fallback.
-    // Same init rule and same mean updates — only the double-summation
-    // order differs — so centroids must agree to float tolerance
-    val emb = (0 until 300).map { i =>
-      val v = Array.tabulate(8)(j => math.sin(i * 0.7 + j).toFloat)
-      (i.toLong, v.toSeq)
-    }.toDF("vec_id", "embedding")
-    val local = SimSearch.kmeansCentroids(emb, 8, 3, 8)
-    val dist = SimSearch.kmeansCentroidsDistributed(emb, 8, 3, 8)
-    assert(local.length == dist.length)
-    for (c <- local.indices; i <- 0 until 8)
-      assert(math.abs(local(c)(i) - dist(c)(i)) <=
-        1e-4f * math.max(1f, math.abs(dist(c)(i))),
-        s"centroid $c dim $i: local ${local(c)(i)} vs distributed ${dist(c)(i)}")
+    // centroids are partition-invariant bit for bit: the trainer collects
+    // its frame in canonical vec_id order before any float math
+    val c1 = SimSearch.kmeansCentroids(emb, 8, 3, 8)
+    val c2 = SimSearch.kmeansCentroids(emb.repartition(5), 8, 3, 8)
+    assert(c1.map(_.toSeq).toSeq == c2.map(_.toSeq).toSeq)
   }
 
   test("kmeans trainers agree when embedding length differs from dim") {
-    // LONGER embeddings (len 8, dim 4): the distributed init must
-    // truncate to dim like the local path — full-length init vectors
-    // would let tail dims steer iteration-1 assignments on one side only
-    val emb8 = (0 until 200).map { i =>
-      (i.toLong, Array.tabulate(8)(j => math.sin(i * 1.3 + j).toFloat).toSeq)
-    }.toDF("vec_id", "embedding")
-    val l8 = SimSearch.kmeansCentroids(emb8, 4, 3, 4)
-    val d8 = SimSearch.kmeansCentroidsDistributed(emb8, 4, 3, 4)
-    for (c <- l8.indices; i <- 0 until 4)
-      assert(math.abs(l8(c)(i) - d8(c)(i)) <= 1e-4f * math.max(1f, math.abs(d8(c)(i))),
-        s"len>dim centroid $c dim $i: ${l8(c)(i)} vs ${d8(c)(i)}")
-    // SHORTER embeddings (len 3, dim 4): the distributed loop used to
-    // AIOOBE writing dim entries into a len-3 init vector; both paths
-    // must zero-pad and agree
-    val emb3 = (0 until 200).map { i =>
-      (i.toLong, Array.tabulate(3)(j => math.cos(i * 0.9 + j).toFloat).toSeq)
-    }.toDF("vec_id", "embedding")
-    val l3 = SimSearch.kmeansCentroids(emb3, 4, 3, 4)
-    val d3 = SimSearch.kmeansCentroidsDistributed(emb3, 4, 3, 4)
-    for (c <- l3.indices; i <- 0 until 4)
-      assert(math.abs(l3(c)(i) - d3(c)(i)) <= 1e-4f * math.max(1f, math.abs(d3(c)(i))),
-        s"len<dim centroid $c dim $i: ${l3(c)(i)} vs ${d3(c)(i)}")
+    def cents(rows: Seq[(Long, Array[Float])]) = SimSearch.kmeansCentroids(
+      rows.map { case (i, v) => (i, v.toSeq) }.toDF("vec_id", "embedding"), 4, 3, 4)
+      .map(_.toSeq).toSeq
+    // LONGER embeddings (len 8, dim 4): tail dims beyond dim must not steer
+    // init or assignments — same centroids as the frame truncated to dim
+    val raw8 = (0 until 200).map(i => (i.toLong, Array.tabulate(8)(j => math.sin(i * 1.3 + j).toFloat)))
+    assert(cents(raw8) == cents(raw8.map { case (i, v) => (i, v.take(4)) }), "len>dim vs truncated")
+    // SHORTER embeddings (len 3, dim 4): centroids are zero-padded to dim —
+    // same centroids as the frame zero-padded to dim
+    val raw3 = (0 until 200).map(i => (i.toLong, Array.tabulate(3)(j => math.cos(i * 0.9 + j).toFloat)))
+    val l3 = cents(raw3)
+    assert(l3.forall(_.length == 4), "centroids must be zero-padded to dim")
+    assert(l3 == cents(raw3.map { case (i, v) => (i, v :+ 0f) }), "len<dim vs zero-padded")
   }
 
-  test("multi-subquantizer and OPQ-pass distributed paths agree with the local kernels") {
-    // the over-cap fallbacks (kmeansCentroidsMultiDistributed, opqPass)
-    // are unreachable from any test through the public builders — every
-    // fixture is far under the 1M-row local cap — so they are gated here
-    // DIRECTLY against the driver-local kernels they must mirror
+  test("OPQ pass: distributed accumulator agrees with the local kernel") {
+    // opqPass measures arbitrary unsampled frames (pqReconstructionMse);
+    // trainOpq runs opqPassLocal over the collected sample — same rotation
+    // + codebook through both: the correlation matrix, squared error, and
+    // row count must agree
     val emb = (0 until 240).map { i =>
       (i.toLong, Array.tabulate(8)(j => math.sin(i * 0.53 + 2 * j).toFloat).toSeq)
     }.toDF("vec_id", "embedding")
     val xs = emb.collect().sortBy(_.getAs[Long]("vec_id"))
       .map(_.getAs[Seq[Float]]("embedding").toArray)
     val localCents = SimSearch.localLloydMulti(xs, 4, 3, 2, 4)
-    val distCents = SimSearch.kmeansCentroidsMultiDistributed(emb, 4, 3, 2, 4)
-    assert(localCents.length == 2 && distCents.length == 2)
-    for (j <- 0 until 2; c <- 0 until 4; i <- 0 until 4)
-      assert(math.abs(localCents(j)(c)(i) - distCents(j)(c)(i)) <=
-        1e-4f * math.max(1f, math.abs(distCents(j)(c)(i))),
-        s"sub $j centroid $c dim $i: ${localCents(j)(c)(i)} vs ${distCents(j)(c)(i)}")
-    // OPQ pass: same rotation + codebook through both accumulators —
-    // the correlation matrix, squared error, and row count must agree
     val rot = Array.tabulate(8, 8)((a, b) => if (a == b) 1f else 0f)
     val cb = SimSearch.PqCodebook(4, localCents)
     val (mL, seL, nL) = SimSearch.opqPassLocal(xs, rot, cb, 8, needM = true)
@@ -1483,6 +1425,13 @@ class OpsSpec extends AnyFunSuite {
     for (i <- mL.indices)
       assert(math.abs(mL(i) - mD(i)) <= 1e-6 * math.max(1.0, math.abs(mD(i))),
         s"M[$i]: ${mL(i)} vs ${mD(i)}")
+  }
+
+  test("index builders refuse a trainSample above the driver training cap") {
+    val emb = (0 until 20).map(i => (i.toLong, Array.fill(4)(i.toFloat).toSeq)).toDF("vec_id", "embedding")
+    val err = intercept[IllegalArgumentException](
+      SimSearch.buildIvfIndex(emb, nCentroids = 2, dim = 4, trainSample = 1000001L))
+    assert(err.getMessage.contains("trainSample"), err.getMessage)
   }
 
   test("sequence packing: boundary math, partition-count invariance") {
