@@ -81,12 +81,12 @@ object HtmlExtract {
 
   private final class BlockAcc(
       val tag: String, val depth: Int, val penalized: Boolean, val inTable: Boolean) {
-    val text = new StringBuilder // DIRECT text only (prose scoring)
+    val text = new java.lang.StringBuilder // DIRECT text only (prose scoring)
     // FULL subtree text — maintained only inside tables (bounded by table
     // content; avoids O(depth x chars) copying on deeply nested pages),
     // so a cell whose content is wrapped in <div>/<p> still has text for
-    // the row-wise data render
-    val full = new StringBuilder
+    // the row-wise data render; null outside tables, where nothing reads it
+    val full = if (inTable) new java.lang.StringBuilder else null
     var tagCount = 0 // descendant tags seen inside this block
     var linkChars = 0
     // link chars of the WHOLE subtree — propagated upward exactly like
@@ -142,11 +142,22 @@ object HtmlExtract {
     * 'İ' lowers to two chars, shifting every later index), and repeated
     * calls inside per-element loops cost no per-call allocation. Tag
     * names are ASCII, so ASCII folding is the correct equivalence. */
-  private[graft] def indexOfAsciiLower(hay: String, needle: String, from: Int): Int = {
-    val n = hay.length
+  private[graft] def indexOfAsciiLower(hay: String, needle: String, from: Int): Int =
+    indexOfAsciiLower(hay, needle, from, hay.length)
+
+  /** the same search, for a match inside hay[from, until). A needle that
+    * starts with a non-letter jumps between occurrences of that char. */
+  private def indexOfAsciiLower(hay: String, needle: String, from: Int, until: Int): Int = {
+    val n = until
     val m = needle.length
     var i = if (from < 0) 0 else from
+    val c0 = if (m > 0) needle.charAt(0) else 'a'
+    val jump = !(c0 >= 'a' && c0 <= 'z')
     while (i + m <= n) {
+      if (jump) {
+        i = hay.indexOf(c0, i)
+        if (i < 0 || i + m > n) return -1
+      }
       var k = 0
       var ok = true
       while (ok && k < m) {
@@ -250,19 +261,41 @@ object HtmlExtract {
   private[graft] def hintPenalized(hint: String): Boolean =
     hint.nonEmpty && unlikelyHint.matcher(hint).find() && !likelyHint.matcher(hint).find()
 
+  /** token callbacks of [[scan]]; a text token is the range [start, end)
+    * of the page */
+  private abstract class TokenSink {
+    def text(html: String, start: Int, end: Int): Unit
+    /** `flags`: the name's tag sets ([[BLOCK]], [[DROP]], ...) */
+    def open(name: String, flags: Int, selfClosing: Boolean, hint: String): Unit
+    def close(name: String, flags: Int): Unit
+  }
+
   /** tolerant tokenizer: handles comments, doctype, raw-text elements,
     * attribute quoting, unterminated tags */
   def tokenize(html: String): Vector[Tok] = {
     val out = Vector.newBuilder[Tok]
+    scan(html, new TokenSink {
+      def text(html: String, start: Int, end: Int): Unit = out += TText(html.substring(start, end))
+      def open(name: String, flags: Int, selfClosing: Boolean, hint: String): Unit =
+        out += TOpen(name, selfClosing, hint)
+      def close(name: String, flags: Int): Unit = out += TClose(name)
+    })
+    out.result()
+  }
+
+  /** the tokenizer proper. Tag names are read in place: an ASCII name comes
+    * from [[tagName]]'s table of known names when it is there; a name with
+    * any other char takes the substring path of the original definition. */
+  private def scan(html: String, sink: TokenSink): Unit = {
     var i = 0
     val n = html.length
     while (i < n) {
       val lt = html.indexOf('<', i)
       if (lt < 0) {
-        if (i < n) out += TText(html.substring(i))
+        if (i < n) sink.text(html, i, n)
         i = n
       } else {
-        if (lt > i) out += TText(html.substring(i, lt))
+        if (lt > i) sink.text(html, i, lt)
         if (lt + 1 >= n) i = n
         else if (html.startsWith("<!--", lt)) {
           val end = html.indexOf("-->", lt + 4)
@@ -274,8 +307,8 @@ object HtmlExtract {
           val end = html.indexOf('>', lt + 2)
           if (end < 0) i = n
           else {
-            val name = html.substring(lt + 2, end).trim.toLowerCase(java.util.Locale.ROOT)
-            out += TClose(name.takeWhile(c => c.isLetterOrDigit))
+            val name = closeTagName(html, lt + 2, end)
+            sink.close(name, flagsOf(name))
             i = end + 1
           }
         } else if (html.charAt(lt + 1).isLetter) {
@@ -292,41 +325,137 @@ object HtmlExtract {
           }
           if (end < 0) i = n
           else {
-            val inner = html.substring(lt + 1, end)
-            val name = inner.takeWhile(c => c.isLetterOrDigit).toLowerCase(java.util.Locale.ROOT)
-            val selfClosing = isSelfClosingInner(inner, name) || voidTags.contains(name)
-            out += TOpen(name, selfClosing,
-              if (blockTags.contains(name)) classIdHint(inner.drop(name.length)) else "")
+            val from = lt + 1
+            var k = from
+            var ascii = true
+            while (k < end && isLetterOrDigit(html.charAt(k))) { if (html.charAt(k) >= 0x80) ascii = false; k += 1 }
+            val name =
+              if (ascii) tagName(html, from, k)
+              else html.substring(from, end).takeWhile(c => c.isLetterOrDigit).toLowerCase(java.util.Locale.ROOT)
+            val flags = flagsOf(name)
+            // isSelfClosingInner on the range
+            val selfClosing = (html.charAt(end - 1) == '/' && (end - from == name.length + 1 || {
+              val b = html.charAt(end - 2)
+              b.isWhitespace || b == '"' || b == '\''
+            })) || (flags & VOID) != 0
+            val attrs = math.min(from + name.length, end)
+            sink.open(name, flags, selfClosing,
+              if ((flags & BLOCK) == 0) ""
+              else if (indexOfAsciiLower(html, "class", attrs, end) < 0 &&
+                indexOfAsciiLower(html, "id", attrs, end) < 0) ""
+              else classIdHint(html.substring(attrs, end)))
             i = end + 1
             // raw-text elements: skip to the matching close tag verbatim
-            if (!selfClosing && rawTextTags.contains(name)) {
-              val closeIdx = indexOfAsciiLower(html, s"</$name", i)
+            if (!selfClosing && (flags & RAW) != 0) {
+              val closeIdx = indexOfAsciiLower(html, rawTextClose(name), i)
               if (closeIdx < 0) i = n
               else {
                 val gt = html.indexOf('>', closeIdx)
-                out += TClose(name)
+                sink.close(name, flags)
                 i = if (gt < 0) n else gt + 1
               }
             }
           }
         } else {
-          out += TText("<")
+          sink.text(html, lt, lt + 1) // a stray '<'
           i = lt + 1
         }
       }
     }
-    out.result()
   }
+
+  /** `html.substring(from, end).trim.toLowerCase(ROOT).takeWhile(isLetterOrDigit)`,
+    * read in place when the name and the char that ends it are ASCII */
+  private def closeTagName(html: String, from: Int, end: Int): String = {
+    var s = from
+    while (s < end && html.charAt(s) <= ' ') s += 1
+    var k = s
+    while (k < end && html.charAt(k) < 0x80 && isLetterOrDigit(html.charAt(k))) k += 1
+    if (k == end || html.charAt(k) < 0x80) tagName(html, s, k)
+    else html.substring(from, end).trim.toLowerCase(java.util.Locale.ROOT).takeWhile(c => c.isLetterOrDigit)
+  }
+
+  /** lowercased ASCII tag name html[from, to): the shared constant for a
+    * known name, else a new string */
+  private def tagName(html: String, from: Int, to: Int): String = {
+    val len = to - from
+    var h = 0
+    var k = from
+    while (k < to) { h = 31 * h + asciiLower(html.charAt(k)); k += 1 }
+    var slot = h & (knownNames.length - 1)
+    while (knownNames(slot) != null) {
+      val cand = knownNames(slot)
+      if (cand.length == len && indexOfAsciiLower(html, cand, from, to) == from) return cand
+      slot = (slot + 1) & (knownNames.length - 1)
+    }
+    html.substring(from, to).toLowerCase(java.util.Locale.ROOT)
+  }
+
+  @inline private def asciiLower(c: Char): Char = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+
+  /** `Character.isLetterOrDigit`, decided in place for ASCII */
+  @inline private def isLetterOrDigit(c: Char): Boolean =
+    if (c < 0x80) { val l = c | 0x20; (l >= 'a' && l <= 'z') || (c >= '0' && c <= '9') }
+    else Character.isLetterOrDigit(c)
+
+  /** ASCII chars that `Character.isWhitespace` accepts: \t \n VT \f \r, FS GS RS US, space */
+  private final val AsciiWs = 0x1f0003e00L
+
+  /** `c.isWhitespace || c == NBSP`, the separators [[normalizeWs]] collapses */
+  @inline private def isSpace(c: Char): Boolean =
+    if (c < 0x80) c < 64 && ((AsciiWs >>> c) & 1L) != 0L
+    else Character.isWhitespace(c) || c == '\u00a0'
 
   private val voidTags = Set("br", "hr", "img", "input", "meta", "link", "area",
     "base", "col", "embed", "source", "track", "wbr")
+
+  private val rawTextClose: Map[String, String] = rawTextTags.iterator.map(t => t -> s"</$t").toMap
+
+  /** open-addressed table (by String.hashCode) of the tag names the
+    * extractor tests for, plus common inline ones, with each name's set
+    * memberships as flags; read-only */
+  private val knownNames = new Array[String](256)
+  private val knownFlags = new Array[Int](256)
+  private final val BLOCK = 1
+  private final val DROP = 2
+  private final val RAW = 4
+  private final val PENALTY = 8
+  private final val BOOST = 16
+  private final val VOID = 32
+
+  locally {
+    val names = blockTags ++ dropTags ++ voidTags ++ Set("a", "b", "i", "em", "strong", "span",
+      "small", "code", "title", "html", "caption", "thead", "tbody", "tfoot", "label", "button",
+      "select", "option", "font", "sup", "sub", "time", "abbr", "cite", "picture")
+    names.foreach { nm =>
+      var slot = nm.hashCode & (knownNames.length - 1)
+      while (knownNames(slot) != null) slot = (slot + 1) & (knownNames.length - 1)
+      knownNames(slot) = nm
+      knownFlags(slot) =
+        (if (blockTags(nm)) BLOCK else 0) | (if (dropTags(nm)) DROP else 0) |
+          (if (rawTextTags(nm)) RAW else 0) | (if (penaltyTags(nm)) PENALTY else 0) |
+          (if (boostTags(nm)) BOOST else 0) | (if (voidTags(nm)) VOID else 0)
+    }
+  }
+
+  /** the tag sets `name` is in (every set member is a known name) */
+  private def flagsOf(name: String): Int = {
+    var slot = name.hashCode & (knownNames.length - 1)
+    while (knownNames(slot) != null) {
+      val known = knownNames(slot)
+      if ((known eq name) || known == name) return knownFlags(slot)
+      slot = (slot + 1) & (knownNames.length - 1)
+    }
+    0
+  }
+
+  @inline private def is(name: String, flag: Int): Boolean = (flagsOf(name) & flag) != 0
 
   /** threshold on the block score; blocks >= keep, < drop */
   final val SCORE_THRESHOLD = 10f
 
   def extract(html: String): Result = {
-    val toks = tokenize(html)
-    val blocks = ArrayBuffer.empty[(String, String, Float)] // (text, path, score)
+    val blocks = ArrayBuffer.empty[Block]
     // stack of open blocks; a synthetic root collects stray text
     val root = new BlockAcc("root", 0, penalized = false, inTable = false)
     val stack = ArrayBuffer(root)
@@ -335,18 +464,17 @@ object HtmlExtract {
     var linkDepth = 0
 
     def scoreAndEmit(b: BlockAcc): Unit = {
-      val raw = b.text.toString
-      val text = normalizeWs(raw)
+      val text = normalizeWs(b.text)
       if (text.nonEmpty) {
         val chars = text.length
         val density = chars.toFloat / (1 + b.tagCount)
         val linkDensity = if (chars == 0) 0f else math.min(1f, b.linkChars.toFloat / chars)
         val prior =
           if (b.penalized) 0.25f
-          else if (boostTags.contains(b.tag)) 2.0f
+          else if (is(b.tag, BOOST)) 2.0f
           else 1.0f
         val score = density * prior * (1.0f - 0.75f * linkDensity)
-        blocks += ((text, b.tag, score))
+        blocks += Block(text, b.tag, score)
       }
     }
 
@@ -357,7 +485,7 @@ object HtmlExtract {
     }
 
     def emitTable(t: BlockAcc): Unit = {
-      val own = normalizeWs(t.text.toString) // caption / stray table text
+      val own = normalizeWs(t.text) // caption / stray table text
       val rows =
         if (t.tableRows == null) ArrayBuffer.empty[ArrayBuffer[BufferedItem]]
         else t.tableRows.map(_.filter(_.fullText.nonEmpty)).filter(_.nonEmpty)
@@ -392,7 +520,7 @@ object HtmlExtract {
         // density > 1/2 is navigation" rule — calibration-gated)
         val prior = if (t.penalized || linkDensity > 0.5f) 0.25f else 2.0f
         val score = (chars.toFloat / (1 + rows.length)) * prior * (1.0f - 0.75f * linkDensity)
-        if (text.nonEmpty) blocks += ((text, "table", score)) // threshold-filtered with all blocks
+        if (text.nonEmpty) blocks += Block(text, "table", score) // threshold-filtered with all blocks
       } else {
         // layout table: replay EVERY buffered block (cells and the blocks
         // nested inside them) through the round-3 prose scoring, in close
@@ -403,9 +531,9 @@ object HtmlExtract {
             val linkDensity = math.min(1f, c.linkChars.toFloat / math.max(c.text.length, 1))
             val prior =
               if (c.penalized) 0.25f
-              else if (boostTags.contains(c.tag)) 2.0f
+              else if (is(c.tag, BOOST)) 2.0f
               else 1.0f
-            blocks += ((c.text, c.tag, density * prior * (1.0f - 0.75f * linkDensity)))
+            blocks += Block(c.text, c.tag, density * prior * (1.0f - 0.75f * linkDensity))
           }
         }
         scoreAndEmit(t)
@@ -420,8 +548,8 @@ object HtmlExtract {
       // on one row line; normalizeWs collapses the seams)
       def flowFull(): Unit =
         if (parent != null && parent.inTable) {
-          if (b.full.nonEmpty) {
-            if (parent.full.nonEmpty) parent.full.append(' ')
+          if (b.full.length > 0) {
+            if (parent.full.length > 0) parent.full.append(' ')
             parent.full.append(b.full)
           }
           parent.fullLinkChars += b.fullLinkChars
@@ -431,14 +559,14 @@ object HtmlExtract {
           // buffer the cell on the enclosing table instead of emitting;
           // fullText (whole subtree) feeds the data render, text (direct)
           // the layout replay
-          val item = BufferedItem(normalizeWs(b.text.toString), normalizeWs(b.full.toString),
+          val item = BufferedItem(normalizeWs(b.text), normalizeWs(b.full),
             b.tag, b.tagCount, b.linkChars, b.penalized)
           table.currentRow() += item
           table.buffer(item)
           flowFull()
         case "tr" if table != null =>
           // stray text directly inside <tr> joins the row as a pseudo-cell
-          val stray = normalizeWs(b.text.toString)
+          val stray = normalizeWs(b.text)
           if (stray.nonEmpty) {
             val item = BufferedItem(stray, stray, "tr", b.tagCount, b.linkChars, b.penalized)
             table.currentRow() += item
@@ -452,7 +580,7 @@ object HtmlExtract {
         case _ if table != null =>
           // block nested inside a table (td > div/p/...): buffer for the
           // layout replay; its text reaches the cell via flowFull
-          table.buffer(BufferedItem(normalizeWs(b.text.toString), normalizeWs(b.full.toString),
+          table.buffer(BufferedItem(normalizeWs(b.text), normalizeWs(b.full),
             b.tag, b.tagCount, b.linkChars, b.penalized))
           flowFull()
         case _ =>
@@ -461,27 +589,39 @@ object HtmlExtract {
       if (stack.nonEmpty) stack.last.tagCount += b.tagCount + 1
     }
 
-    toks.foreach {
-      case TText(t) =>
+    scan(html, new TokenSink {
+      private var nextAmp = -1 // the first '&' at or after the last text run
+
+      def text(html: String, start: Int, end: Int): Unit =
         if (dropDepth == 0) {
-          val decoded = decodeEntities(t)
-          stack.last.text.append(decoded)
-          if (stack.last.inTable) stack.last.full.append(decoded)
+          if (nextAmp < start) {
+            nextAmp = html.indexOf('&', start)
+            if (nextAmp < 0) nextAmp = Int.MaxValue
+          }
+          // a run without '&' decodes to itself: append it from the page
+          val plain = nextAmp >= end
+          val decoded = if (plain) html else decodeEntities(html.substring(start, end))
+          val from = if (plain) start else 0
+          val to = if (plain) end else decoded.length
+          val top = stack.last
+          top.text.append(decoded, from, to)
+          if (top.inTable) top.full.append(decoded, from, to)
           if (linkDepth > 0) {
-            val n = normalizeWs(decoded).length
-            stack.last.linkChars += n
-            if (stack.last.inTable) stack.last.fullLinkChars += n
+            val n = normalizedLength(decoded, from, to)
+            top.linkChars += n
+            if (top.inTable) top.fullLinkChars += n
           }
         }
-      case TOpen(name, selfClosing, hint) =>
-        if (dropTags.contains(name) && !selfClosing && !voidTags.contains(name)) dropDepth += 1
+
+      def open(name: String, flags: Int, selfClosing: Boolean, hint: String): Unit =
+        if ((flags & DROP) != 0 && !selfClosing && (flags & VOID) == 0) dropDepth += 1
         else if (dropDepth == 0) {
           if (name == "a" && !selfClosing) linkDepth += 1
           if (name == "br") {
             stack.last.text.append('\n')
             if (stack.last.inTable) stack.last.full.append('\n')
           }
-          if (blockTags.contains(name) && !selfClosing) {
+          if ((flags & BLOCK) != 0 && !selfClosing) {
             // HTML5 implied end tags: an open <p> closes on ANY block-level
             // start (tag-soup pages rarely close their p's — without this a
             // page's first <p> swallows every later tag into its density
@@ -493,7 +633,7 @@ object HtmlExtract {
                 ((name == "td" || name == "th" || name == "tr") &&
                   (stack.last.tag == "td" || stack.last.tag == "th")) ||
                 (name == "tr" && stack.last.tag == "tr"))) closeBlock()
-            val penalized = stack.last.penalized || penaltyTags.contains(name) ||
+            val penalized = stack.last.penalized || (flags & PENALTY) != 0 ||
               hintPenalized(hint)
             stack += new BlockAcc(name, stack.length, penalized,
               inTable = name == "table" || stack.last.inTable)
@@ -501,11 +641,12 @@ object HtmlExtract {
             stack.last.tagCount += 1
           }
         }
-      case TClose(name) =>
-        if (dropTags.contains(name)) { if (dropDepth > 0) dropDepth -= 1 }
+
+      def close(name: String, flags: Int): Unit =
+        if ((flags & DROP) != 0) { if (dropDepth > 0) dropDepth -= 1 }
         else if (dropDepth == 0) {
           if (name == "a") { if (linkDepth > 0) linkDepth -= 1 }
-          if (blockTags.contains(name)) {
+          if ((flags & BLOCK) != 0) {
             // close up to the matching open block (tolerates misnesting)
             val idx = stack.lastIndexWhere(_.tag == name)
             if (idx > 0) {
@@ -513,17 +654,18 @@ object HtmlExtract {
             }
           }
         }
-    }
+    })
     while (stack.length > 1) closeBlock()
     scoreAndEmit(root)
 
-    val kept = blocks.filter(_._3 >= SCORE_THRESHOLD)
-    val sb = new StringBuilder
+    val sb = new java.lang.StringBuilder
     val spans = Vector.newBuilder[Block]
-    kept.foreach { case (text, path, score) =>
-      if (sb.nonEmpty) sb.append('\n')
-      sb.append(text)
-      spans += Block(text, path, score)
+    blocks.foreach { b =>
+      if (b.score >= SCORE_THRESHOLD) {
+        if (sb.length > 0) sb.append('\n')
+        sb.append(b.text)
+        spans += b
+      }
     }
     Result(sb.toString, spans.result())
   }
@@ -737,26 +879,59 @@ object HtmlExtract {
   }
 
   def normalizeWs(s: String): String = {
-    val sb = new StringBuilder(s.length)
+    val a = new Array[Char](s.length)
+    s.getChars(0, s.length, a, 0)
+    new String(a, 0, normalize(a))
+  }
+
+  private def normalizeWs(sb: java.lang.StringBuilder): String = {
+    val a = new Array[Char](sb.length)
+    sb.getChars(0, sb.length, a, 0)
+    new String(a, 0, normalize(a))
+  }
+
+  private def normalizedLength(s: String, from: Int, to: Int): Int = {
+    val a = new Array[Char](to - from)
+    s.getChars(from, to, a, 0)
+    normalize(a)
+  }
+
+  /** whitespace-normalizes `a` in place (output never passes input) and
+    * returns the normalized length */
+  private def normalize(a: Array[Char]): Int = {
+    var n = 0
     var i = 0
     var pendingSpace = false
     var pendingNewline = false
     var started = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\n') { pendingNewline = true; pendingSpace = false }
-      else if (c.isWhitespace || c == ' ') { if (!pendingNewline) pendingSpace = true }
-      else {
-        if (pendingNewline && started) sb.append('\n')
-        else if (pendingSpace && started) sb.append(' ')
+    while (i < a.length) {
+      val c = a(i)
+      if (c > ' ' && c < 0x80) {
+        // a run of printable ASCII (never whitespace) moves as one block
+        var j = i + 1
+        while (j < a.length && a(j) > ' ' && a(j) < 0x80) j += 1
+        if (pendingNewline && started) { a(n) = '\n'; n += 1 }
+        else if (pendingSpace && started) { a(n) = ' '; n += 1 }
         pendingNewline = false
         pendingSpace = false
         started = true
-        sb.append(c)
+        if (n != i) System.arraycopy(a, i, a, n, j - i)
+        n += j - i
+        i = j - 1
+      } else if (c == '\n') { pendingNewline = true; pendingSpace = false }
+      else if (isSpace(c)) { if (!pendingNewline) pendingSpace = true }
+      else {
+        if (pendingNewline && started) { a(n) = '\n'; n += 1 }
+        else if (pendingSpace && started) { a(n) = ' '; n += 1 }
+        pendingNewline = false
+        pendingSpace = false
+        started = true
+        a(n) = c
+        n += 1
       }
       i += 1
     }
-    sb.toString
+    n
   }
 
   // ---- structured table extraction ----------------------------------------

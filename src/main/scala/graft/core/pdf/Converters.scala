@@ -13,31 +13,32 @@ final class CharsetConverter private (
 
   def isVertical: Boolean = Tables.verticalFonts.contains(encoding)
 
-  /** decode a whole shown string + accumulate width (charset_converter.cc:95-123) */
-  def getString(s: String, fonts: Fonts): (String, Float) = mode match {
-    case UTF8 => (s, fonts.getWidth(s))
+  /** decode a whole shown string (charset_converter.cc:95-123) */
+  private[pdf] def getText(s: String): String = mode match {
+    case UTF8 => s
+    case IDENTITY => Bytes.utf16beToUtf8(s)
+    case DEFAULT | MAC_EXPERT | MAC_ROMAN | WIN => decodeSimple(s, mode)
+    case OTHER => Bytes.charsetToUtf8(s, charset.get)
+    case m => err(s"wrong encode value: $m")
+  }
+
+  /** the shown string's width: per 2-byte code for Identity, else per byte
+    * (charset_converter.cc:95-123) */
+  private[pdf] def getWidth(s: String, fonts: Fonts): Float = mode match {
     case IDENTITY =>
       var width = 0f
       var i = 0
       while (i < s.length) {
-        width += fonts.getWidth(string2num(s.substring(i, math.min(i + 2, s.length))))
+        // string2num of the (up to) 2-byte slice
+        val code =
+          if (i + 1 < s.length) ((s.charAt(i) & 0xff) << 8) | (s.charAt(i + 1) & 0xff)
+          else s.charAt(i) & 0xff
+        width += fonts.getWidth(code.toLong)
         i += 2
       }
-      (Bytes.utf16beToUtf8(s), width)
-    case DEFAULT | MAC_EXPERT | MAC_ROMAN | WIN =>
-      val table = Tables.standardEncodingsArr(mode) // flat array: hot path
-      val sb = new StringBuilder(s.length)
-      var i = 0
-      while (i < s.length) {
-        val v = table(s.charAt(i) & 0xff)
-        if (v != null) sb.append(v)
-        i += 1
-      }
-      (sb.toString, fonts.getWidth(s))
-    case OTHER => (Bytes.charsetToUtf8(s, charset.get), fonts.getWidth(s))
-    case m => err(s"wrong encode value: $m")
+      width
+    case _ => fonts.getWidth(s)
   }
-
   /** per-byte fallback used under a ToUnicode cmap (charset_converter.cc:125-132);
     * non-simple modes fall back to the Standard table */
   def getChar(c: Char): Option[String] = {
@@ -47,6 +48,30 @@ final class CharsetConverter private (
 }
 
 object CharsetConverter {
+  /** table decode of a simple-font string; a string whose every byte maps
+    * to itself (plain ASCII text under the Latin tables) is its own result */
+  private def decodeSimple(s: String, mode: Int): String = {
+    val table = Tables.standardEncodingsArr(mode)
+    val same = selfMapped(mode)
+    var i = 0
+    while (i < s.length && same(s.charAt(i) & 0xff)) i += 1
+    if (i == s.length) return s
+    val sb = new java.lang.StringBuilder(s.length + 16)
+    sb.append(s, 0, i)
+    while (i < s.length) {
+      val v = table(s.charAt(i) & 0xff)
+      if (v != null) sb.append(v)
+      i += 1
+    }
+    sb.toString
+  }
+
+  /** per table: code c decodes to the one char c (read-only, built once) */
+  private lazy val selfMapped: Map[Int, Array[Boolean]] =
+    Tables.standardEncodingsArr.map { case (id, arr) =>
+      id -> Array.tabulate(256)(c => arr(c) != null && arr(c).length == 1 && arr(c).charAt(0) == c)
+    }
+
   // PDFEncode_t (converter_data.h:9)
   final val DEFAULT = Tables.DEFAULT
   final val MAC_EXPERT = Tables.MAC_EXPERT
@@ -76,27 +101,35 @@ object CharsetConverter {
 
 /** /Encoding //Differences converter (diff_converter.cc). */
 final class DiffConverter private (differenceMap: Map[Int, String], val isEmpty: Boolean) {
+  // lookups only ever ask for codes 0..255 (one byte)
+  private val byCode: Array[String] = Array.tabulate(256)(c => differenceMap.getOrElse(c, null))
 
-  /** diff_converter.cc:78-93: only mapped, non-empty glyphs contribute (and
-    * only they accumulate width) */
-  def getString(s: String, fonts: Fonts): (String, Float) = {
-    val sb = new StringBuilder(s.length)
+  /** diff_converter.cc:78-93: only mapped, non-empty glyphs contribute */
+  private[pdf] def getText(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length)
+    var i = 0
+    while (i < s.length) {
+      val v = byCode(s.charAt(i) & 0xff)
+      if (v != null && v.nonEmpty) sb.append(v)
+      i += 1
+    }
+    sb.toString
+  }
+
+  /** ... and only they accumulate width */
+  private[pdf] def getWidth(s: String, fonts: Fonts): Float = {
     var width = 0f
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i) & 0xff
-      differenceMap.get(c) match {
-        case Some(v) if v.nonEmpty =>
-          sb.append(v)
-          width += fonts.getWidth(c.toLong)
-        case _ =>
-      }
+      val v = byCode(c)
+      if (v != null && v.nonEmpty) width += fonts.getWidth(c.toLong)
       i += 1
     }
-    (sb.toString, width)
+    width
   }
 
-  def getChar(c: Char): Option[String] = differenceMap.get(c & 0xff)
+  def getChar(c: Char): Option[String] = Option(byCode(c & 0xff))
 }
 
 object DiffConverter {
@@ -190,9 +223,9 @@ final class ConverterEngine(
   /** decode one shown string into a positioned chunk (converter_engine.cc:30-65) */
   def getString(s: String, coordinates: Coordinates, tj: Float, fonts: Fonts): TextChunk = {
     if (toUnicodeConverter.isEmpty) {
-      val (text, width) =
-        if (diffConverter.isEmpty) charsetConverter.getString(s, fonts)
-        else diffConverter.getString(s, fonts)
+      val text = if (diffConverter.isEmpty) charsetConverter.getText(s) else diffConverter.getText(s)
+      val width =
+        if (diffConverter.isEmpty) charsetConverter.getWidth(s, fonts) else diffConverter.getWidth(s, fonts)
       return coordinates.adjustCoordinates(text, s.length, width, tj, fonts)
     }
     val decoded = new StringBuilder

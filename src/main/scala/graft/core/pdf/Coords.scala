@@ -16,14 +16,6 @@ object Matrix {
     m2(1) * m1(2) + m2(3) * m1(3),
     m2(0) * m1(4) + m2(2) * m1(5) + m2(4),
     m2(1) * m1(4) + m2(3) * m1(5) + m2(5))
-
-  /** coordinates.cc:13-16 */
-  def translate(m: M, x: Float, y: Float): M =
-    Array(m(0), m(1), m(2), m(3), x * m(0) + y * m(2) + m(4), x * m(1) + y * m(3) + m(5))
-
-  /** coordinates.cc:62-65 */
-  def applyPt(m: M, x: Float, y: Float): (Float, Float) =
-    (m(0) * x + m(2) * y + m(4), m(1) * x + m(3) * y + m(5))
 }
 
 /** bbox (coordinates.h:11-32) */
@@ -35,11 +27,13 @@ final case class Coord(var x0: Float, var y0: Float, var x1: Float, var y1: Floa
 final case class TextT(var coordinates: Coord, var text: String)
 
 /** line/box chunk (coordinates.h:60-112); `stringLen` is UTF-8 codepoint count */
-final class TextChunk {
-  var coordinates: Coord = Coord(0, 0, 0, 0)
-  var texts: scala.collection.mutable.ArrayBuffer[TextT] = scala.collection.mutable.ArrayBuffer.empty
-  var stringLen: Long = 0
-  var isEmpty: Boolean = true
+final class TextChunk private[pdf] (
+    var coordinates: Coord,
+    var texts: scala.collection.mutable.ArrayBuffer[TextT],
+    var stringLen: Long,
+    var isEmpty: Boolean) {
+
+  def this() = this(Coord(0, 0, 0, 0), new scala.collection.mutable.ArrayBuffer[TextT](1), 0, true)
 
   /** identity comparison in the reference is on coordinates only */
   def sameCoords(o: TextChunk): Boolean =
@@ -47,35 +41,37 @@ final class TextChunk {
       coordinates.x1 == o.coordinates.x1 && coordinates.y1 == o.coordinates.y1
 
   def shallowCopy: TextChunk = {
-    val c = new TextChunk
-    c.coordinates = coordinates.copyOf
-    c.texts = texts.clone()
-    c.stringLen = stringLen
-    c.isEmpty = isEmpty
-    c
+    val t = new scala.collection.mutable.ArrayBuffer[TextT](math.max(texts.length, 1))
+    t ++= texts
+    new TextChunk(coordinates.copyOf, t, stringLen, isEmpty)
   }
 }
 
 object TextChunk {
   def apply(text: String, coordinates: Coord): TextChunk = {
-    val c = new TextChunk
-    c.coordinates = coordinates
-    c.texts = scala.collection.mutable.ArrayBuffer(TextT(coordinates.copyOf, text))
-    c.stringLen = Bytes.utf8Length(text).toLong
-    c.isEmpty = false
-    c
+    val t = new scala.collection.mutable.ArrayBuffer[TextT](1)
+    t += TextT(coordinates.copyOf, text)
+    new TextChunk(coordinates, t, Bytes.utf8Length(text).toLong, false)
   }
 
   def empty: TextChunk = new TextChunk
 }
 
 /** Text-positioning state machine (coordinates.cc): CTM, Tm, Tfs, Th, Tc,
-  * Tw, TL, run-local x/y, and the q/Q CTM stack. */
+  * Tw, TL, run-local x/y, and the q/Q CTM stack. Tm lives in six fields;
+  * the matrix products of a shown string (`Matrix.mul`, the reference's
+  * translate and apply, coordinates.cc:13-16,62-65) are spelled out term
+  * by term in the reference's order, so every float is the same. */
 final class Coordinates(ctmArg: Matrix.M) {
   import Matrix._
 
   var ctm: M = ctmArg
-  var tm: M = IDENTITY
+  private var tm0 = 1f
+  private var tm1 = 0f
+  private var tm2 = 0f
+  private var tm3 = 1f
+  private var tm4 = 0f
+  private var tm5 = 0f
   var tfs: Float = 1f
   var th: Float = 1f
   var tc: Float = 0f
@@ -85,11 +81,15 @@ final class Coordinates(ctmArg: Matrix.M) {
   var y: Float = 0f
   private var ctms: List[M] = Nil
 
-  def setDefault(): Unit = { tm = IDENTITY; x = 0; y = 0 }
+  private def setTmIdentity(): Unit = { tm0 = 1f; tm1 = 0f; tm2 = 0f; tm3 = 1f; tm4 = 0f; tm5 = 0f }
+
+  def setDefault(): Unit = { setTmIdentity(); x = 0; y = 0 }
 
   private def td(xa: Float, ya: Float): Unit = {
-    tm = Array(tm(0), tm(1), tm(2), tm(3),
-      xa * tm(0) + ya * tm(2) + tm(4), xa * tm(1) + ya * tm(3) + tm(5))
+    val n4 = xa * tm0 + ya * tm2 + tm4
+    val n5 = xa * tm1 + ya * tm3 + tm5
+    tm4 = n4
+    tm5 = n5
     x = 0
     y = 0
   }
@@ -106,31 +106,43 @@ final class Coordinates(ctmArg: Matrix.M) {
     }
     val ty = fonts.getDescent * tfs + fonts.getRise * tfs
     val adv = width * tfs * th
-    val m = mul(tm, ctm)
-    val prevF = m(5)
-    val tStart = translate(m, x, y)
-    val f = tStart(5)
+    // m = mul(tm, ctm)
+    val c = ctm
+    val m0 = c(0) * tm0 + c(2) * tm1
+    val m1 = c(1) * tm0 + c(3) * tm1
+    val m2 = c(0) * tm2 + c(2) * tm3
+    val m3 = c(1) * tm2 + c(3) * tm3
+    val m4 = c(0) * tm4 + c(2) * tm5 + c(4)
+    val m5 = c(1) * tm4 + c(3) * tm5 + c(5)
+    // tStart = translate(m, x, y): m with (x, y) folded into its offset
+    val s4 = x * m0 + y * m2 + m4
+    val s5 = x * m1 + y * m3 + m5
     if (len > 1) x += tc * th * (len - 1)
     var i = 0
     while (i < s.length) {
       if (s.charAt(i) == ' ') x += tw * th
       i += 1
     }
-    val tEnd = translate(m, x, y)
+    // tEnd = translate(m, x, y)
+    val e4 = x * m0 + y * m2 + m4
+    val e5 = x * m1 + y * m3 + m5
     x += adv
-    if (prevF != f) return TextChunk.empty // vertical baseline: drop (coordinates.cc:87)
-    val (sx, sy) = applyPt(tStart, 0, ty)
-    val (ex, ey) = applyPt(tEnd, adv, ty + fonts.getHeight * tfs)
+    if (m5 != s5) return TextChunk.empty // vertical baseline: drop (coordinates.cc:87)
+    // applyPt(tStart, 0, ty) and applyPt(tEnd, adv, ty + height * tfs)
+    val sx = m0 * 0f + m2 * ty + s4
+    val sy = m1 * 0f + m3 * ty + s5
+    val ey0 = ty + fonts.getHeight * tfs
+    val ex = m0 * adv + m2 * ey0 + e4
+    val ey = m1 * adv + m3 * ey0 + e5
     TextChunk(s, Coord(math.min(sx, ex), math.min(sy, ey), math.max(sx, ex), math.max(sy, ey)))
   }
 
   // operand-stack handlers; st is the interpreter's operand stack
-  type Stack = scala.collection.mutable.ArrayBuffer[(Obj.Type, String)]
+  type Stack = scala.collection.mutable.ArrayBuffer[String]
 
   private def popF(st: Stack): Float = {
     if (st.isEmpty) err("pop: stack is empty")
-    val v = st.remove(st.length - 1)
-    stof(v._2)
+    stof(st.remove(st.length - 1))
   }
 
   private def getMatrix(st: Stack): M = {
@@ -151,7 +163,12 @@ final class Coordinates(ctmArg: Matrix.M) {
   def setTw(st: Stack): Unit = tw = popF(st)
   def setTd(st: Stack): Unit = { val yv = popF(st); val xv = popF(st); td(xv, yv) }
   def setTD(st: Stack): Unit = { val yv = popF(st); val xv = popF(st); td(xv, yv); tl = -yv }
-  def setTm(st: Stack): Unit = { tm = getMatrix(st); x = 0; y = 0 }
+  def setTm(st: Stack): Unit = {
+    val f = popF(st); val e = popF(st); val d = popF(st)
+    val c = popF(st); val b = popF(st); val a = popF(st)
+    tm0 = a; tm1 = b; tm2 = c; tm3 = d; tm4 = e; tm5 = f
+    x = 0; y = 0
+  }
   def setTStar(): Unit = td(0, -tl)
   def setTf(st: Stack): Unit = tfs = popF(st)
   def setQuote(): Unit = setTStar()

@@ -52,10 +52,31 @@ object Crypto {
     d.digest()
   }
 
-  private def rc4(key: Array[Byte], data: Array[Byte]): Array[Byte] = {
-    val c = Cipher.getInstance("ARCFOUR")
-    c.init(Cipher.ENCRYPT_MODE, new SecretKeySpec(key, "ARCFOUR"))
-    c.doFinal(data)
+  /** RC4, the JCE "ARCFOUR" cipher, without its per-call provider lookup.
+    * Keys here are 5 to 16 bytes, inside ARCFOUR's 40-1024 bit range. */
+  private[pdf] def rc4(key: Array[Byte], data: Array[Byte]): Array[Byte] = {
+    val s = new Array[Int](256)
+    var i = 0
+    while (i < 256) { s(i) = i; i += 1 }
+    var j = 0
+    i = 0
+    while (i < 256) {
+      j = (j + s(i) + (key(i % key.length) & 0xff)) & 0xff
+      val t = s(i); s(i) = s(j); s(j) = t
+      i += 1
+    }
+    val out = new Array[Byte](data.length)
+    i = 0
+    j = 0
+    var k = 0
+    while (k < data.length) {
+      i = (i + 1) & 0xff
+      j = (j + s(i)) & 0xff
+      val t = s(i); s(i) = s(j); s(j) = t
+      out(k) = (data(k) ^ s((s(i) + s(j)) & 0xff)).toByte
+      k += 1
+    }
+    out
   }
 
   private def userPad(password: String): Array[Byte] = {
@@ -96,19 +117,18 @@ object Crypto {
     val revision = strictStoul(opts("/R").raw)
     if (revision == 3 || revision == 4) {
       var k = 0
-      while (k < 50) { digest = md5(digest.take(kl)); k += 1 }
+      while (k < 50) { d.update(digest, 0, math.max(0, math.min(kl, digest.length))); digest = d.digest(); k += 1 }
     }
     digest.take(kl)
   }
 
   /** per-object key (decrypt.cc:238-268) */
-  private def objKey(n: Long, g: Long, opts: Dict): (Array[Byte], Int) = {
-    val fileKey = decryptionKey(opts)
+  private def objKey(n: Long, g: Long, fileKey: Array[Byte], alg: Alg): (Array[Byte], Int) = {
     val buf = new java.io.ByteArrayOutputStream()
     buf.write(fileKey, 0, fileKey.length)
     buf.write((n & 0xff).toInt); buf.write(((n >> 8) & 0xff).toInt); buf.write(((n >> 16) & 0xff).toInt)
     buf.write((g & 0xff).toInt); buf.write(((g >> 8) & 0xff).toInt)
-    if (getAlgorithm(opts) == AesV2) {
+    if (alg == AesV2) {
       buf.write(0x73); buf.write(0x41); buf.write(0x6c); buf.write(0x54) // "sAlT"
     }
     val key = md5(buf.toByteArray)
@@ -117,21 +137,38 @@ object Crypto {
   }
 
   /** main entry (decrypt.cc:342-360); empty dict = passthrough */
-  def decrypt(n: Long, g: Long, in: String, opts: Dict): String = {
-    if (opts.isEmpty) return in
-    getAlgorithm(opts) match {
-      case Identity => in
-      case Rc4V1 | Rc4V2 =>
-        val (key, keyLen) = objKey(n, g, opts)
-        Bytes.str(rc4(key.take(keyLen), Bytes.arr(in)))
-      case AesV2 =>
-        val (key, keyLen) = objKey(n, g, opts)
-        val data = Bytes.arr(in)
-        if ((data.length - 16) % 16 != 0) err("AES data length must be multiple of 16")
-        val c = Cipher.getInstance("AES/CBC/PKCS5Padding")
-        c.init(Cipher.DECRYPT_MODE, new SecretKeySpec(key.take(keyLen), "AES"),
-          new IvParameterSpec(data.take(16)))
-        Bytes.str(c.doFinal(data, 16, data.length - 16))
+  def decrypt(n: Long, g: Long, in: String, opts: Dict): String = new Decryptor(opts).decrypt(n, g, in)
+
+  /** One document's decryption. The algorithm and the file key (50 MD5
+    * rounds at /R 3 and 4) depend only on the /Encrypt dictionary, so they
+    * are derived on first use, in the reference's order, and kept for the
+    * document's other objects. */
+  private[pdf] final class Decryptor(opts: Dict) {
+    private var alg: Alg = null
+    private var fileKey: Array[Byte] = null
+
+    def decrypt(n: Long, g: Long, in: String): String = {
+      if (opts.isEmpty) return in
+      if (alg == null) alg = getAlgorithm(opts)
+      alg match {
+        case Identity => in
+        case Rc4V1 | Rc4V2 =>
+          val (key, keyLen) = objKey(n, g, file(), alg)
+          Bytes.str(rc4(key.take(keyLen), Bytes.arr(in)))
+        case AesV2 =>
+          val (key, keyLen) = objKey(n, g, file(), alg)
+          val data = Bytes.arr(in)
+          if ((data.length - 16) % 16 != 0) err("AES data length must be multiple of 16")
+          val c = Cipher.getInstance("AES/CBC/PKCS5Padding")
+          c.init(Cipher.DECRYPT_MODE, new SecretKeySpec(key.take(keyLen), "AES"),
+            new IvParameterSpec(data.take(16)))
+          Bytes.str(c.doFinal(data, 16, data.length - 16))
+      }
+    }
+
+    private def file(): Array[Byte] = {
+      if (fileKey == null) fileKey = decryptionKey(opts)
+      fileKey
     }
   }
 }

@@ -20,15 +20,16 @@ object Xref {
     if (off < 0) err("get_cross_ref_offset: can`t find startxref")
     off += "startxref".length
     off = skipComments(buffer, off)
-    val end = findFirstNotOf(buffer, "0123456789", off)
+    val end = firstNotOf(buffer, Digits, off)
     if (end < 0) err("can`t find end of trailer offset number")
-    val r = strictStoul(buffer.substring(off, end))
+    val r = stoul(buffer, off, end, 10)
     if (r >= buffer.length) err(s"$r is larger than buffer size ${buffer.length}")
     r.toInt
   }
 
   /** parser.cc:79-140: walk the /Prev chain, loop-guarded. */
-  def getTrailerOffsets(buffer: String, crossRefOffset: Int): Vector[(Int, Int)] = {
+  private[pdf] def getTrailerOffsets(doc: DocCache, crossRefOffset: Int): Vector[(Int, Int)] = {
+    val buffer = doc.text
     val old = isPrefix(buffer, crossRefOffset, "xref")
     val out = new VectorBuilder[(Int, Int)]
     val seen = scala.collection.mutable.Set[Int](crossRefOffset)
@@ -43,7 +44,7 @@ object Xref {
       val dictOffset =
         if (old) efind(buffer, "trailer", cur) + "trailer".length
         else efind(buffer, "<<", cur)
-      val data = getDictionaryData(buffer, dictOffset)
+      val data = doc.dictionaryAt(dictOffset)
       data.get("/Prev") match {
         case None => go = false
         case Some(v) =>
@@ -59,7 +60,7 @@ object Xref {
   private def appendObject(buf: String, offset: Int, objects: VectorBuilder[Int]): Unit = {
     if (offset + BYTE_OFFSET_LEN >= buf.length) err("object info record is too small")
     if (buf.charAt(offset + BYTE_OFFSET_LEN) != ' ') err("no space for object info")
-    objects += strictStoul(buf.substring(offset, offset + BYTE_OFFSET_LEN)).toInt
+    objects += stoul(buf, offset, offset + BYTE_OFFSET_LEN, 10).toInt
   }
 
   private def getObjectStatus(buffer: String, offset: Int): Char = {
@@ -75,10 +76,10 @@ object Xref {
 
   /** parser.cc:68-77 */
   private def getXrefNumber(buffer: String, p: Pos): Long = {
-    p.i = efindFirstOf(buffer, "\r\t\n ", p.i)
+    p.i = efirstOf(buffer, Blank, p.i, "\r\t\n ")
     p.i = skipSpaces(buffer, p.i)
-    val end = efindFirstOf(buffer, "\r\t\n ", p.i)
-    val result = strictStoul(buffer.substring(p.i, end))
+    val end = efirstOf(buffer, Blank, p.i, "\r\t\n ")
+    val result = stoul(buffer, p.i, end, 10)
     p.i = skipSpaces(buffer, end)
     result
   }
@@ -111,7 +112,7 @@ object Xref {
     while (offset < str.length) {
       val end = efindFirstOf(str, " \r\n]", offset)
       if (i >= 3) err("/W array must contain 3 elements")
-      result(i) = strictStoul(str.substring(offset, end)).toInt
+      result(i) = stoul(str, offset, end, 10).toInt
       if (result(i) > 8) err(s"${result(i)} is greater than max(uint64_t)")
       i += 1
       offset = findNumber(str, end)
@@ -159,11 +160,10 @@ object Xref {
     }
 
   /** parser.cc:237-263: xref stream */
-  private def getObjectOffsetsNew(buffer: String, offset0: Int, result: VectorBuilder[Int]): Unit = {
-    var offset = efind(buffer, "<<", offset0)
-    val p = new Pos(offset)
-    val dictRaw = getDictionary(buffer, p)
-    val dict = getDictionaryData(dictRaw, 0)
+  private def getObjectOffsetsNew(doc: DocCache, offset0: Int, result: VectorBuilder[Int]): Unit = {
+    val buffer = doc.text
+    val offset = efind(buffer, "<<", offset0)
+    val dict = doc.dictionary(doc.rawDictionary(offset))
     val lenVal = dict.getOrElse("/Length", err("can`t find /Length"))
     if (lenVal.tpe != Obj.VALUE) err("/Length value must have VALUE type")
     val length = strictStoul(lenVal.raw).toInt
@@ -181,20 +181,21 @@ object Xref {
   }
 
   /** parser.cc:142-147,282-318 */
-  def getId2Offsets(buffer: String, trailerOffsets: Vector[(Int, Int)]): Map[Long, Long] = {
+  private[pdf] def getId2Offsets(doc: DocCache, trailerOffsets: Vector[(Int, Int)]): Map[Long, Long] = {
+    val buffer = doc.text
     val offsets = new VectorBuilder[Int]
     trailerOffsets.foreach { case (start, _) =>
       val off = skipComments(buffer, start)
       if (isPrefix(buffer, off, "xref")) getObjectOffsetsOld(buffer, off, offsets)
-      else getObjectOffsetsNew(buffer, off, offsets)
+      else getObjectOffsetsNew(doc, off, offsets)
     }
     val all = offsets.result()
     all.foreach { o => if (o >= buffer.length) err("offset is greater than pdf buffer") }
     var id2offsets = Map.empty[Long, Long]
     all.foreach { offset =>
       val start = efindNumber(buffer, skipComments(buffer, offset))
-      val end = efindFirstOf(buffer, " \r\n\t", start)
-      val id = strictStoul(buffer.substring(start, end))
+      val end = efirstOf(buffer, Blank, start, " \r\n\t")
+      val id = stoul(buffer, start, end, 10)
       if (!id2offsets.contains(id)) id2offsets += id -> offset.toLong
     }
     id2offsets
@@ -246,7 +247,7 @@ object DocUtil {
     val r = props.getOrElse("/Length", err("no /Length"))
     if (r.tpe == Obj.VALUE) strictStoul(r.raw).toInt
     else if (r.tpe == Obj.INDIRECT_OBJECT) {
-      val id = strictStoul(r.raw.substring(0, efindFirstOf(r.raw, " \r\n\t", 0)))
+      val id = stoul(r.raw, 0, efirstOf(r.raw, Blank, 0, " \r\n\t"), 10)
       val pair = resolve(id)
       if (pair.tpe != Obj.VALUE) err("length indirect obj must be VALUE")
       strictStoul(pair.raw).toInt
@@ -255,16 +256,16 @@ object DocUtil {
 
   /** resolve indirect ref -> object, with optional type check (common.cc:717-726) */
   def getIndirectObjectData(indirect: String, storage: ObjectStorage, tpe: Int = -1): PVal = {
-    val id = strictStoul(indirect.substring(0, efindFirstOf(indirect, " \r\n\t", 0)))
+    val id = stoul(indirect, 0, efirstOf(indirect, Blank, 0, " \r\n\t"), 10)
     val r = storage.getObject(id)
     if (tpe != -1 && r.tpe != tpe) err(s"wrong type=$tpe val=${r.raw}")
     r
   }
 
   def getDictOrIndirectDict(data: PVal, storage: ObjectStorage): Dict = data.tpe match {
-    case Obj.DICTIONARY => getDictionaryData(data.raw, 0)
+    case Obj.DICTIONARY => storage.dictionary(data.raw)
     case Obj.INDIRECT_OBJECT =>
-      getDictionaryData(getIndirectObjectData(data.raw, storage, Obj.DICTIONARY).raw, 0)
+      storage.dictionary(getIndirectObjectData(data.raw, storage, Obj.DICTIONARY).raw)
     case t => err(s"get_dict_or_indirect_dict: wrong object type $t")
   }
 
@@ -279,35 +280,85 @@ object DocUtil {
   def getStream(doc: String, idGen: (Long, Long), storage: ObjectStorage, decryptData: Dict): String = {
     val streamPair = storage.getObject(idGen._1)
     if (streamPair.tpe != Obj.DICTIONARY) err("stream must be a dictionary")
-    val props = getDictionaryData(streamPair.raw, 0)
+    val props = storage.parsed.dictionary(streamPair.raw)
     val offset0 = efind(doc, "<<", storage.id2offsets(idGen._1).toInt)
-    val p = new Pos(offset0)
-    getDictionary(doc, p)
+    storage.parsed.rawDictionary(offset0) // only its errors count: the content offset is offset0
     var content = getContent(doc, getLength(doc, storage.getObject, props), offset0)
-    content = Crypto.decrypt(idGen._1, idGen._2, content, decryptData)
+    content = storage.decrypt(idGen._1, idGen._2, content, decryptData)
     Filters.decode(content, props)
+  }
+}
+
+/** Per-document parse memo. Slicing a dictionary and parsing one are pure
+  * functions of the document text, so each distinct call runs once per
+  * document, though the xref walk, the object store and the page tree ask
+  * for the same trailer and object dictionaries again. */
+private[pdf] final class DocCache(val text: String) {
+  private val raws = new java.util.HashMap[Int, String]()
+  private val byText = new java.util.HashMap[String, Dict]()
+  private val byOffset = new java.util.HashMap[Int, Dict]()
+
+  /** `getDictionary` of the dictionary that starts at `from` */
+  def rawDictionary(from: Int): String = {
+    val known = raws.get(from)
+    if (known != null) return known
+    val raw = text.substring(from, dictionaryEnd(text, from))
+    raws.put(from, raw)
+    raw
+  }
+
+  /** `getDictionaryData(raw, 0)` */
+  def dictionary(raw: String): Dict = {
+    val known = byText.get(raw)
+    if (known != null) return known
+    val d = getDictionaryData(raw, 0)
+    byText.put(raw, d)
+    d
+  }
+
+  /** `getDictionaryData(text, offset)`, which parses from the first "<<" */
+  def dictionaryAt(offset: Int): Dict = {
+    val at = efind(text, "<<", offset)
+    val known = byOffset.get(at)
+    if (known != null) return known
+    val d = getDictionaryData(text, at)
+    byOffset.put(at, d)
+    d
   }
 }
 
 /** Object store: direct objects by offset + eager /ObjStm expansion
   * (object_storage.cc:17-89).
   */
-final class ObjectStorage(doc: String, val id2offsets: Map[Long, Long], decryptData: Dict) {
+final class ObjectStorage private[pdf] (
+    private[pdf] val parsed: DocCache, val id2offsets: Map[Long, Long], decryptData: Dict) {
+
+  def this(doc: String, id2offsets: Map[Long, Long], decryptData: Dict) =
+    this(new DocCache(doc), id2offsets, decryptData)
+
+  private val doc = parsed.text
   private val id2objStm = scala.collection.mutable.Map.empty[Long, PVal]
+  private val direct = new java.util.HashMap[Long, PVal]() // lexed objects, by id
+  private val decryptor = new Crypto.Decryptor(decryptData)
 
   id2offsets.keys.toVector.sorted.foreach(insertObjStream)
 
   def getObject(id: Long): PVal =
-    id2offsets.get(id) match {
-      case Some(_) => Lex.getObject(doc, id, id2offsets)
-      case None => id2objStm.getOrElse(id, err(s"no object $id"))
-    }
+    if (id2offsets.contains(id)) lexDirect(id)
+    else id2objStm.getOrElse(id, err(s"no object $id"))
+
+  /** `Crypto.decrypt`, keeping the file key for this document's dictionary */
+  private[pdf] def decrypt(n: Long, g: Long, in: String, opts: Dict): String =
+    if (opts eq decryptData) decryptor.decrypt(n, g, in) else Crypto.decrypt(n, g, in, opts)
+
+  /** `getDictionaryData(raw, 0)`, once per document */
+  private[pdf] def dictionary(raw: String): Dict = parsed.dictionary(raw)
 
   private def getGenId(offset0: Int): Long = {
-    var offset = efindFirstOf(doc, " \r\t\n", offset0)
+    var offset = efirstOf(doc, Blank, offset0, " \r\t\n")
     offset = efindNumber(doc, offset)
-    val end = efindFirstOf(doc, " \r\t\n", offset)
-    strictStoul(doc.substring(offset, end))
+    val end = efirstOf(doc, Blank, offset, " \r\t\n")
+    stoul(doc, offset, end, 10)
   }
 
   private def insertObjStream(id: Long): Unit = {
@@ -317,13 +368,11 @@ final class ObjectStorage(doc: String, val id2offsets: Map[Long, Long], decryptD
     offset = efind(doc, "obj", offset) + "obj".length
     val p = new Pos(offset)
     if (getObjectType(doc, p) != Obj.DICTIONARY) return
-    val dictP = new Pos(efind(doc, "<<", offset))
-    val dictRaw = getDictionary(doc, dictP)
-    val dict = getDictionaryData(dictRaw, 0)
+    val dict = dictionary(parsed.rawDictionary(efind(doc, "<<", offset)))
     if (!dict.get("/Type").exists(_.raw == "/ObjStm")) return
     val len = DocUtil.getLength(doc, lexDirect, dict)
     var content = DocUtil.getContent(doc, len, offset)
-    content = Crypto.decrypt(id, genId, content, decryptData)
+    content = decryptor.decrypt(id, genId, content)
     content = Filters.decode(content, dict)
     // (id, offset) pairs after header (object_storage.cc:71-89)
     val n = strictStoul(dict("/N").raw)
@@ -333,10 +382,10 @@ final class ObjectStorage(doc: String, val id2offsets: Map[Long, Long], decryptD
     while (i < n) {
       o = efindNumber(content, o)
       var end = efindFirstNotOf(content, "0123456789", o)
-      val oid = strictStoul(content.substring(o, end))
+      val oid = stoul(content, o, end, 10)
       o = efindNumber(content, end)
       end = efindFirstNotOf(content, "0123456789", o)
-      val objOff = strictStoul(content.substring(o, end))
+      val objOff = stoul(content, o, end, 10)
       pairs :+= ((oid, objOff))
       o = end
       i += 1
@@ -349,5 +398,16 @@ final class ObjectStorage(doc: String, val id2offsets: Map[Long, Long], decryptD
     }
   }
 
-  private def lexDirect(id: Long): PVal = Lex.getObject(doc, id, id2offsets)
+  /** [[Lex.getObject]], with a dictionary object's text from the document's cache */
+  private def lexDirect(id: Long): PVal = {
+    val known = direct.get(id)
+    if (known != null) return known
+    val base = id2offsets(id).toInt
+    skipComments(doc, base)
+    val p = new Pos(skipComments(doc, efind(doc, "obj", base) + 3))
+    val tpe = getObjectType(doc, p)
+    val v = PVal(if (tpe == Obj.DICTIONARY) parsed.rawDictionary(p.i) else lexByType(tpe, doc, p), tpe)
+    direct.put(id, v)
+    v
+  }
 }

@@ -11,26 +11,29 @@ import Lex._
 object Filters {
 
   /** zlib inflate (flate_decode.cc:43-55). Tolerates trailing garbage the
-    * same way: inflate stops at stream end. */
+    * same way: inflate stops at stream end. Each inflate call gets exactly
+    * 4096 bytes of room, as the reference's loop does: when the input runs
+    * out mid-stream the chunk size decides where the output stops. */
   def flateDecode(data: String, opts: Dict): String = {
     val inf = new java.util.zip.Inflater()
     inf.setInput(Bytes.arr(data))
-    val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 4))
-    val buf = new Array[Byte](4096)
+    var out = new Array[Byte](math.max(64, data.length * 4))
+    var len = 0
     try {
       while (!inf.finished() && !inf.needsInput()) {
+        if (out.length - len < 4096) out = java.util.Arrays.copyOf(out, math.max(out.length * 2, len + 4096))
         val n =
-          try inf.inflate(buf)
+          try inf.inflate(out, len, 4096)
           catch { case _: java.util.zip.DataFormatException => err("flate_decode: inflate error") }
         if (n == 0 && !inf.finished()) {
           if (inf.needsDictionary()) err("flate_decode: inflate error")
           // needsInput with no more input: truncated stream -> stop like ref (Z_BUF_ERROR throws there)
           if (inf.needsInput()) err("flate_decode: inflate error")
         }
-        out.write(buf, 0, n)
+        len += n
       }
     } finally inf.end()
-    val result = Bytes.str(out.toByteArray)
+    val result = new String(out, 0, len, java.nio.charset.StandardCharsets.ISO_8859_1)
     if (opts.isEmpty) result else predictorDecode(result, opts)
   }
 
@@ -48,7 +51,8 @@ object Filters {
     val bpp = (bpcs * colors) >> 3
     val rows = (columns * colors * bpcs) >> 3
     val prev = new Array[Byte](rows)
-    val result = new StringBuilder(data.length)
+    val result = new Array[Char](data.length) // a row is emitted after its bytes are read
+    var n = 0
     var pi = 0
     var len = data.length
     while (len > 0) {
@@ -82,33 +86,60 @@ object Filters {
         curRowIndex = 0
         nextByteIsPredictor = curPredictor >= 10
         var k = 0
-        while (k < rows) { result.append((prev(k) & 0xff).toChar); k += 1 }
+        while (k < rows) { result(n) = (prev(k) & 0xff).toChar; n += 1; k += 1 }
       }
     }
-    result.toString
+    new String(result, 0, n)
   }
 
   /** PDF LZW (lzw_decode.cc:39-130): 9->12-bit codes, table grows at sizes
-    * 511/1023/2047, clear=256, EOD=257; optional predictor pass. */
+    * 511/1023/2047, clear=256, EOD=257; optional predictor pass.
+    *
+    * The reference keeps each table entry as its own byte string. Here an
+    * entry is its predecessor's code plus one byte (`prefix`, `suffix`,
+    * `length`, `first` byte), written out back to front; CLEAR only resets
+    * the size, since entries 0..256 never change. Entry 256 is the
+    * reference's empty dummy, so new entries start at 257. */
   def lzwDecode(buf: String, opts: Dict): String = {
-    val masks = Array(0x01ff, 0x03ff, 0x07ff, 0x0fff)
     val CLEAR = 0x0100
     val EOD = 0x0101
-    def initTable(): scala.collection.mutable.ArrayBuffer[Array[Byte]] = {
-      val t = new scala.collection.mutable.ArrayBuffer[Array[Byte]](4096)
-      var i = 0
-      while (i <= 255) { t += Array(i.toByte); i += 1 }
-      t += Array.emptyByteArray // dummy 256 entry
-      t
+    var cap = 512 // doubles as the table grows; 4096 codes are addressable
+    var prefix = new Array[Int](cap)
+    var suffix = new Array[Byte](cap)
+    var length = new Array[Int](cap)
+    var first = new Array[Byte](cap)
+    var k = 0
+    while (k <= 255) { prefix(k) = -1; suffix(k) = k.toByte; length(k) = 1; first(k) = k.toByte; k += 1 }
+    var size = 257
+    var out = new Array[Byte](math.max(64, buf.length * 3))
+    var outLen = 0
+    def write(code: Int): Unit = {
+      val l = length(code)
+      if (out.length - outLen < l + 1) out = java.util.Arrays.copyOf(out, math.max(out.length * 2, outLen + l + 1))
+      var j = outLen + l - 1
+      var e = code
+      while (j >= outLen) { out(j) = suffix(e); e = prefix(e); j -= 1 }
+      outLen += l
     }
-    var mask = 0
+    def add(pre: Int, last: Byte): Unit = {
+      if (size == cap) {
+        cap *= 2
+        prefix = java.util.Arrays.copyOf(prefix, cap)
+        suffix = java.util.Arrays.copyOf(suffix, cap)
+        length = java.util.Arrays.copyOf(length, cap)
+        first = java.util.Arrays.copyOf(first, cap)
+      }
+      prefix(size) = pre
+      suffix(size) = last
+      length(size) = length(pre) + 1
+      first(size) = if (length(pre) > 0) first(pre) else last
+      size += 1
+    }
     var codeLen = 9
-    var table = initTable()
     var bufferBits = 0L
     var bufferSize = 0
     var old = 0
     var character: Byte = if (buf.nonEmpty) buf.charAt(0).toByte else 0
-    val result = new java.io.ByteArrayOutputStream(buf.length * 3)
     var pi = 0
     var len = buf.length
     var done = false
@@ -121,35 +152,39 @@ object Filters {
       }
       var continue = true
       while (bufferSize >= codeLen && continue) {
-        val code = ((bufferBits >> (bufferSize - codeLen)) & masks(mask)).toInt
+        val code = ((bufferBits >> (bufferSize - codeLen)) & ((1 << codeLen) - 1)).toInt
         bufferSize -= codeLen
         if (code == CLEAR) {
-          mask = 0
           codeLen = 9
-          table = initTable()
+          size = 257
         } else if (code == EOD) {
           len = 0
           done = true
           continue = false
         } else {
-          var data: Array[Byte] = null
-          if (code >= table.size) {
-            if (old >= table.size) err("lzw_decode: value out of range")
-            data = table(old) :+ character
-          } else data = table(code)
-          result.write(data, 0, data.length)
-          character = data(0)
-          if (old < table.size) data = table(old) // "fix the first loop" quirk kept
-          table += (data :+ character)
+          if (code >= size) {
+            // table(old) :+ character, the entry not yet in the table
+            if (old >= size) err("lzw_decode: value out of range")
+            write(old) // leaves room for one more byte
+            out(outLen) = character
+            outLen += 1
+            if (length(old) > 0) character = first(old)
+          } else {
+            write(code)
+            character = first(code)
+          }
+          // "fix the first loop" quirk kept: the new entry extends table(old)
+          // while old is in range, else the data just written
+          add(if (old < size) old else code, character)
           old = code
-          table.size match {
-            case 511 | 1023 | 2047 => codeLen += 1; mask += 1
+          size match {
+            case 511 | 1023 | 2047 => codeLen += 1
             case _ =>
           }
         }
       }
     }
-    val s = Bytes.str(result.toByteArray)
+    val s = new String(out, 0, outLen, java.nio.charset.StandardCharsets.ISO_8859_1)
     if (opts.isEmpty) s else predictorDecode(s, opts)
   }
 
@@ -159,12 +194,15 @@ object Filters {
     var count = 0
     var tuple = 0L
     var foundEnd = false
-    val result = new StringBuilder(buf.length * 4 / 5 + 4)
-    def widePut(t: Long, bytes: Int): Unit = {
-      if (bytes >= 1) result.append(((t >> 24) & 0xff).toChar)
-      if (bytes >= 2) result.append(((t >> 16) & 0xff).toChar)
-      if (bytes >= 3) result.append(((t >> 8) & 0xff).toChar)
-      if (bytes >= 4) result.append((t & 0xff).toChar)
+    var result = new Array[Char](buf.length * 4 / 5 + 4)
+    var n = 0
+    def widePut(t: Long): Unit = {
+      if (result.length - n < 4) result = java.util.Arrays.copyOf(result, result.length * 2 + 4)
+      result(n) = ((t >> 24) & 0xff).toChar
+      result(n + 1) = ((t >> 16) & 0xff).toChar
+      result(n + 2) = ((t >> 8) & 0xff).toChar
+      result(n + 3) = (t & 0xff).toChar
+      n += 4
     }
     var i = 0
     var len = buf.length
@@ -173,7 +211,7 @@ object Filters {
       c match {
         case 'z' =>
           if (count != 0) err("ascii85_decode: count is not zero")
-          widePut(tuple, 4)
+          widePut(tuple)
         case '~' =>
           i += 1
           len -= 1
@@ -185,7 +223,7 @@ object Filters {
           tuple += (c - '!') * powers(count)
           count += 1
           if (count == 5) {
-            widePut(tuple, 4)
+            widePut(tuple)
             count = 0
             tuple = 0
           }
@@ -194,22 +232,23 @@ object Filters {
       i += 1
     }
     // NOTE: reference emits nothing for a partial trailing group (no ~> flush)
-    result.toString
+    new String(result, 0, n)
   }
 
   /** hex pairs (ascii_hex_decode.cc:45-85) */
   def asciiHexDecode(buf: String, opts: Dict): String = {
     var low = true
     var decoded = 0
-    val result = new StringBuilder(buf.length / 2 + 1)
+    val result = new Array[Char](buf.length / 2 + 1)
+    var n = 0
     var i = 0
     var len = buf.length
     while (len > 0) {
       len -= 1
       val c = buf.charAt(i)
       if (c == '>') {
-        if (!low) result.append(((decoded << 4) & 0xff).toChar)
-        return result.toString
+        if (!low) { result(n) = ((decoded << 4) & 0xff).toChar; n += 1 }
+        return new String(result, 0, n)
       }
       if (c == 0 || c == '\t' || c == '\n' || c == '\f' || c == '\r' || c == ' ') {
         i += 1
@@ -217,15 +256,16 @@ object Filters {
         val v = hexVal(c)
         if (low) { decoded = v; low = false }
         else {
-          result.append((((decoded << 4) | v) & 0xff).toChar)
+          result(n) = (((decoded << 4) | v) & 0xff).toChar
+          n += 1
           low = true
           decoded = 0
         }
         i += 1
       }
     }
-    if (!low) result.append(((decoded << 4) & 0xff).toChar)
-    result.toString
+    if (!low) { result(n) = ((decoded << 4) & 0xff).toChar; n += 1 }
+    new String(result, 0, n)
   }
 
   private def hexVal(c: Char): Int =

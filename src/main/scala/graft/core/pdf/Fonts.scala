@@ -12,59 +12,31 @@ import Lex._
   */
 final class Fonts private (
     dictionaryPerFont: Map[String, Lex.Dict],
-    heights: Map[String, Float],
-    descents: Map[String, Float],
-    ascents: Map[String, Float],
-    isType3: Map[String, Boolean],
-    widths: Map[String, Array[(Int, Float)]],
-    defaultWidth: Map[String, Float],
-    fontMatrixType3: Map[String, Array[Float]]) {
+    metrics: Map[String, Fonts.Metrics]) {
 
   private var currentFont: String = ""
   private var riseV: Float = 0f
+  // metrics of currentFont, looked up on the first query after Tf
+  private var cur: Fonts.Metrics = null
 
-  def freshCopy: Fonts = new Fonts(dictionaryPerFont, heights, descents, ascents,
-    isType3, widths, defaultWidth, fontMatrixType3)
+  def freshCopy: Fonts = new Fonts(dictionaryPerFont, metrics)
 
   // ---- queries (fonts.cc:55-69,197-345) ------------------------------------
 
-  // 256-slot scaled-width cache per current font: the per-glyph hot path
-  // (profiled ~20% of dense-document time) was a Map lookup + binary search
-  // + tuple allocation per character. Values are computed by the exact
-  // original expression, so results are bit-identical.
-  private var cachedFont: String = null
-  private var cachedW256: Array[Float] = null
-  private val w256PerFont = new java.util.HashMap[String, Array[Float]]()
-
-  private def widthCache(): Array[Float] = {
-    if (cachedFont != currentFont) {
-      var arr = w256PerFont.get(currentFont)
-      if (arr == null) {
-        val fontWidth = widths(currentFont)
-        val dw = defaultWidth(currentFont)
-        val sx = getScales._1
-        arr = new Array[Float](256)
-        var c = 0
-        while (c < 256) {
-          val i = if (fontWidth.isEmpty) -1 else binarySearch(fontWidth, c)
-          arr(c) = (if (i == -1) dw else fontWidth(i)._2) * sx
-          c += 1
-        }
-        w256PerFont.put(currentFont, arr)
-      }
-      cachedW256 = arr
-      cachedFont = currentFont
-    }
-    cachedW256
+  /** an unknown font throws NoSuchElementException on its first query
+    * (the reference's map::at) */
+  private def current: Fonts.Metrics = {
+    if (cur == null) cur = metrics(currentFont)
+    cur
   }
 
   def getWidth(code: Long): Float = {
-    if (code >= 0 && code < 256) return widthCache()(code.toInt)
-    val fontWidth = widths(currentFont)
-    if (fontWidth.isEmpty) return defaultWidth(currentFont) * getScales._1
-    val i = binarySearch(fontWidth, code.toInt)
-    if (i == -1) defaultWidth(currentFont) * getScales._1
-    else fontWidth(i)._2 * getScales._1
+    val m = current
+    if (code >= 0 && code < 256) return m.w256(code.toInt)
+    if (m.widths.isEmpty) return m.dw * m.sx
+    val i = m.widths.search(code.toInt)
+    if (i == -1) m.dw * m.sx
+    else m.widths.ws(i) * m.sx
   }
 
   def getWidth(s: String): Float = {
@@ -79,18 +51,18 @@ final class Fonts private (
 
   def getHeight: Float = {
     validateCurrentFont()
-    val h = heights(currentFont)
-    if (h == Fonts.NO_HEIGHT) getAscent - getDescent else h * getScales._2
+    val m = current
+    if (m.height == Fonts.NO_HEIGHT) getAscent - getDescent else m.height * m.sy
   }
 
   def getDescent: Float = {
     validateCurrentFont()
-    descents(currentFont) * getScales._2
+    current.descent * current.sy
   }
 
   def getAscent: Float = {
     validateCurrentFont()
-    ascents(currentFont) * getScales._2
+    current.ascent * current.sy
   }
 
   def getCurrentFontDictionary: Lex.Dict = {
@@ -98,28 +70,10 @@ final class Fonts private (
     dictionaryPerFont(currentFont)
   }
 
-  def setCurrentFont(font: String): Unit = currentFont = font
+  def setCurrentFont(font: String): Unit = { currentFont = font; cur = null }
 
   private def validateCurrentFont(): Unit =
     if (currentFont.isEmpty) err("current font is not set")
-
-  private def getScales: (Float, Float) =
-    if (!isType3(currentFont)) (0.001f, 0.001f)
-    else {
-      val m = fontMatrixType3(currentFont)
-      (m(0) + m(2), m(1) + m(3)) // apply_matrix_norm(m, 1, 1)
-    }
-
-  private def binarySearch(arr: Array[(Int, Float)], x: Int): Int = {
-    var l = 0
-    var r = arr.length - 1
-    while (l <= r) {
-      val m = l + (r - l) / 2
-      if (arr(m)._1 == x) return m
-      if (arr(m)._1 < x) l = m + 1 else r = m - 1
-    }
-    -1
-  }
 }
 
 object Fonts {
@@ -127,18 +81,77 @@ object Fonts {
   final val NO_DESCENT = 0f
   final val NO_ASCENT = 0f
 
+  /** (code, width) pairs sorted by (code, width), as two primitive arrays */
+  private[pdf] final class Widths(val codes: Array[Int], val ws: Array[Float]) {
+    def isEmpty: Boolean = codes.length == 0
+
+    /** the reference's binary search: with repeated codes (overlapping
+      * /W ranges) the probe path decides which width wins */
+    def search(x: Int): Int = {
+      var l = 0
+      var r = codes.length - 1
+      while (l <= r) {
+        val m = l + (r - l) / 2
+        if (codes(m) == x) return m
+        if (codes(m) < x) l = m + 1 else r = m - 1
+      }
+      -1
+    }
+
+    /** `search(c)` for every code 0..255; built once per table */
+    lazy val index256: Array[Int] = Array.tabulate(256)(c => if (isEmpty) -1 else search(c))
+
+    /** widths of codes 0..255 for the common case of no /MissingWidth and
+      * the 1/1000 scale; shared by every use of a Standard-14 table */
+    lazy val milli256: Array[Float] = scaled(this, 0f, 0.001f)
+  }
+
+  private[pdf] object Widths {
+    val empty = new Widths(Array.emptyIntArray, Array.emptyFloatArray)
+    def apply(pairs: Array[(Int, Float)]): Widths =
+      if (pairs.isEmpty) empty else new Widths(pairs.map(_._1), pairs.map(_._2))
+  }
+
+  /** Standard-14 width tables, converted once per JVM; read-only */
+  private lazy val standardWidths: Map[String, Widths] =
+    Tables.standardWidths.map { case (k, v) => k -> Widths(v) }
+
+  private def standardWidthsOf(baseFont: String): Widths =
+    standardWidths.getOrElse(baseFont, Widths.empty)
+
+  /** one font's metrics (fonts.cc:55-69); `sx`/`sy` are the glyph-space
+    * scales: 1/1000, or the Type3 /FontMatrix norm (apply_matrix_norm) */
+  private[pdf] final class Metrics(
+      val widths: Widths,
+      val dw: Float,
+      val height: Float,
+      val descent: Float,
+      val ascent: Float,
+      fontMatrix: Array[Float]) {
+    val sx: Float = if (fontMatrix == null) 0.001f else fontMatrix(0) + fontMatrix(2)
+    val sy: Float = if (fontMatrix == null) 0.001f else fontMatrix(1) + fontMatrix(3)
+
+    /** scaled width of codes 0..255: the per-glyph hot path */
+    lazy val w256: Array[Float] =
+      if (dw == 0f && fontMatrix == null) widths.milli256 else scaled(widths, dw, sx)
+  }
+
+  /** (width, or `dw` for a code with none) * `sx`, for codes 0..255 */
+  private def scaled(widths: Widths, dw: Float, sx: Float): Array[Float] = {
+    val idx = widths.index256
+    val arr = new Array[Float](256)
+    var c = 0
+    while (c < 256) {
+      val i = idx(c)
+      arr(c) = (if (i == -1) dw else widths.ws(i)) * sx
+      c += 1
+    }
+    arr
+  }
+
   def empty(storage: ObjectStorage): Fonts = apply(storage, Map.empty)
 
   def apply(storage: ObjectStorage, fontsDict: Lex.Dict): Fonts = {
-    val dictionaryPerFont = scala.collection.mutable.Map.empty[String, Lex.Dict]
-    val heights = scala.collection.mutable.Map.empty[String, Float]
-    val descents = scala.collection.mutable.Map.empty[String, Float]
-    val ascents = scala.collection.mutable.Map.empty[String, Float]
-    val types = scala.collection.mutable.Map.empty[String, Boolean]
-    val widths = scala.collection.mutable.Map.empty[String, Array[(Int, Float)]]
-    val defaultWidth = scala.collection.mutable.Map.empty[String, Float]
-    val fontMatrixType3 = scala.collection.mutable.Map.empty[String, Array[Float]]
-
     /** /Type0 merges its single DescendantFont dict; parent keys win
       * (C++ map::insert, fonts.cc:41-53) */
     def withDescendant(font: Lex.Dict): Lex.Dict = {
@@ -151,24 +164,21 @@ object Fonts {
       }
     }
 
-    def insertMatrixType3(name: String, font: Lex.Dict): Unit = {
+    def matrixType3(font: Lex.Dict): Array[Float] = {
       val p = font.getOrElse("/FontMatrix", err("no /FontMatrix"))
       if (p.tpe != Obj.ARRAY) err("/FontMatrix must be ARRAY")
       val data = getArrayData(p.raw, 0)
       if (data.size != 6) err("/FontMatrix must have 6 elements")
-      fontMatrixType3(name) = data.map { d =>
+      data.map { d =>
         if (d.tpe != Obj.VALUE) err("/FontMatrix element must be VALUE")
         stof(d.raw)
       }.toArray
     }
 
-    /** CID /W + /DW (fonts.cc:71-123) */
-    def insertWidthsFromW(name: String, baseFont: String): Unit = {
-      val font = dictionaryPerFont(name)
-      defaultWidth(name) = getDictVal(font, "/DW", 1000L).toFloat
+    /** CID /W (fonts.cc:71-123); /DW is read before it by the caller */
+    def widthsFromW(font: Lex.Dict, baseFont: String): Widths =
       font.get("/W") match {
-        case None =>
-          widths(name) = Tables.standardWidths.getOrElse(baseFont, Array.empty)
+        case None => standardWidthsOf(baseFont)
         case Some(wv) =>
           val result = DocUtil.getArrayOrIndirectArray(wv, storage).map { p =>
             if (p.tpe == Obj.INDIRECT_OBJECT) DocUtil.getIndirectObjectData(p.raw, storage) else p
@@ -194,18 +204,14 @@ object Fonts {
               case t => err(s"wrong type for val ${result(i + 1).raw} type=$t")
             }
           }
-          widths(name) = fw.sortBy(pair => (pair._1, pair._2)) /* std::sort over pair<uint,float>: ties by width (fonts.cc:123) */.toArray
+          Widths(fw.sortBy(pair => (pair._1, pair._2)) /* std::sort over pair<uint,float>: ties by width (fonts.cc:123) */.toArray)
       }
-    }
 
-    /** simple-font /Widths + /FirstChar + /MissingWidth (fonts.cc:125-151) */
-    def insertWidthsFromWidths(name: String, fontDesc: Lex.Dict, baseFont: String): Unit = {
-      val font = dictionaryPerFont(name)
-      val firstChar = getDictVal(font, "/FirstChar", 0L).toInt
-      defaultWidth(name) = getDictVal(fontDesc, "/MissingWidth", 0L).toFloat
+    /** simple-font /Widths from /FirstChar (fonts.cc:125-151); /MissingWidth
+      * is read between the two by the caller */
+    def widthsFromWidths(font: Lex.Dict, firstChar: Int, baseFont: String): Widths =
       font.get("/Widths") match {
-        case None =>
-          widths(name) = Tables.standardWidths.getOrElse(baseFont, Array.empty)
+        case None => standardWidthsOf(baseFont)
         case Some(wv) =>
           val result = DocUtil.getArrayOrIndirectArray(wv, storage)
           val fw = new Array[(Int, Float)](result.size)
@@ -216,53 +222,59 @@ object Fonts {
             fw(i) = ((i + firstChar, stof(v)))
             i += 1
           }
-          widths(name) = fw.sortBy(pair => (pair._1, pair._2)) /* std::sort over pair<uint,float>: ties by width (fonts.cc:123) */
+          Widths(fw.sortBy(pair => (pair._1, pair._2)) /* std::sort over pair<uint,float>: ties by width (fonts.cc:123) */)
       }
-    }
 
+    val dictionaryPerFont = Map.newBuilder[String, Lex.Dict]
+    val metrics = Map.newBuilder[String, Metrics]
     fontsDict.foreach { case (name, pval) =>
       var fontDict = DocUtil.getDictOrIndirectDict(pval, storage)
       val t3 = fontDict("/Subtype").raw == "/Type3"
-      types(name) = t3
-      if (t3) insertMatrixType3(name, fontDict)
+      val fontMatrix = if (t3) matrixType3(fontDict) else null
       fontDict = withDescendant(fontDict)
-      dictionaryPerFont(name) = fontDict
+      dictionaryPerFont += name -> fontDict
       val descDict = fontDict.get("/FontDescriptor")
         .map(DocUtil.getDictOrIndirectDict(_, storage))
         .getOrElse(Map.empty[String, PVal])
       val baseFont = fontDict.get("/BaseFont").map(_.raw).getOrElse("")
       val subtype = fontDict("/Subtype").raw
-      if (subtype == "/CIDFontType0" || subtype == "/CIDFontType2" || subtype == "/Type0")
-        insertWidthsFromW(name, baseFont)
-      else insertWidthsFromWidths(name, descDict, baseFont)
+      var dw = 0f
+      val widths =
+        if (subtype == "/CIDFontType0" || subtype == "/CIDFontType2" || subtype == "/Type0") {
+          dw = getDictVal(fontDict, "/DW", 1000L).toFloat
+          widthsFromW(fontDict, baseFont)
+        } else {
+          val firstChar = getDictVal(fontDict, "/FirstChar", 0L).toInt
+          dw = getDictVal(descDict, "/MissingWidth", 0L).toFloat
+          widthsFromWidths(fontDict, firstChar, baseFont)
+        }
       // height (fonts.cc:207-226)
-      descDict.get("/FontBBox") match {
-        case None => heights(name) = Tables.stdMetrics.get(baseFont).map(_._3).getOrElse(NO_HEIGHT)
+      val height = descDict.get("/FontBBox") match {
+        case None => Tables.stdMetrics.get(baseFont).map(_._3).getOrElse(NO_HEIGHT)
         case Some(v) =>
           val arr = DocUtil.getArrayOrIndirectArray(v, storage)
-          heights(name) = stof(arr(3).raw) - stof(arr(1).raw)
+          stof(arr(3).raw) - stof(arr(1).raw)
       }
       // descent (fonts.cc:228-260)
-      descDict.get("/Descent") match {
-        case Some(v) => descents(name) = stof(v.raw)
+      val descent = descDict.get("/Descent") match {
+        case Some(v) => stof(v.raw)
         case None =>
           if (t3 && fontDict.contains("/FontBBox")) {
             val arr = DocUtil.getArrayOrIndirectArray(fontDict("/FontBBox"), storage)
-            descents(name) = stof(arr(1).raw)
-          } else descents(name) = Tables.stdMetrics.get(baseFont).map(_._2).getOrElse(NO_DESCENT)
+            stof(arr(1).raw)
+          } else Tables.stdMetrics.get(baseFont).map(_._2).getOrElse(NO_DESCENT)
       }
       // ascent (fonts.cc:262-294)
-      descDict.get("/Ascent") match {
-        case Some(v) => ascents(name) = stof(v.raw)
+      val ascent = descDict.get("/Ascent") match {
+        case Some(v) => stof(v.raw)
         case None =>
           if (t3 && fontDict.contains("/FontBBox")) {
             val arr = DocUtil.getArrayOrIndirectArray(fontDict("/FontBBox"), storage)
-            ascents(name) = stof(arr(3).raw)
-          } else ascents(name) = Tables.stdMetrics.get(baseFont).map(_._1).getOrElse(NO_ASCENT)
+            stof(arr(3).raw)
+          } else Tables.stdMetrics.get(baseFont).map(_._1).getOrElse(NO_ASCENT)
       }
+      metrics += name -> new Metrics(widths, dw, height, descent, ascent, fontMatrix)
     }
-
-    new Fonts(dictionaryPerFont.toMap, heights.toMap, descents.toMap, ascents.toMap,
-      types.toMap, widths.toMap, defaultWidth.toMap, fontMatrixType3.toMap)
+    new Fonts(dictionaryPerFont.result(), metrics.result())
   }
 }

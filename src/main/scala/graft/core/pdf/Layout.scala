@@ -51,7 +51,7 @@ object Layout {
 
   private def add2line(line: TextChunk, obj: TextChunk): Unit = {
     line.stringLen += obj.stringLen
-    obj.texts.foreach(line.texts += _)
+    line.texts ++= obj.texts
     extendBBox(line.coordinates, obj.coordinates)
   }
 
@@ -124,22 +124,24 @@ object Layout {
     groupZeroLines(lines)
     clearEmptyStrings(lines)
     if (lines.isEmpty) return TextChunk.empty
-    val sorted = lines.sortWith { (a, b) =>
+    val sorted = if (lines.length == 1) lines else lines.sortWith { (a, b) =>
       if (a.coordinates.y1 != b.coordinates.y1) a.coordinates.y1 > b.coordinates.y1
       else a.coordinates.x0 < b.coordinates.x0
     }
-    val result = TextChunk(sorted(0).texts(0).text + "\n", sorted(0).coordinates.copyOf)
-    val acc = new StringBuilder(result.texts(0).text)
+    val first = sorted(0).texts(0).text
+    val coords = sorted(0).coordinates.copyOf
+    var stringLen = Bytes.utf8Length(first).toLong + 1 // + '\n'
+    val acc = new StringBuilder(first).append('\n')
     var i = 1
     while (i < sorted.length) {
       acc.append(sorted(i).texts(0).text).append('\n')
-      extendBBox(result.coordinates, sorted(i).coordinates)
-      result.stringLen += sorted(i).stringLen
+      extendBBox(coords, sorted(i).coordinates)
+      stringLen += sorted(i).stringLen
       i += 1
     }
-    result.texts(0).text = acc.toString
-    result.texts(0).coordinates = result.coordinates.copyOf
-    result
+    val texts = new ArrayBuffer[TextT](1)
+    texts += TextT(coords.copyOf, acc.toString)
+    new TextChunk(coords, texts, stringLen, false)
   }
 
   /** pages_extractor.cc:301-315 */
@@ -210,7 +212,6 @@ object Layout {
   private def makeTextBoxes(lines: ArrayBuffer[TextChunk]): ArrayBuffer[TextChunk] = {
     // y0 index for the neighbour-window pruning (built once per page)
     val n = lines.length
-    val order = Array.range(0, n)
     val y0 = new Array[Float](n)
     var hmax = 0f
     var t = 0
@@ -220,8 +221,7 @@ object Layout {
       if (h > hmax) hmax = h
       t += 1
     }
-    // sort indices by y0 (boxed sort acceptable: once per page)
-    val orderBoxed = order.sortBy(y0(_))
+    val orderBoxed = sortByY0(y0)
     val y0sorted = orderBoxed.map(y0(_))
     val textBoxes = ArrayBuffer.empty[TextChunk]
     var idx = lines.indexWhere(l => !l.isEmpty)
@@ -237,27 +237,55 @@ object Layout {
     textBoxes
   }
 
+  /** line indices stably sorted by y0 under `Float.compare` (the order
+    * `sortBy` gives): each key packs the float's order-preserving int
+    * image above the index, so one primitive sort does it */
+  private def sortByY0(y0: Array[Float]): Array[Int] = {
+    val keys = new Array[Long](y0.length)
+    var i = 0
+    while (i < y0.length) {
+      val bits = java.lang.Float.floatToIntBits(y0(i))
+      val ordered = if (bits < 0) bits ^ 0x7fffffff else bits
+      keys(i) = (ordered.toLong << 32) | i
+      i += 1
+    }
+    java.util.Arrays.sort(keys)
+    val order = new Array[Int](y0.length)
+    i = 0
+    while (i < keys.length) { order(i) = keys(i).toInt; i += 1 }
+    order
+  }
+
   /** within each line, sort runs by x0 and insert word spaces (pages_extractor.cc:348-371) */
-  private def mergeChars(chars: ArrayBuffer[TextChunk]): Unit =
-    chars.foreach { line =>
+  private def mergeChars(chars: ArrayBuffer[TextChunk]): Unit = {
+    var k = 0
+    while (k < chars.length) {
+      val line = chars(k)
       if (line.texts.nonEmpty) {
         val whole = TextT(line.coordinates.copyOf, "")
-        val sorted = line.texts.sortWith((a, b) => a.coordinates.x0 < b.coordinates.x0)
-        val acc = new StringBuilder
-        var i = 0
-        while (i < sorted.length) {
-          acc.append(sorted(i).text)
-          if (i != sorted.length - 1 &&
-            sorted(i).coordinates.x1 < sorted(i + 1).coordinates.x0 -
-              widthText(sorted(i + 1)) * WORD_MARGIN) {
-            acc.append(' ')
+        if (line.texts.length == 1) whole.text = line.texts(0).text
+        else {
+          val sorted = line.texts.sortWith((a, b) => a.coordinates.x0 < b.coordinates.x0)
+          val acc = new StringBuilder
+          var i = 0
+          while (i < sorted.length) {
+            acc.append(sorted(i).text)
+            if (i != sorted.length - 1 &&
+              sorted(i).coordinates.x1 < sorted(i + 1).coordinates.x0 -
+                widthText(sorted(i + 1)) * WORD_MARGIN) {
+              acc.append(' ')
+            }
+            i += 1
           }
-          i += 1
+          whole.text = acc.toString
         }
-        whole.text = acc.toString
-        line.texts = ArrayBuffer(whole)
+        val texts = new ArrayBuffer[TextT](1)
+        texts += whole
+        line.texts = texts
       }
+      k += 1
     }
+  }
 
   private def makeTextLines(chunks: ArrayBuffer[TextChunk]): ArrayBuffer[TextChunk] = {
     clearEmptyStrings(chunks)
@@ -362,6 +390,7 @@ object Layout {
 
   private def makeString(group: TextChunk): String = {
     if (group.isEmpty) return ""
+    if (group.texts.length == 1) return group.texts(0).text
     val sb = new StringBuilder
     group.texts.foreach(t => sb.append(t.text))
     sb.toString
@@ -376,7 +405,10 @@ object Layout {
     * line/box assembly, before plane merging. */
   def renderTextWithSpans(chunks: ArrayBuffer[TextChunk]): (String, Vector[(Coord, String)]) = {
     val boxes = makeTextBoxes(makeTextLines(chunks))
-    val spans = boxes.map(b => (b.coordinates.copyOf, b.texts.headOption.map(_.text).getOrElse(""))).toVector
+    val spans = Vector.tabulate(boxes.length) { i =>
+      val b = boxes(i)
+      (b.coordinates.copyOf, if (b.texts.isEmpty) "" else b.texts(0).text)
+    }
     val text = makeString(makePlane(boxes))
     (text, spans)
   }

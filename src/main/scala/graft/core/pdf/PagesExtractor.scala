@@ -62,7 +62,7 @@ final class PagesExtractor(
   locally {
     val catalogPair = storage.getObject(catalogPagesId)
     if (catalogPair.tpe != Obj.DICTIONARY) err("catalog must be DICTIONARY")
-    val data = getDictionaryData(catalogPair.raw, 0)
+    val data = storage.dictionary(catalogPair.raw)
     if (!data.get("/Type").exists(_.raw == "/Pages"))
       err("In root catalog type must be '/Type /Pages'")
     val checked = MSet.empty[Long]
@@ -84,7 +84,7 @@ final class PagesExtractor(
         checked += id
         val pageDict = storage.getObject(id)
         if (pageDict.tpe != Obj.DICTIONARY) err("page must be DICTIONARY")
-        val dictData = getDictionaryData(pageDict.raw, 0)
+        val dictData = storage.dictionary(pageDict.raw)
         if (dictData("/Type").raw == "/Page") {
           pages += id
           val idStr = id.toString
@@ -158,7 +158,7 @@ final class PagesExtractor(
 
   private def getContentsIdGen(pagePair: PVal): Vector[(Long, Long)] = {
     if (pagePair.tpe != Obj.DICTIONARY) err("page must be DICTIONARY")
-    val data = getDictionaryData(pagePair.raw, 0)
+    val data = storage.dictionary(pagePair.raw)
     data.get("/Contents") match {
       case None => Vector.empty
       case Some(v) if v.tpe == Obj.ARRAY => getSet(v.raw)
@@ -184,7 +184,7 @@ final class PagesExtractor(
       case None => CharsetConverter("")
       case Some(e) if e.tpe == Obj.NAME_OBJECT => CharsetConverter(e.raw)
       case Some(e) =>
-        val dictionary = getDictionaryData(e.raw, 0)
+        val dictionary = storage.dictionary(e.raw)
         // reference uses the NONE-mode converter here (pages_extractor.cc:540);
         // it is observably identical to the default converter (get_string is
         // never reached when a DiffConverter exists; get_char falls back to
@@ -201,7 +201,7 @@ final class PagesExtractor(
       case None => DiffConverter.empty
       case Some(e) if e.tpe == Obj.NAME_OBJECT => DiffConverter.empty
       case Some(e) =>
-        val dictionary = getDictionaryData(e.raw, 0)
+        val dictionary = storage.dictionary(e.raw)
         dictionary.get("/Differences") match {
           case None => DiffConverter.empty
           case Some(diff) => DiffConverter.fromDifferences(dictionary, diff, storage)
@@ -305,26 +305,27 @@ final class PagesExtractor(
   private final class Arg(
       val result: ArrayBuffer[ArrayBuffer[TextChunk]],
       var encoding: ConverterEngine,
-      val st: ArrayBuffer[(Obj.Type, String)],
+      val st: ArrayBuffer[String],
       val coordinates: Coordinates,
       val resourceId: String,
       var in: Boolean,
       val content: String)
 
-  private def pop(st: ArrayBuffer[(Obj.Type, String)]): (Obj.Type, String) = {
+  private def pop(st: ArrayBuffer[String]): String = {
     if (st.isEmpty) err("pop: stack is empty")
     st.remove(st.length - 1)
   }
 
-  /** push strings/dicts/arrays as operands inside BT..ET (pages_extractor.cc:503-520) */
-  private def put2stack(st: ArrayBuffer[(Obj.Type, String)], buffer: String, p: Pos): Boolean =
+  /** push strings/dicts/arrays as operands inside BT..ET (pages_extractor.cc:503-520);
+    * operands keep only their text: no handler reads an operand's type */
+  private def put2stack(st: ArrayBuffer[String], buffer: String, p: Pos): Boolean =
     buffer.charAt(p.i) match {
-      case '(' => st += ((Obj.STRING, getString(buffer, p))); true
+      case '(' => st += getString(buffer, p); true
       case '<' =>
-        if (buffer.charAt(p.i + 1) == '<') st += ((Obj.DICTIONARY, getDictionary(buffer, p)))
-        else st += ((Obj.STRING, getString(buffer, p)))
+        if (buffer.charAt(p.i + 1) == '<') st += getDictionary(buffer, p)
+        else st += getString(buffer, p)
         true
-      case '[' => st += ((Obj.ARRAY, getArray(buffer, p))); true
+      case '[' => st += getArray(buffer, p); true
       case _ => false
     }
 
@@ -334,7 +335,7 @@ final class PagesExtractor(
       ctm: Option[Matrix.M]): ArrayBuffer[ArrayBuffer[TextChunk]] = {
     val coordinates = new Coordinates(
       ctm.getOrElse(PageGeom.initCTM(rotates(resourceId), mediaBoxes(resourceId))))
-    val st = new ArrayBuffer[(Obj.Type, String)](64)
+    val st = new ArrayBuffer[String](64)
     val result = ArrayBuffer(new ArrayBuffer[TextChunk](256))
     val arg = new Arg(result, null, st, coordinates, resourceId, in = false, pageContent)
     val p = new Pos(skipComments(pageContent, 0, validate = false))
@@ -342,7 +343,7 @@ final class PagesExtractor(
       if (!(arg.in && put2stack(st, pageContent, p))) {
         val token = getToken(pageContent, p)
         val op = PagesExtractor.canonicalOp(token)
-        if (op == null || !dispatch(op, arg, p)) st += ((Obj.VALUE, token))
+        if (op == null || !dispatch(op, arg, p)) st += token
       }
       p.i = skipComments(pageContent, p.i, validate = false)
     }
@@ -357,24 +358,24 @@ final class PagesExtractor(
       case "ET" => arg.in = false
       case "Tj" =>
         if (arg.in && arg.encoding != null && !arg.encoding.isVertical) {
-          val chunk = arg.encoding.getString(decodeString(pop(arg.st)._2), arg.coordinates, 0f,
+          val chunk = arg.encoding.getString(decodeString(pop(arg.st)), arg.coordinates, 0f,
             fonts(arg.resourceId))
           if (!chunk.isEmpty) arg.result(0) += chunk
         }
       case "TJ" =>
         if (arg.in && arg.encoding != null && !arg.encoding.isVertical) {
-          arg.result(0) ++= arg.encoding.getStringsFromArray(pop(arg.st)._2, arg.coordinates,
+          arg.result(0) ++= arg.encoding.getStringsFromArray(pop(arg.st), arg.coordinates,
             fonts(arg.resourceId))
         }
       case "'" =>
         if (arg.encoding != null && arg.in) {
           arg.coordinates.setQuote()
-          arg.result(0) += arg.encoding.getString(decodeString(pop(arg.st)._2), arg.coordinates, 0f,
+          arg.result(0) += arg.encoding.getString(decodeString(pop(arg.st)), arg.coordinates, 0f,
             fonts(arg.resourceId))
         }
       case "\"" =>
         if (arg.encoding != null && arg.in) {
-          val str = pop(arg.st)._2 // string popped BEFORE aw/ac (pages_extractor.cc:907-913)
+          val str = pop(arg.st) // string popped BEFORE aw/ac (pages_extractor.cc:907-913)
           arg.coordinates.setDoubleQuote(arg.st)
           arg.result(0) += arg.encoding.getString(str, arg.coordinates, 0f, fonts(arg.resourceId))
         }
@@ -386,17 +387,17 @@ final class PagesExtractor(
       case "Tc" => if (arg.in) arg.coordinates.setTc(arg.st)
       case "Tw" => if (arg.in) arg.coordinates.setTw(arg.st)
       case "Tz" => if (arg.in) arg.coordinates.setTz(arg.st)
-      case "Ts" => if (arg.in) fonts(arg.resourceId).setRise(stof(pop(arg.st)._2))
+      case "Ts" => if (arg.in) fonts(arg.resourceId).setRise(stof(pop(arg.st)))
       case "Tf" =>
         arg.coordinates.setTf(arg.st)
-        val font = pop(arg.st)._2
+        val font = pop(arg.st)
         fonts(arg.resourceId).setCurrentFont(font)
         arg.encoding = getFontEncoding(font, arg.resourceId)
       case "cm" => arg.coordinates.doCm(arg.st)
       case "q" => arg.coordinates.doQPush()
       case "Q" => arg.coordinates.doQPop()
       case "Do" =>
-        val xObject = pop(arg.st)._2
+        val xObject = pop(arg.st)
         val resourceName = "/" + arg.resourceId + "/" + xObject
         if (getXObjectData(arg.resourceId, xObject, resourceName)) {
           xObjectStreams.get(resourceName).foreach { stream =>
@@ -427,13 +428,19 @@ final class PagesExtractor(
   def getText: String = {
     val sb = new StringBuilder
     pages.foreach { pageId =>
-      val contents = getContentsIdGen(storage.getObject(pageId))
-      val pageContent = new StringBuilder
-      val visited = MSet.empty[Long]
-      contents.foreach(idGen => pageContent.append(outputContent(visited, idGen)))
-      extractText(pageContent.toString, pageId.toString, None)
+      extractText(pageContent(pageId), pageId.toString, None)
         .foreach(r => sb.append(Layout.renderText(r)))
     }
+    sb.toString
+  }
+
+  /** the page's /Contents streams, concatenated */
+  private def pageContent(pageId: Long): String = {
+    val contents = getContentsIdGen(storage.getObject(pageId))
+    val visited = MSet.empty[Long]
+    if (contents.length == 1) return outputContent(visited, contents(0))
+    val sb = new StringBuilder
+    contents.foreach(idGen => sb.append(outputContent(visited, idGen)))
     sb.toString
   }
 
@@ -442,11 +449,7 @@ final class PagesExtractor(
     val sb = new StringBuilder
     val spans = Vector.newBuilder[(Coord, String)]
     pages.foreach { pageId =>
-      val contents = getContentsIdGen(storage.getObject(pageId))
-      val pageContent = new StringBuilder
-      val visited = MSet.empty[Long]
-      contents.foreach(idGen => pageContent.append(outputContent(visited, idGen)))
-      extractText(pageContent.toString, pageId.toString, None).foreach { r =>
+      extractText(pageContent(pageId), pageId.toString, None).foreach { r =>
         val (text, sp) = Layout.renderTextWithSpans(r)
         sb.append(text)
         sp.foreach(spans += _)
@@ -460,21 +463,22 @@ final class PagesExtractor(
 object PdfExtract {
 
   private def open(buffer: String): (PagesExtractor, String) = {
+    val parsed = new DocCache(buffer)
     val crossRefOffset = Xref.getCrossRefOffset(buffer)
-    val trailerOffsets = Xref.getTrailerOffsets(buffer, crossRefOffset)
-    val id2offsets = Xref.getId2Offsets(buffer, trailerOffsets)
+    val trailerOffsets = Xref.getTrailerOffsets(parsed, crossRefOffset)
+    val id2offsets = Xref.getId2Offsets(parsed, trailerOffsets)
     val encryptData = Xref.getEncryptData(buffer, trailerOffsets(0)._1, trailerOffsets(0)._2, id2offsets)
-    val storage = new ObjectStorage(buffer, id2offsets, encryptData)
+    val storage = new ObjectStorage(parsed, id2offsets, encryptData)
     // trailer -> /Root -> /Pages (parser.cc:320-342)
     var trailerOffset = crossRefOffset
     if (Xref.isPrefix(buffer, crossRefOffset, "xref"))
       trailerOffset = efind(buffer, "trailer", trailerOffset) + "trailer".length
-    val trailerData = getDictionaryData(buffer, trailerOffset)
+    val trailerData = parsed.dictionaryAt(trailerOffset)
     val rootPair = trailerData.getOrElse("/Root", err("no /Root"))
     if (rootPair.tpe != Obj.INDIRECT_OBJECT) err("/Root value must be INDIRECT_OBJECT")
     val realRootPair = storage.getObject(getIdGen(rootPair.raw)._1)
     if (realRootPair.tpe != Obj.DICTIONARY) err("/Root indirect object must be a dictionary")
-    val rootData = getDictionaryData(realRootPair.raw, 0)
+    val rootData = storage.dictionary(realRootPair.raw)
     val pagesPair = rootData.getOrElse("/Pages", err("no /Pages"))
     if (pagesPair.tpe != Obj.INDIRECT_OBJECT) err("/Pages value must be INDIRECT_OBJECT")
     (new PagesExtractor(getIdGen(pagesPair.raw)._1, storage, encryptData, buffer), buffer)

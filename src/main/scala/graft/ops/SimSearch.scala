@@ -992,25 +992,21 @@ object SimSearch {
       rot: Array[Array[Float]],
       cb: PqCodebook): Double = {
     val e = embeddings.select(col("vec_id").cast("long"), col("embedding"))
-    val (_, se, n) = opqPass(e, rot, cb, rot.length, needM = false)
+    val (se, n) = opqPass(e, rot, cb, rot.length)
     se / math.max(n, 1L)
   }
 
   /** one distributed pass over an arbitrary (unsampled) frame, the
     * instrument behind `pqReconstructionMse`: per vector x, rotate
-    * (rx = R x), PQ-encode rx, reconstruct y^; accumulate squared error
-    * ||rx - y^||^2 and (when `needM` — the Procrustes update needs it,
-    * the MSE metric does not: the M accumulation is O(dim^2) per vector,
-    * as costly as the rotation itself) the correlation M += x y^T, with
-    * the same math as `opqPassLocal`. Partials are one dim^2 array per
-    * partition, summed on the driver in partition order (deterministic
-    * for a fixed layout). */
+    * (rx = R x), PQ-encode rx, reconstruct y^ and accumulate the squared
+    * error ||rx - y^||^2, with the same math as `opqPassLocal`. Returns
+    * (squared error, rows); the per-partition partials are summed on the
+    * driver in partition order (deterministic for a fixed layout). */
   private[graft] def opqPass(
       sample: DataFrame,
       rot: Array[Array[Float]],
       cb: PqCodebook,
-      dim: Int,
-      needM: Boolean): (Array[Double], Double, Long) = {
+      dim: Int): (Double, Long) = {
     val spark = sample.sparkSession
     import spark.implicits._
     val bcR = spark.sparkContext.broadcast(rot)
@@ -1018,7 +1014,6 @@ object SimSearch {
     val partials = sample.as[(Long, Seq[Float])].mapPartitions { rows =>
       val r = bcR.value
       val c = bcC.value
-      val mAcc = new Array[Double](if (needM) dim * dim else 0)
       var se = 0.0
       var cnt = 0L
       val rx = new Array[Float](dim)
@@ -1041,34 +1036,25 @@ object SimSearch {
           val off = j * c.subDim
           var s = 0
           while (s < c.subDim) {
-            val y = cent(s)
-            val d = rx(off + s) - y
+            val d = rx(off + s) - cent(s)
             se += d * d
-            if (needM) {
-              // M(a,b) = sum x(a) * y^(b), flattened row-major
-              var a = 0
-              while (a < dim) { mAcc(a * dim + (off + s)) += emb(a) * y; a += 1 }
-            }
             s += 1
           }
           j += 1
         }
         cnt += 1L
       }
-      Iterator.single((mAcc.toSeq, se, cnt))
+      Iterator.single((se, cnt))
     }.collect()
     bcR.destroy()
     bcC.destroy()
-    val mTot = new Array[Double](if (needM) dim * dim else 0)
     var se = 0.0
     var n = 0L
-    partials.foreach { case (p, s, c) =>
-      var i = 0
-      while (i < mTot.length) { mTot(i) += p(i); i += 1 }
+    partials.foreach { case (s, c) =>
       se += s
       n += c
     }
-    (mTot, se, n)
+    (se, n)
   }
 
   /** orthogonal-Procrustes solve: R maximizing tr(R M) over orthogonal

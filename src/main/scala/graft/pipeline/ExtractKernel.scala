@@ -55,13 +55,10 @@ object ExtractKernel {
         val (textBytes, spans) = graft.core.pdf.PdfExtract.extract(payload)
         val text = new String(textBytes, java.nio.charset.StandardCharsets.UTF_8)
         ExtractedRow(row.url, text,
-          spans.map { case (c, t) =>
-            Span(c.x0, c.y0, c.x1, c.y1,
-              new String(graft.core.pdf.Bytes.arr(t), java.nio.charset.StandardCharsets.UTF_8))
-          },
+          spans.map { case (c, t) => Span(c.x0, c.y0, c.x1, c.y1, utf8Text(t)) },
           "ok", kind, payload.length, text.length, (System.nanoTime() - t0) / 1000)
       } else {
-        val html = new String(payload, java.nio.charset.StandardCharsets.UTF_8)
+        val html = decodeUtf8(payload)
         val r = graft.core.html.HtmlExtract.extract(html)
         var off = 0L
         val spans = r.blocks.map { b =>
@@ -80,6 +77,28 @@ object ExtractKernel {
         ExtractedRow(row.url, "", Nil, "err:parse", kind, payload.length, 0,
           (System.nanoTime() - t0) / 1000)
     }
+  }
+
+  /** `new String(bytes, UTF_8)`. An ASCII prefix decodes to itself and no
+    * UTF-8 sequence spans an ASCII byte, so only the rest from the first
+    * non-ASCII byte goes through the decoder, which on JDK 17 runs byte by
+    * byte once it meets one (a page with one `©` in its footer). */
+  private[graft] def decodeUtf8(bytes: Array[Byte]): String = {
+    var i = 0
+    while (i < bytes.length && bytes(i) >= 0) i += 1
+    if (i == bytes.length) new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
+    else if (i < 64) new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+    else new String(bytes, 0, i, java.nio.charset.StandardCharsets.ISO_8859_1)
+      .concat(new String(bytes, i, bytes.length - i, java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  /** a UTF-8 byte-string (one char per byte) as text; all-ASCII bytes
+    * decode to the same chars, so such a string is its own result */
+  private def utf8Text(bytes: String): String = {
+    var i = 0
+    while (i < bytes.length && bytes.charAt(i) < 0x80) i += 1
+    if (i == bytes.length) bytes
+    else new String(graft.core.pdf.Bytes.arr(bytes), java.nio.charset.StandardCharsets.UTF_8)
   }
 
   /** partition-batched runner (the mapPartitions body). One iterator pass,

@@ -172,8 +172,9 @@ class UnitSpec extends AnyFunSuite {
     val pdf = Bytes.str(PdfBuilder.onePage(
       PdfBuilder.bytes("BT ET"), Map("/F1" -> 5), Seq(PdfBuilder.courier(5))))
     val off = Xref.getCrossRefOffset(pdf)
-    val trailers = Xref.getTrailerOffsets(pdf, off)
-    val id2o = Xref.getId2Offsets(pdf, trailers)
+    val doc = new DocCache(pdf)
+    val trailers = Xref.getTrailerOffsets(doc, off)
+    val id2o = Xref.getId2Offsets(doc, trailers)
     assert(Xref.getEncryptData(pdf, trailers(0)._1, trailers(0)._2, id2o).isEmpty)
   }
 
@@ -334,5 +335,187 @@ class UnitSpec extends AnyFunSuite {
     assert(canonicalOp("xy") == null) // empty slot
     assert(canonicalOp("ABC") == null) // length > 2
     assert(canonicalOp("!") == null) // below '"'
+  }
+
+  // ---- equivalence with the replaced definitions (Oracles) ------------------
+  /** the value, or the class of the exception thrown */
+  private def outcome[A](f: => A): Either[String, A] =
+    try Right(f) catch { case e: Throwable => Left(e.getClass.getName) }
+
+  private def randomFrom(rnd: scala.util.Random, alphabet: String, maxLen: Int): String =
+    Seq.fill(rnd.nextInt(maxLen + 1))(alphabet(rnd.nextInt(alphabet.length))).mkString
+
+  test("char-class scans agree with the set.indexOf scans they replaced") {
+    val rnd = new scala.util.Random(11)
+    val alphabet = "\r\n \t/[(<>])%0123456789abcXYZ\u0000\u007f\u0080\u00ff\u0100\u2028\uffff"
+    val sets = Seq("\r\n \t", " \r\n\t/[(<", "\r\t\n /](<>", "\r\t\n /][(<>", "\r\t\n /<[(",
+      "0123456789", "  \r\n\t", " \r\n]", "\r\n", "<[", " \t\n", "", "\u0100\u00ff", "a\u2028", "%\u0080") ++
+      Seq.fill(10)(randomFrom(rnd, alphabet, 6))
+    val strings = "" +: Seq.fill(300)(randomFrom(rnd, alphabet, 24))
+    for (s <- strings; pos <- -1 to s.length + 2) {
+      for (set <- sets) {
+        assert(outcome(Lex.findFirstOf(s, set, pos)) == outcome(Oracles.findFirstOf(s, set, pos)))
+        assert(outcome(Lex.findFirstNotOf(s, set, pos)) == outcome(Oracles.findFirstNotOf(s, set, pos)))
+        assert(outcome(Lex.efindFirstOf(s, set, pos)) == outcome(Oracles.efindFirstOf(s, set, pos)))
+        assert(outcome(Lex.efindFirstNotOf(s, set, pos)) == outcome(Oracles.efindFirstNotOf(s, set, pos)))
+        val cls = CharClass.of(set)
+        if (cls != null) {
+          assert(outcome(Lex.firstOf(s, cls, pos)) == outcome(Oracles.findFirstOf(s, set, pos)))
+          assert(outcome(Lex.firstNotOf(s, cls, pos)) == outcome(Oracles.findFirstNotOf(s, set, pos)))
+        } else assert(set.exists(_ >= 0x80))
+      }
+      for (validate <- Seq(true, false)) {
+        assert(outcome(Lex.skipSpaces(s, pos, validate)) == outcome(Oracles.skipSpaces(s, pos, validate)))
+        assert(outcome(Lex.skipComments(s, pos, validate)) == outcome(Oracles.skipComments(s, pos, validate)))
+      }
+    }
+  }
+
+  test("stof agrees with the parseFloat definition it replaced") {
+    val rnd = new scala.util.Random(12)
+    val pieces = Seq("", "+", "-", " ", "\t", "\n", "0", "00", "1", "7", "9", ".", ".5", "5.", "e", "E",
+      "e-", "e+3", "E7", "12345678", "16777215", "16777216", "16777217", "99999999999", "0.0000000001",
+      "0.00000000001", "3.4028235", "e39", "x", "/", "1.00000000000")
+    val inputs = Seq.fill(20000)(Seq.fill(1 + rnd.nextInt(5))(pieces(rnd.nextInt(pieces.length))).mkString) ++
+      Seq.fill(20000) {
+        val digits = Seq.fill(1 + rnd.nextInt(9))(('0' + rnd.nextInt(10)).toChar).mkString
+        val cut = rnd.nextInt(digits.length + 1)
+        (if (rnd.nextBoolean()) "-" else "") + digits.take(cut) + "." + digits.drop(cut)
+      }
+    inputs.foreach { s =>
+      assert(outcome(java.lang.Float.floatToRawIntBits(Lex.stof(s))) ==
+        outcome(java.lang.Float.floatToRawIntBits(Oracles.stof(s))), s)
+    }
+  }
+
+  test("array and string lexers agree with the string-building definitions they replaced") {
+    val rnd = new scala.util.Random(13)
+    val alphabet = "[[]]]()<<>>\\ a1/%"
+    for (_ <- 0 until 20000) {
+      val s = "[" + randomFrom(rnd, alphabet, 30)
+      val (p1, p2) = (new Pos(0), new Pos(0))
+      assert(outcome((Lex.getArray(s, p1), p1.i)) == outcome((Oracles.getArray(s, p2), p2.i)), s)
+      val str = (if (rnd.nextBoolean()) "(" else "<") + randomFrom(rnd, "\\()0123456789abcdefn \r\n\t+-", 16) + ")"
+      assert(outcome(Lex.decodeString(str)) == outcome(Oracles.decodeString(str)), str)
+    }
+  }
+
+  test("LZW decoder agrees with the byte-array-table decoder it replaced") {
+    val rnd = new scala.util.Random(14)
+    /** codes packed MSB first, each at the width the decoder reads it with */
+    def pack(codes: Seq[Int]): String = {
+      val out = new java.io.ByteArrayOutputStream
+      var acc = 0L
+      var bits = 0
+      var size = 257
+      var width = 9
+      codes.foreach { c =>
+        acc = (acc << width) | c
+        bits += width
+        while (bits >= 8) { out.write(((acc >> (bits - 8)) & 0xff).toInt); bits -= 8 }
+        acc &= (1L << bits) - 1
+        if (c == 256) { size = 257; width = 9 }
+        else if (c != 257) {
+          size += 1
+          if (size == 511 || size == 1023 || size == 2047) width += 1
+        }
+      }
+      if (bits > 0) out.write(((acc << (8 - bits)) & 0xff).toInt)
+      Bytes.str(out.toByteArray)
+    }
+    /** random codes from table size `from` up to `to` (mostly in range,
+      * sometimes the next code, rarely past it) */
+    def walk(from: Int, to: Int): Seq[Int] = (from until to).map { size =>
+      val r = rnd.nextInt(100)
+      if (r < 85) rnd.nextInt(size) else if (r < 98) size else size + 1 + rnd.nextInt(3)
+    }
+    def check(s: String): Unit =
+      assert(outcome(Filters.lzwDecode(s, Map.empty)) == outcome(Oracles.lzwDecode(s, Map.empty)))
+    // CLEAR and EOD on each side of every code-width boundary
+    for (boundary <- Seq(511, 1023, 2047); d <- -2 to 2; last <- Seq(256, 257)) {
+      val head = walk(257, boundary + d)
+      val tail = if (last == 256) walk(257, 257 + rnd.nextInt(600)) :+ 257 else Nil
+      check(pack(head ++ (last +: tail)))
+      check(pack((rnd.nextInt(256) +: head.tail) :+ last))
+    }
+    // streams that CLEAR repeatedly, and raw byte garbage
+    for (_ <- 0 until 200) {
+      val codes = Seq.fill(1 + rnd.nextInt(4))(walk(257, 257 + rnd.nextInt(2000)) :+ 256).flatten
+      check(pack(codes))
+      check(pack(codes.dropRight(1) :+ 257))
+      check(Seq.fill(rnd.nextInt(300))(rnd.nextInt(256).toChar).mkString)
+    }
+  }
+
+  test("font width lookup agrees with the tuple-table lookup it replaced (codes 0-65535)") {
+    val storage = new ObjectStorage("", Map.empty, Map.empty)
+    val fontsDict = Lex.getDictionaryData(
+      """<< /Simple << /Type /Font /Subtype /TrueType /BaseFont /Arial /FirstChar 30
+        |  /Widths [250 0 333 -5 1e3 278.5 250 250 900] /FontDescriptor << /MissingWidth 444 >> >>
+        |/Std << /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>
+        |/StdMissing << /Subtype /Type1 /BaseFont /Courier /FontDescriptor << /MissingWidth 7 >> >>
+        |/Unlisted << /Subtype /Type1 /BaseFont /NoSuchFont >>
+        |/Cid << /Type /Font /Subtype /Type0 /BaseFont /X /DescendantFonts [<< /Subtype /CIDFontType2
+        |  /DW 900 /W [1 [500 600 700] 10 20 450 15 [800 801] 2 3 650 300 65535 12 70000 [5]] >>] >>
+        |/T3 << /Type /Font /Subtype /Type3 /FontMatrix [0.002 0.0005 0.001 0.003 0 0] /FirstChar 65
+        |  /Widths [100 200 300 400 500 600] /FontBBox [0 -10 750 740] >> >>""".stripMargin, 0)
+    val fonts = Fonts(storage, fontsDict)
+    val oracle = OracleFonts(storage, fontsDict)
+    val codes = (0L to 65535L) ++ Seq(-1L, 65536L, 70000L, (1L << 32) + 65)
+    (fontsDict.keys.toSeq :+ "/Nope").foreach { name =>
+      Seq(fonts, fonts.freshCopy).foreach { f =>
+        f.setCurrentFont(name)
+        oracle.setCurrentFont(name)
+        codes.foreach { c =>
+          assert(outcome(java.lang.Float.floatToRawIntBits(f.getWidth(c))) ==
+            outcome(java.lang.Float.floatToRawIntBits(oracle.getWidth(c))), s"$name code $c")
+        }
+        assert(outcome(f.getWidth("AB\u00ff ")) == outcome(oracle.getWidth("AB\u00ff ")))
+        assert(outcome((f.getHeight, f.getAscent, f.getDescent)) ==
+          outcome((oracle.getHeight, oracle.getAscent, oracle.getDescent)), name)
+      }
+    }
+  }
+
+  test("RC4 agrees with the JCE ARCFOUR cipher it replaced") {
+    val rnd = new scala.util.Random(15)
+    for (_ <- 0 until 500) {
+      val key = Array.fill(5 + rnd.nextInt(12))(rnd.nextInt(256).toByte)
+      val data = Array.fill(rnd.nextInt(600))(rnd.nextInt(256).toByte)
+      assert(Crypto.rc4(key, data).sameElements(Oracles.rc4(key, data)))
+    }
+  }
+
+  test("html: normalizeWs and the payload decode agree with the definitions they replaced") {
+    import graft.core.html.HtmlExtract
+    val rnd = new scala.util.Random(16)
+    val alphabet = " \n\t\r\u000b\u000c\u001c\u001f\u00a0\u0085\u2028\u3000ab.Z\u00e9"
+    for (_ <- 0 until 20000) {
+      val s = randomFrom(rnd, alphabet, 30)
+      assert(HtmlExtract.normalizeWs(s) == Oracles.normalizeWs(s))
+      val bytes = if (rnd.nextBoolean()) s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      else Array.fill(rnd.nextInt(100))(rnd.nextInt(256).toByte)
+      val padded = ("x" * rnd.nextInt(130)).getBytes ++ bytes
+      assert(graft.pipeline.ExtractKernel.decodeUtf8(padded) ==
+        new String(padded, java.nio.charset.StandardCharsets.UTF_8))
+    }
+  }
+
+  test("allocation guard: extractOne on 1,000 plain-PDF and 1,000 HTML rows allocates under 48 MB") {
+    import graft.pipeline.{Corpus, ExtractKernel}
+    def rows(keep: Long => Boolean) = Iterator.from(1).map(_.toLong)
+      .filter(i => i % Corpus.SKEW_EVERY != 0 && keep(i)).take(1000).map(Corpus.row(0L)).toVector
+    val docs = rows(i => Corpus.kindOf(i) == "pdf" && i % Corpus.PDF_VARIANTS == 0) ++
+      rows(i => Corpus.kindOf(i) == "html")
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    var ok = 0
+    for (_ <- 0 until 5) docs.foreach(r => if (ExtractKernel.extractOne(r).status == "ok") ok += 1)
+    val before = mx.getCurrentThreadAllocatedBytes
+    docs.foreach(r => if (ExtractKernel.extractOne(r).status == "ok") ok += 1)
+    val allocated = mx.getCurrentThreadAllocatedBytes - before
+    assert(ok == 6 * docs.size)
+    info(f"allocated ${allocated / 1e6}%.1f MB")
+    assert(allocated < 48000000L, s"$allocated bytes for ${docs.size} documents")
   }
 }
