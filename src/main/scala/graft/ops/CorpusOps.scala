@@ -578,9 +578,9 @@ object CorpusOps {
             (col("cnt").cast("double") / col("nf")).as("x"))
       } else {
         frame.select(col("doc_id").cast("long"), col("y"), col("t"))
-          .as[(Long, Double, scala.collection.Seq[String])]
+          .as[(Long, Double, Array[String])]
           .flatMap { case (id, y, t) =>
-            val len = t.size
+            val len = t.length
             if (len == 0) Iterator.empty
             else {
               val nf = (if (len >= 2) len * 2 - 1 else len).toDouble

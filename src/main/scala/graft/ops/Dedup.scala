@@ -844,7 +844,7 @@ object Dedup {
         col("sz").as("sz_b")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"), col("sz_a"), col("sz_b"),
         col("ga"), col("gb"))
-      .as[(Long, Long, Long, Long, scala.collection.Seq[Long], scala.collection.Seq[Long])]
+      .as[(Long, Long, Long, Long, Array[Long], Array[Long])]
       .map { case (a, b, sza, szb, ga, gb) =>
         var i = 0
         var j = 0
@@ -1491,7 +1491,7 @@ object Dedup {
     // count-gated bounded collect (the fast-path cap convention): the two
     // arguments have identical types, so an accidental corpus/eval swap
     // must fail loudly, not OOM the driver
-    val evalCached = evalEmbeddings.select(col("embedding")).as[Seq[Float]]
+    val evalCached = evalEmbeddings.select(col("embedding")).as[Array[Float]]
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val evalVecs: Array[(Array[Float], Double)] =
       try {
@@ -1500,16 +1500,16 @@ object Dedup {
           s"evalEmbeddings has $n rows (cap $maxEvalVectors): eval sets are " +
             "benchmark-sized by contract — did the corpus/eval arguments get swapped?")
         evalCached.collect().filter(_ != null)
-          .map { v => val a = v.toArray; (a, dot(a, a)) }
+          .map(a => (a, dot(a, a)))
           .filter(_._2 > 0)
       } finally evalCached.unpersist()
     val bEval = spark.sparkContext.broadcast(evalVecs)
     embeddings.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
+      .as[(Long, Array[Float])]
       .mapPartitions { rows =>
         val ev = bEval.value
         rows.map { case (id, v) =>
-          val a = if (v == null) Array.empty[Float] else v.toArray
+          val a = if (v == null) Array.empty[Float] else v
           val na = dot(a, a)
           val best =
             if (ev.isEmpty || na <= 0) 0.0
@@ -2105,15 +2105,7 @@ object Dedup {
 
   // ---- SemDeDup (semantic deduplication) -------------------------------------
 
-  private def dotF(a: Seq[Float], b: Array[Float]): Double = {
-    var s = 0.0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { s += a(i).toDouble * b(i); i += 1 }
-    s
-  }
-
-  private def normF(a: Seq[Float]): Double = {
+  private def normF(a: Array[Float]): Double = {
     var s = 0.0
     var i = 0
     while (i < a.length) { s += a(i).toDouble * a(i); i += 1 }
@@ -2121,7 +2113,7 @@ object Dedup {
   }
 
   /** cosine with zero-norm guard: any zero vector scores 0 (never a dup) */
-  private def cosineF(a: Seq[Float], na: Double, b: Seq[Float], nb: Double): Double =
+  private def cosineF(a: Array[Float], na: Double, b: Array[Float], nb: Double): Double =
     if (na <= 0.0 || nb <= 0.0) 0.0
     else {
       var s = 0.0
@@ -2175,7 +2167,7 @@ object Dedup {
     assignToCentroids(embeddings, nClusters, iters, dim, trainSample)
       .groupByKey(_._2)
       .flatMapGroups { (cluster, it) =>
-        val buf = new scala.collection.mutable.ArrayBuffer[(Long, Double, Double, Seq[Float])]()
+        val buf = new scala.collection.mutable.ArrayBuffer[(Long, Double, Double, Array[Float])]()
         var over = false
         while (it.hasNext && !over) {
           val r = it.next()
@@ -2218,15 +2210,15 @@ object Dedup {
       nClusters: Int,
       iters: Int,
       dim: Int,
-      trainSample: Long): org.apache.spark.sql.Dataset[(Long, Int, Double, Double, Seq[Float])] = {
+      trainSample: Long): org.apache.spark.sql.Dataset[(Long, Int, Double, Double, Array[Float])] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val cents = SimSearch.buildIvfIndex(embeddings, nClusters, iters, dim, trainSample).centroids
     val bc = spark.sparkContext.broadcast(cents)
-    val centNorms = cents.map(c => math.sqrt(dotF(c.toSeq, c)))
+    val centNorms = cents.map(c => math.sqrt(SimSearch.dotF(c, c)))
     val bcNorms = spark.sparkContext.broadcast(centNorms)
     embeddings.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
+      .as[(Long, Array[Float])]
       .mapPartitions { rows =>
         val cs = bc.value
         val ns = bcNorms.value
@@ -2235,7 +2227,7 @@ object Dedup {
           val selfNorm = normF(e)
           val centSim =
             if (selfNorm <= 0.0 || ns(c) <= 0.0) 0.0
-            else dotF(e, cs(c)) / (selfNorm * ns(c))
+            else SimSearch.dotF(e, cs(c)) / (selfNorm * ns(c))
           (id, c, centSim, selfNorm, e)
         }
       }

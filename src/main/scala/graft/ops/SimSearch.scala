@@ -1,19 +1,28 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`).
   *
-  *  - `bruteForceTopK` is the exactness baseline: broadcast the (small) query
-  *    set, score every row with a codegen'd `aggregate(zip_with(...))` dot
-  *    product, window-rank per query. One narrow scan + one tiny shuffle on
-  *    query_id.
-  *  - `lshTopK` is the scale path: random-hyperplane signatures bucket both
-  *    sides (computed executor-locally, one pass); only same-bucket pairs
-  *    are scored. At 100 TB the per-query work drops from a full scan to
-  *    |bucket|-sized probes, and the bucket join shuffles 16-byte rows.
+  * Every serving path answers one query batch — the `nQueries` lowest
+  * vec_ids — in at most three Spark jobs: one pull of the query vectors,
+  * ONE typed pass over the corpus (or its codes table) in which each task
+  * keeps, per query, a bounded heap of its best candidates (`TopK`), and,
+  * on the approximate PQ paths, one bounded pull of the shortlisted
+  * vectors for the exact rerank. The driver merges the per-task heaps and
+  * returns the (query_id, neighbor_id, rank, cosine) rows as a local
+  * frame.
+  *
+  *  - `bruteForceTopK` is the exactness baseline: every row is scored
+  *    against every query.
+  *  - `ivfTopKWithIndex` scores only rows whose coarse list a query
+  *    probes; `lshTopK` only rows sharing a random-hyperplane bucket with
+  *    a query in some table.
+  *  - `pqTopKFromCodes`/`ivfPqTopKFromCodes` rank the codes by asymmetric
+  *    distance (ADC) into a `k * rerank` shortlist, then rerank it exactly.
   */
 object SimSearch {
 
@@ -22,33 +31,207 @@ object SimSearch {
     * Catalyst expression — see graft.functions.DotProduct. */
   def dotCol(x: Column, y: Column): Column = graft.functions.DotProduct(x, y)
 
-  /** cosine similarity of two float-array columns */
-  def cosineCol(a: Column, b: Column): Column =
-    dotCol(a, b) / sqrt(dotCol(a, a) * dotCol(b, b))
-
-  /** cosine with precomputed self-dots (3x fewer array passes per pair;
-    * bit-identical to cosineCol since dot(v,v) is deterministic) */
+  /** cosine with precomputed self-dots: dot(a,b) / sqrt(dotAA * dotBB) */
   def cosineWithNorms(a: Column, b: Column, dotAA: Column, dotBB: Column): Column =
     dotCol(a, b) / sqrt(dotAA * dotBB)
 
   /** exact top-k neighbors for the `nQueries` lowest vec_ids (excluding self).
-    * Output: (query_id, neighbor_id, rank, cosine) */
+    * Output: (query_id, neighbor_id, rank, cosine); the two ids keep the
+    * input's integral vec_id type. A NULL vec_id query matches no row; a
+    * null embedding scores a NULL cosine, ranked last. */
   def bruteForceTopK(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    val spark = embeddings.sparkSession
+    import spark.implicits._
     val e = embeddings.select(col("vec_id"), col("embedding"))
-      .withColumn("self_dot", dotCol(col("embedding"), col("embedding")))
-    val queries = e.orderBy("vec_id").limit(nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_emb"),
-        col("self_dot").as("q_dot"))
-    val scored = e.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        cosineWithNorms(col("query_emb"), col("embedding"), col("q_dot"), col("self_dot")))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank").cast("long").as("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    val live = queryRows(e, nQueries).as[(Option[Long], Array[Float])].collect()
+      .collect { case (Some(id), v) => (id, v) }
+    val top = exactTopK(e, live, k)(_ => (), (_: Unit, _: Int) => true)
+    servedFrame(spark, live.map(_._1), top, e.schema("vec_id"))
+  }
+
+  // ---- serving: one partition-local top-k pass, merged on the driver --------
+
+  /** a serving candidate; `known = false` is a NULL score */
+  private[ops] final case class Cand(id: Long, score: Double, known: Boolean)
+
+  /** Per-query bounded heaps of the best `cap` candidates in the serving
+    * order (score DESC NULLS LAST, vec_id ASC): the order Spark's window
+    * sort gives, with SQL double semantics — NaN sorts above every number
+    * and -0.0 equals 0.0. Each heap's head is its WORST entry, so a
+    * candidate that misses the cut costs one comparison. */
+  private[ops] final class TopK(val nQueries: Int, val cap: Int) extends Serializable {
+    private val heaps =
+      Array.fill(nQueries)(scala.collection.mutable.PriorityQueue.empty[Cand](TopK.order))
+
+    def offer(q: Int, id: Long, score: Double, known: Boolean): Unit = {
+      val h = heaps(q)
+      if (h.size < cap) h.enqueue(Cand(id, score, known))
+      else if (cap > 0 && TopK.cmp(id, score, known, h.head) < 0) {
+        h.dequeue()
+        h.enqueue(Cand(id, score, known))
+      }
+    }
+
+    /** folds `o`'s candidates into this one's heaps (returns this) */
+    def merge(o: TopK): TopK = {
+      for (q <- 0 until nQueries; c <- o.heaps(q)) offer(q, c.id, c.score, c.known)
+      this
+    }
+
+    /** query `q`'s candidates in serving order */
+    def ranked(q: Int): Array[Cand] = heaps(q).toArray.sorted(TopK.order)
+  }
+
+  private[ops] object TopK {
+    /** < 0 iff candidate (id, score, known) ranks before `c` */
+    def cmp(id: Long, score: Double, known: Boolean, c: Cand): Int = {
+      val byScore =
+        if (known != c.known) { if (known) -1 else 1 }
+        else if (!known || score == c.score) 0
+        else -java.lang.Double.compare(score, c.score)
+      if (byScore != 0) byScore else java.lang.Long.compare(id, c.id)
+    }
+
+    val order: Ordering[Cand] = (a, b) => cmp(a.id, a.score, a.known, b)
+  }
+
+  /** the serving primitive: ONE job in which each task runs `scan` over its
+    * rows into a fresh `TopK(nQueries, cap)`; the driver folds the task
+    * heaps together as they arrive, so no stage holds more than
+    * nQueries x cap candidates per heap */
+  private def topKPass[T](rows: Dataset[T], nQueries: Int, cap: Int)(
+      scan: (Iterator[T], TopK) => Unit): TopK =
+    rows.rdd.mapPartitions { it =>
+      val top = new TopK(nQueries, cap)
+      scan(it, top)
+      Iterator.single(top)
+    }.fold(new TopK(nQueries, cap))(_ merge _)
+
+  /** the query batch: the `nQueries` lowest vec_ids (NULLs first, as
+    * `orderBy` sorts them), vec_id as long — decode and collect it (one
+    * job) */
+  private def queryRows(e: DataFrame, nQueries: Int): DataFrame =
+    e.orderBy("vec_id").limit(nQueries)
+      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+
+  /** index-ordered double dot product over the shorter length — the
+    * `DotProduct` expression's arithmetic, so values are bit-identical */
+  private[graft] def dotF(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0
+    var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
+  }
+
+  private[ops] def ansiEnabled(spark: SparkSession): Boolean =
+    spark.conf.get("spark.sql.ansi.enabled").toBoolean
+
+  /** cosine as `cosineWithNorms` evaluates it in SQL, given the self-dots:
+    * null (SQL NULL) for a null vector; a zero norm product is a division
+    * by zero, which fails the query under ANSI mode and is NULL otherwise */
+  private[ops] def cosineOrNull(
+      a: Array[Float], aa: Double, b: Array[Float], bb: Double, ansi: Boolean): java.lang.Double =
+    if (a == null || b == null) null
+    else {
+      val den = math.sqrt(aa * bb)
+      if (den != 0.0) dotF(a, b) / den
+      else if (ansi) throw new ArithmeticException(
+        "[DIVIDE_BY_ZERO] Division by zero: cosine of a zero-norm embedding")
+      else null
+    }
+
+  private[ops] def selfDot(v: Array[Float]): Double = if (v == null) 0.0 else dotF(v, v)
+
+  /** exact serving: one typed pass over the corpus scores each vector that
+    * `candidate(key(vector), query)` admits against that query (self
+    * excluded), keeping the best `k` per query. A NULL vec_id row is never
+    * a candidate. */
+  private def exactTopK[K](
+      e: DataFrame,
+      queries: Array[(Long, Array[Float])],
+      k: Int)(key: Array[Float] => K, candidate: (K, Int) => Boolean): TopK = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    val ansi = ansiEnabled(spark)
+    val bcQ = spark.sparkContext.broadcast(queries.map { case (id, v) => (id, v, selfDot(v)) })
+    val rows = e.filter(col("vec_id").isNotNull)
+      .select(col("vec_id").cast("long"), col("embedding")).as[(Long, Array[Float])]
+    try topKPass(rows, queries.length, k) { (it, top) =>
+      val qs = bcQ.value
+      it.foreach { case (id, x) =>
+        val kx = key(x)
+        val xx = selfDot(x)
+        var q = 0
+        while (q < qs.length) {
+          val (qid, qv, qq) = qs(q)
+          if (qid != id && candidate(kx, q)) {
+            val c = cosineOrNull(qv, qq, x, xx, ansi)
+            if (c == null) top.offer(q, id, 0.0, false) else top.offer(q, id, c, true)
+          }
+          q += 1
+        }
+      }
+    } finally bcQ.destroy()
+  }
+
+  /** one bounded pull: the rows of `e` whose vec_id is in `ids`, grouped
+    * by id (a duplicated vec_id keeps every row, as a join on it would) */
+  private[ops] def pullVectors(e: DataFrame, ids: Iterable[Long]): Map[Long, Array[Array[Float]]] =
+    if (ids.isEmpty) Map.empty
+    else {
+      import e.sparkSession.implicits._
+      e.filter(col("vec_id").isin(ids.toSeq.distinct: _*))
+        .select(col("vec_id").cast("long"), col("embedding")).as[(Long, Array[Float])]
+        .collect().groupBy(_._1).map { case (id, rs) => id -> rs.map(_._2) }
+    }
+
+  /** exact rerank of a merged approximate shortlist: one bounded pull of
+    * the shortlisted vectors (at most nQueries x cap), exact cosines and
+    * the final top `k` per query on the driver */
+  private def rerankExact(
+      e: DataFrame, queries: Array[(Long, Array[Float])], shortlist: TopK, k: Int): DataFrame = {
+    val spark = e.sparkSession
+    val ansi = ansiEnabled(spark)
+    val lists = queries.indices.map(shortlist.ranked)
+    val vecs = pullVectors(e, lists.flatMap(_.map(_.id)))
+    val top = new TopK(queries.length, k)
+    queries.indices.foreach { q =>
+      val qv = queries(q)._2
+      val qq = selfDot(qv)
+      lists(q).foreach { cand =>
+        vecs.getOrElse(cand.id, Array.empty[Array[Float]]).foreach { x =>
+          val c = cosineOrNull(qv, qq, x, selfDot(x), ansi)
+          if (c == null) top.offer(q, cand.id, 0.0, false) else top.offer(q, cand.id, c, true)
+        }
+      }
+    }
+    servedFrame(spark, queries.map(_._1), top, StructField("vec_id", LongType, nullable = false))
+  }
+
+  /** the served (query_id, neighbor_id, rank, cosine) rows as a local
+    * frame (reading it runs no job); ids take `idField`'s integral type
+    * and nullability, cosine is rounded to 6 places by Spark's `round` */
+  private def servedFrame(
+      spark: SparkSession, queryIds: Array[Long], top: TopK, idField: StructField): DataFrame = {
+    val asId: Long => Any = idField.dataType match {
+      case LongType => identity
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case ByteType => _.toByte
+      case t => throw new IllegalArgumentException(s"vec_id must be integral, got $t")
+    }
+    val rows = for {
+      q <- queryIds.indices
+      (c, r) <- top.ranked(q).zipWithIndex
+    } yield Row(asId(queryIds(q)), asId(c.id), r + 1L, if (c.known) c.score else null)
+    val schema = StructType(Seq(
+      StructField("query_id", idField.dataType, idField.nullable),
+      StructField("neighbor_id", idField.dataType, idField.nullable),
+      StructField("rank", LongType, nullable = false),
+      StructField("cosine", DoubleType, nullable = true)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), round(col("cosine"), 6).as("cosine"))
   }
 
   /** deterministic pseudo-gaussian hyperplanes: planes(j)(i) in [-1,1] */
@@ -61,28 +244,13 @@ object SimSearch {
       z.toDouble / Long.MaxValue.toDouble
     }
 
-  /** sign-pattern signature of one vector under one plane table */
-  private[ops] def signature(emb: Seq[Float], table: Array[Array[Double]]): Long = {
-    var sig = 0L
-    var j = 0
-    while (j < table.length) {
-      val plane = table(j)
-      var dot = 0.0
-      var i = 0
-      val n = math.min(plane.length, emb.length)
-      while (i < n) { dot += emb(i) * plane(i); i += 1 }
-      if (dot >= 0) sig |= (1L << j)
-      j += 1
-    }
-    sig
-  }
-
-  /** biased variant over a PRIMITIVE array: bit j set iff emb·plane_j >=
-    * bias(j) — equivalent to sign((emb - center)·plane_j) with bias =
-    * center·plane_j. Array[Float] on purpose: the multi-table bucket pass
-    * evaluates nTables x nBits x dim accesses per row, and Seq[Float]
-    * boxes every element access (measured 5.1 s -> 0.6 s for the sf0.1
-    * 32-table bucket job). */
+  /** sign-pattern signature of one vector under one plane table: bit j
+    * set iff emb·plane_j >= bias(j) — equivalent to sign((emb -
+    * center)·plane_j) with bias = center·plane_j (all-zero bias: origin
+    * hyperplanes). Array[Float] on purpose: the multi-table bucket pass
+    * evaluates nTables x nBits x dim accesses per row, and Spark decodes a
+    * Seq[Float] column as a linked List, so `emb(i)` walks i cells
+    * (measured 5.1 s -> 0.6 s for the sf0.1 32-table bucket job). */
   private[ops] def signature(
       emb: Array[Float], table: Array[Array[Double]], bias: Array[Double]): Long = {
     var sig = 0L
@@ -140,11 +308,10 @@ object SimSearch {
       })
     }
     embeddings.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
+      .as[(Long, Array[Float])]
       .flatMap { case (id, emb) =>
-        val a = emb.toArray // unbox ONCE per row, not per plane access
         tables.iterator.zipWithIndex.map { case (tab, t) =>
-          (id, t, signature(a, tab, biases(t)))
+          (id, t, signature(emb, tab, biases(t)))
         }
       }
       .toDF("vec_id", "table", "bucket")
@@ -176,7 +343,7 @@ object SimSearch {
       dim: Int): Array[Array[Float]] =
     localLloydMulti(collectTraining(embeddings), k, iters, 1, dim).head
 
-  private[graft] def nearestCentroid(emb: Seq[Float], cents: Array[Array[Float]]): Int = {
+  private[graft] def nearestCentroid(emb: Array[Float], cents: Array[Array[Float]]): Int = {
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
@@ -192,7 +359,7 @@ object SimSearch {
     best
   }
 
-  private[graft] def nearestCentroids(emb: Seq[Float], cents: Array[Array[Float]], n: Int): Array[Int] = {
+  private[graft] def nearestCentroids(emb: Array[Float], cents: Array[Array[Float]], n: Int): Array[Int] = {
     val ds = cents.indices.map { c =>
       val cent = cents(c)
       var d = 0.0
@@ -230,7 +397,7 @@ object SimSearch {
     * definition so the two builders cannot silently diverge): explicit
     * `nCentroids > 0` wins; 0 auto-tunes to ~sqrt(n) clamped to [4, 4096]
     * — the standard IVF balance of list count vs list length. */
-  private def autoNlist(n: Long, nCentroids: Int): Int =
+  private[ops] def autoNlist(n: Long, nCentroids: Int): Int =
     if (nCentroids > 0) nCentroids
     else math.max(4, math.min(4096, math.round(math.sqrt(n.toDouble)).toInt))
 
@@ -238,7 +405,7 @@ object SimSearch {
     * auto-scales to ~nlist/4 (the coverage the old fixed 4-of-16 defaults
     * gave) — a FIXED probe count against an auto-sized nlist silently
     * collapses recall as the corpus grows (probing 4 of sqrt(n) lists). */
-  private def autoNProbe(nProbe: Int, nlist: Int): Int =
+  private[ops] def autoNProbe(nProbe: Int, nlist: Int): Int =
     if (nProbe > 0) math.min(nProbe, nlist)
     else math.max(4, math.min(nlist, (nlist + 3) / 4))
 
@@ -250,7 +417,7 @@ object SimSearch {
     * empty (k-means cannot init from zero vectors). Every index builder
     * samples here, so a `trainSample` above the driver training cap
     * fails before any job runs. */
-  private def hashSample(embeddings: DataFrame, trainSample: Long): (DataFrame, Long) = {
+  private[ops] def hashSample(embeddings: DataFrame, trainSample: Long): (DataFrame, Long) = {
     require(trainSample <= MaxLocalTrainRows,
       s"trainSample $trainSample exceeds the $MaxLocalTrainRows-row driver training cap")
     val n = embeddings.count()
@@ -287,14 +454,14 @@ object SimSearch {
     // on the spot, and a count cannot silently truncate past the
     // Int.MaxValue collect limit
     val e = embeddings.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
+      .as[(Long, Array[Float])]
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val rows = e.count()
       require(rows <= MaxLocalTrainRows,
         s"training frame has $rows rows, above the $MaxLocalTrainRows-row driver cap; " +
           "a trainSample-bounded sample only grows past it on duplicated or null vec_ids")
-      e.collect().sortBy(_._1).map(_._2.toArray)
+      e.collect().sortBy(_._1).map(_._2)
     } finally e.unpersist()
   }
 
@@ -339,10 +506,9 @@ object SimSearch {
         var idx = lo
         while (idx < hi) {
           val arr = xs(idx)
-          val emb = scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
           var j = 0
           while (j < m) {
-            val c = nearestSub(emb, j * subDim, cs(j))
+            val c = nearestSub(arr, j * subDim, cs(j))
             counts(j)(c) += 1
             val off = j * subDim
             var i = 0
@@ -416,10 +582,10 @@ object SimSearch {
     out
   }
 
-  /** ANN search against a pre-built IVF index: vectors are assigned to their
-    * nearest centroid's posting list (one executor-local pass against the
-    * broadcast quantizer); queries probe the `nProbe` nearest lists and
-    * score exactly within them. Per-query work is ~nProbe/nlist of a scan.
+  /** ANN search against a pre-built IVF index: each vector's nearest
+    * centroid is its posting list (computed in the serving pass against
+    * the broadcast quantizer); a query scores exactly only the vectors in
+    * its `nProbe` nearest lists. Per-query work is ~nProbe/nlist of a scan.
     * Complements lshTopK — IVF partitions by geometry (good for clustered
     * embeddings), LSH by random projection (good for uniform). */
   def ivfTopKWithIndex(
@@ -428,42 +594,19 @@ object SimSearch {
       nQueries: Int = 5,
       k: Int = 10,
       nProbe: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = embeddings.sparkSession
     import spark.implicits._
     val cents = index.centroids
     val probeN = autoNProbe(nProbe, cents.length)
-    val bc = spark.sparkContext.broadcast(cents)
     val e = embeddings.select(col("vec_id"), col("embedding"))
-    val assigned = e.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
-      .map { case (id, emb) => (id, nearestCentroid(emb, bc.value)) }
-      .toDF("vec_id", "cid")
-    // queries are tiny: collect once, derive probe lists driver-side (the
-    // quantizer is local anyway), broadcast both — no distributed pass over
-    // a 5-row frame, and the corpus is scanned once (assignment) + probed
-    val qLocal = e.orderBy("vec_id").limit(nQueries)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])].collect()
-    val queries = qLocal.toSeq.toDF("query_id", "query_emb")
-    val qProbes = qLocal.toSeq
-      .flatMap { case (qid, emb) => nearestCentroids(emb, cents, probeN).toSeq.map(c => (qid, c)) }
-      .toDF("query_id", "cid")
-    val candidates = assigned.join(broadcast(qProbes), Seq("cid"))
-      .select(col("query_id"), col("vec_id"))
-    val scored = candidates
-      .join(e, "vec_id")
-      .join(broadcast(queries), "query_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        cosineWithNorms(col("query_emb"), col("embedding"),
-          dotCol(col("query_emb"), col("query_emb")),
-          dotCol(col("embedding"), col("embedding"))))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank").cast("long").as("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    val qs = queryRows(e, nQueries).as[(Long, Array[Float])].collect()
+    // probe lists derive driver-side (the quantizer is local anyway)
+    val probed = qs.map { case (_, v) => nearestCentroids(v, cents, probeN).toSet }
+    val bc = spark.sparkContext.broadcast(cents)
+    val top =
+      try exactTopK(e, qs, k)(nearestCentroid(_, bc.value), (c: Int, q: Int) => probed(q).contains(c))
+      finally bc.destroy()
+    servedFrame(spark, qs.map(_._1), top, StructField("vec_id", LongType, nullable = false))
   }
 
   /** one-call convenience: build (nCentroids, iters) + search. Production
@@ -479,14 +622,10 @@ object SimSearch {
     ivfTopKWithIndex(embeddings,
       buildIvfIndex(embeddings, nCentroids, iters, dim), nQueries, k, nProbe)
 
-  /** ANN via LSH buckets: score only same-(table,bucket) candidates.
-    *
-    * Queries are tiny: collected once, their bucket signatures computed
-    * driver-side with the same plane tables, and broadcast — so the
-    * corpus-sized bucket frame is consumed exactly ONCE by the candidate
-    * join. (The previous shape joined `buckets` against itself for the
-    * query side: the typed signature flatMap computed twice — Spark does
-    * not reuse exchanges under typed subtrees.) */
+  /** ANN via LSH buckets: a query scores exactly only the vectors that
+    * share its bucket in at least one table. The queries' signatures are
+    * computed driver-side with the same plane tables; each vector's are
+    * computed once, in the serving pass. */
   def lshTopK(
       embeddings: DataFrame,
       nQueries: Int = 5,
@@ -495,36 +634,21 @@ object SimSearch {
       nTables: Int = 4,
       dim: Int = 64,
       seed: Long = 42L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = embeddings.sparkSession
     import spark.implicits._
     val e = embeddings.select(col("vec_id"), col("embedding"))
-    val buckets = lshBuckets(embeddings, nBits, nTables, dim, seed)
-    val qLocal = e.orderBy("vec_id").limit(nQueries)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])].collect()
-    val queries = qLocal.toSeq.toDF("query_id", "query_emb")
+    val qs = queryRows(e, nQueries).as[(Long, Array[Float])].collect()
     val tables = Array.tabulate(nTables)(t => planes(nBits, dim, seed + t))
-    val qBuckets = qLocal.toSeq
-      .flatMap { case (qid, emb) =>
-        tables.iterator.zipWithIndex.map { case (tab, t) => (qid, t, signature(emb, tab)) }
-      }
-      .toDF("query_id", "table", "bucket")
-    val candidates = buckets.join(broadcast(qBuckets), Seq("table", "bucket"))
-      .select(col("query_id"), col("vec_id")).distinct()
-    val scored = candidates
-      .join(e, "vec_id")
-      .join(broadcast(queries), "query_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        cosineWithNorms(col("query_emb"), col("embedding"),
-          dotCol(col("query_emb"), col("query_emb")),
-          dotCol(col("embedding"), col("embedding"))))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank").cast("long").as("rank"),
-        round(col("cosine"), 6).as("cosine"))
+    val origin = new Array[Double](nBits)
+    def signatures(v: Array[Float]): Array[Long] = tables.map(signature(v, _, origin))
+    val qSigs = qs.map { case (_, v) => signatures(v) }
+    val top = exactTopK(e, qs, k)(signatures, (sigs: Array[Long], q: Int) => {
+      val qsig = qSigs(q)
+      var t = 0
+      while (t < sigs.length && sigs(t) != qsig(t)) t += 1
+      t < sigs.length
+    })
+    servedFrame(spark, qs.map(_._1), top, StructField("vec_id", LongType, nullable = false))
   }
 
   // ---- embedding storage: int8 scalar quantization -----------------------------
@@ -599,7 +723,7 @@ object SimSearch {
   }
 
   /** squared L2 of one subvector slice against a centroid */
-  private def subDist2(emb: Seq[Float], off: Int, cent: Array[Float]): Double = {
+  private def subDist2(emb: Array[Float], off: Int, cent: Array[Float]): Double = {
     var d = 0.0
     var i = 0
     val n = math.min(cent.length, math.max(emb.length - off, 0))
@@ -607,7 +731,7 @@ object SimSearch {
     d
   }
 
-  private def nearestSub(emb: Seq[Float], off: Int, cents: Array[Array[Float]]): Int = {
+  private def nearestSub(emb: Array[Float], off: Int, cents: Array[Array[Float]]): Int = {
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
@@ -626,14 +750,14 @@ object SimSearch {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(cb)
     embeddings.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
+      .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val c = bc.value
         it.map { case (id, emb) =>
           val codes = new Array[Int](c.m)
           var j = 0
           while (j < c.m) { codes(j) = nearestSub(emb, j * c.subDim, c.centroids(j)); j += 1 }
-          (id, codes.toSeq)
+          (id, codes)
         }
       }
       .toDF("vec_id", "codes")
@@ -666,16 +790,13 @@ object SimSearch {
       nQueries: Int = 5,
       k: Int = 10,
       rerank: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = embeddings.sparkSession
     import spark.implicits._
     val e = embeddings.select(col("vec_id"), col("embedding"))
-    val qLocal = e.orderBy("vec_id").limit(nQueries)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])].collect()
+    val qs = queryRows(e, nQueries).as[(Long, Array[Float])].collect()
     // per-query [m][k] dot tables + query norms; centroid norm^2 per (j,c)
     val centNorm2 = cb.centroids.map(_.map(c => c.map(x => x.toDouble * x).sum))
-    val tables = qLocal.map { case (qid, qemb) =>
+    val tables = qs.map { case (qid, qemb) =>
       val t = Array.tabulate(cb.m, cb.k) { (j, c) =>
         val cent = cb.centroids(j)(c)
         var d = 0.0
@@ -689,58 +810,31 @@ object SimSearch {
     }
     val bcTables = spark.sparkContext.broadcast(tables)
     val bcNorm2 = spark.sparkContext.broadcast(centNorm2)
-    val scored = codesDf.select(col("vec_id").cast("long"), col("codes")).as[(Long, Seq[Int])]
-      .mapPartitions { it =>
+    val codes = codesDf.select(col("vec_id").cast("long"), col("codes")).as[(Long, Array[Int])]
+    val shortlist =
+      try topKPass(codes, qs.length, k * rerank) { (it, top) =>
         val ts = bcTables.value
         val n2 = bcNorm2.value
-        it.flatMap { case (vid, codes) =>
+        it.foreach { case (vid, codes) =>
           // approx |x| from the reconstruction: sqrt(sum_j |c_j|^2)
           var xn2 = 0.0
           var j = 0
           while (j < codes.length) { xn2 += n2(j)(codes(j)); j += 1 }
           val xn = math.max(math.sqrt(xn2), 1e-12)
-          ts.iterator.flatMap { case (qid, t, qn) =>
-            if (qid == vid) None
-            else {
+          var q = 0
+          while (q < ts.length) {
+            val (qid, t, qn) = ts(q)
+            if (qid != vid) {
               var dot = 0.0
               var jj = 0
               while (jj < codes.length) { dot += t(jj)(codes(jj)); jj += 1 }
-              Some((qid, vid, dot / (math.max(qn, 1e-12) * xn)))
+              top.offer(q, vid, dot / (math.max(qn, 1e-12) * xn), true)
             }
+            q += 1
           }
         }
-      }
-      .toDF("query_id", "vec_id", "approx_cos")
-    rerankShortlist(scored, e, qLocal, k, rerank)
-  }
-
-  /** shared ADC-serving tail for pqTopK/ivfPqTopK: window the approx
-    * scores to a `rerank * k` shortlist per query, then EXACT cosine
-    * re-rank of the shortlist only. One place so the two paths can never
-    * diverge in schema or tie-breaking (output matches bruteForceTopK). */
-  private def rerankShortlist(
-      scored: DataFrame,
-      e: DataFrame,
-      qLocal: Array[(Long, Seq[Float])],
-      k: Int,
-      rerank: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val wA = Window.partitionBy("query_id").orderBy(col("approx_cos").desc, col("vec_id").asc)
-    val shortlist = scored.withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= k * rerank)
-      .select(col("query_id"), col("vec_id"))
-    val queries = qLocal.toSeq.toDF("query_id", "query_emb")
-    val exact = shortlist
-      .join(e, "vec_id")
-      .join(broadcast(queries), "query_id")
-      .withColumn("cosine", cosineCol(col("query_emb"), col("embedding")))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id").asc)
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("cosine"), 6).as("cosine"))
+      } finally { bcTables.destroy(); bcNorm2.destroy() }
+    rerankExact(e, qs, shortlist, k)
   }
 
   // ---- IVF-PQ: the composed big-index serving shape ----------------------------
@@ -752,13 +846,11 @@ object SimSearch {
     * structure). Both snapshots are tiny and broadcastable. */
   final case class IvfPqIndex(ivf: IvfIndex, pq: PqCodebook)
 
-  /** vector minus its coarse centroid (zero-padded), as serving-time
-    * encode computes it; `buildIvfPqIndex` repeats the same subtraction
-    * over primitive arrays — the PQ codebook only matches what
-    * ivfPqEncode produces if the two are byte-identical */
-  private def residual(emb: Seq[Float], cent: Array[Float]): Seq[Float] =
-    emb.toArray.zipWithIndex.map { case (x, i) =>
-      x - (if (i < cent.length) cent(i) else 0f) }.toSeq
+  /** vector minus its coarse centroid (zero-padded) — the ONE definition
+    * the index build trains on and `ivfPqEncode` encodes, so the PQ
+    * codebook matches the residuals it serves */
+  private def residual(emb: Array[Float], cent: Array[Float]): Array[Float] =
+    Array.tabulate(emb.length)(i => emb(i) - (if (i < cent.length) cent(i) else 0f))
 
   def buildIvfPqIndex(
       embeddings: DataFrame,
@@ -775,20 +867,21 @@ object SimSearch {
     // compose: a second keepOneIn either keeps ~100% or a correlated
     // biased half). nlist auto-sizing sees the TRUE corpus size.
     val (sample, n) = hashSample(embeddings, trainSample)
-    val xs = collectTraining(sample)
-    // coarse train, residual pass and PQ train are all driver arithmetic
-    // after the one collect (the faiss build shape)
-    val ivfCents = localLloydMulti(xs, autoNlist(n, nCentroids), iters, 1, dim).head
+    trainIvfPqLocal(collectTraining(sample), autoNlist(n, nCentroids), m, k, iters, dim)
+  }
+
+  /** the post-collect half of the IVF-PQ build: coarse train, residual
+    * pass and PQ train are all driver arithmetic over the collected
+    * sample `xs` (canonical vec_id order; the faiss build shape) */
+  private def trainIvfPqLocal(
+      xs: Array[Array[Float]], nlist: Int, m: Int, k: Int, iters: Int, dim: Int): IvfPqIndex = {
+    val ivfCents = localLloydMulti(xs, nlist, iters, 1, dim).head
     val residuals = new Array[Array[Float]](xs.length)
     parChunks(xs.length) { (lo, hi) =>
       var idx = lo
       while (idx < hi) {
         val x = xs(idx)
-        val emb = scala.collection.immutable.ArraySeq.unsafeWrapArray(x)
-        val cent = ivfCents(nearestCentroid(emb, ivfCents))
-        // same zero-padded subtraction as `residual`
-        residuals(idx) = Array.tabulate(x.length)(i =>
-          x(i) - (if (i < cent.length) cent(i) else 0f))
+        residuals(idx) = residual(x, ivfCents(nearestCentroid(x, ivfCents)))
         idx += 1
       }
       ()
@@ -841,7 +934,7 @@ object SimSearch {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(rot)
     embeddings.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
+      .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val r = bc.value
         it.map { case (id, emb) =>
@@ -859,7 +952,7 @@ object SimSearch {
             out(i) = acc.toFloat
             i += 1
           }
-          (id, out.toSeq)
+          (id, out)
         }
       }
       .toDF("vec_id", "embedding")
@@ -900,10 +993,17 @@ object SimSearch {
       trainSample: Long = 200000L,
       seed: Long = 42L): OpqResult = {
     require(dim % m == 0, s"dim $dim must divide into m=$m subvectors")
-    val subDim = dim / m
     val (sample, _) = hashSample(embeddings, trainSample)
     // zero cluster round-trips after the one collect
-    val xs = collectTraining(sample)
+    trainOpqLocal(collectTraining(sample), m, k, dim, opqIters, kmeansIters, seed)
+  }
+
+  /** the post-collect half of `trainOpq`: the whole alternation over the
+    * collected sample `xs` (canonical vec_id order) */
+  private def trainOpqLocal(
+      xs: Array[Array[Float]],
+      m: Int, k: Int, dim: Int, opqIters: Int, kmeansIters: Int, seed: Long): OpqResult = {
+    val subDim = dim / m
     var rot = randomRotation(dim, seed)
     def retrain(r: Array[Array[Float]]): PqCodebook =
       PqCodebook(subDim, localLloydMulti(rotateLocal(xs, r), k, kmeansIters, m, subDim))
@@ -935,7 +1035,6 @@ object SimSearch {
       var se = 0.0
       var cnt = 0L
       val rx = new Array[Float](dim)
-      val rxSeq = scala.collection.immutable.ArraySeq.unsafeWrapArray(rx)
       var idx = lo
       while (idx < hi) {
         val emb = xs(idx)
@@ -952,7 +1051,7 @@ object SimSearch {
         }
         var j = 0
         while (j < cb.m) {
-          val cent = cb.centroids(j)(nearestSub(rxSeq, j * cb.subDim, cb.centroids(j)))
+          val cent = cb.centroids(j)(nearestSub(rx, j * cb.subDim, cb.centroids(j)))
           val off = j * cb.subDim
           var s = 0
           while (s < cb.subDim) {
@@ -1011,7 +1110,7 @@ object SimSearch {
     import spark.implicits._
     val bcR = spark.sparkContext.broadcast(rot)
     val bcC = spark.sparkContext.broadcast(cb)
-    val partials = sample.as[(Long, Seq[Float])].mapPartitions { rows =>
+    val partials = sample.as[(Long, Array[Float])].mapPartitions { rows =>
       val r = bcR.value
       val c = bcC.value
       var se = 0.0
@@ -1029,10 +1128,9 @@ object SimSearch {
           rx(i) = acc.toFloat
           i += 1
         }
-        val rxSeq = scala.collection.immutable.ArraySeq.unsafeWrapArray(rx)
         var j = 0
         while (j < c.m) {
-          val cent = c.centroids(j)(nearestSub(rxSeq, j * c.subDim, c.centroids(j)))
+          val cent = c.centroids(j)(nearestSub(rx, j * c.subDim, c.centroids(j)))
           val off = j * c.subDim
           var s = 0
           while (s < c.subDim) {
@@ -1102,9 +1200,9 @@ object SimSearch {
     import spark.implicits._
     val rows = spark.read.parquet(path)
       .select(col("component"), col("a"), col("b"), col("vec"))
-      .as[(String, Int, Int, Seq[Float])].collect()
+      .as[(String, Int, Int, Array[Float])].collect()
     val mats = labels.map { label =>
-      label -> rows.filter(_._1 == label).sortBy(_._2).map(_._4.toArray)
+      label -> rows.filter(_._1 == label).sortBy(_._2).map(_._4)
     }.toMap
     val pqRows = rows.filter(_._1 == "pq")
     require(labels.forall(l => mats(l).nonEmpty) && pqRows.nonEmpty,
@@ -1119,7 +1217,7 @@ object SimSearch {
     val m = pqRows.map(_._2).max + 1
     val k = pqRows.map(_._3).max + 1
     val pq = Array.ofDim[Array[Float]](m, k)
-    pqRows.foreach { case (_, j, c, v) => pq(j)(c) = v.toArray }
+    pqRows.foreach { case (_, j, c, v) => pq(j)(c) = v }
     (mats, PqCodebook(pqRows.head._4.length, pq))
   }
 
@@ -1156,19 +1254,17 @@ object SimSearch {
       dim: Int = 64,
       opqIters: Int = 3,
       trainSample: Long = 200000L): OpqIvfPqIndex = {
-    // count + sample ONCE against the raw corpus, and rotate only the
-    // bounded sample: rotating the full frame first would re-run the
-    // O(n*dim^2) matmul inside buildIvfPqIndex's own count() and
-    // hashSample passes for rows that never train anything. nlist
-    // auto-sizing still sees the TRUE corpus size, not the sample's.
+    require(dim % m == 0, s"dim $dim must divide into m=$m subvectors")
+    // count + sample ONCE against the raw corpus and pull the sample ONCE:
+    // OPQ trains on it, and the IVF-PQ trainer takes the same rows rotated
+    // on the driver (`rotateLocal` is `rotateEmbeddings`' arithmetic, and
+    // the rows stay in vec_id order). nlist auto-sizing sees the TRUE
+    // corpus size, not the sample's.
     val (sample, n) = hashSample(embeddings, trainSample)
-    val nlist = autoNlist(n, nCentroids)
-    val opq = trainOpq(sample, m, k, dim, opqIters, iters, trainSample)
-    // hashSample(sample) inside the builder is the identity (sample size
-    // <= trainSample), so modulus samples never compose
-    val idx = buildIvfPqIndex(rotateEmbeddings(sample, opq.rotation),
-      nlist, m, k, iters, dim, trainSample)
-    OpqIvfPqIndex(opq.rotation, idx)
+    val xs = collectTraining(sample)
+    val opq = trainOpqLocal(xs, m, k, dim, opqIters, iters, seed = 42L)
+    OpqIvfPqIndex(opq.rotation, trainIvfPqLocal(rotateLocal(xs, opq.rotation),
+      autoNlist(n, nCentroids), m, k, iters, dim))
   }
 
   /** serve: rotate at ingest (cosine-invariant), then the standard
@@ -1199,7 +1295,7 @@ object SimSearch {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(index)
     embeddings.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
+      .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val idx = bc.value
         it.map { case (id, emb) =>
@@ -1210,7 +1306,7 @@ object SimSearch {
           while (j < idx.pq.m) {
             codes(j) = nearestSub(res, j * idx.pq.subDim, idx.pq.centroids(j)); j += 1
           }
-          (id, li, codes.toSeq)
+          (id, li, codes)
         }
       }
       .toDF("vec_id", "list", "codes")
@@ -1243,13 +1339,10 @@ object SimSearch {
       k: Int = 10,
       nProbe: Int = 0,
       rerank: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = embeddings.sparkSession
     import spark.implicits._
     val e = embeddings.select(col("vec_id"), col("embedding"))
-    val qLocal = e.orderBy("vec_id").limit(nQueries)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])].collect()
+    val qs = queryRows(e, nQueries).as[(Long, Array[Float])].collect()
     val cents = index.ivf.centroids
     // FULL-SPACE ADC over the reconstruction x^ = c_li + r^ (subvectors
     // are disjoint, so every term is exactly table-decomposable):
@@ -1271,7 +1364,7 @@ object SimSearch {
       while (i < sub.length && off + i < cent.length) { d += cent(off + i) * sub(i); i += 1 }
       d
     }
-    val probes = qLocal.map { case (qid, qemb) =>
+    val probes = qs.map { case (qid, qemb) =>
       val lists = nearestCentroids(qemb, cents, autoNProbe(nProbe, cents.length))
       val qtab = Array.tabulate(index.pq.m, index.pq.k) { (j, c) =>
         val sub = index.pq.centroids(j)(c)
@@ -1300,18 +1393,18 @@ object SimSearch {
     val bcPqNorm2 = spark.sparkContext.broadcast(pqNorm2)
     val bcCentNorm2 = spark.sparkContext.broadcast(centNorm2)
     val bcCdot = spark.sparkContext.broadcast(cdot)
-    val scored = codesDf
+    val codes = codesDf
       .select(col("vec_id").cast("long"), col("list").cast("int"), col("codes"))
-      .as[(Long, Int, Seq[Int])]
-      .mapPartitions { it =>
+      .as[(Long, Int, Array[Int])]
+    val shortlist =
+      try topKPass(codes, qs.length, k * rerank) { (it, top) =>
         val ps = bcProbes.value
         val union = bcUnion.value
         val n2 = bcPqNorm2.value
         val cn2 = bcCentNorm2.value
         val cd = bcCdot.value
-        it.flatMap { case (vid, li, codes) =>
-          if (!union.contains(li)) Iterator.empty
-          else {
+        it.foreach { case (vid, li, codes) =>
+          if (union.contains(li)) {
             // |x^|^2 from the list + codes (query-independent)
             var xn2 = cn2(li)
             var j = 0
@@ -1319,19 +1412,20 @@ object SimSearch {
               xn2 += 2.0 * cd(li)(j)(codes(j)) + n2(j)(codes(j)); j += 1
             }
             val xn = math.max(math.sqrt(math.max(xn2, 0.0)), 1e-12)
-            ps.iterator.flatMap { case (qid, probedSet, qtab, qDotCent, qn) =>
-              if (qid == vid || !probedSet.contains(li)) None
-              else {
+            var q = 0
+            while (q < ps.length) {
+              val (qid, probedSet, qtab, qDotCent, qn) = ps(q)
+              if (qid != vid && probedSet.contains(li)) {
                 var dot = qDotCent(li)
                 var jj = 0
                 while (jj < codes.length) { dot += qtab(jj)(codes(jj)); jj += 1 }
-                Some((qid, vid, dot / (math.max(qn, 1e-12) * xn)))
+                top.offer(q, vid, dot / (math.max(qn, 1e-12) * xn), true)
               }
+              q += 1
             }
           }
         }
-      }
-      .toDF("query_id", "vec_id", "approx_cos")
-    rerankShortlist(scored, e, qLocal, k, rerank)
+      } finally Seq(bcProbes, bcUnion, bcPqNorm2, bcCentNorm2, bcCdot).foreach(_.destroy())
+    rerankExact(e, qs, shortlist, k)
   }
 }

@@ -2318,7 +2318,7 @@ object TextOps {
       .otherwise(split(trim(lower(txt)), "\\s+"))
     documents
       .select(col("doc_id").cast("long").as("doc_id"), tk.as("tk"))
-      .as[(Long, scala.collection.Seq[String])]
+      .as[(Long, Array[String])]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         def h60(s: String): Long = {
@@ -2330,7 +2330,7 @@ object TextOps {
         }
         it.map { case (id, toks) =>
           val vec = new Array[Long](dim)
-          val n = toks.size
+          val n = toks.length
           var i = 0
           while (i < n) {
             val t = toks(i)

@@ -22,8 +22,7 @@ object PlanAudit {
     // (e.g. q52's vocabulary size) always plans as BroadcastNestedLoopJoin
     // because any equal-constant key constant-folds away — with ONE build
     // row that node is the optimal scalar-subquery shape, not an
-    // all-pairs hazard. q14 stays flagged: its BNLJ is the intentional
-    // brute-force baseline, documented at the query.
+    // all-pairs hazard.
     val scalarBnljOk =
       Set("q52_lm_perplexity", "q60_dsir_score", "q62_ccnet_buckets", "q69_mixture_balance",
         "q73_temperature_sample", // q73: the lang-count total + p^alpha normalizer scalars
@@ -31,14 +30,7 @@ object PlanAudit {
         "q77_source_prior", // q77: the global-mean fallback scalar
         "q84_outlinks", // q84: the host-count scalar behind the mix32 targets
         "q87_anchor_terms", // q87: feeds on q84's frame — same host-count scalar
-        "q90_domain_edges", // q90: same host-count scalar in its subdomain frame
-        // ANN serving audits: the BNLJ is bruteForceTopK's corpus x
-        // broadcast(<= nQueries rows) exact side — q14's oracle role
-        // computed in-surface (flagged at round-6 start too, predating
-        // the r06 changes; the approximate serving path never
-        // cross-joins)
-        "q15_simsearch_lsh", "q29_simsearch_ivf", "q44_simsearch_pq",
-        "q45_simsearch_ivfpq", "q49_simsearch_opq", "q54_simsearch_opq_ivfpq")
+        "q90_domain_edges") // q90: same host-count scalar in its subdomain frame
     // AUDIT-class surfaces (VERDICT r05 item 5): intentional exact
     // baselines / ground-truth recomputations that re-scan the corpus by
     // contract — at the 100 TB regime these run on a bounded sample (or

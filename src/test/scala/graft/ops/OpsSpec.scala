@@ -1562,7 +1562,8 @@ class OpsSpec extends AnyFunSuite {
     val tables = Array.tabulate(nTables)(t => SimSearch.planes(nBits, dim, 42L + t))
     val vmap = vecs.toMap
     val candidates = (0 until nTables).flatMap { t =>
-      vecs.map { case (id, emb) => (t, SimSearch.signature(emb, tables(t))) -> id }
+      vecs.map { case (id, emb) =>
+        (t, SimSearch.signature(emb.toArray, tables(t), new Array[Double](nBits))) -> id }
         .groupBy(_._1).values.flatMap { g =>
           val ids = g.map(_._2).sorted
           for (i <- ids.indices; j <- (i + 1) until ids.length) yield (ids(i), ids(j))
@@ -1902,6 +1903,212 @@ class OpsSpec extends AnyFunSuite {
     // auto-tuned nlist ~ sqrt(n)
     val auto = SimSearch.buildIvfIndex(df, nCentroids = 0, iters = 1, dim = dim)
     assert(auto.centroids.length == 20, s"sqrt(400) expected, got ${auto.centroids.length}")
+  }
+
+  // ---- ANN serving: partition-local top-k vs the window/join reference -------
+
+  /** both frames fail, or both return the same rows (as a multiset) under
+    * the same schema — names, types and nullability; true iff rows came */
+  private def assertSameServed(what: String)(
+      got: => org.apache.spark.sql.DataFrame, want: => org.apache.spark.sql.DataFrame): Boolean = {
+    def run(df: => org.apache.spark.sql.DataFrame) =
+      scala.util.Try { val d = df; (d.schema, d.collect().map(_.toString).sorted.toSeq) }
+    (run(got), run(want)) match {
+      case (scala.util.Success((gs, gr)), scala.util.Success((ws, wr))) =>
+        assert(gs == ws, s"$what: schema ${gs.simpleString} vs reference ${ws.simpleString}")
+        assert(gr == wr, s"$what: rows differ\n got ${gr.take(12)}\nwant ${wr.take(12)}")
+        true
+      case (scala.util.Failure(_), scala.util.Failure(_)) => false
+      case (g, w) => fail(s"$what: served $g but the reference gave $w")
+    }
+  }
+
+  private def annFixtures(dim: Int): Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    // score ties: exact copies and a x2 scaling (exact in float) of earlier
+    // rows give bit-identical cosines, so vec_id must break the tie
+    val base = (0L until 60L).map(i => (i, randVec(i, dim).toSeq)) ++
+      (1L to 4L).map(i => (100L + i, randVec(i, dim).toSeq)) ++
+      Seq((110L, randVec(2L, dim).map(_ * 2f).toSeq))
+    val df = base.toDF("vec_id", "embedding")
+    val withNulls = (base.map { case (i, v) => (Option(i), Option(v)) } ++
+      Seq((None, Some(randVec(7L, dim).toSeq)), (Some(200L), None)))
+      .toDF("vec_id", "embedding")
+    Seq(
+      "base" -> df,
+      "repartition(7)" -> df.repartition(7),
+      "all-zero vector" -> (base :+ ((300L, Seq.fill(dim)(0f)))).toDF("vec_id", "embedding"),
+      "NaN component" -> (base :+ ((301L, randVec(3L, dim).updated(1, Float.NaN).toSeq)))
+        .toDF("vec_id", "embedding"),
+      "null vec_id / embedding" -> withNulls,
+      "fewer candidates than k" -> df.filter(col("vec_id") < 4),
+      "int vec_id" -> base.map { case (i, v) => (i.toInt, v) }.toDF("vec_id", "embedding"))
+  }
+
+  test("ANN serving: every top-k path returns the window/join reference's rows and schema") {
+    val dim = 16
+    val clean = annFixtures(dim).head._2
+    val ivf = SimSearch.buildIvfIndex(clean, nCentroids = 6, iters = 2, dim = dim)
+    val cb = SimSearch.buildPqCodebook(clean, m = 4, k = 8, iters = 2, dim = dim)
+    val ivfPq = SimSearch.buildIvfPqIndex(clean, nCentroids = 6, m = 4, k = 8, iters = 2, dim = dim)
+    // which (path, fixture) pairs served rows rather than failing on both sides
+    val served = scala.collection.mutable.Set[String]()
+    def check(name: String, df: org.apache.spark.sql.DataFrame, nQ: Int, k: Int): Unit = Seq(
+      assertSameServed(s"brute/$name")(
+        SimSearch.bruteForceTopK(df, nQ, k), AnnOracles.bruteForceTopK(df, nQ, k)) -> "brute",
+      assertSameServed(s"ivf/$name")(
+        SimSearch.ivfTopKWithIndex(df, ivf, nQ, k, nProbe = 2),
+        AnnOracles.ivfTopKWithIndex(df, ivf, nQ, k, nProbe = 2)) -> "ivf",
+      assertSameServed(s"lsh/$name")(
+        SimSearch.lshTopK(df, nQ, k, nBits = 3, nTables = 3, dim = dim),
+        AnnOracles.lshTopK(df, nQ, k, nBits = 3, nTables = 3, dim = dim)) -> "lsh",
+      assertSameServed(s"pq/$name")(
+        SimSearch.pqTopKFromCodes(SimSearch.pqEncode(df, cb), df, cb, nQ, k, rerank = 2),
+        AnnOracles.pqTopKFromCodes(SimSearch.pqEncode(df, cb), df, cb, nQ, k, rerank = 2)) -> "pq",
+      assertSameServed(s"ivfpq/$name")(
+        SimSearch.ivfPqTopKFromCodes(SimSearch.ivfPqEncode(df, ivfPq), df, ivfPq, nQ, k,
+          nProbe = 2, rerank = 2),
+        AnnOracles.ivfPqTopKFromCodes(SimSearch.ivfPqEncode(df, ivfPq), df, ivfPq, nQ, k,
+          nProbe = 2, rerank = 2)) -> "ivfpq")
+      .foreach { case (ok, path) => if (ok) served += s"$path/$name" }
+    annFixtures(dim).foreach { case (name, df) => check(name, df, 5, 10) }
+    check("nQueries above the row count", annFixtures(dim).head._2.filter(col("vec_id") < 6), 9, 3)
+    // the zero vector's cosine divides by zero: an error under ANSI (the
+    // loop above), NULL ranked last without it
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try annFixtures(dim).filter(_._1 == "all-zero vector").foreach { case (n, df) =>
+      check(s"$n, ANSI off", df, 5, 10) }
+    finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    // only these pairs fail, on both sides: the typed paths cannot decode
+    // a NULL vec_id or encode a null embedding, and ANSI division by zero
+    val paths = Seq("brute", "ivf", "lsh", "pq", "ivfpq")
+    val fixtures = annFixtures(dim).map(_._1) ++
+      Seq("nQueries above the row count", "all-zero vector, ANSI off")
+    val failing = paths.filter(_ != "brute").map(p => s"$p/null vec_id / embedding").toSet ++
+      paths.map(p => s"$p/all-zero vector")
+    val expected = (for (p <- paths; f <- fixtures) yield s"$p/$f").toSet -- failing
+    assert((expected -- served).isEmpty, s"failed on both sides: ${(expected -- served).toSeq.sorted}")
+    // the fixtures are not vacuous: ties, NULL and NaN cosines are served
+    val nans = SimSearch.bruteForceTopK(annFixtures(dim)(3)._2, 5, 70).collect()
+    assert(nans.exists(r => r.getAs[Double]("cosine").isNaN))
+    val nulls = SimSearch.bruteForceTopK(annFixtures(dim)(4)._2, 5, 70).collect()
+    // the NULL vec_id is the first query and matches nothing; the other 4
+    // rank all 65 non-NULL other rows, the null embedding last
+    assert(nulls.exists(_.isNullAt(3)) && nulls.length == 4 * 65)
+  }
+
+  test("TopK ranks candidates as Spark sorts (score DESC NULLS LAST, vec_id ASC)") {
+    val scores: Seq[Option[Double]] = Seq(Some(0.5), Some(Double.NaN), None, Some(-0.0), Some(0.0),
+      Some(Double.NegativeInfinity), Some(0.5), Some(Double.PositiveInfinity), Some(-0.0), None,
+      Some(Double.NaN), Some(-1e-300), Some(1e-300), Some(0.0))
+    val rows = scores.zipWithIndex.map { case (sc, i) => ((i * 7919L) % 101L, sc) }
+    val spark_ = rows.toDF("id", "score").orderBy(col("score").desc, col("id").asc).collect()
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toSeq
+    for (cap <- Seq(1, 3, 8, rows.length)) {
+      // two heaps merged, as the driver folds task heaps
+      val (a, b) = (new SimSearch.TopK(1, cap), new SimSearch.TopK(1, cap))
+      rows.zipWithIndex.foreach { case ((id, sc), i) =>
+        (if (i % 2 == 0) a else b).offer(0, id, sc.getOrElse(0.0), sc.isDefined) }
+      val got = a.merge(b).ranked(0).map(c => (c.id, if (c.known) Some(c.score) else None)).toSeq
+      // -0.0 and 0.0 tie (vec_id decides), so compare scores by value
+      def key(x: (Long, Option[Double])) = (x._1, x._2.map(d => if (d == 0.0) 0.0 else d).toString)
+      assert(got.map(key) == spark_.take(cap).map(key), s"cap $cap")
+    }
+  }
+
+  test("annRecallAudit: bounded-pull verdicts match the join/aggregate reference") {
+    val dim = 16
+    annFixtures(dim).filterNot(_._1 == "all-zero vector").foreach { case (name, df) =>
+      val exact = AnnOracles.bruteForceTopK(df, 5, 10)
+      val approx = AnnOracles.lshTopK(df.na.drop(), 5, 10, nBits = 3, nTables = 3, dim = dim)
+      assertSameServed(s"audit/$name")(
+        Audit.annRecallAudit(approx, exact, df, 10, recallBarPct = 50),
+        AnnOracles.annRecallAudit(approx, exact, df, 10, recallBarPct = 50))
+      assertSameServed(s"audit-of-exact/$name")(
+        Audit.annRecallAudit(exact, exact, df, 10, recallBarPct = 100),
+        AnnOracles.annRecallAudit(exact, exact, df, 10, recallBarPct = 100))
+    }
+    // hand-made approx rows: NULL ids and cosines, a duplicated row, a
+    // wrong cosine, an id the corpus lacks, a short result list
+    val df = annFixtures(dim).head._2
+    val exact = AnnOracles.bruteForceTopK(df, 3, 4)
+    val good = exact.collect().map(r => (Option(r.getLong(0)), Option(r.getLong(1)),
+      Option(r.getDouble(3))))
+    val approx = (good.take(6) ++ Seq(
+      (good(0)._1, good(0)._2, good(0)._3),
+      (good(6)._1, good(6)._2, None),
+      (good(7)._1, good(7)._2, good(7)._3.map(_ + 0.01)),
+      (None, good(8)._2, good(8)._3),
+      (good(9)._1, None, None),
+      (good(10)._1, Some(9999L), Some(0.5)),
+      (Some(5000L), good(11)._2, good(11)._3)))
+      .toSeq.toDF("query_id", "neighbor_id", "cosine")
+    assertSameServed("audit/hand-made")(
+      Audit.annRecallAudit(approx, exact, df, 4, recallBarPct = 75),
+      AnnOracles.annRecallAudit(approx, exact, df, 4, recallBarPct = 75))
+    val verdicts = Audit.annRecallAudit(approx, exact, df, 4, recallBarPct = 75).collect()
+    assert(verdicts.exists(r => !r.isNullAt(4) && !r.getBoolean(4)), "the wrong cosine must fail rerank_ok")
+  }
+
+  /** the Spark jobs `body` runs, counted by a listener on its job group */
+  private def jobsIn(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("ANN serving with a prebuilt index runs at most 3 Spark jobs per call (AQE on)") {
+    val dim = 16
+    val df = graft.ops.Checkpoints.cut(clusteredEmbeddings(dim, 400L).toDF("vec_id", "embedding"))
+    val ivf = SimSearch.buildIvfIndex(df, nCentroids = 8, iters = 2, dim = dim)
+    val cb = SimSearch.buildPqCodebook(df, m = 4, k = 8, dim = dim)
+    val ivfPq = SimSearch.buildIvfPqIndex(df, nCentroids = 8, m = 4, k = 8, dim = dim)
+    val pqCodes = graft.ops.Checkpoints.cut(SimSearch.pqEncode(df, cb))
+    val ivfPqCodes = graft.ops.Checkpoints.cut(SimSearch.ivfPqEncode(df, ivfPq))
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      def jobsOf(name: String)(serve: => org.apache.spark.sql.DataFrame): Int =
+        jobsIn(s"ann-serve-$name")(assert(serve.collect().length == 50, name))
+      val counts = Seq(
+        "brute" -> jobsOf("brute")(SimSearch.bruteForceTopK(df, 5, 10)),
+        "ivf" -> jobsOf("ivf")(SimSearch.ivfTopKWithIndex(df, ivf, 5, 10)),
+        "lsh" -> jobsOf("lsh")(SimSearch.lshTopK(df, 5, 10, nBits = 3, nTables = 8, dim = dim)),
+        "pq" -> jobsOf("pq")(SimSearch.pqTopKFromCodes(pqCodes, df, cb, 5, 10)),
+        "ivfpq" -> jobsOf("ivfpq")(SimSearch.ivfPqTopKFromCodes(ivfPqCodes, df, ivfPq, 5, 10)))
+      info(s"jobs per serving call: $counts")
+      counts.foreach { case (n, c) => assert(c >= 1 && c <= 3, s"$n ran $c jobs") }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("buildOpqIvfPqIndex pulls its sample once; the index is bit-identical to the two-pull build") {
+    val dim = 32
+    val df = graft.ops.Checkpoints.cut(clusteredEmbeddings(dim, 3000L).toDF("vec_id", "embedding"))
+    def parts(i: SimSearch.OpqIvfPqIndex) = (i.rotation.map(_.toSeq).toSeq,
+      i.index.ivf.centroids.map(_.toSeq).toSeq, i.index.pq.centroids.map(_.map(_.toSeq).toSeq).toSeq)
+    // trainSample below the row count: both builds train on the same hash
+    // sample (about 1,000 rows, under the bound, so the two-pull build's
+    // second hashSample keeps it whole)
+    var got: SimSearch.OpqIvfPqIndex = null
+    var want: SimSearch.OpqIvfPqIndex = null
+    val newJobs = jobsIn("opq-ivfpq-one-pull") { got = SimSearch.buildOpqIvfPqIndex(df,
+      nCentroids = 16, m = 8, k = 16, iters = 2, dim = dim, opqIters = 2, trainSample = 1200L) }
+    val oldJobs = jobsIn("opq-ivfpq-two-pulls") { want = AnnOracles.buildOpqIvfPqIndex(df,
+      nCentroids = 16, m = 8, k = 16, iters = 2, dim = dim, opqIters = 2, trainSample = 1200L) }
+    assert(parts(got) == parts(want))
+    info(s"build jobs: $newJobs (one pull) vs $oldJobs (two pulls)")
+    assert(newJobs < oldJobs, s"$newJobs vs $oldJobs")
   }
 
   // ---- source-level corpus curation (round 3) --------------------------------
