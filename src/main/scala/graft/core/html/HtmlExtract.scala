@@ -11,7 +11,9 @@ import scala.collection.mutable.ArrayBuffer
   * via text-density and tag-heuristic scoring") and is fully deterministic
   * so the golden-diff harness applies:
   *
-  *  1. tokenize: tags / text / comments / raw-text elements (script, style);
+  *  1. scan: tags / text / comments / raw-text elements (script, style),
+  *     handed to a [[TokenSink]] — the one tolerant tag scanner behind
+  *     [[extract]], [[extractLinks]], [[pageMeta]] and [[extractTables]];
   *  2. build a block tree on block-level elements, tolerating unclosed tags;
   *  3. score each block: text density (chars per tag), link density, and a
   *     tag prior (article/main/p boosted; nav/header/footer/aside/form
@@ -130,11 +132,6 @@ object HtmlExtract {
   final val MIN_DATA_CELLS = 4
   final val MAX_AVG_CELL_CHARS = 80f
 
-  sealed trait Tok
-  final case class TText(t: String) extends Tok
-  final case class TOpen(name: String, selfClosing: Boolean, hint: String = "") extends Tok
-  final case class TClose(name: String) extends Tok
-
   /** index of ASCII-lowercase `needle` in `hay` from `from`, matching
     * hay ASCII-case-insensitively WITHOUT allocating a lowered copy. Two
     * properties the naive `hay.toLowerCase.indexOf` lacks: offsets are
@@ -223,17 +220,6 @@ object HtmlExtract {
     }
   }
 
-  /** trailing-slash self-closing test that does NOT misread an unquoted
-    * attribute value ending in '/' (`<a href=https://x.example/>` — per
-    * HTML5 the '/' is part of the value, the tag is open): self-closing
-    * only when the '/' directly follows the bare tag name, whitespace, or
-    * a closing quote. */
-  private[graft] def isSelfClosingInner(inner: String, name: String): Boolean =
-    inner.endsWith("/") && (inner.length == name.length + 1 || {
-      val b = inner.charAt(inner.length - 2)
-      b.isWhitespace || b == '"' || b == '\''
-    })
-
   /** lowercased `class` + `id` attribute values of a tag's attribute text
     * (minimal scan; only called when the tag body mentions class/id) */
   private[graft] def classIdHint(inner: String): String = {
@@ -246,6 +232,13 @@ object HtmlExtract {
     }
     sb.toString
   }
+
+  /** [[classIdHint]] of the attribute text html[from, end), "" without a
+    * substring when the range mentions neither class nor id */
+  private def classIdHint(html: String, from: Int, end: Int): String =
+    if (indexOfAsciiLower(html, "class", from, end) < 0 &&
+      indexOfAsciiLower(html, "id", from, end) < 0) ""
+    else classIdHint(html.substring(from, end))
 
   /** class/id tokens that mark boilerplate containers — the standard
     * "unlikely candidates" heuristic of readability/boilerpipe-family
@@ -265,27 +258,22 @@ object HtmlExtract {
     * of the page */
   private abstract class TokenSink {
     def text(html: String, start: Int, end: Int): Unit
-    /** `flags`: the name's tag sets ([[BLOCK]], [[DROP]], ...) */
-    def open(name: String, flags: Int, selfClosing: Boolean, hint: String): Unit
+    /** an open tag: `flags` are the name's tag sets ([[BLOCK]], [[DROP]],
+      * ...), html[attrStart, attrEnd) its attribute text. Returning true
+      * marks the element's content as raw text: [[scan]] hands everything
+      * up to the matching close tag (or the page end) to [[text]] as one
+      * range, possibly empty, then closes the element. A [[RAW]] element's
+      * content is skipped the same way, without a text token. */
+    def open(html: String, name: String, flags: Int, selfClosing: Boolean,
+        attrStart: Int, attrEnd: Int): Boolean
     def close(name: String, flags: Int): Unit
   }
 
-  /** tolerant tokenizer: handles comments, doctype, raw-text elements,
-    * attribute quoting, unterminated tags */
-  def tokenize(html: String): Vector[Tok] = {
-    val out = Vector.newBuilder[Tok]
-    scan(html, new TokenSink {
-      def text(html: String, start: Int, end: Int): Unit = out += TText(html.substring(start, end))
-      def open(name: String, flags: Int, selfClosing: Boolean, hint: String): Unit =
-        out += TOpen(name, selfClosing, hint)
-      def close(name: String, flags: Int): Unit = out += TClose(name)
-    })
-    out.result()
-  }
-
-  /** the tokenizer proper. Tag names are read in place: an ASCII name comes
-    * from [[tagName]]'s table of known names when it is there; a name with
-    * any other char takes the substring path of the original definition. */
+  /** the tolerant tag scanner: comments, doctype, quote-aware tag ends,
+    * unterminated tags, raw-text elements. Tag names are read in place: an
+    * ASCII name comes from [[tagName]]'s table of known names when it is
+    * there; a name with any other char takes the substring path of the
+    * original definition. */
   private def scan(html: String, sink: TokenSink): Unit = {
     var i = 0
     val n = html.length
@@ -333,21 +321,20 @@ object HtmlExtract {
               if (ascii) tagName(html, from, k)
               else html.substring(from, end).takeWhile(c => c.isLetterOrDigit).toLowerCase(java.util.Locale.ROOT)
             val flags = flagsOf(name)
-            // isSelfClosingInner on the range
+            // a trailing '/' self-closes only right after the bare name,
+            // whitespace or a closing quote: in `<a href=https://x.example/>`
+            // it is part of the unquoted value (HTML5) and the tag is open
             val selfClosing = (html.charAt(end - 1) == '/' && (end - from == name.length + 1 || {
               val b = html.charAt(end - 2)
               b.isWhitespace || b == '"' || b == '\''
             })) || (flags & VOID) != 0
-            val attrs = math.min(from + name.length, end)
-            sink.open(name, flags, selfClosing,
-              if ((flags & BLOCK) == 0) ""
-              else if (indexOfAsciiLower(html, "class", attrs, end) < 0 &&
-                indexOfAsciiLower(html, "id", attrs, end) < 0) ""
-              else classIdHint(html.substring(attrs, end)))
+            val rawText = sink.open(html, name, flags, selfClosing, math.min(from + name.length, end), end)
             i = end + 1
             // raw-text elements: skip to the matching close tag verbatim
-            if (!selfClosing && (flags & RAW) != 0) {
-              val closeIdx = indexOfAsciiLower(html, rawTextClose(name), i)
+            if (!selfClosing && (rawText || (flags & RAW) != 0)) {
+              val closeIdx = indexOfAsciiLower(html,
+                if ((flags & RAW) != 0) rawTextClose(name) else "</" + name, i)
+              if (rawText) sink.text(html, i, if (closeIdx < 0) n else closeIdx)
               if (closeIdx < 0) i = n
               else {
                 val gt = html.indexOf('>', closeIdx)
@@ -613,7 +600,8 @@ object HtmlExtract {
           }
         }
 
-      def open(name: String, flags: Int, selfClosing: Boolean, hint: String): Unit =
+      def open(html: String, name: String, flags: Int, selfClosing: Boolean,
+          attrStart: Int, attrEnd: Int): Boolean = {
         if ((flags & DROP) != 0 && !selfClosing && (flags & VOID) == 0) dropDepth += 1
         else if (dropDepth == 0) {
           if (name == "a" && !selfClosing) linkDepth += 1
@@ -634,13 +622,15 @@ object HtmlExtract {
                   (stack.last.tag == "td" || stack.last.tag == "th")) ||
                 (name == "tr" && stack.last.tag == "tr"))) closeBlock()
             val penalized = stack.last.penalized || (flags & PENALTY) != 0 ||
-              hintPenalized(hint)
+              hintPenalized(classIdHint(html, attrStart, attrEnd))
             stack += new BlockAcc(name, stack.length, penalized,
               inTable = name == "table" || stack.last.inTable)
           } else if (!selfClosing) {
             stack.last.tagCount += 1
           }
         }
+        false
+      }
 
       def close(name: String, flags: Int): Unit =
         if ((flags & DROP) != 0) { if (dropDepth > 0) dropDepth -= 1 }
@@ -670,7 +660,6 @@ object HtmlExtract {
     Result(sb.toString, spans.result())
   }
 
-  /** collapse whitespace runs to single spaces, preserving explicit newlines */
   /** one outlink: raw (entity-decoded) href, whitespace-normalized
     * entity-decoded anchor text, and whether rel contains nofollow */
   final case class Link(href: String, anchor: String, nofollow: Boolean)
@@ -689,9 +678,14 @@ object HtmlExtract {
     res
   }
 
+  /** the lowercased tokens of a space/comma-separated attribute value */
+  private def valueTokens(v: String): Array[String] =
+    v.toLowerCase(java.util.Locale.ROOT).split("[\\s,]+")
+
   /** outlink extraction — every `<a href=...>` with its anchor text, in
-    * document order. Same tolerance contract as [[tokenize]] (comments,
-    * doctype, quote-aware tag ends, raw-text skip) plus the anchor rules:
+    * document order. A [[TokenSink]] over [[scan]], so the tolerance
+    * contract is the scanner's (comments, doctype, quote-aware tag ends,
+    * raw-text skip) plus the anchor rules:
     *
     *  - anchors never nest (HTML spec: an `<a>` start tag implicitly
     *    closes an open one) — a second `<a>` emits the first;
@@ -709,87 +703,38 @@ object HtmlExtract {
     * this is north_rule surface. */
   def extractLinks(html: String): Vector[Link] = {
     val out = Vector.newBuilder[Link]
-    var i = 0
-    val n = html.length
     var inA = false
     var href = ""
     var nofollow = false
-    val anchor = new StringBuilder
-    def close(): Unit = {
+    val anchor = new java.lang.StringBuilder
+    def emit(): Unit = {
       if (inA && href.nonEmpty)
         out += Link(href, normalizeWs(decodeEntities(anchor.toString)), nofollow)
       inA = false; href = ""; nofollow = false; anchor.setLength(0)
     }
-    def relNofollow(inner: String): Boolean =
-      attrValue(inner, "rel").exists(
-        _.toLowerCase(java.util.Locale.ROOT).split("[\\s,]+").contains("nofollow"))
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) {
-        if (inA && i < n) anchor.append(html.substring(i))
-        i = n
-      } else {
-        if (inA && lt > i) anchor.append(html.substring(i, lt))
-        if (lt + 1 >= n) i = n
-        else if (html.startsWith("<!--", lt)) {
-          val end = html.indexOf("-->", lt + 4)
-          i = if (end < 0) n else end + 3
-        } else if (html.charAt(lt + 1) == '!' || html.charAt(lt + 1) == '?') {
-          val end = html.indexOf('>', lt + 1)
-          i = if (end < 0) n else end + 1
-        } else if (html.charAt(lt + 1) == '/') {
-          val end = html.indexOf('>', lt + 2)
-          if (end < 0) i = n
-          else {
-            val name = html.substring(lt + 2, end).trim
-              .toLowerCase(java.util.Locale.ROOT).takeWhile(_.isLetterOrDigit)
-            if (name == "a") close()
-            i = end + 1
+    scan(html, new TokenSink {
+      def text(html: String, start: Int, end: Int): Unit =
+        if (inA) anchor.append(html, start, end)
+
+      def open(html: String, name: String, flags: Int, selfClosing: Boolean,
+          attrStart: Int, attrEnd: Int): Boolean = {
+        if (name == "a") {
+          emit() // implicit close: anchors never nest
+          val attrs = html.substring(attrStart, attrEnd)
+          val h = attrValue(attrs, "href").map(decodeEntities).getOrElse("")
+          val relNofollow = attrValue(attrs, "rel").exists(valueTokens(_).contains("nofollow"))
+          if (selfClosing) {
+            if (h.nonEmpty) out += Link(h, "", relNofollow)
+          } else {
+            inA = true; href = h; nofollow = relNofollow
           }
-        } else if (html.charAt(lt + 1).isLetter) {
-          var j = lt + 1
-          var inQuote: Char = 0
-          var end = -1
-          while (j < n && end < 0) {
-            val c = html.charAt(j)
-            if (inQuote != 0) { if (c == inQuote) inQuote = 0 }
-            else if (c == '"' || c == '\'') inQuote = c
-            else if (c == '>') end = j
-            j += 1
-          }
-          if (end < 0) i = n
-          else {
-            val inner = html.substring(lt + 1, end)
-            val name = inner.takeWhile(c => c.isLetterOrDigit)
-              .toLowerCase(java.util.Locale.ROOT)
-            val selfClosing = isSelfClosingInner(inner, name) || voidTags.contains(name)
-            if (name == "a") {
-              close() // implicit close: anchors never nest
-              val attrs = inner.drop(name.length)
-              val h = attrValue(attrs, "href").map(decodeEntities).getOrElse("")
-              if (selfClosing) {
-                if (h.nonEmpty) out += Link(h, "", relNofollow(attrs))
-              } else {
-                inA = true; href = h; nofollow = relNofollow(attrs)
-              }
-            }
-            i = end + 1
-            if (!selfClosing && rawTextTags.contains(name)) {
-              val closeIdx = indexOfAsciiLower(html, s"</$name", i)
-              if (closeIdx < 0) i = n
-              else {
-                val gt = html.indexOf('>', closeIdx)
-                i = if (gt < 0) n else gt + 1
-              }
-            }
-          }
-        } else {
-          if (inA) anchor.append('<')
-          i = lt + 1
         }
+        false
       }
-    }
-    close()
+
+      def close(name: String, flags: Int): Unit = if (name == "a") emit()
+    })
+    emit()
     out.result()
   }
 
@@ -807,77 +752,50 @@ object HtmlExtract {
     var canonical: String = null
     var noindex = false
     var nofollow = false
-    var i = 0
-    val n = html.length
-    while (i < n) {
-      val lt = html.indexOf('<', i)
-      if (lt < 0) i = n
-      else if (lt + 1 >= n) i = n
-      else if (html.startsWith("<!--", lt)) {
-        val end = html.indexOf("-->", lt + 4)
-        i = if (end < 0) n else end + 3
-      } else if (html.charAt(lt + 1) == '!' || html.charAt(lt + 1) == '?' ||
-          html.charAt(lt + 1) == '/') {
-        val end = html.indexOf('>', lt + 1)
-        i = if (end < 0) n else end + 1
-      } else if (html.charAt(lt + 1).isLetter) {
-        var j = lt + 1
-        var inQuote: Char = 0
-        var end = -1
-        while (j < n && end < 0) {
-          val c = html.charAt(j)
-          if (inQuote != 0) { if (c == inQuote) inQuote = 0 }
-          else if (c == '"' || c == '\'') inQuote = c
-          else if (c == '>') end = j
-          j += 1
+    var inTitle = false
+    scan(html, new TokenSink {
+      def text(html: String, start: Int, end: Int): Unit =
+        if (inTitle) {
+          if (title == null) title = normalizeWs(decodeEntities(html.substring(start, end)))
+          inTitle = false
         }
-        if (end < 0) i = n
-        else {
-          val inner = html.substring(lt + 1, end)
-          val name = inner.takeWhile(_.isLetterOrDigit).toLowerCase(java.util.Locale.ROOT)
-          val selfClosing = isSelfClosingInner(inner, name) || voidTags.contains(name)
-          val attrs = inner.drop(name.length)
-          i = end + 1
-          name match {
-            case "title" if !selfClosing =>
-              // rcdata: raw text to the matching close tag, tags-as-text.
-              // EVERY title skips as rcdata (a second <title>, e.g. inside
-              // <svg>, must not leak its content back into live markup
-              // where a decoy <link rel=canonical> would be honored) —
-              // only the first one's text is captured
-              val closeIdx = indexOfAsciiLower(html, "</title", i)
-              val stop = if (closeIdx < 0) n else closeIdx
-              if (title == null)
-                title = normalizeWs(decodeEntities(html.substring(i, stop)))
-              i = if (closeIdx < 0) n
-              else { val gt = html.indexOf('>', closeIdx); if (gt < 0) n else gt + 1 }
-            case "link" if canonical == null =>
-              val isCanonical = attrValue(attrs, "rel").exists(
-                _.toLowerCase(java.util.Locale.ROOT).split("[\\s,]+").contains("canonical"))
-              if (isCanonical)
-                attrValue(attrs, "href").map(decodeEntities).filter(_.nonEmpty)
-                  .foreach(canonical = _)
-            case "meta" =>
-              val isRobots = attrValue(attrs, "name").exists(
-                _.trim.equalsIgnoreCase("robots"))
-              if (isRobots) attrValue(attrs, "content").foreach { c =>
-                val toks = c.toLowerCase(java.util.Locale.ROOT).split("[\\s,]+")
+
+      def open(html: String, name: String, flags: Int, selfClosing: Boolean,
+          attrStart: Int, attrEnd: Int): Boolean = {
+        if (name == "title") {
+          // rcdata: raw text to the matching close tag, tags-as-text.
+          // EVERY title is read as rcdata (a second <title>, e.g. inside
+          // <svg>, must not leak its content back into live markup where a
+          // decoy <link rel=canonical> would be honored) — only the first
+          // one's text is kept
+          inTitle = !selfClosing
+          inTitle
+        } else {
+          if (name == "link" && canonical == null) {
+            val attrs = html.substring(attrStart, attrEnd)
+            if (attrValue(attrs, "rel").exists(valueTokens(_).contains("canonical")))
+              attrValue(attrs, "href").map(decodeEntities).filter(_.nonEmpty)
+                .foreach(canonical = _)
+          } else if (name == "meta") {
+            val attrs = html.substring(attrStart, attrEnd)
+            if (attrValue(attrs, "name").exists(_.trim.equalsIgnoreCase("robots")))
+              attrValue(attrs, "content").foreach { c =>
+                val toks = valueTokens(c)
                 if (toks.contains("noindex") || toks.contains("none")) noindex = true
                 if (toks.contains("nofollow") || toks.contains("none")) nofollow = true
               }
-            case nm if !selfClosing && rawTextTags.contains(nm) =>
-              val closeIdx = indexOfAsciiLower(html, s"</$nm", i)
-              i = if (closeIdx < 0) n
-              else { val gt = html.indexOf('>', closeIdx); if (gt < 0) n else gt + 1 }
-            case _ => ()
           }
+          false
         }
-      } else i = lt + 1
-    }
+      }
+
+      def close(name: String, flags: Int): Unit = ()
+    })
     PageMeta(if (title == null) "" else title,
       if (canonical == null) "" else canonical, noindex, nofollow)
   }
 
+  /** collapse whitespace runs to single spaces, preserving explicit newlines */
   def normalizeWs(s: String): String = {
     val a = new Array[Char](s.length)
     s.getChars(0, s.length, a, 0)
@@ -953,7 +871,7 @@ object HtmlExtract {
     * pipeline (table-QA / table-pretraining sets are built from exactly
     * this shape), complementing [[extract]]'s prose render.
     *
-    * Reuses [[tokenize]] and applies the SAME data-vs-layout gate as the
+    * A [[TokenSink]] over [[scan]]; applies the SAME data-vs-layout gate as the
     * prose path ([[MIN_DATA_CELLS]] non-empty cells in >= 2 rows, average
     * non-empty cell <= [[MAX_AVG_CELL_CHARS]] chars) plus the same two
     * rejections the prose path resolves via priors: majority-link tables
@@ -1034,21 +952,23 @@ object HtmlExtract {
       }
     }
 
-    tokenize(html).foreach {
-      case TText(t) =>
+    scan(html, new TokenSink {
+      def text(html: String, start: Int, end: Int): Unit =
         if (dropDepth == 0 && tstack.nonEmpty) {
           val top = tstack.last
-          val decoded = decodeEntities(t)
+          val decoded = decodeEntities(html.substring(start, end))
           if (top.captionDepth > 0) top.caption.append(decoded)
           else if (top.cell != null) top.cell.append(decoded)
           if (linkDepth > 0 && (top.captionDepth > 0 || top.cell != null))
             top.linkChars += normalizeWs(decoded).length
         }
-      case TOpen(name, selfClosing, _) =>
-        if (dropTags.contains(name) && !selfClosing && !voidTags.contains(name)) dropDepth += 1
+
+      def open(html: String, name: String, flags: Int, selfClosing: Boolean,
+          attrStart: Int, attrEnd: Int): Boolean = {
+        if ((flags & DROP) != 0 && !selfClosing && (flags & VOID) == 0) dropDepth += 1
         else if (dropDepth == 0) {
           if (name == "a" && !selfClosing) linkDepth += 1
-          else if (penaltyTags.contains(name) && !selfClosing) penaltyDepth += 1
+          else if ((flags & PENALTY) != 0 && !selfClosing) penaltyDepth += 1
           else if (name == "table") {
             // an unclosed <a> from earlier tag soup must not taint this
             // table's link density wholesale (the gate hard-rejects at
@@ -1080,11 +1000,14 @@ object HtmlExtract {
             }
           }
         }
-      case TClose(name) =>
-        if (dropTags.contains(name)) { if (dropDepth > 0) dropDepth -= 1 }
+        false
+      }
+
+      def close(name: String, flags: Int): Unit =
+        if ((flags & DROP) != 0) { if (dropDepth > 0) dropDepth -= 1 }
         else if (dropDepth == 0) {
           if (name == "a") { if (linkDepth > 0) linkDepth -= 1 }
-          else if (penaltyTags.contains(name)) { if (penaltyDepth > 0) penaltyDepth -= 1 }
+          else if ((flags & PENALTY) != 0) { if (penaltyDepth > 0) penaltyDepth -= 1 }
           else if (name == "table") {
             if (tstack.nonEmpty) { linkDepth = 0; closeTable() }
           } else if (tstack.nonEmpty) name match {
@@ -1095,7 +1018,7 @@ object HtmlExtract {
             case _ => ()
           }
         }
-    }
+    })
     while (tstack.nonEmpty) closeTable() // unclosed tables at EOF
     out.sortBy(_.tableIdx).toVector
   }

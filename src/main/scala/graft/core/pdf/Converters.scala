@@ -95,8 +95,6 @@ object CharsetConverter {
         case None => new CharsetConverter(encoding, UTF8, None)
       }
     }
-
-  val default: CharsetConverter = new CharsetConverter("", DEFAULT, None)
 }
 
 /** /Encoding //Differences converter (diff_converter.cc). */

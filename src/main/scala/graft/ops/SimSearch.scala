@@ -389,8 +389,8 @@ object SimSearch {
       iters: Int = 3,
       dim: Int = 64,
       trainSample: Long = 200000L): IvfIndex = {
-    val (sample, n) = hashSample(embeddings, trainSample)
-    IvfIndex(kmeansCentroids(sample, autoNlist(n, nCentroids), iters, dim))
+    val (xs, n) = trainingRows(embeddings, trainSample)
+    IvfIndex(localLloydMulti(xs, autoNlist(n, nCentroids), iters, 1, dim).head)
   }
 
   /** nlist sizing shared by `buildIvfIndex` and `buildIvfPqIndex` (ONE
@@ -409,34 +409,47 @@ object SimSearch {
     if (nProbe > 0) math.min(nProbe, nlist)
     else math.max(4, math.min(nlist, (nlist + 3) / 4))
 
-  /** deterministic modulus sample of at most ~trainSample rows (no RNG:
-    * stable across retries), returned with the corpus size n; ceil
-    * division so the expected sample is <= trainSample (floor would keep
-    * 100% of the corpus for n in (trainSample, 2*trainSample)). Falls
-    * back to the full frame if a pathological hash draw leaves the sample
-    * empty (k-means cannot init from zero vectors). Every index builder
-    * samples here, so a `trainSample` above the driver training cap
-    * fails before any job runs. */
-  private[ops] def hashSample(embeddings: DataFrame, trainSample: Long): (DataFrame, Long) = {
+  // ---- driver-local training over the bounded sample ----------------------------
+
+  /** the training rows of an index build in canonical vec_id order, with
+    * the corpus size n, from one count and one pull. When n <= trainSample
+    * the whole frame is collected: the count is the cap check, since
+    * trainSample may not exceed `MaxLocalTrainRows`. Above it, training
+    * runs on a deterministic modulus sample of at most ~trainSample rows
+    * (no RNG: stable across retries; ceil division so the expected sample
+    * is <= trainSample — floor would keep 100% of the corpus for n in
+    * (trainSample, 2*trainSample)), falling back to the full frame if a
+    * pathological hash draw leaves it empty (k-means cannot init from zero
+    * vectors); that pull keeps `collectTraining`'s count check. Every
+    * index builder trains here, so a `trainSample` above the cap fails
+    * before any job runs. */
+  private def trainingRows(embeddings: DataFrame, trainSample: Long): (Array[Array[Float]], Long) = {
     require(trainSample <= MaxLocalTrainRows,
       s"trainSample $trainSample exceeds the $MaxLocalTrainRows-row driver training cap")
     val n = embeddings.count()
-    if (n <= trainSample) (embeddings, n)
+    if (n <= trainSample) (inVecIdOrder(vectors(embeddings).collect()), n)
     else {
       val keepOneIn = (n + trainSample - 1L) / trainSample
       val sampled = embeddings.filter(pmod(xxhash64(col("vec_id")), lit(keepOneIn)) === 0)
-      (if (sampled.isEmpty) embeddings else sampled, n)
+      (collectTraining(if (sampled.isEmpty) embeddings else sampled), n)
     }
   }
 
-  // ---- driver-local training over the bounded sample ----------------------------
-
   /** hard cap on rows `collectTraining` will pull to the driver (~300 MB
-    * of 64-dim vectors). `hashSample` refuses a `trainSample` above it,
+    * of 64-dim vectors). `trainingRows` refuses a `trainSample` above it,
     * so only malformed input reaches it: duplicated or null vec_ids make
     * the modulus sample keep all rows of an id or none, and an empty draw
     * falls back to the full frame. */
   private val MaxLocalTrainRows = 1000000
+
+  private def vectors(embeddings: DataFrame): Dataset[(Long, Array[Float])] = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    embeddings.select(col("vec_id").cast("long"), col("embedding")).as[(Long, Array[Float])]
+  }
+
+  private def inVecIdOrder(rows: Array[(Long, Array[Float])]): Array[Array[Float]] =
+    rows.sortBy(_._1).map(_._2)
 
   /** collect a bounded training frame to the driver in canonical vec_id
     * order; throws above `MaxLocalTrainRows`. Index training is
@@ -447,21 +460,17 @@ object SimSearch {
     * Canonical ordering also makes the trained centroids
     * partition-invariant by construction. */
   private def collectTraining(embeddings: DataFrame): Array[Array[Float]] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     // cap check = a count over a transient cache, NOT a limit(cap+1)
     // collect: an over-cap frame costs no cap-sized driver pull discarded
     // on the spot, and a count cannot silently truncate past the
     // Int.MaxValue collect limit
-    val e = embeddings.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = vectors(embeddings).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val rows = e.count()
       require(rows <= MaxLocalTrainRows,
         s"training frame has $rows rows, above the $MaxLocalTrainRows-row driver cap; " +
           "a trainSample-bounded sample only grows past it on duplicated or null vec_ids")
-      e.collect().sortBy(_._1).map(_._2)
+      inVecIdOrder(e.collect())
     } finally e.unpersist()
   }
 
@@ -718,8 +727,7 @@ object SimSearch {
       trainSample: Long = 200000L): PqCodebook = {
     require(dim % m == 0, s"dim $dim must divide into m=$m subvectors")
     val subDim = dim / m
-    val (training, _) = hashSample(embeddings, trainSample)
-    PqCodebook(subDim, localLloydMulti(collectTraining(training), k, iters, m, subDim))
+    PqCodebook(subDim, localLloydMulti(trainingRows(embeddings, trainSample)._1, k, iters, m, subDim))
   }
 
   /** squared L2 of one subvector slice against a centroid */
@@ -866,8 +874,8 @@ object SimSearch {
     // would also be wrong — modulus samples of the same hash do not
     // compose: a second keepOneIn either keeps ~100% or a correlated
     // biased half). nlist auto-sizing sees the TRUE corpus size.
-    val (sample, n) = hashSample(embeddings, trainSample)
-    trainIvfPqLocal(collectTraining(sample), autoNlist(n, nCentroids), m, k, iters, dim)
+    val (xs, n) = trainingRows(embeddings, trainSample)
+    trainIvfPqLocal(xs, autoNlist(n, nCentroids), m, k, iters, dim)
   }
 
   /** the post-collect half of the IVF-PQ build: coarse train, residual
@@ -993,9 +1001,8 @@ object SimSearch {
       trainSample: Long = 200000L,
       seed: Long = 42L): OpqResult = {
     require(dim % m == 0, s"dim $dim must divide into m=$m subvectors")
-    val (sample, _) = hashSample(embeddings, trainSample)
     // zero cluster round-trips after the one collect
-    trainOpqLocal(collectTraining(sample), m, k, dim, opqIters, kmeansIters, seed)
+    trainOpqLocal(trainingRows(embeddings, trainSample)._1, m, k, dim, opqIters, kmeansIters, seed)
   }
 
   /** the post-collect half of `trainOpq`: the whole alternation over the
@@ -1260,8 +1267,7 @@ object SimSearch {
     // on the driver (`rotateLocal` is `rotateEmbeddings`' arithmetic, and
     // the rows stay in vec_id order). nlist auto-sizing sees the TRUE
     // corpus size, not the sample's.
-    val (sample, n) = hashSample(embeddings, trainSample)
-    val xs = collectTraining(sample)
+    val (xs, n) = trainingRows(embeddings, trainSample)
     val opq = trainOpqLocal(xs, m, k, dim, opqIters, iters, seed = 42L)
     OpqIvfPqIndex(opq.rotation, trainIvfPqLocal(rotateLocal(xs, opq.rotation),
       autoNlist(n, nCentroids), m, k, iters, dim))

@@ -310,6 +310,20 @@ object AnnOracles {
         col("rerank_ok"))
   }
 
+  /** the modulus sample the index builders drew as a frame before
+    * `SimSearch.trainingRows` pulled it: at most ~trainSample rows, the
+    * whole frame when n <= trainSample or when the draw is empty, with the
+    * corpus size n */
+  def hashSample(embeddings: DataFrame, trainSample: Long): (DataFrame, Long) = {
+    val n = embeddings.count()
+    if (n <= trainSample) (embeddings, n)
+    else {
+      val keepOneIn = (n + trainSample - 1L) / trainSample
+      val sampled = embeddings.filter(pmod(xxhash64(col("vec_id")), lit(keepOneIn)) === 0)
+      (if (sampled.isEmpty) embeddings else sampled, n)
+    }
+  }
+
   /** the OPQ-IVF-PQ build that pulled its sample twice: `trainOpq` and
     * `buildIvfPqIndex` over the executor-rotated sample */
   def buildOpqIvfPqIndex(

@@ -2099,7 +2099,7 @@ class OpsSpec extends AnyFunSuite {
       i.index.ivf.centroids.map(_.toSeq).toSeq, i.index.pq.centroids.map(_.map(_.toSeq).toSeq).toSeq)
     // trainSample below the row count: both builds train on the same hash
     // sample (about 1,000 rows, under the bound, so the two-pull build's
-    // second hashSample keeps it whole)
+    // second sampling keeps it whole)
     var got: SimSearch.OpqIvfPqIndex = null
     var want: SimSearch.OpqIvfPqIndex = null
     val newJobs = jobsIn("opq-ivfpq-one-pull") { got = SimSearch.buildOpqIvfPqIndex(df,
@@ -2109,6 +2109,25 @@ class OpsSpec extends AnyFunSuite {
     assert(parts(got) == parts(want))
     info(s"build jobs: $newJobs (one pull) vs $oldJobs (two pulls)")
     assert(newJobs < oldJobs, s"$newJobs vs $oldJobs")
+  }
+
+  test("an index build at or under trainSample counts once and collects once (AQE on)") {
+    val dim = 16
+    val df = graft.ops.Checkpoints.cut(clusteredEmbeddings(dim, 400L).toDF("vec_id", "embedding"))
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      val jobs = jobsIn("ivfpq-build-whole-frame") {
+        SimSearch.buildIvfPqIndex(df, nCentroids = 8, m = 4, k = 8, dim = dim)
+      }
+      info(s"buildIvfPqIndex jobs, 400 rows <= trainSample: $jobs")
+      // the count's two (AQE map stage + result) and the collect's one
+      assert(jobs <= 3, s"$jobs jobs")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    // the whole-frame pull trains exactly what the persisted, count-checked
+    // pull of the same frame trains
+    assert(SimSearch.buildIvfIndex(df, nCentroids = 8, iters = 2, dim = dim).centroids
+      .map(_.toSeq).toSeq == SimSearch.kmeansCentroids(df, 8, 2, dim).map(_.toSeq).toSeq)
   }
 
   // ---- source-level corpus curation (round 3) --------------------------------
