@@ -12,11 +12,6 @@ import org.apache.spark.sql.SparkSession
   *
   * Env:
   *  - SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS — same as Bench
-  *  - SPARK_GRAFT_PLANS_DIR — if set, writes `<dir>/<query>.txt` with the
-  *    `.explain("formatted")` output of each selected query (one file per
-  *    query, overwritten); committed before/after evidence is renamed
-  *    to `plans/r06/<query>_before.txt` / `_after.txt` (`plans/r06/
-  *    baseline/` and `after/` keep only the dumps with no renamed twin).
   *  - SPARK_GRAFT_NOOP=true — time a noop-sink write (guide §1.4) instead
   *    of Bench's count() action, to see compute without count-pruning.
   */
@@ -28,7 +23,6 @@ object BenchExtra {
       if (args.nonEmpty && args(0).nonEmpty) args(0).split(",").toSeq else Seq("")
     val nReps = if (args.length > 1) args(1).toInt else 3
     val useNoop = sys.env.get("SPARK_GRAFT_NOOP").contains("true")
-    val plansDir = sys.env.get("SPARK_GRAFT_PLANS_DIR")
 
     // identical session recipe to graft.Bench (the frozen harness)
     val spark = SparkSession.builder()
@@ -67,20 +61,6 @@ object BenchExtra {
     })
     def counters(): (Int, Int, Int, Long) =
       (nJobs.get(), nStages.get(), nTasks.get(), taskMs.get())
-
-    plansDir.foreach { dir =>
-      new java.io.File(dir).mkdirs()
-      tasks.foreach { case (name, fn) =>
-        try {
-          val plan = fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          val w = new java.io.PrintWriter(s"$dir/$name.txt")
-          try w.println(plan) finally w.close()
-        } catch { case t: Throwable =>
-          System.err.println(s"[BenchExtra] plan dump $name failed: ${t.getMessage}")
-        }
-      }
-    }
 
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       spark.sparkContext.setJobDescription(name)

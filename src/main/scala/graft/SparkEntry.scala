@@ -702,11 +702,10 @@ object SparkEntry {
     "q91_harmonic_centrality" -> ((s, dir) =>
       // exact bounded-radius harmonic centrality (the Common Crawl
       // ranking metric) over the synthetic host graph: radius 3,
-      // integer micro-unit pair sums (scale=lcm(1..3)=6). AUDIT surface
-      // (PlanAudit label): the exact pair-state engine is q92's ground
-      // truth — at the 100 TB regime harmonic rankings come from
-      // HyperBall (q92) and this exact form runs on a bounded subgraph
-      // sample only
+      // integer micro-unit pair sums (scale=lcm(1..3)=6). AUDIT surface:
+      // the exact pair-state engine is q92's ground truth — at the 100 TB
+      // regime harmonic rankings come from HyperBall (q92) and this exact
+      // form runs on a bounded subgraph sample only
       CorpusOps.harmonicCentrality(hostGraphEdges(s, dir), maxDist = 3)),
     "q92_harmonic_hyperball" -> ((s, dir) => {
       // HyperBall (the actual 100TB algorithm) AUDITED in-surface against
@@ -1900,12 +1899,13 @@ object SparkEntry {
     "q155_lsh_exact_audit" -> ((s, dir) => {
       // LSH-vs-exact precision/recall audit: q06's banded candidates
       // against the UNCAPPED exact all-pairs truth at 0.5, folded to one
-      // integer-micro confusion row. AUDIT surface (PlanAudit label):
-      // the uncapped exact side re-scans and self-joins the corpus BY
-      // CONTRACT — at the 100 TB regime this audit runs on a bounded
-      // sample of the corpus (the q14 oracle role), never corpus-wide. Both sides are md5-portable, so the
-      // oracle recomputes the ENTIRE confusion matrix from SQL — this is
-      // the quantified recall the approximate family trades away
+      // integer-micro confusion row. AUDIT surface: the uncapped exact
+      // side re-scans and self-joins the corpus BY CONTRACT — at the
+      // 100 TB regime this audit runs on a bounded sample of the corpus
+      // (the q14 oracle role), never corpus-wide. Both sides are
+      // md5-portable, so the oracle recomputes the ENTIRE confusion
+      // matrix from SQL — this is the quantified recall the approximate
+      // family trades away
       import s.implicits._
       val d = docs(s, dir)
       // candidates-only LSH (this surface never reads est_jaccard, but

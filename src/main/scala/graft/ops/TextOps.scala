@@ -1088,9 +1088,10 @@ object TextOps {
     // via non-nullable arithmetic simplification), so this always plans
     // as a single-build-row BroadcastNestedLoopJoin — which IS the
     // optimal scalar-subquery shape (each probe row matches the one
-    // build row; zero per-row search). PlanAudit carries the labeled
-    // exemption; the plan stays fully lazy (review round-4 finding: the
-    // previous vocab.count() fired a corpus job at call time).
+    // build row; zero per-row search), and a one-row broadcast side is
+    // not an all-pairs join. The plan stays fully lazy (review round-4
+    // finding: the previous vocab.count() fired a corpus job at call
+    // time).
     val vocab = base.select(explode(col("t")).as("w"))
       .agg(countDistinct(col("w")).as("vocab_n"))
     val scored = bi

@@ -2050,23 +2050,8 @@ class OpsSpec extends AnyFunSuite {
     assert(verdicts.exists(r => !r.isNullAt(4) && !r.getBoolean(4)), "the wrong cosine must fail rerank_ok")
   }
 
-  /** the Spark jobs `body` runs, counted by a listener on its job group */
-  private def jobsIn(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      org.apache.spark.TestBus.drain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsIn(group: String)(body: => Unit): Int =
+    org.apache.spark.TestBus.jobsIn(spark.sparkContext, group)(body)
 
   test("ANN serving with a prebuilt index runs at most 3 Spark jobs per call (AQE on)") {
     val dim = 16

@@ -104,95 +104,30 @@ class PlanSpec extends AnyFunSuite {
       s"no partial aggregation:\n$plan")
   }
 
-  /** jobs Spark ran under `group`, read once the status tracker settles:
-    * listener events arrive asynchronously, so poll until two reads 200 ms
-    * apart agree and every job has finished, for at most 30 s */
-  private def settledJobCount(group: String): Int = {
-    import org.apache.spark.JobExecutionStatus.{FAILED, SUCCEEDED}
-    val tracker = spark.sparkContext.statusTracker
-    def read = {
-      val ids = tracker.getJobIdsForGroup(group)
-      (ids.length, ids.forall(id => tracker.getJobInfo(id)
-        .exists(j => j.status == SUCCEEDED || j.status == FAILED)))
+  test("the plan ledger flags a broadcast nested-loop join by its broadcast side's shape") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("plan-bnlj").toString
+    spark.range(200).toDF("k").write.mode("overwrite").parquet(dir)
+    val probe = spark.range(1000).toDF("id")
+    def ledgerFlags(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val plan = df.queryExecution.executedPlan
+      assert(graft.PlanLedgerSpec.nodes(plan).exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec]),
+        s"no BroadcastNestedLoopJoin:\n$plan")
+      graft.PlanLedgerSpec.flags(plan)
     }
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    var prev = read
-    Thread.sleep(200)
-    var cur = read
-    while ((cur != prev || !cur._2) && System.nanoTime() < deadline) {
-      prev = cur
-      Thread.sleep(200)
-      cur = read
-    }
-    assert(cur == prev && cur._2, s"jobs of $group did not settle within 30 s")
-    cur._1
-  }
-
-  /** Runs each query of `budget` under its own job group and asserts it
-    * ran no more Spark jobs than its budget. A noise-free gate for
-    * job-count work: AQE is OFF while counting — with AQE on, every
-    * exchange adds a map-stage job and whether a stage is submitted
-    * before a re-optimization makes it unnecessary is a race (counts
-    * moved by up to 2 between identical runs); without it the count is
-    * the driver's own jobs (eager cuts, collects, broadcasts, the final
-    * collect), identical run to run. Budgets are measured counts on
-    * sf0.001 with this fixture's local[4] session; lower one only with a
-    * new measurement. */
-  private def assertJobBudget(budget: Map[String, Int]): Unit = {
-    val sc = spark.sparkContext
-    // infer (and cache) the documents schema first, so the first query's
-    // count does not depend on whether an earlier test read the table
-    graft.SparkEntry.readT(spark, s"$sfDir/documents.parquet")
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val counts = try {
+    try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      budget.keys.toSeq.sorted.map { q =>
-        val group = s"job-budget-$q"
-        sc.setJobGroup(group, q)
-        try graft.SparkEntry.queries(q)(spark, sfDir).collect()
-        finally sc.clearJobGroup()
-        q -> settledJobCount(group)
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    info(counts.map { case (q, n) => s"$q=$n" }.mkString(" "))
-    val over = counts.filter { case (q, n) => n > budget(q) }
-    assert(over.isEmpty, s"over the job budget: ${over.map { case (q, n) =>
-      s"$q ran $n jobs (budget ${budget(q)})" }.mkString(", ")}")
-  }
-
-  test("tier family job budget: q102/q135/q149/q153/q156/q158 run no more Spark jobs than measured") {
-    assume(haveTestdata)
-    assertJobBudget(Map(
-      "q102_host_tiers" -> 8,
-      "q135_host_dossier" -> 9,
-      "q149_tier_mixture" -> 11,
-      "q153_tier_sample" -> 8,
-      "q156_fetch_plan" -> 9,
-      "q158_domain_tier_rollup" -> 8))
-  }
-
-  test("host-graph family job budget: q83/q88/q103/q95 run no more Spark jobs than measured") {
-    assume(haveTestdata)
-    assertJobBudget(Map(
-      "q83_host_pagerank" -> 6,
-      "q88_trustrank" -> 6,
-      "q103_hits" -> 6,
-      "q95_host_components" -> 8))
-  }
-
-  test("connected-components family job budget: q26/q75/q132 run no more Spark jobs than measured") {
-    assume(haveTestdata)
-    assertJobBudget(Map(
-      "q26_dup_clusters" -> 3,
-      "q75_fuzzy_dedup_keep_best" -> 5,
-      "q132_dup_clusters_star" -> 16))
-  }
-
-  test("q125/q115/q92 family job budget: k-core, host communities and hyperball run no more Spark jobs than measured") {
-    assume(haveTestdata)
-    assertJobBudget(Map(
-      "q125_kcore" -> 11,
-      "q115_host_communities" -> 9,
-      "q92_harmonic_hyperball" -> 6))
+      assert(ledgerFlags(probe.crossJoin(spark.range(50).agg(count(lit(1)).as("n")))) == Nil,
+        "a global aggregate broadcasts at most one row")
+      assert(ledgerFlags(probe.crossJoin(Seq(1, 2, 3).toDF("c"))) == Nil,
+        "a LocalTableScan broadcasts a driver-local relation")
+      assert(ledgerFlags(probe.crossJoin(broadcast(spark.read.parquet(dir)))) == Seq("BNLJ"),
+        "a multi-row parquet scan on the broadcast side is an all-pairs join")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 }
