@@ -130,4 +130,65 @@ class PlanSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
+
+  /** Runs each query of `budget` under its own job group and asserts it
+    * ran no more Spark jobs than its budget, counted with AQE off as
+    * PlanLedgerSpec counts (see there why). The budgets are ceilings that
+    * hold whatever the ledger pins; plan_ledger.tsv pins the same queries
+    * exactly. */
+  private def assertJobBudget(budget: Map[String, Int]): Unit = {
+    val sc = spark.sparkContext
+    // infer (and cache) the documents schema first, so the first query's
+    // count does not depend on whether an earlier test read the table
+    graft.SparkEntry.readT(spark, s"$sfDir/documents.parquet")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val counts = try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      budget.keys.toSeq.sorted.map { q =>
+        q -> org.apache.spark.TestBus.jobsIn(sc, s"job-budget-$q") {
+          graft.SparkEntry.queries(q)(spark, sfDir).collect()
+        }
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    info(counts.map { case (q, n) => s"$q=$n" }.mkString(" "))
+    val over = counts.filter { case (q, n) => n > budget(q) }
+    assert(over.isEmpty, s"over the job budget: ${over.map { case (q, n) =>
+      s"$q ran $n jobs (budget ${budget(q)})" }.mkString(", ")}")
+  }
+
+  test("tier family job budget: q102/q135/q149/q153/q156/q158 run no more Spark jobs than measured") {
+    assume(haveTestdata)
+    assertJobBudget(Map(
+      "q102_host_tiers" -> 8,
+      "q135_host_dossier" -> 9,
+      "q149_tier_mixture" -> 11,
+      "q153_tier_sample" -> 8,
+      "q156_fetch_plan" -> 9,
+      "q158_domain_tier_rollup" -> 8))
+  }
+
+  test("host-graph family job budget: q83/q88/q103/q95 run no more Spark jobs than measured") {
+    assume(haveTestdata)
+    assertJobBudget(Map(
+      "q83_host_pagerank" -> 6,
+      "q88_trustrank" -> 6,
+      "q103_hits" -> 6,
+      "q95_host_components" -> 8))
+  }
+
+  test("connected-components family job budget: q26/q75/q132 run no more Spark jobs than measured") {
+    assume(haveTestdata)
+    assertJobBudget(Map(
+      "q26_dup_clusters" -> 3,
+      "q75_fuzzy_dedup_keep_best" -> 5,
+      "q132_dup_clusters_star" -> 16))
+  }
+
+  test("q125/q115/q92 family job budget: k-core, host communities and hyperball run no more Spark jobs than measured") {
+    assume(haveTestdata)
+    assertJobBudget(Map(
+      "q125_kcore" -> 11,
+      "q115_host_communities" -> 9,
+      "q92_harmonic_hyperball" -> 6))
+  }
 }
