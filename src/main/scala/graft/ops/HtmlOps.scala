@@ -25,9 +25,9 @@ object HtmlOps {
     *
     * Scale shape: one typed flatMap fused with the scan — per-row kernel
     * work, zero shuffle, output proportional to table-row count (the
-    * ExtractKernel discipline). Skew rides the same size-banding as
-    * extraction when the caller routes pages through
-    * ExtractJob.saltedRepartition first. */
+    * ExtractKernel discipline). Like raw-input extraction, it runs in the
+    * scan partitions, whose size `spark.sql.files.maxPartitionBytes`
+    * bounds. */
   def structuredTables(pages: DataFrame): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._

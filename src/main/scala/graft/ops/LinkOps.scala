@@ -55,8 +55,8 @@ object LinkOps {
     * Scale shape: one typed flatMap fused with the scan — per-row kernel
     * work, zero shuffle, output proportional to link count (the
     * ExtractKernel discipline: pure-JVM scanner inside the partition
-    * iterator). Skew rides the same size-banding as extraction when the
-    * caller routes pages through ExtractJob.saltedRepartition first. */
+    * iterator). Like raw-input extraction, it runs in the scan
+    * partitions, whose size `spark.sql.files.maxPartitionBytes` bounds. */
   def outlinks(pages: DataFrame): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._

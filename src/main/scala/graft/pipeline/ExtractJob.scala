@@ -5,45 +5,58 @@ import org.apache.spark.sql.functions._
 
 /** The scale pipeline (SURVEY.md §3.4, north_rule):
   *
-  *   pages table -> [resume filter] -> salted repartition (size-banded) ->
-  *   mapPartitions(ExtractKernel) -> results sink (partitioned by
-  *   warc_bucket) + per-bucket lineage/metrics sink.
+  *   pages table -> stage (partitioned by warc_bucket, then whale) ->
+  *   [resume filter] -> per bucket group: pruned small-band scan + pruned
+  *   whale-band scan spread round-robin -> mapPartitions(ExtractKernel) ->
+  *   results sink (partitioned by warc_bucket) + per-bucket lineage sink.
   *
   * Scale design notes (10^12 rows, 1000 executors):
-  *  - the ONLY wide operations are the explicit repartition (unavoidable: it
-  *    IS the skew mitigation) and the tiny lineage rollup (bucket-count
-  *    sized, broadcast-joinable);
-  *  - column pruning: the kernel needs url/warc_ts/html only; `prepare`
-  *    selects exactly those so parquet scans never read `text`/`lang`;
-  *  - skew: payloads > SKEW_THRESHOLD bytes are split off and spread
-  *    round-robin so no task owns two whales (north_rule "salted
-  *    repartitioning for skewed large-PDF partitions");
+  *  - every page is read once per extraction pass: the raw path runs the
+  *    kernel inside the scan partitions, and the staged path reads the
+  *    small band and the whale band from disjoint partition directories;
+  *  - the ONLY wide operations are the whale band's round-robin spread
+  *    (the skew mitigation) and the tiny lineage rollup;
+  *  - column pruning: the kernel needs url/warc_ts/html only, so parquet
+  *    scans never read `text`/`lang`;
+  *  - skew: staging writes payloads > SKEW_THRESHOLD_BYTES under
+  *    `whale=true`, and only that band is spread round-robin, so no task
+  *    owns two whales (north_rule "salted repartitioning for skewed
+  *    large-PDF partitions");
   *  - resume: lineage rows are committed per warc_bucket after results are
-  *    durable; a restart anti-joins finished buckets and reprocesses only
-  *    the remainder (idempotent: results are overwritten per bucket
-  *    partition directory, not appended).
+  *    durable; a restart skips finished buckets and reprocesses only the
+  *    remainder (idempotent: results are overwritten per bucket partition
+  *    directory, not appended).
   */
 object ExtractJob {
 
   final val N_BUCKETS_DEFAULT = 64
   final val SKEW_THRESHOLD_BYTES = 1 << 20 // 1 MiB: "large-PDF" band
 
-  /** bucket(warc_ts) partition transform (Iceberg-style; Parquet stand-in) */
+  /** The staged layout's two partition columns: `warc_bucket`, the
+    * bucket(warc_ts) transform (Iceberg-style; Parquet stand-in), and
+    * `whale`, true for payloads above SKEW_THRESHOLD_BYTES. */
   def withBucket(pages: DataFrame, nBuckets: Int): DataFrame =
     pages.withColumn("warc_bucket", pmod(xxhash64(col("warc_ts")), lit(nBuckets)))
+      .withColumn("whale", length(col("html")) > SKEW_THRESHOLD_BYTES)
 
-  /** size-banded skew mitigation; input must have url/warc_ts/html.
+  /** The raw-input extraction shape; input must have url/warc_ts/html.
     * `text`/`lang` are NOT read from the source — the kernel never uses
     * them, and at corpus scale `text` is a full duplicate of the payload,
     * so column pruning here halves scan bytes (verified by PlanSpec).
     *
-    * Only the LARGE-payload band shuffles (round-robin, so no task owns
-    * two whales — the north-rule salting); small rows stay in their scan
-    * partitions. An earlier shape hash-repartitioned the small band too,
-    * which at corpus scale moves ~100% of the bytes over the network for
-    * no balance benefit: scan-partition size is already bounded by
-    * `spark.sql.files.maxPartitionBytes` (the task-granularity knob), and
-    * whales — the actual skew — are exactly the rows split off here. */
+    * Without `shuffleSmall` the plan has no exchange: the kernel runs
+    * inside the scan partitions and reads each page once. Splitting off the
+    * whales here would cost a second read of every page, because one plan
+    * cannot read a page once and shuffle only part of it: an exchange
+    * moves all of its stage's output. Whale balance on this path comes
+    * from the byte-bounded file splits (`spark.sql.files.maxPartitionBytes`),
+    * and the kernel quarantines payloads above its 256 MiB cap as
+    * `err:oversized`. `ExtractJob.run` stages its input with a whale
+    * column, so it can spread the whales without a second read.
+    *
+    * With `shuffleSmall`, every row is hash-spread by url over
+    * `partitions` (useful when the source layout is pathologically
+    * clustered). */
   def saltedRepartition(
       spark: SparkSession,
       pages: DataFrame,
@@ -52,20 +65,7 @@ object ExtractJob {
     import spark.implicits._
     val typed = pages.select(col("url"), col("warc_ts"), col("html"),
       lit("").as("text"), lit("").as("lang"))
-    sizeBanded(typed, partitions, shuffleSmall).as[PageRow]
-  }
-
-  /** the size-band split both salted repartitions share: rows up to
-    * SKEW_THRESHOLD_BYTES stay in their scan partitions (or, with
-    * `shuffleSmall`, are hash-spread by url — useful when the source layout
-    * is pathologically clustered), larger rows go round-robin over
-    * `partitions` so each whale lands alone-ish; the bands are unioned */
-  private def sizeBanded(typed: DataFrame, partitions: Int, shuffleSmall: Boolean): DataFrame = {
-    val smallRows = typed.filter(length(col("html")) <= SKEW_THRESHOLD_BYTES)
-    val small = if (shuffleSmall) smallRows.repartition(partitions, col("url")) else smallRows
-    val big = typed.filter(length(col("html")) > SKEW_THRESHOLD_BYTES)
-      .repartition(math.max(partitions, 1))
-    small.union(big)
+    (if (shuffleSmall) typed.repartition(partitions, col("url")) else typed).as[PageRow]
   }
 
   /** run extraction over a prepared Dataset (no IO) */
@@ -74,20 +74,24 @@ object ExtractJob {
     pages.mapPartitions(ExtractKernel.runPartition _)
   }
 
-  /** salted repartition that carries the warc_bucket key through the kernel
-    * (input must already have a warc_bucket column); same
-    * narrow-small/shuffled-whale shape as saltedRepartition */
+  /** The staged path's salted repartition, carrying the warc_bucket key
+    * through the kernel; input must have the `withBucket` columns. The
+    * small band (`whale = false`) stays in its scan partitions; the whale
+    * band goes round-robin over `partitions`, so each whale lands
+    * alone-ish. Over the staged layout both filters are partition
+    * filters, so no file is opened by both bands. */
   private[pipeline] def saltedRepartitionKeyed(
       spark: SparkSession,
       pages: DataFrame,
       partitions: Int): Dataset[(Long, PageRow)] = {
     import spark.implicits._
-    val typed = pages.select(col("warc_bucket").cast("long").as("bucket"),
-      col("url"), col("warc_ts"), col("html"), lit("").as("text"), lit("").as("lang"))
-    sizeBanded(typed, partitions, shuffleSmall = false)
-      .select(col("bucket").as("_1"),
-        struct(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")).as("_2"))
-      .as[(Long, PageRow)]
+    def keyed(band: DataFrame): DataFrame =
+      band.select(col("warc_bucket").cast("long").as("_1"),
+        struct(col("url"), col("warc_ts"), col("html"),
+          lit("").as("text"), lit("").as("lang")).as("_2"))
+    val small = keyed(pages.filter(!col("whale")))
+    val whales = keyed(pages.filter(col("whale"))).repartition(math.max(partitions, 1))
+    small.union(whales).as[(Long, PageRow)]
   }
 
   /** keyed extraction: (bucket, page) -> (bucket, extracted) */
@@ -123,8 +127,10 @@ object ExtractJob {
     // Production shape: the input is staged ONCE, partitioned by the bucket
     // column (the Parquet stand-in for an Iceberg bucket(warc_ts) transform
     // — with Iceberg the source table is already partitioned and this write
-    // disappears). Each group's isin-filter then becomes a PARTITION FILTER
-    // on the staged scan: only that group's directories are read. A
+    // disappears) and under it by the whale band. Each group's isin-filter
+    // and each band's whale filter then become PARTITION FILTERS on the
+    // staged scan: only that group's directories are read, and each file
+    // by one band only. A
     // .cache() of the full input here (the round-2 shape) pins the corpus
     // incl. payloads in the block manager — fine at bench scale, not at
     // 10^12 rows. Staging is itself resumable (_SUCCESS-gated, reused on
@@ -145,11 +151,12 @@ object ExtractJob {
     // with identical schema+count are indistinguishable to this check
     // (fingerprinting content would cost a full scan + hash of the corpus)
     // — callers mutating data in place at constant cardinality should use
-    // a fresh outDir.
+    // a fresh outDir. The leading version names the staged layout (v2:
+    // warc_bucket=B/whale=W), so a snapshot of an older layout re-stages.
     val idPath = new org.apache.hadoop.fs.Path(s"$stagedPath/_GRAFT_IDENTITY")
     val prunedPages = pages.select("url", "warc_ts", "html")
     val stagingId =
-      s"v1|nBuckets=$nBuckets|schema=${prunedPages.schema.catalogString}|rows=${prunedPages.count()}"
+      s"v2|nBuckets=$nBuckets|schema=${prunedPages.schema.catalogString}|rows=${prunedPages.count()}"
     val reusable = hFs.exists(hPath) && hFs.exists(idPath) && {
       val st = hFs.getFileStatus(idPath)
       val buf = new Array[Byte](st.getLen.toInt)
@@ -176,7 +183,7 @@ object ExtractJob {
       // payload at corpus scale and `lang` is unused, so pruning here
       // halves staged bytes and write I/O.
       withBucket(prunedPages, nBuckets)
-        .write.mode(SaveMode.Overwrite).partitionBy("warc_bucket").parquet(stagedPath)
+        .write.mode(SaveMode.Overwrite).partitionBy("warc_bucket", "whale").parquet(stagedPath)
       val out = hFs.create(idPath, true)
       try out.write(stagingId.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
@@ -188,9 +195,10 @@ object ExtractJob {
       org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("warc_ts", org.apache.spark.sql.types.TimestampType),
       org.apache.spark.sql.types.StructField("html", org.apache.spark.sql.types.BinaryType),
-      org.apache.spark.sql.types.StructField("warc_bucket", org.apache.spark.sql.types.LongType)))
-    val bucketed = spark.read.schema(stagedSchema).parquet(stagedPath)
-    // resume: anti-join against committed lineage buckets (north_rule).
+      org.apache.spark.sql.types.StructField("warc_bucket", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("whale", org.apache.spark.sql.types.BooleanType)))
+    val staged = spark.read.schema(stagedSchema).parquet(stagedPath)
+    // resume: skip the buckets with committed lineage (north_rule).
     // Read with an explicit schema of the one column used (the commit
     // below writes it as a long): inferring the schema costs a Spark job
     // on every run and resume. A missing directory (first run) still
@@ -201,11 +209,15 @@ object ExtractJob {
       try spark.read.schema(doneSchema).parquet(lineagePath)
         .select("warc_bucket").as[Long].collect().toSet
       catch { case _: Exception => Set.empty }
-    val todo = bucketed.filter(!col("warc_bucket").isin(doneBuckets.toSeq: _*))
-
-    val buckets = todo.select("warc_bucket").distinct().as[Long].collect().sorted
+    // the staged buckets are its partition directories: the writer makes
+    // a warc_bucket=B directory only for a bucket that holds rows, so a
+    // listing finds them with no Spark job
+    val buckets = hFs.listStatus(new org.apache.hadoop.fs.Path(stagedPath))
+      .filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case d if d.startsWith("warc_bucket=") => d.stripPrefix("warc_bucket=").toLong }
+      .filterNot(doneBuckets).sorted
     buckets.grouped(math.max(bucketsPerJob, 1)).zipWithIndex.foreach { case (group, gi) =>
-      val slice = todo.filter(col("warc_bucket").isin(group: _*))
+      val slice = staged.filter(col("warc_bucket").isin(group: _*))
       val flat = extractKeyed(saltedRepartitionKeyed(spark, slice, nPart))
         .toDF("warc_bucket", "row")
         .select(col("warc_bucket"), col("row.*"))

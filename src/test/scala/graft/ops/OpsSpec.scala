@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.SparkFixture
+import graft.pipeline.SparkFixture.withTempDir
 
 /** Training-data operator tests over small in-memory frames +
   * the driver testdata when present. */
@@ -1790,13 +1791,14 @@ class OpsSpec extends AnyFunSuite {
     val recall = pq.intersect(exact).size.toDouble / exact.size
     assert(recall >= 0.7, s"OPQ-basis PQ recall $recall")
     // snapshot roundtrip: rotation + codebook persist bit-identical
-    val dir = java.nio.file.Files.createTempDirectory("opq-idx").toString
-    SimSearch.saveOpq(opq, dir, spark)
-    val loaded = SimSearch.loadOpq(spark, dir)
-    assert(loaded.rotation.map(_.toSeq).toSeq == opq.rotation.map(_.toSeq).toSeq)
-    assert(loaded.codebook.subDim == opq.codebook.subDim)
-    assert(loaded.codebook.centroids.map(_.map(_.toSeq).toSeq).toSeq ==
-      opq.codebook.centroids.map(_.map(_.toSeq).toSeq).toSeq)
+    withTempDir("opq-idx") { dir =>
+      SimSearch.saveOpq(opq, dir, spark)
+      val loaded = SimSearch.loadOpq(spark, dir)
+      assert(loaded.rotation.map(_.toSeq).toSeq == opq.rotation.map(_.toSeq).toSeq)
+      assert(loaded.codebook.subDim == opq.codebook.subDim)
+      assert(loaded.codebook.centroids.map(_.map(_.toSeq).toSeq).toSeq ==
+        opq.codebook.centroids.map(_.map(_.toSeq).toSeq).toSeq)
+    }
   }
 
   test("IVF-PQ: residual encode, probe-limited ADC, recall vs brute force") {
@@ -1852,19 +1854,20 @@ class OpsSpec extends AnyFunSuite {
       exactCos.get((q, n)).foreach(e => assert(math.abs(e - c) < 1e-4, s"cosine drift at ($q,$n)"))
     }
     // three-component snapshot roundtrips bit-identical and serves identically
-    val dir = java.nio.file.Files.createTempDirectory("opq-ivfpq-idx").toString
-    SimSearch.saveOpqIvfPqIndex(idx, dir, spark)
-    val loaded = SimSearch.loadOpqIvfPqIndex(spark, dir)
-    assert(loaded.rotation.map(_.toSeq).toSeq == idx.rotation.map(_.toSeq).toSeq)
-    assert(loaded.index.ivf.centroids.map(_.toSeq).toSeq == idx.index.ivf.centroids.map(_.toSeq).toSeq)
-    assert(loaded.index.pq.centroids.map(_.map(_.toSeq).toSeq).toSeq ==
-      idx.index.pq.centroids.map(_.map(_.toSeq).toSeq).toSeq)
-    val viaLoaded = SimSearch.opqIvfPqTopK(cdf, loaded, 5, 10, nProbe = 4).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine")))
-    assert(viaLoaded.toSet == gotRows.toSet, "loaded composed index must search identically")
-    // wrong-family loads fail fast instead of silently dropping a
-    // component (here the coarse centroids the residual codes are against)
-    intercept[IllegalArgumentException] { SimSearch.loadOpq(spark, dir) }
+    withTempDir("opq-ivfpq-idx") { dir =>
+      SimSearch.saveOpqIvfPqIndex(idx, dir, spark)
+      val loaded = SimSearch.loadOpqIvfPqIndex(spark, dir)
+      assert(loaded.rotation.map(_.toSeq).toSeq == idx.rotation.map(_.toSeq).toSeq)
+      assert(loaded.index.ivf.centroids.map(_.toSeq).toSeq == idx.index.ivf.centroids.map(_.toSeq).toSeq)
+      assert(loaded.index.pq.centroids.map(_.map(_.toSeq).toSeq).toSeq ==
+        idx.index.pq.centroids.map(_.map(_.toSeq).toSeq).toSeq)
+      val viaLoaded = SimSearch.opqIvfPqTopK(cdf, loaded, 5, 10, nProbe = 4).collect()
+        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine")))
+      assert(viaLoaded.toSet == gotRows.toSet, "loaded composed index must search identically")
+      // wrong-family loads fail fast instead of silently dropping a
+      // component (here the coarse centroids the residual codes are against)
+      intercept[IllegalArgumentException] { SimSearch.loadOpq(spark, dir) }
+    }
   }
 
   test("IVF vs LSH recall curves: IVF wins on clustered, both >=0.9@k on their regimes") {

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the scan, dimension joins broadcast, filters push down, the extraction
   * pipeline has no accidental extra shuffles. */
 class PlanSpec extends AnyFunSuite {
+  import SparkFixture.withTempDir
   private lazy val spark = SparkFixture.spark
   private val sfDir = "/root/testdata/sf0.001"
   private def haveTestdata = new java.io.File(s"$sfDir/lineitem.parquet").exists()
@@ -14,34 +15,52 @@ class PlanSpec extends AnyFunSuite {
   private def physicalPlan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("extraction scan prunes to url/warc_ts/html (never reads text/lang)") {
+  /** the raw extraction plan over 50 Corpus rows written as parquet */
+  private def withRawExtractionPlan[T](body: org.apache.spark.sql.execution.SparkPlan => T): T = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("plan-pages").toString
-    spark.range(50).as[Long].map(Corpus.row(42L)).toDF()
-      .write.mode("overwrite").parquet(dir)
-    val pages = spark.read.parquet(dir)
-    val plan = physicalPlan(
-      ExtractJob.extract(ExtractJob.saltedRepartition(spark, pages, 4)).toDF())
-    val readSchema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
-    assert(readSchema.contains("url") && readSchema.contains("html"))
-    assert(!readSchema.contains("lang"), s"lang not pruned: $readSchema")
-    // 'text' must not appear in the parquet ReadSchema
-    assert(!readSchema.replace("extracted_text", "").contains("text:"),
-      s"text not pruned: $readSchema")
+    withTempDir("plan-pages") { dir =>
+      spark.range(50).as[Long].map(Corpus.row(42L)).toDF()
+        .write.mode("overwrite").parquet(dir)
+      val pages = spark.read.parquet(dir)
+      body(ExtractJob.extract(ExtractJob.saltedRepartition(spark, pages, 4)).toDF()
+        .queryExecution.executedPlan)
+    }
   }
 
-  test("extraction pipeline has exactly the two explicit exchanges (salt split)") {
+  test("extraction scan prunes to url/warc_ts/html (never reads text/lang)") {
+    withRawExtractionPlan { executed =>
+      val plan = executed.toString
+      val readSchema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
+      assert(readSchema.contains("url") && readSchema.contains("html"))
+      assert(!readSchema.contains("lang"), s"lang not pruned: $readSchema")
+      // 'text' must not appear in the parquet ReadSchema
+      assert(!readSchema.replace("extracted_text", "").contains("text:"),
+        s"text not pruned: $readSchema")
+    }
+  }
+
+  test("raw extraction scans its input once") {
+    withRawExtractionPlan { plan =>
+      val all = graft.PlanLedgerSpec.nodes(plan).toSeq
+      assert(all.count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]) == 1,
+        s"expected exactly one file scan:\n$plan")
+      assert(!all.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]),
+        s"expected no exchange:\n$plan")
+    }
+  }
+
+  test("extraction pipeline has no exchange (the kernel runs in the scan partitions)") {
     import spark.implicits._
     val pages = spark.range(50).as[Long].map(Corpus.row(42L)).toDF()
     val plan = physicalPlan(
       ExtractJob.extract(ExtractJob.saltedRepartition(spark, pages, 4)).toDF())
-    // ONE intentional exchange: the round-robin spread of the whale band.
-    // The small band stays in its scan partitions (shuffling it would move
-    // ~100% of corpus bytes for no balance benefit — maxPartitionBytes is
-    // the granularity knob there).
+    // No exchange at all: splitting the whales off for a round-robin spread
+    // would read every page twice, and shuffling the rest would move ~100%
+    // of corpus bytes for no balance benefit (maxPartitionBytes bounds the
+    // scan tasks). ExtractJob.run spreads its whales from a staged band.
     val exchanges = plan.linesIterator.count(_.trim.startsWith("+- Exchange")) +
       plan.linesIterator.count(_.trim.startsWith("Exchange"))
-    assert(exchanges <= 1, s"unexpected extra shuffles ($exchanges):\n$plan")
+    assert(exchanges == 0, s"unexpected shuffles ($exchanges):\n$plan")
   }
 
   test("keyed extraction (ExtractJob.run's path) shuffles only the whale band, round-robin") {
@@ -53,6 +72,41 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges.size == 1 && exchanges.head.contains("RoundRobinPartitioning"),
       s"expected exactly one round-robin exchange:\n$plan")
     assert(!plan.contains("hashpartitioning"), s"small band is hash-shuffled:\n$plan")
+  }
+
+  test("keyed extraction over the staged layout prunes each band's scan on whale") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    withTempDir("plan-staged") { dir =>
+      val pages = spark.range(60).as[Long].map(Corpus.row(42L)).toDF()
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          plans.add(qe.executedPlan)
+        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.listenerManager.register(listener)
+      try {
+        ExtractJob.run(spark, pages, dir, nBuckets = 4, partitions = 4)
+        org.apache.spark.TestBus.drain(spark.sparkContext)
+      } finally {
+        spark.listenerManager.unregister(listener)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      }
+      // one bucket group (4 buckets, 8 per job): one small-band scan and
+      // one whale-band scan of the staged directory
+      val scans = plans.asScala.toSeq.flatMap(graft.PlanLedgerSpec.nodes(_)).collect {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == "staged") => s
+      }
+      assert(scans.size == 2, s"expected two staged scans, got ${scans.size}")
+      scans.foreach { s =>
+        assert(s.partitionFilters.exists(_.references.exists(_.name == "whale")),
+          s"a band scan has no partition filter on whale: ${s.partitionFilters}")
+      }
+    }
   }
 
   test("dimension joins broadcast in q02") {

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.{Corpus, ExtractJob, SparkFixture}
 
 class WarcSpec extends AnyFunSuite {
+  import SparkFixture.withTempDir
   private lazy val spark = SparkFixture.spark
 
   private def fixtureRecords(n: Int): Seq[Warc.WarcRecord] =
@@ -13,25 +14,27 @@ class WarcSpec extends AnyFunSuite {
     } :+ Warc.WarcRecord("meta:info", "2020-01-01T00:00:00Z", "warcinfo", "crawler info".getBytes)
 
   test("plain .warc round-trip into pages + extraction") {
-    val dir = java.nio.file.Files.createTempDirectory("warc").toString
-    Warc.writeFixture(s"$dir/test.warc", fixtureRecords(12), gzip = false)
-    val pages = Warc.readPages(spark, s"$dir/*.warc")
-    assert(pages.count() == 12) // warcinfo record filtered out
-    val extracted = ExtractJob.extract(ExtractJob.saltedRepartition(spark, pages, 4)).collect()
-    assert(extracted.length == 12)
-    assert(extracted.forall(_.status == "ok"))
-    // golden equality survives the WARC + HTTP envelope round-trip
-    val goldens = (0 until 12).map(i => Corpus.golden(42L)(i.toLong)).toMap
-    extracted.foreach(r => assert(r.extracted_text == goldens(r.url)))
+    withTempDir("warc") { dir =>
+      Warc.writeFixture(s"$dir/test.warc", fixtureRecords(12), gzip = false)
+      val pages = Warc.readPages(spark, s"$dir/*.warc")
+      assert(pages.count() == 12) // warcinfo record filtered out
+      val extracted = ExtractJob.extract(ExtractJob.saltedRepartition(spark, pages, 4)).collect()
+      assert(extracted.length == 12)
+      assert(extracted.forall(_.status == "ok"))
+      // golden equality survives the WARC + HTTP envelope round-trip
+      val goldens = (0 until 12).map(i => Corpus.golden(42L)(i.toLong)).toMap
+      extracted.foreach(r => assert(r.extracted_text == goldens(r.url)))
+    }
   }
 
   test("per-record gzip members (.warc.gz Common Crawl convention)") {
-    val dir = java.nio.file.Files.createTempDirectory("warcgz").toString
-    Warc.writeFixture(s"$dir/test.warc.gz", fixtureRecords(8), gzip = true)
-    val pages = Warc.readPages(spark, s"$dir/*.warc.gz")
-    assert(pages.count() == 8)
-    val extracted = ExtractJob.extract(ExtractJob.saltedRepartition(spark, pages, 4)).collect()
-    assert(extracted.forall(_.status == "ok"))
+    withTempDir("warcgz") { dir =>
+      Warc.writeFixture(s"$dir/test.warc.gz", fixtureRecords(8), gzip = true)
+      val pages = Warc.readPages(spark, s"$dir/*.warc.gz")
+      assert(pages.count() == 8)
+      val extracted = ExtractJob.extract(ExtractJob.saltedRepartition(spark, pages, 4)).collect()
+      assert(extracted.forall(_.status == "ok"))
+    }
   }
 
   test("httpBody strips response envelope, passes through raw payloads") {
@@ -41,35 +44,37 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("WET conversion records read into the documents shape") {
-    val dir = java.nio.file.Files.createTempDirectory("wet").toString
-    val recs = (0 until 6).map { i =>
-      Warc.WarcRecord(s"https://site$i.example.com/p/$i", "2024-01-01T00:00:00Z",
-        "conversion", s"extracted text body $i with several words".getBytes("UTF-8"))
-    } :+ Warc.WarcRecord("meta", "2024-01-01T00:00:00Z", "warcinfo", "ignored".getBytes)
-    Warc.writeFixture(s"$dir/test.warc.wet.gz", recs, gzip = true)
-    val docs = Warc.readWetDocuments(spark, s"$dir/*.wet.gz")
-    assert(docs.columns.toSeq == Seq("doc_id", "text", "lang", "source", "n_chars"))
-    val rows = docs.collect()
-    assert(rows.length == 6) // warcinfo filtered
-    val bySource = rows.map(r => r.getAs[String]("source") -> r.getAs[String]("text")).toMap
-    assert(bySource("site3.example.com") == "extracted text body 3 with several words")
-    assert(rows.forall(r => r.getAs[Long]("n_chars") == r.getAs[String]("text").length.toLong))
-    // doc_id is the engine-standard xxhash64(url): deterministic across reads
-    val again = Warc.readWetDocuments(spark, s"$dir/*.wet.gz").collect()
-      .map(_.getAs[Long]("doc_id")).sorted
-    assert(again.sameElements(rows.map(_.getAs[Long]("doc_id")).sorted))
+    withTempDir("wet") { dir =>
+      val recs = (0 until 6).map { i =>
+        Warc.WarcRecord(s"https://site$i.example.com/p/$i", "2024-01-01T00:00:00Z",
+          "conversion", s"extracted text body $i with several words".getBytes("UTF-8"))
+      } :+ Warc.WarcRecord("meta", "2024-01-01T00:00:00Z", "warcinfo", "ignored".getBytes)
+      Warc.writeFixture(s"$dir/test.warc.wet.gz", recs, gzip = true)
+      val docs = Warc.readWetDocuments(spark, s"$dir/*.wet.gz")
+      assert(docs.columns.toSeq == Seq("doc_id", "text", "lang", "source", "n_chars"))
+      val rows = docs.collect()
+      assert(rows.length == 6) // warcinfo filtered
+      val bySource = rows.map(r => r.getAs[String]("source") -> r.getAs[String]("text")).toMap
+      assert(bySource("site3.example.com") == "extracted text body 3 with several words")
+      assert(rows.forall(r => r.getAs[Long]("n_chars") == r.getAs[String]("text").length.toLong))
+      // doc_id is the engine-standard xxhash64(url): deterministic across reads
+      val again = Warc.readWetDocuments(spark, s"$dir/*.wet.gz").collect()
+        .map(_.getAs[Long]("doc_id")).sorted
+      assert(again.sameElements(rows.map(_.getAs[Long]("doc_id")).sorted))
+    }
   }
 
   test("WET source host is lowercased and userinfo-stripped (RFC 3986)") {
-    val dir = java.nio.file.Files.createTempDirectory("wet2").toString
-    val recs = Seq(
-      Warc.WarcRecord("https://Example.COM/a", "2024-01-01T00:00:00Z", "conversion", "x".getBytes),
-      Warc.WarcRecord("https://example.com/b", "2024-01-01T00:00:00Z", "conversion", "y".getBytes),
-      Warc.WarcRecord("https://user:pw@Host.Net:8080/c", "2024-01-01T00:00:00Z", "conversion", "z".getBytes))
-    Warc.writeFixture(s"$dir/h.warc.wet", recs, gzip = false)
-    val src = Warc.readWetDocuments(spark, s"$dir/*.wet").collect()
-      .map(_.getAs[String]("source")).sorted.toSeq
-    assert(src == Seq("example.com", "example.com", "host.net"), src)
+    withTempDir("wet2") { dir =>
+      val recs = Seq(
+        Warc.WarcRecord("https://Example.COM/a", "2024-01-01T00:00:00Z", "conversion", "x".getBytes),
+        Warc.WarcRecord("https://example.com/b", "2024-01-01T00:00:00Z", "conversion", "y".getBytes),
+        Warc.WarcRecord("https://user:pw@Host.Net:8080/c", "2024-01-01T00:00:00Z", "conversion", "z".getBytes))
+      Warc.writeFixture(s"$dir/h.warc.wet", recs, gzip = false)
+      val src = Warc.readWetDocuments(spark, s"$dir/*.wet").collect()
+        .map(_.getAs[String]("source")).sorted.toSeq
+      assert(src == Seq("example.com", "example.com", "host.net"), src)
+    }
   }
 
   test("sniffKind routes real magic bytes; decoys and truncations fall to unknown") {
