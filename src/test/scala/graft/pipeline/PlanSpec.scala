@@ -49,7 +49,7 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("extraction pipeline has no exchange (the kernel runs in the scan partitions)") {
+  test("extraction pipeline has no exchange (the kernel runs in the scan)") {
     import spark.implicits._
     val pages = spark.range(50).as[Long].map(Corpus.row(42L)).toDF()
     val plan = physicalPlan(
